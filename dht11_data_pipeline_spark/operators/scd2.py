@@ -31,6 +31,7 @@ hash keeps the compare O(1)-width regardless of payload width.
 
 from __future__ import annotations
 
+import contextlib
 import warnings
 from dataclasses import dataclass, field
 
@@ -41,6 +42,21 @@ from pyspark.sql.window import Window
 from dht11_data_pipeline_spark.functions.hashing import delta_hash
 
 FAR_FUTURE = "3000-01-01 00:00:00"
+
+
+@contextlib.contextmanager
+def delta_cache():
+    """Yields the list to pass as ``apply_scd2(cache=...)`` and
+    unpersists what it holds when the block exits. Put the apply AND
+    the write or commit that consumes its result inside the block: the
+    cached delta serves that write and must not outlive it (one leaked
+    SQL cache entry per micro-batch otherwise)."""
+    held: list[DataFrame] = []
+    try:
+        yield held
+    finally:
+        for df in held:
+            df.unpersist()
 
 
 @dataclass
@@ -163,9 +179,10 @@ def dense_rank_distributed(df: DataFrame, order_cols: list[str],
     single-partition sort: range-repartition on the keys, row_number
     within each partition, then add driver-computed partition offsets
     (the zipWithIndex pattern, DataFrame-native). Each task sorts only
-    its slice; the driver handles an O(partitions) offset table. Ties
-    across a range boundary get an arbitrary-but-valid order — same
-    contract as a global ROW_NUMBER over non-unique keys.
+    its slice; the driver folds the O(partitions) offsets into the plan
+    as a literal map. Ties across a range boundary get an
+    arbitrary-but-valid order — same contract as a global ROW_NUMBER
+    over non-unique keys.
 
     The shuffled frame has two consumers (the offset count and the
     final numbering); it is ``localCheckpoint``ed rather than
@@ -197,17 +214,17 @@ def dense_rank_distributed(df: DataFrame, order_cols: list[str],
     counts = {r["_dr_pid"]: r["cnt"] for r in
               staged.groupBy("_dr_pid")
               .agg(F.count(F.lit(1)).alias("cnt")).collect()}
-    off = 0
-    offsets = []
+    # partition offsets as a literal map: O(partitions) entries folded
+    # into the plan, so no offset table, join, job or Python worker
+    off, pairs = 0, []
     for pid in sorted(counts):
-        offsets.append((pid, off))
+        pairs += [F.lit(pid), F.lit(off).cast("long")]
         off += counts[pid]
-    off_df = spark.createDataFrame(offsets or [(0, 0)],
-                                   "_dr_pid int, _dr_off long")
+    offset = (F.create_map(*pairs)[F.col("_dr_pid")] if pairs
+              else F.lit(0).cast("long"))
     w = Window.partitionBy("_dr_pid").orderBy(*order_cols)
-    return (staged.join(F.broadcast(off_df), "_dr_pid")
-            .withColumn(rank_col, F.row_number().over(w) + F.col("_dr_off"))
-            .drop("_dr_pid", "_dr_off"))
+    return (staged.withColumn(rank_col, F.row_number().over(w) + offset)
+            .drop("_dr_pid"))
 
 
 def allocate_surrogate_keys(df: DataFrame, high_water: int, out_col: str,
@@ -243,7 +260,8 @@ def apply_scd2(staging: DataFrame, target: DataFrame, cfg: SCD2Config,
                load_ts: str | None = None,
                deterministic_keys: bool = False,
                incremental: bool = False,
-               high_water: tuple[int, int] | None = None) -> DataFrame:
+               high_water: tuple[int, int] | None = None,
+               cache: list[DataFrame] | None = None) -> DataFrame:
     """Full SCD2 apply: returns the COMPLETE new target state.
 
     new_target = closed-history rows (as-is)
@@ -260,7 +278,10 @@ def apply_scd2(staging: DataFrame, target: DataFrame, cfg: SCD2Config,
 
     The delta is persisted before fan-out (both the close and insert
     branches consume it) — the Spark-native equivalent of the
-    reference's temp-table CTAS (:140-155).
+    reference's temp-table CTAS (:140-155). ``cache`` (from
+    ``delta_cache``) receives the persisted delta so the caller can
+    release it once the result is written; without it the delta stays
+    cached.
     """
     ts = F.lit(load_ts).cast("timestamp") if load_ts else F.current_timestamp()
     nk = cfg.natural_keys
@@ -269,6 +290,8 @@ def apply_scd2(staging: DataFrame, target: DataFrame, cfg: SCD2Config,
     history = target.filter(F.col(cfg.current_flag) != "Y")
 
     delta = detect_delta(staging, current, cfg, incremental=incremental).persist()
+    if cache is not None:
+        cache.append(delta)
 
     # high-water marks (reference A2 cross-join clause :37-41).
     # ``high_water`` lets callers operating on a SLICE of the target

@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dht11_data_pipeline_spark.operators.scd2 import (
-    SCD2Config, apply_scd2, detect_delta,
+    SCD2Config, apply_scd2, delta_cache, detect_delta,
 )
 
 BUCKET_COL = "da_key_bucket"
@@ -109,17 +109,19 @@ def apply_scd2_partitioned(spark: SparkSession, staging: DataFrame,
         .drop(BUCKET_COL)
     )
     stg_slice = stg.filter(F.col(BUCKET_COL).isin(buckets)).drop(BUCKET_COL)
-    new_slice = apply_scd2(stg_slice, target_slice, cfg,
-                           load_ts=load_ts,
-                           deterministic_keys=deterministic_keys,
-                           incremental=incremental,
-                           high_water=(int(hw[0]), int(hw[1])))
-
     prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
-        (new_slice.withColumn(BUCKET_COL, key_bucket(cfg, n_buckets))
-         .write.mode("overwrite").partitionBy(BUCKET_COL).parquet(target_path))
+        with delta_cache() as cache:
+            new_slice = apply_scd2(stg_slice, target_slice, cfg,
+                                   load_ts=load_ts,
+                                   deterministic_keys=deterministic_keys,
+                                   incremental=incremental,
+                                   high_water=(int(hw[0]), int(hw[1])),
+                                   cache=cache)
+            (new_slice.withColumn(BUCKET_COL, key_bucket(cfg, n_buckets))
+             .write.mode("overwrite").partitionBy(BUCKET_COL)
+             .parquet(target_path))
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
     return buckets

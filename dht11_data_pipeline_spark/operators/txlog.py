@@ -38,7 +38,9 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 
-from dht11_data_pipeline_spark.operators.scd2 import SCD2Config, apply_scd2, detect_delta
+from dht11_data_pipeline_spark.operators.scd2 import (
+    SCD2Config, apply_scd2, delta_cache, detect_delta,
+)
 from dht11_data_pipeline_spark.operators.scd2_partitioned import (
     BUCKET_COL, key_bucket,
 )
@@ -188,16 +190,17 @@ def apply_scd2_logged(spark: SparkSession, staging: DataFrame,
     tgt_slice = (_read_bucket_paths(spark, table_dir, changed_rel)
                  if changed_rel else target.limit(0))
     stg_slice = stg.filter(F.col(BUCKET_COL).isin(changed)).drop(BUCKET_COL)
-    new_slice = apply_scd2(stg_slice, tgt_slice, cfg, load_ts=load_ts,
-                           deterministic_keys=deterministic_keys,
-                           incremental=incremental,
-                           high_water=(int(hw[0]), int(hw[1])))
-
     next_v = int(m["version"]) + 1
     commit_name = _commit_dir_name(next_v)
     commit_dir = os.path.join(table_dir, "data", commit_name)
-    (new_slice.withColumn(BUCKET_COL, key_bucket(cfg, n_buckets))
-     .write.mode("overwrite").partitionBy(BUCKET_COL).parquet(commit_dir))
+    with delta_cache() as cache:
+        new_slice = apply_scd2(stg_slice, tgt_slice, cfg, load_ts=load_ts,
+                               deterministic_keys=deterministic_keys,
+                               incremental=incremental,
+                               high_water=(int(hw[0]), int(hw[1])),
+                               cache=cache)
+        (new_slice.withColumn(BUCKET_COL, key_bucket(cfg, n_buckets))
+         .write.mode("overwrite").partitionBy(BUCKET_COL).parquet(commit_dir))
     written = {int(d.split("=", 1)[1])
                for d in os.listdir(commit_dir) if d.startswith(f"{BUCKET_COL}=")}
 

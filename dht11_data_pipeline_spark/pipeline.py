@@ -4,12 +4,17 @@ rebuilt as one Spark driver program.
 Flow (reference stage → here):
   interface existence gate      → ControlTable.interface_exists
   previous-run 'Success' gate   → ControlTable.assert_previous_success
-  mint load_key, run-row insert → ControlTable.next_load_key/add_run_entry
+  mint load_key, run-row upsert → ControlTable.next_load_key/add_run_entry
   Firebase subtree fetch+flatten→ sources.firebase_tree (distributed)
   landing delete+reload         → layers.write_landing (atomic overwrite)
   landing→intermediate + stamp  → layers.load_to_intermediate
-  SCD2 historization            → operators.scd2.apply_scd2 (atomic swap)
+  SCD2 historization            → historize: operators.txlog one-commit
+                                  apply (atomic manifest publish)
   status updates                → ControlTable.update_run_status
+
+The ledger steps (gates, run-row upsert, status updates) run on the
+driver against a one-file parquet ledger (operators/control.py): no
+Spark job, no Python worker, atomic staged replace per write.
 
 The XCom dataset hand-off and the cross-DAG trigger (reference E2,
 Airflow-DAG.py:299-307,529-555) disappear: every stage passes lazy
@@ -27,7 +32,9 @@ from dht11_data_pipeline_spark.operators.control import ControlTable
 from dht11_data_pipeline_spark.operators.layers import (
     load_to_intermediate, read_intermediate, write_landing,
 )
-from dht11_data_pipeline_spark.operators.scd2 import SCD2Config, apply_scd2
+from dht11_data_pipeline_spark.operators.scd2 import (
+    SCD2Config, apply_scd2, delta_cache,
+)
 from dht11_data_pipeline_spark.operators.scd2_partitioned import (
     BUCKET_COL, apply_scd2_partitioned, init_partitioned_target,
 )
@@ -96,9 +103,12 @@ def historize(spark: SparkSession, warehouse_dir: str, load_key: int,
         from dht11_data_pipeline_spark.operators import txlog
         if txlog.current_version(final) is None:
             target = read_history(spark, warehouse_dir)
-            new_state = apply_scd2(staging, target, HIST_CFG,
-                                   load_ts=load_ts, deterministic_keys=True)
-            txlog.init_table(new_state, final, HIST_CFG, n_buckets=n_buckets)
+            with delta_cache() as cache:
+                new_state = apply_scd2(staging, target, HIST_CFG,
+                                       load_ts=load_ts, deterministic_keys=True,
+                                       cache=cache)
+                txlog.init_table(new_state, final, HIST_CFG,
+                                 n_buckets=n_buckets)
         else:
             txlog.apply_scd2_logged(
                 spark, staging, final, HIST_CFG, load_ts=load_ts,
@@ -109,9 +119,11 @@ def historize(spark: SparkSession, warehouse_dir: str, load_key: int,
         if not os.path.exists(final):
             # first batch: full apply on the empty target, then lay the
             # result down in the bucket-partitioned format
-            new_state = apply_scd2(staging, target, HIST_CFG,
-                                   load_ts=load_ts, deterministic_keys=True)
-            init_partitioned_target(new_state, final, HIST_CFG, n_buckets)
+            with delta_cache() as cache:
+                new_state = apply_scd2(staging, target, HIST_CFG,
+                                       load_ts=load_ts, deterministic_keys=True,
+                                       cache=cache)
+                init_partitioned_target(new_state, final, HIST_CFG, n_buckets)
         else:
             apply_scd2_partitioned(
                 spark, staging, final, HIST_CFG, n_buckets=n_buckets,
@@ -120,10 +132,11 @@ def historize(spark: SparkSession, warehouse_dir: str, load_key: int,
     if mode != "swap":
         raise ValueError(f"unknown historize mode {mode!r}")
     target = read_history(spark, warehouse_dir)
-    new_state = apply_scd2(staging, target, HIST_CFG, load_ts=load_ts,
-                           deterministic_keys=True)
     tmp = final + "_staged"
-    new_state.write.mode("overwrite").parquet(tmp)
+    with delta_cache() as cache:
+        new_state = apply_scd2(staging, target, HIST_CFG, load_ts=load_ts,
+                               deterministic_keys=True, cache=cache)
+        new_state.write.mode("overwrite").parquet(tmp)
     import shutil
     if os.path.exists(final):
         shutil.rmtree(final)
@@ -240,9 +253,6 @@ def bootstrap(spark: SparkSession, warehouse_dir: str,
     initial 'Success' row the prev-run gate requires (FIXTURES.md B4)."""
     ctl = ControlTable(spark, warehouse_dir)
     ctl.register_interface(interface_cd, interface_nm)
-    df = spark.sql(
-        f"SELECT '{interface_nm}' interface_name, '{interface_cd}' interface_cd, "
-        f"'Success' load_status, CAST('{seed_start_ts}' AS TIMESTAMP) load_start_dt_tm, "
-        "current_timestamp() load_complete_dt_tm, CAST(1 AS BIGINT) load_key"
-    )
-    df.write.mode("append").parquet(ctl.control_path)
+    ctl.add_run_entry(interface_nm, interface_cd, 1, "Success",
+                      start_ts=seed_start_ts)
+    ctl.update_run_status(interface_cd, 1, "Success", complete=True)

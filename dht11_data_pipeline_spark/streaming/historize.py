@@ -13,7 +13,9 @@ between sink write and checkpoint commit) re-runs ``apply_scd2`` whose
 hash-compare classifies every row NC — the same content-hash idempotency
 the reference relies on (Delta_detection_query_gen.py:56). The control
 ledger row per batch (load_key = batch_id + base) preserves the
-reference's run-ledger surface (CheckInterface_Metadata.py:68-121).
+reference's run-ledger surface (CheckInterface_Metadata.py:68-121); the
+ledger upserts on (interface_cd, load_key), so a replayed batch rewrites
+its row rather than appending a second one.
 
 The target swap is staged-write + atomic rename, replacing the
 reference's non-atomic MERGE-then-INSERT (SURVEY §4.2). On a real
@@ -31,7 +33,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
-from dht11_data_pipeline_spark.operators.scd2 import SCD2Config, apply_scd2
+from dht11_data_pipeline_spark.operators.scd2 import (
+    SCD2Config, apply_scd2, delta_cache,
+)
 
 
 def empty_target(spark: SparkSession, staging: DataFrame,
@@ -134,10 +138,11 @@ def scd2_batch_writer(target_path: str, cfg: SCD2Config,
         staging = batch_df.withColumn(
             "load_key", F.lit(load_key).cast("bigint"))
         target = read_target(spark, target_path, staging, cfg)
-        new_state = apply_scd2(staging, target, cfg,
-                               deterministic_keys=deterministic_keys,
-                               incremental=True)
-        swap_target(new_state, target_path)
+        with delta_cache() as cache:
+            new_state = apply_scd2(staging, target, cfg,
+                                   deterministic_keys=deterministic_keys,
+                                   incremental=True, cache=cache)
+            swap_target(new_state, target_path)
         if control is not None and interface is not None:
             control.update_run_status(interface[1], load_key, "Success",
                                       complete=True)
@@ -166,10 +171,12 @@ def scd2_logged_batch_writer(table_dir: str, cfg: SCD2Config,
         staging = batch_df.withColumn(
             "load_key", F.lit(load_key_base + batch_id).cast("bigint"))
         if txlog.current_version(table_dir) is None:
-            initial = apply_scd2(
-                staging, empty_target(spark, staging, cfg), cfg,
-                deterministic_keys=deterministic_keys, incremental=True)
-            txlog.init_table(initial, table_dir, cfg, n_buckets=n_buckets)
+            with delta_cache() as cache:
+                initial = apply_scd2(
+                    staging, empty_target(spark, staging, cfg), cfg,
+                    deterministic_keys=deterministic_keys, incremental=True,
+                    cache=cache)
+                txlog.init_table(initial, table_dir, cfg, n_buckets=n_buckets)
             return
         txlog.apply_scd2_logged(spark, staging, table_dir, cfg,
                                 deterministic_keys=deterministic_keys,

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import json
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -20,10 +21,16 @@ def _write_feed(tmp_path, rows, n_batches=3):
     src = str(tmp_path / "feed")
     os.makedirs(src)
     per = (len(rows) + n_batches - 1) // n_batches
+    t0 = int(time.time()) - n_batches
     for i in range(n_batches):
-        with open(os.path.join(src, f"b{i}.json"), "w") as f:
+        path = os.path.join(src, f"b{i}.json")
+        with open(path, "w") as f:
             for r in rows[i * per:(i + 1) * per]:
                 f.write(json.dumps(r) + "\n")
+        # the file source orders by mtime: strictly increasing stamps
+        # make file i micro-batch i under maxFilesPerTrigger=1 (files
+        # written in one tick would otherwise tie)
+        os.utime(path, (t0 + i, t0 + i))
     return src
 
 
@@ -370,6 +377,7 @@ def test_source_divergence_stream_matches_batch(spark, tmp_path, sf_dir):
 
     got = spark.read.parquet(out)
     per = (len(rows) + n_batches - 1) // n_batches
+    t0 = int(time.time()) - n_batches
     for i in range(n_batches):
         chunk = rows[i * per:(i + 1) * per]
         if not chunk:
