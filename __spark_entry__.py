@@ -58,6 +58,10 @@ CHANGED_THIS_ROUND: list[str] = [
     "graph_adamic_adar",         # numpy wedge kernel (driver tier)
     "graph_link_prediction",     # numpy wedge kernel (driver tier)
     "text_rake_keywords",        # one doc_id shuffle up front (8→3 exch)
+    "cur_contamination_pairs",   # (contamination_index gram build)
+    "cur_contamination_spans",   # (contamination_index gram build)
+    # --- write-path keys: key mint without the per-partition shuffle ---
+    "w1_surrogate_key_mint",     # dense_rank_distributed sort + mono id
     # --- r13-touched keys the r13 driver window never re-checked
     #     (round-13 verdict item 3: stale CHANGED_THIS_ROUND) ---
     "sim_label_knn_audit",

@@ -79,9 +79,9 @@ def main(argv: list[str] | None = None) -> int:
                         since_ts=args.since_ts)
         print(json.dumps(out))
     elif args.cmd == "historize":
-        from dht11_data_pipeline_spark.pipeline import historize
-        hist = historize(spark, args.warehouse, args.load_key)
-        print(json.dumps({"hist_rows": hist.count()}))
+        from dht11_data_pipeline_spark.pipeline import historize, history_rows
+        historize(spark, args.warehouse, args.load_key)
+        print(json.dumps({"hist_rows": history_rows(args.warehouse)}))
     elif args.cmd == "compact":
         from dht11_data_pipeline_spark.operators.compact import compact
         sort_by = args.sort_by.split(",") if args.sort_by else None

@@ -247,6 +247,8 @@ def _assign_recompute(corpus: DataFrame,
     the same caveat class as the r14 partial-sum change, pinned at
     1e-12 relative in tests; the declared sim_kmeans_clusters outputs
     are invariant verdicts with 1e-9 headroom."""
+    if not centroids:
+        raise ValueError("need at least one centroid")
     import numpy as np
 
     centroids = sorted(centroids)

@@ -37,7 +37,6 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from dht11_data_pipeline_spark.functions.hashing import delta_hash
 
@@ -176,20 +175,24 @@ def detect_delta(staging: DataFrame, target_current: DataFrame,
 def dense_rank_distributed(df: DataFrame, order_cols: list[str],
                            rank_col: str = "_rank") -> DataFrame:
     """Global dense 1..N numbering by ``order_cols`` WITHOUT a
-    single-partition sort: range-repartition on the keys, row_number
-    within each partition, then add driver-computed partition offsets
-    (the zipWithIndex pattern, DataFrame-native). Each task sorts only
-    its slice; the driver folds the O(partitions) offsets into the plan
-    as a literal map. Ties across a range boundary get an
-    arbitrary-but-valid order — same contract as a global ROW_NUMBER
-    over non-unique keys.
+    single-partition sort: range-repartition on the keys, sort within
+    each partition, number each row from ``monotonically_increasing_id``
+    (partition index in the upper 31 bits, row position in the lower
+    33) and add driver-computed partition offsets (the zipWithIndex
+    pattern, DataFrame-native). Each task sorts only its slice; the
+    driver folds the O(partitions) offsets into the plan as a literal
+    map, and no second shuffle regroups the rows by partition. Ties
+    across a range boundary get an arbitrary-but-valid order — same
+    contract as a global ROW_NUMBER over non-unique keys.
 
-    The shuffled frame has two consumers (the offset count and the
-    final numbering); it is ``localCheckpoint``ed rather than
-    ``persist``ed so the materialized copy is RELEASED by the context
-    cleaner once unreferenced — a ``persist`` here would pin one SQL
-    cache entry per call forever, a real leak on the per-micro-batch
-    streaming SCD2 path.
+    The sorted range partitions have two consumers (the offset count
+    and the final numbering); they are ``localCheckpoint``ed rather
+    than ``persist``ed so the materialized copy is RELEASED by the
+    context cleaner once unreferenced — a ``persist`` here would pin
+    one SQL cache entry per call forever, a real leak on the
+    per-micro-batch streaming SCD2 path. The numbering reads the
+    checkpoint directly, so each row's partition index is its range
+    partition's.
 
     The INPUT is also checkpointed first: ``repartitionByRange`` runs a
     sampling job to pick range bounds, which would otherwise evaluate
@@ -209,10 +212,10 @@ def dense_rank_distributed(df: DataFrame, order_cols: list[str],
     cap = max(2, int(spark.conf.get("spark.sql.shuffle.partitions")))
     n_parts = max(2, min(cap, -(-n_rows // 250_000)))
     staged = (narrow.repartitionByRange(n_parts, *order_cols)
-              .withColumn("_dr_pid", F.spark_partition_id())
+              .sortWithinPartitions(*order_cols)
               .localCheckpoint())
-    counts = {r["_dr_pid"]: r["cnt"] for r in
-              staged.groupBy("_dr_pid")
+    counts = {r["pid"]: r["cnt"] for r in
+              staged.groupBy(F.spark_partition_id().alias("pid"))
               .agg(F.count(F.lit(1)).alias("cnt")).collect()}
     # partition offsets as a literal map: O(partitions) entries folded
     # into the plan, so no offset table, join, job or Python worker
@@ -220,11 +223,13 @@ def dense_rank_distributed(df: DataFrame, order_cols: list[str],
     for pid in sorted(counts):
         pairs += [F.lit(pid), F.lit(off).cast("long")]
         off += counts[pid]
-    offset = (F.create_map(*pairs)[F.col("_dr_pid")] if pairs
-              else F.lit(0).cast("long"))
-    w = Window.partitionBy("_dr_pid").orderBy(*order_cols)
-    return (staged.withColumn(rank_col, F.row_number().over(w) + offset)
-            .drop("_dr_pid"))
+    row_id = F.col("_dr_id")
+    offset = (F.create_map(*pairs)[F.shiftright(row_id, 33).cast("int")]
+              if pairs else F.lit(0).cast("long"))
+    return (staged.withColumn("_dr_id", F.monotonically_increasing_id())
+            .withColumn(rank_col,
+                        row_id.bitwiseAND(2**33 - 1) + 1 + offset)
+            .drop("_dr_id"))
 
 
 def allocate_surrogate_keys(df: DataFrame, high_water: int, out_col: str,

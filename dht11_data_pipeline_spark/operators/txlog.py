@@ -13,17 +13,41 @@ one atomic manifest rename; readers resolve a manifest once and keep a
 consistent snapshot no matter what commits afterwards.
 
 Layout:
-    <table>/data/commit-<n>/<bucket-col>=<id>/*.parquet   (immutable)
-    <table>/_txlog/v<n>.json     manifest: bucket id -> commit dir
-    <table>/_txlog/v<n>.json.tmp staged then os.rename'd (atomic POSIX)
+    <table>/data/commit-<n>/<bucket-col>=<id>/part-*.parquet  (immutable,
+                                 ONE file per bucket per commit)
+    <table>/_txlog/v<n>.json     manifest (fields below)
+    <table>/_txlog/v<n>.json.tmp staged then os.link'd (atomic POSIX)
+
+Manifest fields:
+    n_buckets   bucket count of the key hash (fixed at init)
+    buckets     bucket id -> commit dir holding its current rows
+    schema      the table's Spark schema (``StructType.jsonValue()``),
+                carried forward by every commit
+    stats       bucket id -> {"rows": n, "max": {<ak_col>: v,
+                <key_col>: v}} from the parquet footers of that
+                bucket's files (``max`` is null for an all-null column)
 
 A manifest maps every bucket to the commit directory holding its
 current rows, so a commit that rewrites buckets {3, 17} publishes a
-manifest where those two entries point at the new commit dir and every
-other entry is carried over — old readers keep old files, new readers
-see the complete new state, and a crash before the rename leaves the
-table at the previous version with some orphaned (never-referenced)
-data files for vacuum to collect.
+manifest where those two entries (and their stats) point at the new
+commit dir and every other entry is carried over — old readers keep
+old files, new readers see the complete new state, and a crash before
+the publish leaves the table at the previous version with some
+orphaned (never-referenced) data files for vacuum to collect.
+
+The manifest is the table's metadata, so resolving a snapshot and
+committing a batch run no Spark job that only reads metadata: reads
+pass the manifest schema (no parquet schema-inference job), the
+surrogate-key high-water marks are maxima over ``stats`` (no
+high-water max() scan over every bucket of the target), the row count
+is their sum (no count job), and the stats of a commit come
+from the footers of the files it just wrote, read on the driver —
+O(files written). Each write rebalances on the bucket column, so a
+bucket normally lands in one task and one file (AQE still splits a
+bucket larger than the advisory partition size). A manifest without
+``schema``/``stats`` (written before these fields existed) still
+reads, with schema inference; its next commit computes stats for every
+live bucket from the footers.
 
 At 100 TB the manifest is O(buckets) — kilobytes — and commit cost is
 independent of table size. The same design scales to file-level
@@ -36,7 +60,9 @@ import json
 import os
 import time
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from dht11_data_pipeline_spark.operators.scd2 import (
     SCD2Config, apply_scd2, delta_cache, detect_delta,
@@ -115,18 +141,81 @@ def _commit_dir_name(version: int) -> str:
     return f"commit-{version:08d}-{os.getpid()}-{int(time.time() * 1000)}"
 
 
+def _bucket_stats(bucket_dir: str, cols: list[str]) -> dict:
+    """Rows and the maxima of the integer columns ``cols`` over one
+    bucket directory, from the parquet footers of its files — read on
+    the driver, no Spark job. ``max_raw`` rather than ``max``: pyarrow
+    cannot convert the statistics of an INT64-backed decimal(18,0)
+    (the surrogate-key type) but returns its raw integer."""
+    rows, maxima = 0, dict.fromkeys(cols)
+    for f in sorted(os.listdir(bucket_dir)):
+        if not f.endswith(".parquet"):
+            continue
+        md = pq.read_metadata(os.path.join(bucket_dir, f))
+        rows += md.num_rows
+        names = [md.schema.column(i).name for i in range(md.num_columns)]
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            for c in cols:
+                chunk = rg.column(names.index(c))
+                st = chunk.statistics
+                if st is None or not st.has_min_max:
+                    if st is None or st.null_count < chunk.num_values:
+                        raise ValueError(
+                            f"{bucket_dir}/{f}: no max statistic for {c}")
+                    continue  # all-null chunk
+                v = st.max_raw
+                maxima[c] = v if maxima[c] is None else max(maxima[c], v)
+    return {"rows": rows, "max": maxima}
+
+
+def _live_stats(table_dir: str, m: dict, cols: list[str]) -> dict:
+    """The manifest's per-bucket stats for every live bucket. A bucket
+    without an entry (a manifest written before stats existed) gets
+    its stats from the footers of its files."""
+    have = m.get("stats", {})
+    return {b: have[b] if b in have
+            else _bucket_stats(os.path.join(table_dir, rel), cols)
+            for b, rel in m["buckets"].items()}
+
+
+def table_rows(table_dir: str, version: int | None = None) -> int:
+    """Row count of a snapshot, summed from the manifest — no Spark
+    job."""
+    m = read_manifest(table_dir, version)
+    return sum(s["rows"] for s in _live_stats(table_dir, m, []).values())
+
+
+def _write_buckets(df: DataFrame, table_dir: str, commit_name: str,
+                   cfg: SCD2Config, n_buckets: int) -> tuple[dict, dict]:
+    """Write ``df`` bucket-partitioned under a new commit dir; returns
+    (bucket id -> rel dir, bucket id -> footer stats) for the buckets
+    written. The rebalance groups each bucket into one task, so a
+    bucket is one file (AQE still splits a bucket above the advisory
+    partition size)."""
+    commit_dir = os.path.join(table_dir, "data", commit_name)
+    (df.withColumn(BUCKET_COL, key_bucket(cfg, n_buckets))
+     .hint("rebalance", BUCKET_COL)
+     .write.mode("overwrite").partitionBy(BUCKET_COL).parquet(commit_dir))
+    cols = [cfg.ak_col, cfg.key_col]
+    buckets, stats = {}, {}
+    for d in os.listdir(commit_dir):
+        if d.startswith(f"{BUCKET_COL}="):
+            b = str(int(d.split("=", 1)[1]))
+            buckets[b] = f"data/{commit_name}/{d}"
+            stats[b] = _bucket_stats(os.path.join(commit_dir, d), cols)
+    return buckets, stats
+
+
 def init_table(df: DataFrame, table_dir: str, cfg: SCD2Config,
                n_buckets: int = 64) -> int:
     """Materialize ``df`` as version 1 of a logged, bucket-partitioned
     table."""
-    name = _commit_dir_name(1)
-    commit_dir = os.path.join(table_dir, "data", name)
-    (df.withColumn(BUCKET_COL, key_bucket(cfg, n_buckets))
-     .write.mode("overwrite").partitionBy(BUCKET_COL).parquet(commit_dir))
-    written = {int(d.split("=", 1)[1])
-               for d in os.listdir(commit_dir) if d.startswith(f"{BUCKET_COL}=")}
-    buckets = {str(b): f"data/{name}/{BUCKET_COL}={b}" for b in written}
-    return _commit(table_dir, {"n_buckets": n_buckets, "buckets": buckets},
+    buckets, stats = _write_buckets(df, table_dir, _commit_dir_name(1),
+                                    cfg, n_buckets)
+    return _commit(table_dir, {"n_buckets": n_buckets, "buckets": buckets,
+                               "schema": df.schema.jsonValue(),
+                               "stats": stats},
                    base_version=0)
 
 
@@ -137,19 +226,24 @@ def read_table(spark: SparkSession, table_dir: str,
     files are immutable and vacuum retains recent versions."""
     m = read_manifest(table_dir, version)
     return _read_bucket_paths(spark, table_dir,
-                              sorted(m["buckets"].values()))
+                              sorted(m["buckets"].values()), m.get("schema"))
 
 
 def _read_bucket_paths(spark: SparkSession, table_dir: str,
-                       rel_paths: list[str]) -> DataFrame:
+                       rel_paths: list[str],
+                       schema: dict | None = None) -> DataFrame:
     """Read bucket directories directly — no partition inference (the
     commit-level dir isn't key=value, and the bucket id is always
     derivable from the natural keys via key_bucket, so the path-encoded
-    value is never needed)."""
+    value is never needed). ``schema`` (the manifest's) skips the
+    parquet schema-inference job."""
     if not rel_paths:
         raise ValueError(f"empty table manifest in {table_dir}")
     paths = [os.path.join(table_dir, p) for p in rel_paths]
-    return spark.read.parquet(*paths)
+    reader = spark.read
+    if schema is not None:
+        reader = reader.schema(StructType.fromJson(schema))
+    return reader.parquet(*paths)
 
 
 def apply_scd2_logged(spark: SparkSession, staging: DataFrame,
@@ -160,14 +254,18 @@ def apply_scd2_logged(spark: SparkSession, staging: DataFrame,
     """SCD2 apply as ONE atomic commit: classify changed keys, write
     the changed buckets' new state to an immutable commit dir, publish
     a manifest pointing those buckets at it (all other buckets carry
-    their existing dirs). Crash anywhere before the final rename leaves
-    version N fully intact; readers of any version never see a mix.
+    their existing dirs and stats). Crash anywhere before the final
+    publish leaves version N fully intact; readers of any version never
+    see a mix. The surrogate-key high-water marks come from the
+    manifest's stats, not from a scan of the target.
 
     Returns the committed version (current version if no keys changed).
     """
     m = read_manifest(table_dir)
     n_buckets = int(m["n_buckets"])
-    target = read_table(spark, table_dir)
+    schema = m.get("schema")
+    target = _read_bucket_paths(spark, table_dir,
+                                sorted(m["buckets"].values()), schema)
 
     stg = staging.withColumn(BUCKET_COL, key_bucket(cfg, n_buckets))
     current = target.filter(F.col(cfg.current_flag) == "Y")
@@ -180,41 +278,39 @@ def apply_scd2_logged(spark: SparkSession, staging: DataFrame,
     if not changed:
         return int(m["version"])
 
-    hw = target.agg(
-        F.coalesce(F.max(F.col(cfg.ak_col)), F.lit(0)),
-        F.coalesce(F.max(F.col(cfg.key_col)), F.lit(0)),
-    ).first()
+    stats = _live_stats(table_dir, m, [cfg.ak_col, cfg.key_col])
+    high_water = tuple(
+        max((s["max"][c] for s in stats.values()
+             if s["max"][c] is not None), default=0)
+        for c in (cfg.ak_col, cfg.key_col))
     # payload read touches ONLY the changed buckets' directories
     changed_rel = [m["buckets"][str(b)] for b in changed
                    if str(b) in m["buckets"]]
-    tgt_slice = (_read_bucket_paths(spark, table_dir, changed_rel)
+    tgt_slice = (_read_bucket_paths(spark, table_dir, changed_rel, schema)
                  if changed_rel else target.limit(0))
     stg_slice = stg.filter(F.col(BUCKET_COL).isin(changed)).drop(BUCKET_COL)
-    next_v = int(m["version"]) + 1
-    commit_name = _commit_dir_name(next_v)
-    commit_dir = os.path.join(table_dir, "data", commit_name)
     with delta_cache() as cache:
         new_slice = apply_scd2(stg_slice, tgt_slice, cfg, load_ts=load_ts,
                                deterministic_keys=deterministic_keys,
                                incremental=incremental,
-                               high_water=(int(hw[0]), int(hw[1])),
-                               cache=cache)
-        (new_slice.withColumn(BUCKET_COL, key_bucket(cfg, n_buckets))
-         .write.mode("overwrite").partitionBy(BUCKET_COL).parquet(commit_dir))
-    written = {int(d.split("=", 1)[1])
-               for d in os.listdir(commit_dir) if d.startswith(f"{BUCKET_COL}=")}
+                               high_water=high_water, cache=cache)
+        written, written_stats = _write_buckets(
+            new_slice, table_dir, _commit_dir_name(int(m["version"]) + 1),
+            cfg, n_buckets)
 
     buckets = dict(m["buckets"])
-    for b in changed:
-        key = str(b)
+    for b in map(str, changed):
         if b in written:
-            buckets[key] = f"data/{commit_name}/{BUCKET_COL}={b}"
+            buckets[b], stats[b] = written[b], written_stats[b]
         else:
             # bucket emptied (e.g. all rows deleted AND history empty)
-            buckets.pop(key, None)
+            buckets.pop(b, None)
+            stats.pop(b, None)
     # base pinned to the snapshot this transaction READ: a committer
     # working off a stale manifest must conflict, not clobber
-    return _commit(table_dir, {"n_buckets": n_buckets, "buckets": buckets},
+    return _commit(table_dir, {"n_buckets": n_buckets, "buckets": buckets,
+                               "schema": schema or new_slice.schema.jsonValue(),
+                               "stats": stats},
                    base_version=int(m["version"]))
 
 
@@ -247,9 +343,11 @@ def change_feed(spark: SparkSession, table_dir: str,
     new_paths = sorted(m_to["buckets"][k] for k in changed_keys
                        if k in m_to["buckets"])
     empty = read_table(spark, table_dir, from_version).limit(0)
-    old = (_read_bucket_paths(spark, table_dir, old_paths)
+    old = (_read_bucket_paths(spark, table_dir, old_paths,
+                              m_from.get("schema"))
            if old_paths else empty)
-    new = (_read_bucket_paths(spark, table_dir, new_paths)
+    new = (_read_bucket_paths(spark, table_dir, new_paths,
+                              m_to.get("schema"))
            if new_paths else empty)
     deletes = old.exceptAll(new).withColumn("_change_type", F.lit("delete"))
     inserts = new.exceptAll(old).withColumn("_change_type", F.lit("insert"))

@@ -11,10 +11,16 @@ Flow (reference stage → here):
   SCD2 historization            → historize: operators.txlog one-commit
                                   apply (atomic manifest publish)
   status updates                → ControlTable.update_run_status
+  history row count             → history_rows: summed from the txlog
+                                  manifest's per-bucket stats
 
 The ledger steps (gates, run-row upsert, status updates) run on the
 driver against a one-file parquet ledger (operators/control.py): no
-Spark job, no Python worker, atomic staged replace per write.
+Spark job, no Python worker, atomic staged replace per write. The
+history table's metadata steps do the same against the txlog manifest:
+snapshot reads take its schema (no inference job), the commit takes
+its surrogate-key high-water marks from its stats (no target scan) and
+the batch's history row count is their sum (no count job).
 
 The XCom dataset hand-off and the cross-DAG trigger (reference E2,
 Airflow-DAG.py:299-307,529-555) disappear: every stage passes lazy
@@ -71,6 +77,13 @@ def read_history(spark: SparkSession, warehouse_dir: str) -> DataFrame:
              "da_valid_from_date timestamp, da_valid_to_date timestamp, "
              "da_inserted_datetime timestamp, da_updated_datetime timestamp")
     return spark.createDataFrame([], f"{landing_like}, {audit}")
+
+
+def history_rows(warehouse_dir: str) -> int:
+    """Rows in the logged history table, from its manifest — no Spark
+    job."""
+    from dht11_data_pipeline_spark.operators import txlog
+    return txlog.table_rows(_hist_path(warehouse_dir))
 
 
 def historize(spark: SparkSession, warehouse_dir: str, load_key: int,
@@ -179,12 +192,12 @@ def run_batch(spark: SparkSession, warehouse_dir: str, tree_json_path: str,
     load_to_intermediate(spark, warehouse_dir, load_key, device_id)
     ctl.update_run_status(interface_cd, load_key, "INTEGRATION LOAD COMPLETED")
 
-    hist = historize(spark, warehouse_dir, load_key, load_ts=load_ts)
+    historize(spark, warehouse_dir, load_key, load_ts=load_ts)
     ctl.update_run_status(interface_cd, load_key, "Success", complete=True)
 
     n = read_intermediate(spark, warehouse_dir, load_key).count()
     return {"load_key": load_key, "rows": n, "skipped": False,
-            "hist_rows": hist.count()}
+            "hist_rows": history_rows(warehouse_dir)}
 
 
 def run_dedup_batch(spark: SparkSession, warehouse_dir: str,

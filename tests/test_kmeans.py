@@ -64,3 +64,30 @@ def test_deterministic_across_runs(spark, sf_dir):
     r1 = sorted((r["vec_id"], r["cluster_id"]) for r in a1.collect())
     r2 = sorted((r["vec_id"], r["cluster_id"]) for r in a2.collect())
     assert r1 == r2
+
+
+def test_zero_centroids_fail_on_the_driver(spark):
+    """No centroid to assign to is a caller error: it must raise the
+    same driver-side ValueError as ``assign_clusters``, before any
+    Lloyd round launches a job, not a numpy error inside a task."""
+    import uuid
+
+    import pytest
+
+    corpus = spark.createDataFrame(
+        [(i, [float(i), 1.0]) for i in range(1, 4)],
+        "vec_id long, embedding array<float>")
+    sc = spark.sparkContext
+    group = f"kmeans-pin-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "zero-centroid pin")
+    try:
+        with pytest.raises(ValueError, match="need at least one centroid"):
+            lloyd_kmeans(spark, corpus, init_centroids=[])
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+    finally:
+        for k in ("spark.jobGroup.id", "spark.job.description",
+                  "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(k, None)
+    # the legacy id-modulo seeding matching no id takes the same exit
+    with pytest.raises(ValueError, match="need at least one centroid"):
+        lloyd_kmeans(spark, corpus, centroid_mod=100)

@@ -277,3 +277,17 @@ def test_run_batch_and_stream_drain_release_the_delta_cache(spark, tmp_path):
         assert q.exception() is None
         assert _cache_empty(spark)
     assert spark.read.parquet(str(tmp_path / "target")).count() == 2
+
+
+def test_dense_rank_needs_no_partition_id_exchange(spark):
+    """The numbering runs on the sorted range partitions themselves: no
+    hash exchange regroups the rows by partition id (one shuffle per
+    deterministic key mint), and ranks stay dense 1..N in key order
+    across several range partitions."""
+    df = spark.range(0, 2000, 1, 5).selectExpr("(id * 7919) % 2000 AS k")
+    ranked = dense_rank_distributed(df, ["k"], "rk")
+    plan = ranked._jdf.queryExecution().executedPlan().toString()
+    assert "hashpartitioning(_dr_pid" not in plan
+    assert "Exchange" not in plan
+    assert sorted((r["rk"], r["k"]) for r in ranked.collect()) == [
+        (n + 1, n) for n in range(2000)]

@@ -38,6 +38,16 @@ def test_code_cache_flag_reached_the_live_jvm(spark):
         f"live JVM runs {cache_args[-1]}, session.py asks for {want}")
 
 
+def test_partition_listing_stays_on_the_driver(spark):
+    """A txlog snapshot names one directory per bucket (64 by default).
+    Above the listing threshold (Spark default 32) every snapshot read
+    launches a parallel "Listing leaf files" job, 0.2-0.3 s each, three
+    per SCD2 batch; the threshold must sit well above the bucket count
+    so the listing runs on the driver."""
+    assert int(spark.conf.get(
+        "spark.sql.sources.parallelPartitionDiscovery.threshold")) >= 1024
+
+
 def test_engine_knobs_present(spark):
     """The knobs every surface (tests, bench, driver contract) relies
     on: AQE on, Arrow on, UTC session timezone (the DuckDB oracle runs
