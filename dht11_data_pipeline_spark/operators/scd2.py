@@ -15,7 +15,9 @@ Differences, deliberate and documented:
 - The reference's MERGE-then-INSERT is two separate commits — a crash
   between them loses rows (SURVEY §7.4.2). We build the complete new
   target state as ONE DataFrame (history ∪ unchanged ∪ closed ∪ new)
-  and atomically swap it in — same end state, no crash window.
+  and the caller publishes it in one atomic step (a txlog manifest
+  commit; the streaming sink's staged swap) — same end state, no
+  crash window.
 - The reference's surrogate allocator sorts every insert row into one
   partition (ORDER BY a constant). Downstream only relies on keys being
   UNIQUE and > the previous high-water mark, so the scale path mints
@@ -232,35 +234,6 @@ def dense_rank_distributed(df: DataFrame, order_cols: list[str],
             .drop("_dr_id"))
 
 
-def allocate_surrogate_keys(df: DataFrame, high_water: int, out_col: str,
-                            order_cols: list[str] | None = None,
-                            deterministic: bool = False) -> DataFrame:
-    """Mint surrogate keys strictly above ``high_water``.
-
-    Scale path (default): ``monotonically_increasing_id()`` — unique,
-    parallel, no shuffle; keys are sparse but the pipeline contract is
-    only uniqueness + monotonicity above the high-water mark (reference
-    Delta_detection_query_gen.py:39,253-283 — SURVEY §7.4.1).
-
-    ``deterministic=True``: dense keys ordered by ``order_cols`` — the
-    reference's ``ROW_NUMBER() OVER (ORDER BY 'JP')`` semantics, minted
-    via ``dense_rank_distributed`` (range-partitioned numbering +
-    offsets), so even the deterministic path never funnels the insert
-    set through one partition.
-    """
-    if deterministic:
-        if not order_cols:
-            raise ValueError("deterministic allocation needs order_cols")
-        return (dense_rank_distributed(df, order_cols, "_sk_rank")
-                .withColumn(out_col, (F.col("_sk_rank") + F.lit(high_water))
-                            .cast("decimal(18,0)"))
-                .drop("_sk_rank"))
-    return df.withColumn(
-        out_col,
-        (F.monotonically_increasing_id() + F.lit(high_water) + 1).cast("decimal(18,0)"),
-    )
-
-
 def apply_scd2(staging: DataFrame, target: DataFrame, cfg: SCD2Config,
                load_ts: str | None = None,
                deterministic_keys: bool = False,
@@ -300,8 +273,9 @@ def apply_scd2(staging: DataFrame, target: DataFrame, cfg: SCD2Config,
 
     # high-water marks (reference A2 cross-join clause :37-41).
     # ``high_water`` lets callers operating on a SLICE of the target
-    # (scd2_partitioned) pass the GLOBAL maxima — slice-local maxima
-    # would mint keys that collide with rows outside the slice.
+    # (txlog.apply_scd2_logged, from its manifest stats) pass the
+    # GLOBAL maxima — slice-local maxima would mint keys that collide
+    # with rows outside the slice.
     if high_water is not None:
         hw_ak, hw_key = high_water
     else:

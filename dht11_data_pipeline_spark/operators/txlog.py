@@ -2,11 +2,14 @@
 multi-bucket commits, snapshot isolation, and time travel without an
 external table format.
 
-Why: the bucket-partitioned SCD2 apply (scd2_partitioned.py) commits
-per partition directory, so a crash mid-write can expose some buckets
-at the new state and others at the old; and a reader holding a lazy
-DataFrame over the target breaks when a swap deletes the files under
-it (the swap_target FILE_NOT_EXIST hazard). Both are solved the way
+Why: the batch history table once had two unlogged write modes, both
+since removed. A bucket-partitioned apply committed per partition
+directory, so a crash mid-write could expose some buckets at the new
+state and others at the old. A whole-target swap deleted the target
+before renaming the staged copy in, so a crash between the two lost
+it, and a reader holding a lazy DataFrame over the target broke when
+the swap deleted the files under it (the FILE_NOT_EXIST hazard the
+streaming swap_target sink still has). Both are solved the way
 Delta Lake / Iceberg solve them: DATA FILES ARE IMMUTABLE, and the
 only mutable thing is a tiny manifest naming the live files. Commit =
 one atomic manifest rename; readers resolve a manifest once and keep a
@@ -62,6 +65,7 @@ import time
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from dht11_data_pipeline_spark.operators.scd2 import (
@@ -70,8 +74,6 @@ from dht11_data_pipeline_spark.operators.scd2 import (
 from dht11_data_pipeline_spark.operators.scd2_partitioned import (
     BUCKET_COL, key_bucket,
 )
-
-from pyspark.sql import functions as F
 
 
 def _log_dir(table_dir: str) -> str:

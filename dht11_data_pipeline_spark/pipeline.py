@@ -34,15 +34,13 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from dht11_data_pipeline_spark.operators import txlog
 from dht11_data_pipeline_spark.operators.control import ControlTable
 from dht11_data_pipeline_spark.operators.layers import (
     load_to_intermediate, read_intermediate, write_landing,
 )
 from dht11_data_pipeline_spark.operators.scd2 import (
     SCD2Config, apply_scd2, delta_cache,
-)
-from dht11_data_pipeline_spark.operators.scd2_partitioned import (
-    BUCKET_COL, apply_scd2_partitioned, init_partitioned_target,
 )
 from dht11_data_pipeline_spark.sources.firebase_tree import flatten_readings, read_tree
 
@@ -61,15 +59,14 @@ def _hist_path(warehouse_dir: str) -> str:
 
 def read_history(spark: SparkSession, warehouse_dir: str) -> DataFrame:
     path = _hist_path(warehouse_dir)
-    if os.path.exists(os.path.join(path, "_txlog")):
-        # transaction-logged layout (default historize path)
-        from dht11_data_pipeline_spark.operators import txlog
+    if txlog.current_version(path) is not None:
         return txlog.read_table(spark, path)
-    if os.path.exists(path):
-        df = spark.read.parquet(path)
-        # legacy bucket-partitioned layout carries the physical bucket
-        # column; hide it from the logical schema
-        return df.drop(BUCKET_COL) if BUCKET_COL in df.columns else df
+    # a first commit that never published leaves only orphaned data/
+    # (and maybe _txlog/ without a version): still an empty table
+    if os.path.exists(path) and not set(os.listdir(path)) <= {"data", "_txlog"}:
+        raise ValueError(
+            f"{path} exists but is not a transaction-logged table (no "
+            f"committed _txlog manifest); refusing to read or overwrite it")
     # empty target with the full SCD2 schema
     landing_like = "device_id string, timezone string, humidity string, temperature string, ts timestamp"
     audit = (f"{HIST_CFG.ak_col} decimal(18,0), {HIST_CFG.key_col} decimal(18,0), "
@@ -82,79 +79,37 @@ def read_history(spark: SparkSession, warehouse_dir: str) -> DataFrame:
 def history_rows(warehouse_dir: str) -> int:
     """Rows in the logged history table, from its manifest — no Spark
     job."""
-    from dht11_data_pipeline_spark.operators import txlog
     return txlog.table_rows(_hist_path(warehouse_dir))
 
 
 def historize(spark: SparkSession, warehouse_dir: str, load_key: int,
-              load_ts: str | None = None, mode: str = "logged",
-              n_buckets: int = 64) -> DataFrame:
+              load_ts: str | None = None) -> int:
     """SCD2 apply over the intermediate batch (reference Historization
-    DAG, Delta_detection_query_gen.py:335-351).
+    DAG, Delta_detection_query_gen.py:335-351). Returns the committed
+    txlog version of the history table.
 
-    Default ``mode="logged"``: the target is a transaction-logged,
-    bucket-partitioned table (operators/txlog). Each batch classifies
-    changed keys with a narrow join, writes ONLY the changed buckets to
-    an immutable commit dir, and publishes the whole batch as ONE
-    atomic manifest commit — MERGE-equivalent write amplification AND
-    full crash atomicity (a crash anywhere leaves the previous version
-    intact; no torn buckets, no reader ever sees a mix), plus time
-    travel per batch for free.
-
-    ``mode="partitioned"``: the unlogged dynamic-partition-overwrite
-    apply — same pruning, but bucket dirs commit one by one (a crash
-    mid-commit can tear the target); kept for layouts without a log.
-
-    ``mode="swap"``: the original whole-target atomic swap — full
-    rewrite per batch, single-rename atomicity (replaces the
-    reference's non-atomic MERGE-then-INSERT two-phase commit,
-    SURVEY §7.4.2).
+    The target is a transaction-logged, bucket-partitioned table
+    (operators/txlog). Each batch classifies changed keys with a narrow
+    join, writes ONLY the changed buckets to an immutable commit dir,
+    and publishes the whole batch as ONE atomic manifest commit —
+    MERGE-equivalent write amplification AND full crash atomicity (a
+    crash anywhere leaves the previous version intact; no torn buckets,
+    no reader ever sees a mix), plus time travel per batch for free.
+    The first batch applies onto the empty target and lays the result
+    down as version 1.
     """
     staging = read_intermediate(spark, warehouse_dir, load_key)
     final = _hist_path(warehouse_dir)
-    if mode == "logged":
-        from dht11_data_pipeline_spark.operators import txlog
-        if txlog.current_version(final) is None:
-            target = read_history(spark, warehouse_dir)
-            with delta_cache() as cache:
-                new_state = apply_scd2(staging, target, HIST_CFG,
-                                       load_ts=load_ts, deterministic_keys=True,
-                                       cache=cache)
-                txlog.init_table(new_state, final, HIST_CFG,
-                                 n_buckets=n_buckets)
-        else:
-            txlog.apply_scd2_logged(
-                spark, staging, final, HIST_CFG, load_ts=load_ts,
-                deterministic_keys=True, incremental=False)
-        return read_history(spark, warehouse_dir)
-    if mode == "partitioned":
+    if txlog.current_version(final) is None:
         target = read_history(spark, warehouse_dir)
-        if not os.path.exists(final):
-            # first batch: full apply on the empty target, then lay the
-            # result down in the bucket-partitioned format
-            with delta_cache() as cache:
-                new_state = apply_scd2(staging, target, HIST_CFG,
-                                       load_ts=load_ts, deterministic_keys=True,
-                                       cache=cache)
-                init_partitioned_target(new_state, final, HIST_CFG, n_buckets)
-        else:
-            apply_scd2_partitioned(
-                spark, staging, final, HIST_CFG, n_buckets=n_buckets,
-                load_ts=load_ts, deterministic_keys=True, incremental=False)
-        return read_history(spark, warehouse_dir)
-    if mode != "swap":
-        raise ValueError(f"unknown historize mode {mode!r}")
-    target = read_history(spark, warehouse_dir)
-    tmp = final + "_staged"
-    with delta_cache() as cache:
-        new_state = apply_scd2(staging, target, HIST_CFG, load_ts=load_ts,
-                               deterministic_keys=True, cache=cache)
-        new_state.write.mode("overwrite").parquet(tmp)
-    import shutil
-    if os.path.exists(final):
-        shutil.rmtree(final)
-    os.replace(tmp, final)
-    return spark.read.parquet(final)
+        with delta_cache() as cache:
+            new_state = apply_scd2(staging, target, HIST_CFG,
+                                   load_ts=load_ts, deterministic_keys=True,
+                                   cache=cache)
+            return txlog.init_table(new_state, final, HIST_CFG, n_buckets=64)
+    return txlog.apply_scd2_logged(
+        spark, staging, final, HIST_CFG, load_ts=load_ts,
+        deterministic_keys=True, incremental=False)
 
 
 def run_batch(spark: SparkSession, warehouse_dir: str, tree_json_path: str,
@@ -229,7 +184,7 @@ def run_dedup_batch(spark: SparkSession, warehouse_dir: str,
     store files) and carries the probe's physical plan for the
     cost-contract assertion.
     """
-    from dht11_data_pipeline_spark.operators import sigstore, txlog
+    from dht11_data_pipeline_spark.operators import sigstore
 
     ctl = ControlTable(spark, warehouse_dir)
     if not ctl.interface_exists(interface_nm, interface_cd):

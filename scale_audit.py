@@ -78,8 +78,9 @@ shuffle-partition size.
   grows past the threshold.
 - **SCD2 delta (j2)**: one full-outer SMJ on the natural key = 2 shuffles
   of (keys + 64-char hash), ~100 B/row -> ~10 TB shuffle for 10^11 rows,
-  spread over 10^5 partitions of ~100 MB. Partition-selective apply
-  (scd2_partitioned) prunes untouched load_key partitions entirely.
+  spread over 10^5 partitions of ~100 MB. The logged apply (txlog)
+  rewrites only the key buckets holding changed keys; untouched buckets
+  stay in place.
 - **MinHash dedup**: signatures are k x 16-char strings per doc
   (~130 B/doc -> ~1.3 TB for 10^10 docs); the band explode multiplies by
   b=4 -> ~5 TB shuffled on hash-random band keys (no skew by

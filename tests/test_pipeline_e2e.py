@@ -3,13 +3,18 @@ tree JSON batches: control gates, landing/intermediate layers, SCD2."""
 
 from __future__ import annotations
 
+import inspect
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
+from dht11_data_pipeline_spark import pipeline
+from dht11_data_pipeline_spark.operators import txlog
 from dht11_data_pipeline_spark.operators.control import ControlTable
 from dht11_data_pipeline_spark.pipeline import bootstrap, read_history, run_batch
+from tests.test_ledger import _job_count
 
 BATCH1 = {"MCU_Data": {"DEV01": {"HIST_DHT11_DATA": {
     "2024-05-05": {
@@ -32,10 +37,14 @@ BATCH2 = {"MCU_Data": {"DEV01": {"HIST_DHT11_DATA": {
     }}}}}
 
 
-def test_full_two_batch_lifecycle(spark, tmp_path):
+def test_full_two_batch_lifecycle(spark, tmp_path, monkeypatch):
     wh = str(tmp_path / "wh")
     t1 = tmp_path / "b1.json"; t1.write_text(json.dumps(BATCH1))
     t2 = tmp_path / "b2.json"; t2.write_text(json.dumps(BATCH2))
+    committed = []
+    historize = pipeline.historize
+    monkeypatch.setattr(pipeline, "historize",
+                        lambda *a, **kw: committed.append(historize(*a, **kw)))
 
     bootstrap(spark, wh)
 
@@ -58,6 +67,61 @@ def test_full_two_batch_lifecycle(spark, tmp_path):
     ctl = ControlTable(spark, wh)
     prev = ctl.previous_run("STG_1020")
     assert prev["load_status"] == "Success" and prev["load_key"] == 3
+
+    # the history contract: historize returns the version it committed,
+    # the logged table keeps the empty-target DDL's schema, and there is
+    # one historize path with nothing to select
+    assert committed == [1, 2]
+    assert committed[-1] == txlog.current_version(
+        os.path.join(wh, "hist_dht11_data"))
+    empty = read_history(spark, str(tmp_path / "no_history_yet"))
+    assert ([(f.name, f.dataType) for f in hist.schema]
+            == [(f.name, f.dataType) for f in empty.schema])
+    params = inspect.signature(historize).parameters
+    assert "mode" not in params and "n_buckets" not in params
+
+
+def test_non_txlog_history_dir_fails_on_the_driver(spark, tmp_path):
+    """A plain-parquet history directory (no _txlog) is refused before
+    any Spark job reads it, and run_batch writes nothing into it: no
+    txlog version is laid down over the foreign files."""
+    wh = str(tmp_path / "wh")
+    bootstrap(spark, wh)
+    hist_path = os.path.join(wh, "hist_dht11_data")
+    spark.range(3).write.parquet(hist_path)
+    listing = sorted(os.listdir(hist_path))
+
+    with _job_count(spark) as jobs:
+        with pytest.raises(ValueError, match="not a transaction-logged table") as e:
+            read_history(spark, wh)
+    assert jobs == [0] and hist_path in str(e.value)
+
+    t = tmp_path / "b1.json"; t.write_text(json.dumps(BATCH1))
+    with pytest.raises(ValueError, match="not a transaction-logged table"):
+        run_batch(spark, wh, str(t), "DEV01",
+                  load_ts="2024-05-05 12:00:00", since_ts="1970-01-01 00:00:00")
+    assert sorted(os.listdir(hist_path)) == listing
+    assert txlog.current_version(hist_path) is None
+
+
+def test_unpublished_first_commit_is_an_empty_history(spark, tmp_path):
+    """A crash inside the first batch's txlog init leaves data files
+    but no manifest; the replay treats the table as empty and commits
+    version 1 over the orphans."""
+    wh = str(tmp_path / "wh")
+    bootstrap(spark, wh)
+    hist_path = os.path.join(wh, "hist_dht11_data")
+    orphan = os.path.join(hist_path, "data", "commit-00000001-1-1",
+                          "da_key_bucket=0")
+    spark.range(3).write.parquet(orphan)
+    os.makedirs(os.path.join(hist_path, "_txlog"))
+
+    assert read_history(spark, wh).count() == 0
+    t = tmp_path / "b1.json"; t.write_text(json.dumps(BATCH1))
+    r = run_batch(spark, wh, str(t), "DEV01",
+                  load_ts="2024-05-05 12:00:00", since_ts="1970-01-01 00:00:00")
+    assert r["hist_rows"] == 2 and txlog.current_version(hist_path) == 1
+    assert read_history(spark, wh).count() == 2
 
 
 def test_prev_failure_gate(spark, tmp_path):
@@ -96,9 +160,6 @@ def test_historize_logged_prunes_nc_buckets(spark, tmp_path):
     keys point at the new commit dir; NC-only buckets keep their
     original immutable directories (reference MERGE parity at 100 TB
     write-amplification cost, plus crash atomicity + time travel)."""
-    import os
-
-    from dht11_data_pipeline_spark.operators import txlog
     from dht11_data_pipeline_spark.operators.scd2_partitioned import key_bucket
     from dht11_data_pipeline_spark.pipeline import HIST_CFG
 

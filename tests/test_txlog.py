@@ -61,9 +61,16 @@ def test_nc_only_batch_commits_nothing(spark, logged):
     assert v == 1 and txlog.current_version(table) == 1
 
 
+def _parquet_mtimes(bucket_dir: str) -> dict[str, float]:
+    return {os.path.join(bucket_dir, f): os.path.getmtime(os.path.join(bucket_dir, f))
+            for f in os.listdir(bucket_dir) if f.endswith(".parquet")}
+
+
 def test_unchanged_buckets_keep_their_dirs(spark, logged):
     table, _ = logged
     before = txlog.read_manifest(table)["buckets"]
+    files_before = {b: _parquet_mtimes(os.path.join(table, rel))
+                    for b, rel in before.items()}
     batch = _df(spark, [B2[3]])  # single new key
     txlog.apply_scd2_logged(spark, batch, table, CFG,
                             load_ts="2024-05-06 12:00:00",
@@ -74,6 +81,8 @@ def test_unchanged_buckets_keep_their_dirs(spark, logged):
     for b, path in before.items():
         if b not in changed:
             assert after[b] == path
+            # the commit never rewrote an untouched bucket's files
+            assert _parquet_mtimes(os.path.join(table, path)) == files_before[b]
 
 
 def test_crash_before_manifest_is_invisible(spark, logged):
