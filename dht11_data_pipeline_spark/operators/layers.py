@@ -14,8 +14,13 @@ from __future__ import annotations
 
 import os
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+# fixed layer schemas (no inference job); load_key typed as inference reads it
+LANDING_SCHEMA = "timezone string, humidity string, temperature string, ts timestamp, device_id string"
+INTERMEDIATE_SCHEMA = LANDING_SCHEMA + ", load_key int"
 
 
 def write_landing(df: DataFrame, warehouse_dir: str, device_id: str) -> str:
@@ -27,7 +32,8 @@ def write_landing(df: DataFrame, warehouse_dir: str, device_id: str) -> str:
 
 
 def read_landing(spark: SparkSession, warehouse_dir: str) -> DataFrame:
-    return spark.read.option("basePath", os.path.join(warehouse_dir, "dht11_data")) \
+    return spark.read.schema(LANDING_SCHEMA) \
+        .option("basePath", os.path.join(warehouse_dir, "dht11_data")) \
         .parquet(os.path.join(warehouse_dir, "dht11_data"))
 
 
@@ -45,7 +51,20 @@ def load_to_intermediate(spark: SparkSession, warehouse_dir: str,
 
 def read_intermediate(spark: SparkSession, warehouse_dir: str,
                       load_key: int | None = None) -> DataFrame:
-    df = spark.read.parquet(os.path.join(warehouse_dir, "dht11_data_int"))
-    if load_key is not None:
-        df = df.filter(F.col("load_key") == load_key)  # partition pruning
-    return df
+    base = os.path.join(warehouse_dir, "dht11_data_int")
+    if load_key is None:
+        return spark.read.parquet(base)
+    part = os.path.join(base, f"load_key={load_key}")
+    if not os.path.isdir(part):
+        return spark.createDataFrame([], INTERMEDIATE_SCHEMA)
+    return (spark.read.schema(INTERMEDIATE_SCHEMA).option("basePath", base)
+            .parquet(part))
+
+
+def intermediate_rows(warehouse_dir: str, load_key: int) -> int:
+    """Rows of batch ``load_key`` in the intermediate layer, summed
+    from its parquet footers on the driver — no Spark job."""
+    part = os.path.join(warehouse_dir, "dht11_data_int", f"load_key={load_key}")
+    files = os.listdir(part) if os.path.isdir(part) else []
+    return sum(pq.read_metadata(os.path.join(part, f)).num_rows
+               for f in files if f.endswith(".parquet"))

@@ -5,8 +5,8 @@ Reference semantics (all in /root/reference/Delta_detection_query_gen.py):
 - content hash = SHA256 over normalized column concat (:42-44,66,77)
 - FULL OUTER JOIN staging×target-current on the natural key, classify
   each row I / U / NC (plus PD for physical deletes) (:46-59,83-102)
-- temp-table materialization of the delta (:140-155) → we `.persist()`
-  the delta DataFrame instead (used by both the close and insert branches)
+- temp-table materialization of the delta (:140-155) → ``classify``
+  `.persist()`s it instead (read by ``build``'s branches and by txlog)
 - MERGE closes changed rows (da_current_flag='N', valid_to=now) (:187-213)
 - INSERT opens new versions with surrogate keys minted as
   max + ROW_NUMBER() OVER (ORDER BY <const>) (:250-296)
@@ -14,7 +14,7 @@ Reference semantics (all in /root/reference/Delta_detection_query_gen.py):
 Differences, deliberate and documented:
 - The reference's MERGE-then-INSERT is two separate commits — a crash
   between them loses rows (SURVEY §7.4.2). We build the complete new
-  target state as ONE DataFrame (history ∪ unchanged ∪ closed ∪ new)
+  target state as ONE DataFrame (target with U/PD rows closed ∪ new)
   and the caller publishes it in one atomic step (a txlog manifest
   commit; the streaming sink's staged swap) — same end state, no
   crash window.
@@ -28,7 +28,9 @@ Differences, deliberate and documented:
 Scale design: the full outer join shuffles on the natural key — bucket
 staging and target by the natural key in real deployments and it becomes
 a zero-shuffle sort-merge join; AQE skew handling splits hot keys. The
-hash keeps the compare O(1)-width regardless of payload width.
+hash keeps the compare O(1)-width regardless of payload width. The
+build then reads the target ONCE, left-joined with the small U/PD key
+set (Delta Lake's copy-on-write MERGE shape) — no anti-join.
 """
 
 from __future__ import annotations
@@ -234,42 +236,39 @@ def dense_rank_distributed(df: DataFrame, order_cols: list[str],
             .drop("_dr_id"))
 
 
-def apply_scd2(staging: DataFrame, target: DataFrame, cfg: SCD2Config,
-               load_ts: str | None = None,
-               deterministic_keys: bool = False,
-               incremental: bool = False,
-               high_water: tuple[int, int] | None = None,
-               cache: list[DataFrame] | None = None) -> DataFrame:
-    """Full SCD2 apply: returns the COMPLETE new target state.
+def classify(staging: DataFrame, target: DataFrame, cfg: SCD2Config,
+             incremental: bool = False,
+             cache: list[DataFrame] | None = None) -> DataFrame:
+    """``detect_delta`` against ``target``'s current rows, persisted (the
+    reference's temp-table CTAS, :140-155) into ``cache`` (from
+    ``delta_cache``) if given — ``build`` and txlog share this one delta."""
+    current = target.filter(F.col(cfg.current_flag) == "Y")
+    delta = detect_delta(staging, current, cfg, incremental=incremental).persist()
+    if cache is not None:
+        cache.append(delta)
+    return delta
 
-    new_target = closed-history rows (as-is)
-               ∪ current rows with NC (as-is)
-               ∪ current rows with U/PD closed out (flag 'N', bounded
-                 valid_to, PD also flips the deleted flag — reference
-                 CASE at Delta_detection_query_gen.py:198-201)
+
+def build(staging: DataFrame, target: DataFrame, delta: DataFrame,
+          cfg: SCD2Config, load_ts: str | None = None,
+          deterministic_keys: bool = False,
+          high_water: tuple[int, int] | None = None) -> DataFrame:
+    """The COMPLETE new target state from ``delta``, in ONE target scan:
+
+    new_target = target LEFT JOIN U/PD keys (one row per key): matched
+                 current rows closed out (flag 'N', valid_to/updated_at
+                 = load_ts, deleted flag 'Y' for PD — reference CASE at
+                 :198-201), every other row as-is
                ∪ new versions for I/U keys (payload from staging,
                  minted surrogate keys, far-future valid_to — reference
                  insert select :250-304)
 
+    ``staging``/``target`` may be slices holding every changed key.
     ``load_ts`` is captured once per batch (reference SYSTIMESTAMP,
     frozen here for determinism — SURVEY §2.7 F8).
-
-    The delta is persisted before fan-out (both the close and insert
-    branches consume it) — the Spark-native equivalent of the
-    reference's temp-table CTAS (:140-155). ``cache`` (from
-    ``delta_cache``) receives the persisted delta so the caller can
-    release it once the result is written; without it the delta stays
-    cached.
     """
     ts = F.lit(load_ts).cast("timestamp") if load_ts else F.current_timestamp()
     nk = cfg.natural_keys
-
-    current = target.filter(F.col(cfg.current_flag) == "Y")
-    history = target.filter(F.col(cfg.current_flag) != "Y")
-
-    delta = detect_delta(staging, current, cfg, incremental=incremental).persist()
-    if cache is not None:
-        cache.append(delta)
 
     # high-water marks (reference A2 cross-join clause :37-41).
     # ``high_water`` lets callers operating on a SLICE of the target
@@ -285,20 +284,17 @@ def apply_scd2(staging: DataFrame, target: DataFrame, cfg: SCD2Config,
         ).first()
         hw_ak, hw_key = int(hw_row["ak"]), int(hw_row["key"])
 
-    changed_keys = delta.filter(F.col("upsert_cd").isin("U", "PD"))
-    unchanged = current.join(changed_keys, nk, "left_anti")
-
-    closed = (
-        current.join(changed_keys.select(*nk, "upsert_cd"), nk, "inner")
-        .withColumn(cfg.current_flag, F.lit("N"))
-        .withColumn(cfg.valid_to, ts)
-        .withColumn(cfg.updated_at, ts)
-        .withColumn(
-            cfg.deleted_flag,
-            F.when(F.col("upsert_cd") == "PD", F.lit("Y")).otherwise(F.col(cfg.deleted_flag)),
-        )
-        .drop("upsert_cd")
-    )
+    # one row per changed key, so the join can never duplicate a row
+    changed_keys = (delta.filter(F.col("upsert_cd").isin("U", "PD"))
+                    .select(*nk, F.col("upsert_cd").alias("_close_cd"))
+                    .dropDuplicates(nk))
+    close = (F.col(cfg.current_flag) == "Y") & F.col("_close_cd").isNotNull()
+    rewrite = {cfg.current_flag: F.lit("N"), cfg.valid_to: ts, cfg.updated_at: ts,
+               cfg.deleted_flag: F.when(F.col("_close_cd") == "PD", F.lit("Y"))
+               .otherwise(F.col(cfg.deleted_flag))}
+    kept = target.join(changed_keys, nk, "left").select(*[
+        F.when(close, rewrite[c]).otherwise(F.col(c)).alias(c)
+        if c in rewrite else F.col(c) for c in target.columns])
 
     payload_cols = [c for c in staging.columns
                     if c.lower() not in {x.lower() for x in cfg.exclude_from_load}]
@@ -339,9 +335,17 @@ def apply_scd2(staging: DataFrame, target: DataFrame, cfg: SCD2Config,
     if missing:
         raise ValueError(f"insert select is missing target columns: {sorted(missing)}")
 
-    return (
-        history.select(*target_cols)
-        .unionByName(unchanged.select(*target_cols))
-        .unionByName(closed.select(*target_cols))
-        .unionByName(inserts.select(*target_cols))
-    )
+    return kept.unionByName(inserts.select(*target_cols))
+
+
+def apply_scd2(staging: DataFrame, target: DataFrame, cfg: SCD2Config,
+               load_ts: str | None = None,
+               deterministic_keys: bool = False,
+               incremental: bool = False,
+               high_water: tuple[int, int] | None = None,
+               cache: list[DataFrame] | None = None) -> DataFrame:
+    """Full SCD2 apply, ``build(classify(...))``: returns the COMPLETE
+    new target state (formula at ``build``; ``cache`` at ``classify``)."""
+    delta = classify(staging, target, cfg, incremental=incremental, cache=cache)
+    return build(staging, target, delta, cfg, load_ts=load_ts,
+                 deterministic_keys=deterministic_keys, high_water=high_water)

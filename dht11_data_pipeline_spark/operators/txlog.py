@@ -17,7 +17,7 @@ consistent snapshot no matter what commits afterwards.
 
 Layout:
     <table>/data/commit-<n>/<bucket-col>=<id>/part-*.parquet  (immutable,
-                                 ONE file per bucket per commit)
+                                 ONE file per bucket slot per commit)
     <table>/_txlog/v<n>.json     manifest (fields below)
     <table>/_txlog/v<n>.json.tmp staged then os.link'd (atomic POSIX)
 
@@ -26,9 +26,9 @@ Manifest fields:
     buckets     bucket id -> commit dir holding its current rows
     schema      the table's Spark schema (``StructType.jsonValue()``),
                 carried forward by every commit
-    stats       bucket id -> {"rows": n, "max": {<ak_col>: v,
-                <key_col>: v}} from the parquet footers of that
-                bucket's files (``max`` is null for an all-null column)
+    stats       bucket id -> {"rows": n, "bytes": n, "max": {<ak_col>:
+                v, <key_col>: v}} from that bucket's parquet footers and
+                file sizes (``max`` is null for an all-null column)
 
 A manifest maps every bucket to the commit directory holding its
 current rows, so a commit that rewrites buckets {3, 17} publishes a
@@ -45,12 +45,15 @@ surrogate-key high-water marks are maxima over ``stats`` (no
 high-water max() scan over every bucket of the target), the row count
 is their sum (no count job), and the stats of a commit come
 from the footers of the files it just wrote, read on the driver —
-O(files written). Each write rebalances on the bucket column, so a
-bucket normally lands in one task and one file (AQE still splits a
-bucket larger than the advisory partition size). A manifest without
-``schema``/``stats`` (written before these fields existed) still
+O(files written). A commit's write is sized from ``bytes``: bucket b
+gets max(1, ceil(bytes_b / advisory partition size)) hash slots, and
+rows hash-partition on (bucket, slot) over min(Σ slots,
+max(defaultParallelism, ceil(Σ bytes / advisory))) tasks: every core
+writes, and a bucket below that size is one file (the first load
+rebalances on the bucket column instead). A manifest
+without ``schema``/``stats`` (written before these fields existed) still
 reads, with schema inference; its next commit computes stats for every
-live bucket from the footers.
+live bucket from the footers (an entry without ``bytes`` is one slot).
 
 At 100 TB the manifest is O(buckets) — kilobytes — and commit cost is
 independent of table size. The same design scales to file-level
@@ -69,7 +72,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from dht11_data_pipeline_spark.operators.scd2 import (
-    SCD2Config, apply_scd2, delta_cache, detect_delta,
+    SCD2Config, build, classify, delta_cache,
 )
 from dht11_data_pipeline_spark.operators.scd2_partitioned import (
     BUCKET_COL, key_bucket,
@@ -144,17 +147,18 @@ def _commit_dir_name(version: int) -> str:
 
 
 def _bucket_stats(bucket_dir: str, cols: list[str]) -> dict:
-    """Rows and the maxima of the integer columns ``cols`` over one
-    bucket directory, from the parquet footers of its files — read on
-    the driver, no Spark job. ``max_raw`` rather than ``max``: pyarrow
-    cannot convert the statistics of an INT64-backed decimal(18,0)
-    (the surrogate-key type) but returns its raw integer."""
-    rows, maxima = 0, dict.fromkeys(cols)
+    """Rows, file bytes and the maxima of the integer columns ``cols``
+    over one bucket directory, from the parquet footers and sizes of its
+    files — read on the driver, no Spark job. ``max_raw`` rather than
+    ``max``: pyarrow cannot convert the statistics of an INT64-backed
+    decimal(18,0) (the surrogate-key type) but returns its raw integer."""
+    rows, size, maxima = 0, 0, dict.fromkeys(cols)
     for f in sorted(os.listdir(bucket_dir)):
         if not f.endswith(".parquet"):
             continue
         md = pq.read_metadata(os.path.join(bucket_dir, f))
         rows += md.num_rows
+        size += os.path.getsize(os.path.join(bucket_dir, f))
         names = [md.schema.column(i).name for i in range(md.num_columns)]
         for g in range(md.num_row_groups):
             rg = md.row_group(g)
@@ -168,7 +172,7 @@ def _bucket_stats(bucket_dir: str, cols: list[str]) -> dict:
                     continue  # all-null chunk
                 v = st.max_raw
                 maxima[c] = v if maxima[c] is None else max(maxima[c], v)
-    return {"rows": rows, "max": maxima}
+    return {"rows": rows, "bytes": size, "max": maxima}
 
 
 def _live_stats(table_dir: str, m: dict, cols: list[str]) -> dict:
@@ -189,16 +193,28 @@ def table_rows(table_dir: str, version: int | None = None) -> int:
 
 
 def _write_buckets(df: DataFrame, table_dir: str, commit_name: str,
-                   cfg: SCD2Config, n_buckets: int) -> tuple[dict, dict]:
+                   cfg: SCD2Config, n_buckets: int,
+                   sizes: dict | None = None) -> tuple[dict, dict]:
     """Write ``df`` bucket-partitioned under a new commit dir; returns
     (bucket id -> rel dir, bucket id -> footer stats) for the buckets
-    written. The rebalance groups each bucket into one task, so a
-    bucket is one file (AQE still splits a bucket above the advisory
-    partition size)."""
+    written. ``sizes`` (bucket id -> manifest bytes or None) sizes it:
+    see the module docstring. Without it AQE sizes a bucket rebalance."""
     commit_dir = os.path.join(table_dir, "data", commit_name)
-    (df.withColumn(BUCKET_COL, key_bucket(cfg, n_buckets))
-     .hint("rebalance", BUCKET_COL)
-     .write.mode("overwrite").partitionBy(BUCKET_COL).parquet(commit_dir))
+    df = df.withColumn(BUCKET_COL, key_bucket(cfg, n_buckets))
+    if sizes is None:
+        df = df.hint("rebalance", BUCKET_COL)
+    else:
+        spark, nbytes = df.sparkSession, {b: n or 0 for b, n in sizes.items()}
+        adv = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+            spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
+        slots = {b: max(1, -(-n // adv)) for b, n in nbytes.items()}
+        n_tasks = min(sum(slots.values()), max(spark.sparkContext.defaultParallelism,
+                                               -(-sum(nbytes.values()) // adv)))
+        # literal map of slot counts; murmur3 keeps slots independent of buckets
+        per_bucket = F.create_map(*[F.lit(x) for kv in slots.items() for x in kv])
+        slot = F.pmod(F.hash(*cfg.natural_keys), per_bucket[F.col(BUCKET_COL)])
+        df = df.repartition(n_tasks, BUCKET_COL, slot)
+    df.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(commit_dir)
     cols = [cfg.ak_col, cfg.key_col]
     buckets, stats = {}, {}
     for d in os.listdir(commit_dir):
@@ -253,13 +269,13 @@ def apply_scd2_logged(spark: SparkSession, staging: DataFrame,
                       load_ts: str | None = None,
                       deterministic_keys: bool = False,
                       incremental: bool = True) -> int:
-    """SCD2 apply as ONE atomic commit: classify changed keys, write
-    the changed buckets' new state to an immutable commit dir, publish
-    a manifest pointing those buckets at it (all other buckets carry
-    their existing dirs and stats). Crash anywhere before the final
-    publish leaves version N fully intact; readers of any version never
-    see a mix. The surrogate-key high-water marks come from the
-    manifest's stats, not from a scan of the target.
+    """SCD2 apply as ONE atomic commit: classify the batch once, build
+    the changed buckets' new state from that same delta, write it to an
+    immutable commit dir, publish a manifest pointing those buckets at
+    it (all other buckets carry their existing dirs and stats). Crash
+    anywhere before the final publish leaves version N fully intact;
+    readers of any version never see a mix. The surrogate-key high-water
+    marks come from the manifest's stats, not from a scan of the target.
 
     Returns the committed version (current version if no keys changed).
     """
@@ -268,37 +284,32 @@ def apply_scd2_logged(spark: SparkSession, staging: DataFrame,
     schema = m.get("schema")
     target = _read_bucket_paths(spark, table_dir,
                                 sorted(m["buckets"].values()), schema)
-
-    stg = staging.withColumn(BUCKET_COL, key_bucket(cfg, n_buckets))
-    current = target.filter(F.col(cfg.current_flag) == "Y")
-    delta = detect_delta(staging, current, cfg, incremental=incremental)
-    changed = sorted(
-        r[BUCKET_COL]
-        for r in delta.filter(F.col("upsert_cd") != "NC")
-        .select(key_bucket(cfg, n_buckets).alias(BUCKET_COL))
-        .distinct().collect())
-    if not changed:
-        return int(m["version"])
-
-    stats = _live_stats(table_dir, m, [cfg.ak_col, cfg.key_col])
-    high_water = tuple(
-        max((s["max"][c] for s in stats.values()
-             if s["max"][c] is not None), default=0)
-        for c in (cfg.ak_col, cfg.key_col))
-    # payload read touches ONLY the changed buckets' directories
-    changed_rel = [m["buckets"][str(b)] for b in changed
-                   if str(b) in m["buckets"]]
-    tgt_slice = (_read_bucket_paths(spark, table_dir, changed_rel, schema)
-                 if changed_rel else target.limit(0))
-    stg_slice = stg.filter(F.col(BUCKET_COL).isin(changed)).drop(BUCKET_COL)
+    bucket = key_bucket(cfg, n_buckets)
     with delta_cache() as cache:
-        new_slice = apply_scd2(stg_slice, tgt_slice, cfg, load_ts=load_ts,
-                               deterministic_keys=deterministic_keys,
-                               incremental=incremental,
-                               high_water=high_water, cache=cache)
+        delta = classify(staging, target, cfg, incremental=incremental,
+                         cache=cache)
+        changed = sorted(r[0] for r in delta.filter(F.col("upsert_cd") != "NC")
+                         .select(bucket).distinct().collect())
+        if not changed:
+            return int(m["version"])
+
+        stats = _live_stats(table_dir, m, [cfg.ak_col, cfg.key_col])
+        high_water = tuple(
+            max((s["max"][c] for s in stats.values()
+                 if s["max"][c] is not None), default=0)
+            for c in (cfg.ak_col, cfg.key_col))
+        # payload read touches ONLY the changed buckets' directories
+        changed_rel = [m["buckets"][str(b)] for b in changed
+                       if str(b) in m["buckets"]]
+        tgt_slice = (_read_bucket_paths(spark, table_dir, changed_rel, schema)
+                     if changed_rel else target.limit(0))
+        new_slice = build(staging.filter(bucket.isin(changed)), tgt_slice,
+                          delta, cfg, load_ts=load_ts,
+                          deterministic_keys=deterministic_keys,
+                          high_water=high_water)
         written, written_stats = _write_buckets(
             new_slice, table_dir, _commit_dir_name(int(m["version"]) + 1),
-            cfg, n_buckets)
+            cfg, n_buckets, {b: stats.get(str(b), {}).get("bytes") for b in changed})
 
     buckets = dict(m["buckets"])
     for b in map(str, changed):

@@ -9,8 +9,10 @@ Flow (reference stage → here):
   landing delete+reload         → layers.write_landing (atomic overwrite)
   landing→intermediate + stamp  → layers.load_to_intermediate
   SCD2 historization            → historize: operators.txlog one-commit
-                                  apply (atomic manifest publish)
+                                  apply (one classify, one slice scan,
+                                  atomic manifest publish)
   status updates                → ControlTable.update_run_status
+  batch row count               → layers.intermediate_rows (footers)
   history row count             → history_rows: summed from the txlog
                                   manifest's per-bucket stats
 
@@ -20,7 +22,8 @@ Spark job, no Python worker, atomic staged replace per write. The
 history table's metadata steps do the same against the txlog manifest:
 snapshot reads take its schema (no inference job), the commit takes
 its surrogate-key high-water marks from its stats (no target scan) and
-the batch's history row count is their sum (no count job).
+the batch's history row count is their sum (no count job). The staging
+read names only the batch's partition, with a fixed schema.
 
 The XCom dataset hand-off and the cross-DAG trigger (reference E2,
 Airflow-DAG.py:299-307,529-555) disappear: every stage passes lazy
@@ -37,7 +40,8 @@ from pyspark.sql import DataFrame, SparkSession
 from dht11_data_pipeline_spark.operators import txlog
 from dht11_data_pipeline_spark.operators.control import ControlTable
 from dht11_data_pipeline_spark.operators.layers import (
-    load_to_intermediate, read_intermediate, write_landing,
+    intermediate_rows, load_to_intermediate, read_intermediate,
+    write_landing,
 )
 from dht11_data_pipeline_spark.operators.scd2 import (
     SCD2Config, apply_scd2, delta_cache,
@@ -89,9 +93,9 @@ def historize(spark: SparkSession, warehouse_dir: str, load_key: int,
     txlog version of the history table.
 
     The target is a transaction-logged, bucket-partitioned table
-    (operators/txlog). Each batch classifies changed keys with a narrow
-    join, writes ONLY the changed buckets to an immutable commit dir,
-    and publishes the whole batch as ONE atomic manifest commit —
+    (operators/txlog). Each batch classifies its keys once against the
+    current rows, writes ONLY the changed buckets to an immutable commit
+    dir, and publishes the whole batch as ONE atomic manifest commit —
     MERGE-equivalent write amplification AND full crash atomicity (a
     crash anywhere leaves the previous version intact; no torn buckets,
     no reader ever sees a mix), plus time travel per batch for free.
@@ -150,8 +154,9 @@ def run_batch(spark: SparkSession, warehouse_dir: str, tree_json_path: str,
     historize(spark, warehouse_dir, load_key, load_ts=load_ts)
     ctl.update_run_status(interface_cd, load_key, "Success", complete=True)
 
-    n = read_intermediate(spark, warehouse_dir, load_key).count()
-    return {"load_key": load_key, "rows": n, "skipped": False,
+    return {"load_key": load_key,
+            "rows": intermediate_rows(warehouse_dir, load_key),
+            "skipped": False,
             "hist_rows": history_rows(warehouse_dir)}
 
 

@@ -275,3 +275,95 @@ def test_dedup_batch_pipeline_e2e(spark, tmp_path, sf_dir, monkeypatch):
         run_dedup_batch(spark, wh, corpus=seen,
                         new_docs=docs.filter(F.col("doc_id") % 4 == 0),
                         batch_key="b9")
+
+
+# -- the batch's staging read and row count -----------------------------------
+
+def _two_batches(spark, tmp_path) -> tuple[str, list[dict]]:
+    wh = str(tmp_path / "wh")
+    bootstrap(spark, wh)
+    out = []
+    for i, batch in enumerate((BATCH1, BATCH2)):
+        t = tmp_path / f"b{i}.json"; t.write_text(json.dumps(batch))
+        out.append(run_batch(spark, wh, str(t), "DEV01",
+                             load_ts=f"2024-05-0{5 + i} 12:00:00",
+                             since_ts="1970-01-01 00:00:00"))
+    return wh, out
+
+
+def test_batch_rows_are_the_partition_footer_sum(spark, tmp_path):
+    """``rows`` (summed from the batch partition's parquet footers)
+    equals Spark's count of that intermediate partition; the empty
+    batch still reports 0."""
+    wh, results = _two_batches(spark, tmp_path)
+    whole = spark.read.parquet(os.path.join(wh, "dht11_data_int"))
+    for r in results:
+        assert r["rows"] == whole.filter(
+            F.col("load_key") == r["load_key"]).count()
+    assert [r["rows"] for r in results] == [2, 3]
+    t = tmp_path / "b0.json"
+    r = run_batch(spark, wh, str(t), "DEV01", since_ts="2030-01-01 00:00:00")
+    assert r["skipped"] is True and r["rows"] == 0
+
+
+def test_read_intermediate_reads_only_its_partition(spark, tmp_path):
+    """A batch's staging frame names its own ``load_key=k`` directory
+    with the layer's fixed schema: the same schema and rows as the
+    whole-directory read, 0 Spark jobs to build, and an empty frame for
+    a load key without a partition."""
+    from dht11_data_pipeline_spark.operators.layers import read_intermediate
+
+    wh, results = _two_batches(spark, tmp_path)
+    keys = [r["load_key"] for r in results] + [99]
+    with _job_count(spark) as jobs:
+        frames = {k: read_intermediate(spark, wh, k) for k in keys}
+    assert jobs == [0]
+    whole = spark.read.parquet(os.path.join(wh, "dht11_data_int"))
+    for k, df in frames.items():
+        assert df.schema == whole.schema
+        assert (sorted(map(tuple, df.collect()))
+                == sorted(map(tuple, whole.filter(F.col("load_key") == k)
+                              .collect())))
+    assert frames[99].count() == 0
+
+
+def _reading_tree(n: int, bumped=(), new: int = 0) -> dict:
+    """``n`` readings of DEV01 one minute apart (plus ``new`` more);
+    readings in ``bumped`` carry a changed humidity."""
+    import datetime as dt
+    t0 = dt.datetime(2024, 5, 5)
+    days: dict = {}
+    for i in range(n + new):
+        t = t0 + dt.timedelta(minutes=i)
+        days.setdefault(t.strftime("%Y-%m-%d"), {})[t.strftime("%H:%M:%S")] = {
+            "TimeZone": "IST", "Temperature": "20",
+            "Humidity": str(40 + i % 50 + (5 if i in bumped else 0)),
+            "Timestamp": t.strftime("%Y-%m-%d %H:%M:%S")}
+    return {"MCU_Data": {"DEV01": {"HIST_DHT11_DATA": days}}}
+
+
+# Spark jobs of one snapshot run_batch on a 64-bucket history, as
+# measured with one classify per commit, the fixed-schema partition read
+# of the batch and its row count from the footers (28 before them)
+SNAPSHOT_BATCH_JOB_BUDGET = 21
+
+
+def test_snapshot_batch_job_budget(spark, tmp_path):
+    """One snapshot ``run_batch`` (1% of readings changed, 1% new) over a
+    prepared 64-bucket history stays within the measured job budget, so
+    a change that adds a Spark job to the write path fails here."""
+    wh = str(tmp_path / "wh")
+    bootstrap(spark, wh)
+    base = tmp_path / "base.json"
+    base.write_text(json.dumps(_reading_tree(1000)))
+    run_batch(spark, wh, str(base), "DEV01", load_ts="2024-05-05 12:00:00",
+              since_ts="1970-01-01 00:00:00")
+    snap = tmp_path / "snap.json"
+    snap.write_text(json.dumps(_reading_tree(1000, bumped=range(0, 1000, 100),
+                                             new=10)))
+    with _job_count(spark) as jobs:
+        r = run_batch(spark, wh, str(snap), "DEV01",
+                      load_ts="2024-05-06 12:00:00",
+                      since_ts="1970-01-01 00:00:00")
+    assert r["rows"] == 1010 and r["hist_rows"] == 1020
+    assert jobs[0] <= SNAPSHOT_BATCH_JOB_BUDGET, jobs

@@ -203,3 +203,61 @@ def test_no_drift_warning_for_excluded_target_columns(spark):
         detect_delta(stg, tgt, CFG).collect()
     drift = [w for w in caught if "drift" in str(w.message)]
     assert not drift, [str(w.message) for w in drift]
+
+
+def _scan_leaves(df) -> list[str]:
+    """Node names of the leaves of ``df``'s physical plan (the initial
+    adaptive plan, exchanges included). A persisted delta is ONE
+    InMemoryTableScan leaf; the scans inside its cached plan are not
+    leaves of this plan."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.initialPlan()
+    leaves = plan.collectLeaves()
+    return [leaves.apply(i).nodeName() for i in range(leaves.size())]
+
+
+def test_apply_classifies_once_and_scans_the_target_once(spark, tmp_path,
+                                                        monkeypatch):
+    """``apply_scd2`` = ``build(classify(...))``: one ``detect_delta``
+    call, and the new state reads the target relation once — closed and
+    unchanged rows come from one left join with the changed keys, not
+    from an anti-join plus an inner join plus a history filter."""
+    from dht11_data_pipeline_spark.operators import scd2
+
+    path = str(tmp_path / "t1")
+    apply_scd2(_df(spark, B1), _empty_target(spark), CFG,
+               load_ts="2024-05-05 12:00:00").write.parquet(path)
+    calls = []
+    real = scd2.detect_delta
+    monkeypatch.setattr(scd2, "detect_delta",
+                        lambda *a, **kw: calls.append(1) or real(*a, **kw))
+
+    out = apply_scd2(_df(spark, B2), spark.read.parquet(path), CFG,
+                     load_ts="2024-05-06 12:00:00")
+    assert calls == [1]
+    leaves = _scan_leaves(out)
+    assert sum(n.startswith("Scan parquet") for n in leaves) == 1, leaves
+    assert "LeftAnti" not in out._jdf.queryExecution().executedPlan().toString()
+    # U closed + its new version, D2 closed as a physical delete, D3 new
+    rows = out.collect()
+    assert sorted((r.humidity, r.da_current_flag, r.da_deleted_flag)
+                  for r in rows) == [
+        ("50", "N", "Y"), ("61", "Y", "N"), ("62", "N", "N"),
+        ("63", "Y", "N"), ("70", "Y", "N"), ("99", "Y", "N")]
+
+
+def test_build_never_duplicates_a_row_for_repeated_keys(spark):
+    """Staging holding the same changed key twice (two differing
+    payloads) still closes the target row ONCE: the changed-key set is
+    one row per natural key."""
+    t1 = apply_scd2(_df(spark, B1), _empty_target(spark), CFG,
+                    load_ts="2024-05-05 12:00:00")
+    dup = [("D1", "2024-05-05 11:35:35", "IST", "98", "29", 3),
+           ("D1", "2024-05-05 11:35:35", "IST", "97", "29", 3)]
+    out = apply_scd2(_df(spark, dup), t1, CFG, load_ts="2024-05-06 12:00:00",
+                     incremental=True)
+    closed = out.filter(F.col("humidity") == "62").collect()
+    assert [(r.da_current_flag, str(r.da_valid_to_date)) for r in closed] == [
+        ("N", "2024-05-06 12:00:00")]
+    assert out.filter(F.col("da_current_flag") == "N").count() == 1

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from dht11_data_pipeline_spark.operators import txlog
 from dht11_data_pipeline_spark.operators.scd2 import apply_scd2
 from tests.test_scd2 import B1, B2, CFG, _df, _empty_target
+from tests.test_txlog_metadata import _batch, _parquet_files, table64  # noqa: F401
 
 
 @pytest.fixture()
@@ -237,3 +238,101 @@ def test_multi_batch_fold_matches_plain_apply(spark, logged):
         assert dels <= acc
         acc = (acc - dels) | ins
     assert acc == want
+
+
+# -- one classify per commit, a write sized from the manifest -------------
+
+def test_logged_commit_classifies_once(spark, logged, monkeypatch):
+    """The commit classifies the batch once: the changed buckets and the
+    built slice both come from that one persisted delta."""
+    from dht11_data_pipeline_spark.operators import scd2
+
+    table, _ = logged
+    calls = []
+    real = scd2.detect_delta
+    monkeypatch.setattr(scd2, "detect_delta",
+                        lambda *a, **kw: calls.append(1) or real(*a, **kw))
+    v = txlog.apply_scd2_logged(spark, _df(spark, [B2[1], B2[3]]), table, CFG,
+                                load_ts="2024-05-06 12:00:00",
+                                deterministic_keys=True)
+    assert v == 2 and calls == [1]
+
+
+def _moved(before: dict, after: dict) -> list[str]:
+    return [b for b in after["buckets"]
+            if after["buckets"][b] != before["buckets"].get(b)]
+
+
+def _writer_tasks(table: str, rels: list[str]) -> set[str]:
+    """Task partition ids from the part-file names (part-<id>-...)."""
+    return {f.split("-")[1] for rel in rels for f in _parquet_files(table, rel)}
+
+
+def _bump_every_fifth(spark):
+    return _batch(spark, range(0, 600, 5), bumped=range(0, 600, 5), load_key=3)
+
+
+def test_commit_write_uses_several_tasks_one_file_per_bucket(spark, table64):
+    m1 = txlog.read_manifest(table64)
+    txlog.apply_scd2_logged(spark, _bump_every_fifth(spark), table64, CFG,
+                            load_ts="2024-05-06 12:00:00",
+                            deterministic_keys=True)
+    m2 = txlog.read_manifest(table64)
+    rels = [m2["buckets"][b] for b in _moved(m1, m2)]
+    assert len(rels) >= 4
+    assert all(len(_parquet_files(table64, rel)) == 1 for rel in rels)
+    assert len(_writer_tasks(table64, rels)) > 1
+
+
+def test_bucket_above_the_advisory_size_splits(spark, table64):
+    """With the advisory partition size below a bucket's bytes, the
+    commit writes that bucket as several files, and the table reads the
+    same rows as the plain apply."""
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    m1 = txlog.read_manifest(table64)
+    cols = txlog.read_table(spark, table64).columns
+    want = {tuple(r) for r in apply_scd2(
+        _bump_every_fifth(spark), txlog.read_table(spark, table64), CFG,
+        load_ts="2024-05-06 12:00:00", deterministic_keys=True,
+        incremental=True).select(*cols).collect()}
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1k")
+    try:
+        txlog.apply_scd2_logged(spark, _bump_every_fifth(spark), table64, CFG,
+                                load_ts="2024-05-06 12:00:00",
+                                deterministic_keys=True)
+    finally:
+        spark.conf.set(key, old)
+    m2 = txlog.read_manifest(table64)
+    # ~4 kB buckets get 4 hash slots each; a bucket of 8+ rows cannot
+    # plausibly hash into one of them (a 3-row bucket may)
+    big = [b for b in _moved(m1, m2) if m1["stats"][b]["bytes"] > 1024
+           and m2["stats"][b]["rows"] >= 8]
+    assert len(big) >= 4
+    assert all(len(_parquet_files(table64, m2["buckets"][b])) >= 2
+               for b in big)
+    got = {tuple(r) for r in
+           txlog.read_table(spark, table64).select(*cols).collect()}
+    assert got == want
+
+
+def test_stats_without_bytes_still_commit(spark, table64):
+    """A manifest whose stats predate the ``bytes`` field commits (each
+    such bucket counts as one slot) and its written buckets gain it."""
+    m = txlog.read_manifest(table64)
+    txlog._commit(table64, {
+        "n_buckets": m["n_buckets"], "buckets": m["buckets"],
+        "schema": m["schema"],
+        "stats": {b: {"rows": s["rows"], "max": s["max"]}
+                  for b, s in m["stats"].items()}})
+    m2 = txlog.read_manifest(table64)
+    assert not any("bytes" in s for s in m2["stats"].values())
+    v = txlog.apply_scd2_logged(spark, _bump_every_fifth(spark), table64, CFG,
+                                load_ts="2024-05-06 12:00:00",
+                                deterministic_keys=True)
+    m3 = txlog.read_manifest(table64)
+    moved = _moved(m2, m3)
+    assert v == 3 and len(moved) >= 4
+    assert all(len(_parquet_files(table64, m3["buckets"][b])) == 1
+               and m3["stats"][b]["bytes"] > 0 for b in moved)
+    assert txlog.read_table(spark, table64).count() == 720

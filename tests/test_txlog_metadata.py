@@ -49,8 +49,16 @@ def table64(spark, tmp_path):
 
 
 def _spark_stats(spark, table) -> dict:
+    """Per bucket: Spark's row count and surrogate-key maxima, and the
+    on-disk bytes of the parquet files the manifest names for it."""
     df = txlog.read_table(spark, table)
-    return {str(r["b"]): {"rows": r["n"],
+    dirs = txlog.read_manifest(table)["buckets"]
+
+    def size(b):
+        return sum(os.path.getsize(os.path.join(table, dirs[b], f))
+                   for f in _parquet_files(table, dirs[b]))
+
+    return {str(r["b"]): {"rows": r["n"], "bytes": size(str(r["b"])),
                           "max": {"ak": int(r["ak"]), "key": int(r["key"])}}
             for r in df.groupBy(key_bucket(CFG, N_BUCKETS).alias("b"))
             .agg(F.count(F.lit(1)).alias("n"), F.max("ak").alias("ak"),
