@@ -50,10 +50,9 @@ def load_to_intermediate(spark: SparkSession, warehouse_dir: str,
 
 
 def read_intermediate(spark: SparkSession, warehouse_dir: str,
-                      load_key: int | None = None) -> DataFrame:
+                      load_key: int) -> DataFrame:
+    """Batch ``load_key``'s partition alone, fixed schema; empty if absent."""
     base = os.path.join(warehouse_dir, "dht11_data_int")
-    if load_key is None:
-        return spark.read.parquet(base)
     part = os.path.join(base, f"load_key={load_key}")
     if not os.path.isdir(part):
         return spark.createDataFrame([], INTERMEDIATE_SCHEMA)

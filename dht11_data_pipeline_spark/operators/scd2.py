@@ -28,9 +28,8 @@ Differences, deliberate and documented:
 Scale design: the full outer join shuffles on the natural key — bucket
 staging and target by the natural key in real deployments and it becomes
 a zero-shuffle sort-merge join; AQE skew handling splits hot keys. The
-hash keeps the compare O(1)-width regardless of payload width. The
-build then reads the target ONCE, left-joined with the small U/PD key
-set (Delta Lake's copy-on-write MERGE shape) — no anti-join.
+hash keeps the compare O(1)-width regardless of payload width. The build
+reads the target once, left-joined with the U/PD keys (copy-on-write MERGE).
 """
 
 from __future__ import annotations
@@ -239,11 +238,12 @@ def dense_rank_distributed(df: DataFrame, order_cols: list[str],
 def classify(staging: DataFrame, target: DataFrame, cfg: SCD2Config,
              incremental: bool = False,
              cache: list[DataFrame] | None = None) -> DataFrame:
-    """``detect_delta`` against ``target``'s current rows, persisted (the
-    reference's temp-table CTAS, :140-155) into ``cache`` (from
-    ``delta_cache``) if given — ``build`` and txlog share this one delta."""
+    """``detect_delta`` against ``target``'s current rows minus NC (nothing
+    reads it), persisted (the reference's temp-table CTAS, :140-155) into
+    ``cache`` (from ``delta_cache``) if given; ``build`` and txlog share it."""
     current = target.filter(F.col(cfg.current_flag) == "Y")
-    delta = detect_delta(staging, current, cfg, incremental=incremental).persist()
+    delta = (detect_delta(staging, current, cfg, incremental=incremental)
+             .filter(F.col("upsert_cd") != "NC").persist())
     if cache is not None:
         cache.append(delta)
     return delta
@@ -284,23 +284,21 @@ def build(staging: DataFrame, target: DataFrame, delta: DataFrame,
         ).first()
         hw_ak, hw_key = int(hw_row["ak"]), int(hw_row["key"])
 
-    # one row per changed key, so the join can never duplicate a row
-    changed_keys = (delta.filter(F.col("upsert_cd").isin("U", "PD"))
-                    .select(*nk, F.col("upsert_cd").alias("_close_cd"))
-                    .dropDuplicates(nk))
-    close = (F.col(cfg.current_flag) == "Y") & F.col("_close_cd").isNotNull()
+    # one row per closed key, a semi join for inserts: a repeated key duplicates nothing
+    closing = (delta.filter(F.col("upsert_cd").isin("U", "PD"))
+               .select(*nk, F.col("upsert_cd").alias("_cd")).dropDuplicates(nk))
+    close = (F.col(cfg.current_flag) == "Y") & F.col("_cd").isNotNull()
     rewrite = {cfg.current_flag: F.lit("N"), cfg.valid_to: ts, cfg.updated_at: ts,
-               cfg.deleted_flag: F.when(F.col("_close_cd") == "PD", F.lit("Y"))
+               cfg.deleted_flag: F.when(F.col("_cd") == "PD", F.lit("Y"))
                .otherwise(F.col(cfg.deleted_flag))}
-    kept = target.join(changed_keys, nk, "left").select(*[
+    kept = target.join(closing, nk, "left").select(*[
         F.when(close, rewrite[c]).otherwise(F.col(c)).alias(c)
         if c in rewrite else F.col(c) for c in target.columns])
 
     payload_cols = [c for c in staging.columns
                     if c.lower() not in {x.lower() for x in cfg.exclude_from_load}]
     inserts_src = staging.select(*payload_cols).join(
-        delta.filter(F.col("upsert_cd").isin("I", "U")).select(*nk), nk, "inner"
-    )
+        delta.filter(F.col("upsert_cd").isin("I", "U")).select(*nk), nk, "left_semi")
     # both surrogate columns from ONE numbering pass (the same rank /
     # monotonic id offset by each high-water mark) — halves the minting
     # work versus two independent allocations

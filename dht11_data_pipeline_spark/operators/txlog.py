@@ -46,14 +46,13 @@ high-water max() scan over every bucket of the target), the row count
 is their sum (no count job), and the stats of a commit come
 from the footers of the files it just wrote, read on the driver —
 O(files written). A commit's write is sized from ``bytes``: bucket b
-gets max(1, ceil(bytes_b / advisory partition size)) hash slots, and
-rows hash-partition on (bucket, slot) over min(Σ slots,
-max(defaultParallelism, ceil(Σ bytes / advisory))) tasks: every core
-writes, and a bucket below that size is one file (the first load
-rebalances on the bucket column instead). A manifest
-without ``schema``/``stats`` (written before these fields existed) still
-reads, with schema inference; its next commit computes stats for every
-live bucket from the footers (an entry without ``bytes`` is one slot).
+gets max(1, ceil(est_b / advisory partition size)) hash slots, est_b =
+(its rows + the rows the commit inserts) x the table's mean bytes per
+row (tiny files over-estimate it), and rows hash-partition on (bucket,
+slot) over min(Σ slots, max(defaultParallelism, ceil(Σ est / advisory)))
+tasks; the first load rebalances on the bucket column. A manifest without
+``schema``/``stats`` still reads, with schema inference; its next commit
+computes stats from the footers (no ``bytes`` anywhere: one slot each).
 
 At 100 TB the manifest is O(buckets) — kilobytes — and commit cost is
 independent of table size. The same design scales to file-level
@@ -63,7 +62,9 @@ manifests (what Iceberg does); bucket grain keeps it readable here.
 from __future__ import annotations
 
 import json
+import math
 import os
+import re
 import time
 
 import pyarrow.parquet as pq
@@ -197,19 +198,20 @@ def _write_buckets(df: DataFrame, table_dir: str, commit_name: str,
                    sizes: dict | None = None) -> tuple[dict, dict]:
     """Write ``df`` bucket-partitioned under a new commit dir; returns
     (bucket id -> rel dir, bucket id -> footer stats) for the buckets
-    written. ``sizes`` (bucket id -> manifest bytes or None) sizes it:
+    written. ``sizes`` (bucket id -> estimated bytes) sizes it:
     see the module docstring. Without it AQE sizes a bucket rebalance."""
     commit_dir = os.path.join(table_dir, "data", commit_name)
     df = df.withColumn(BUCKET_COL, key_bucket(cfg, n_buckets))
     if sizes is None:
         df = df.hint("rebalance", BUCKET_COL)
     else:
-        spark, nbytes = df.sparkSession, {b: n or 0 for b, n in sizes.items()}
-        adv = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-            spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
-        slots = {b: max(1, -(-n // adv)) for b, n in nbytes.items()}
+        spark = df.sparkSession
+        num, unit = re.fullmatch(r"(\d+)([kmgtp]?)b?", spark.conf.get(
+            "spark.sql.adaptive.advisoryPartitionSizeInBytes").strip().lower()).groups()
+        adv = int(num) * 1024 ** " kmgtp".index(unit or " ")
+        slots = {b: max(1, math.ceil(n / adv)) for b, n in sizes.items()}
         n_tasks = min(sum(slots.values()), max(spark.sparkContext.defaultParallelism,
-                                               -(-sum(nbytes.values()) // adv)))
+                                               math.ceil(sum(sizes.values()) / adv)))
         # literal map of slot counts; murmur3 keeps slots independent of buckets
         per_bucket = F.create_map(*[F.lit(x) for kv in slots.items() for x in kv])
         slot = F.pmod(F.hash(*cfg.natural_keys), per_bucket[F.col(BUCKET_COL)])
@@ -288,12 +290,16 @@ def apply_scd2_logged(spark: SparkSession, staging: DataFrame,
     with delta_cache() as cache:
         delta = classify(staging, target, cfg, incremental=incremental,
                          cache=cache)
-        changed = sorted(r[0] for r in delta.filter(F.col("upsert_cd") != "NC")
-                         .select(bucket).distinct().collect())
+        # changed buckets and the rows each gains, in one collect
+        inserts = dict(delta.groupBy(bucket).agg(
+            F.count_if(F.col("upsert_cd").isin("I", "U"))).collect())
+        changed = sorted(inserts)
         if not changed:
             return int(m["version"])
 
         stats = _live_stats(table_dir, m, [cfg.ak_col, cfg.key_col])
+        sized = [s for s in stats.values() if "bytes" in s]  # mean bytes per row
+        width = sum(s["bytes"] for s in sized) / max(1, sum(s["rows"] for s in sized))
         high_water = tuple(
             max((s["max"][c] for s in stats.values()
                  if s["max"][c] is not None), default=0)
@@ -309,7 +315,8 @@ def apply_scd2_logged(spark: SparkSession, staging: DataFrame,
                           high_water=high_water)
         written, written_stats = _write_buckets(
             new_slice, table_dir, _commit_dir_name(int(m["version"]) + 1),
-            cfg, n_buckets, {b: stats.get(str(b), {}).get("bytes") for b in changed})
+            cfg, n_buckets, {b: width * (stats.get(str(b), {}).get("rows", 0) + inserts[b])
+                             for b in changed})
 
     buckets = dict(m["buckets"])
     for b in map(str, changed):

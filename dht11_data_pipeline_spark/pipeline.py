@@ -22,8 +22,7 @@ Spark job, no Python worker, atomic staged replace per write. The
 history table's metadata steps do the same against the txlog manifest:
 snapshot reads take its schema (no inference job), the commit takes
 its surrogate-key high-water marks from its stats (no target scan) and
-the batch's history row count is their sum (no count job). The staging
-read names only the batch's partition, with a fixed schema.
+the batch's history row count is their sum (no count job).
 
 The XCom dataset hand-off and the cross-DAG trigger (reference E2,
 Airflow-DAG.py:299-307,529-555) disappear: every stage passes lazy
@@ -154,10 +153,8 @@ def run_batch(spark: SparkSession, warehouse_dir: str, tree_json_path: str,
     historize(spark, warehouse_dir, load_key, load_ts=load_ts)
     ctl.update_run_status(interface_cd, load_key, "Success", complete=True)
 
-    return {"load_key": load_key,
-            "rows": intermediate_rows(warehouse_dir, load_key),
-            "skipped": False,
-            "hist_rows": history_rows(warehouse_dir)}
+    return {"load_key": load_key, "rows": intermediate_rows(warehouse_dir, load_key),
+            "skipped": False, "hist_rows": history_rows(warehouse_dir)}
 
 
 def run_dedup_batch(spark: SparkSession, warehouse_dir: str,

@@ -249,8 +249,9 @@ def test_apply_classifies_once_and_scans_the_target_once(spark, tmp_path,
 
 def test_build_never_duplicates_a_row_for_repeated_keys(spark):
     """Staging holding the same changed key twice (two differing
-    payloads) still closes the target row ONCE: the changed-key set is
-    one row per natural key."""
+    payloads) still closes the target row ONCE and inserts one version
+    per staging row: the changed-key set both joins read is one row per
+    natural key."""
     t1 = apply_scd2(_df(spark, B1), _empty_target(spark), CFG,
                     load_ts="2024-05-05 12:00:00")
     dup = [("D1", "2024-05-05 11:35:35", "IST", "98", "29", 3),
@@ -261,3 +262,7 @@ def test_build_never_duplicates_a_row_for_repeated_keys(spark):
     assert [(r.da_current_flag, str(r.da_valid_to_date)) for r in closed] == [
         ("N", "2024-05-06 12:00:00")]
     assert out.filter(F.col("da_current_flag") == "N").count() == 1
+    current = out.filter((F.col("device_id") == "D1")
+                         & (F.col("ts") == "2024-05-05 11:35:35")
+                         & (F.col("da_current_flag") == "Y")).collect()
+    assert sorted(r.humidity for r in current) == ["97", "98"]

@@ -316,6 +316,38 @@ def test_bucket_above_the_advisory_size_splits(spark, table64):
     assert got == want
 
 
+def test_large_batch_into_a_small_table_splits(spark, tmp_path):
+    """Slots are sized from a bucket's bytes AFTER the commit: with the
+    advisory size above every bucket's bytes before it, a batch that
+    quadruples each bucket still writes each as several files, and the
+    table reads the same rows as the plain apply."""
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    table = str(tmp_path / "hist4")
+    t1 = apply_scd2(_batch(spark, range(400)), _empty_target(spark), CFG,
+                    load_ts="2024-05-05 12:00:00", deterministic_keys=True)
+    txlog.init_table(t1, table, CFG, n_buckets=4)
+    m1 = txlog.read_manifest(table)
+    big = _batch(spark, range(400, 1600), load_key=3)
+    cols = t1.columns
+    want = {tuple(r) for r in apply_scd2(
+        big, txlog.read_table(spark, table), CFG, load_ts="2024-05-06 12:00:00",
+        deterministic_keys=True, incremental=True).select(*cols).collect()}
+    old = spark.conf.get(key)
+    spark.conf.set(key, f"{max(s['bytes'] for s in m1['stats'].values()) + 1}b")
+    try:
+        txlog.apply_scd2_logged(spark, big, table, CFG,
+                                load_ts="2024-05-06 12:00:00",
+                                deterministic_keys=True)
+    finally:
+        spark.conf.set(key, old)
+    m2 = txlog.read_manifest(table)
+    assert sorted(_moved(m1, m2)) == ["0", "1", "2", "3"]
+    assert all(len(_parquet_files(table, rel)) >= 2
+               for rel in m2["buckets"].values())
+    got = {tuple(r) for r in txlog.read_table(spark, table).select(*cols).collect()}
+    assert got == want
+
+
 def test_stats_without_bytes_still_commit(spark, table64):
     """A manifest whose stats predate the ``bytes`` field commits (each
     such bucket counts as one slot) and its written buckets gain it."""
