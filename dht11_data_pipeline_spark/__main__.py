@@ -141,8 +141,8 @@ def main(argv: list[str] | None = None) -> int:
             print(json.dumps({"latest": v, "versions": versions}))
         elif args.action == "read":
             df = txlog.read_table(spark, args.table, version=args.version)
-            print(json.dumps({"version": args.version
-                              or txlog.current_version(args.table),
+            print(json.dumps({"version": txlog.current_version(args.table)
+                              if args.version is None else args.version,
                               "rows": df.count()}))
         elif args.action == "cdf":
             if args.from_version is None:

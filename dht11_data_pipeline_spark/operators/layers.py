@@ -18,9 +18,10 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# fixed layer schemas (no inference job); load_key typed as inference reads it
+# fixed layer schemas (no inference job); load_key is the ledger's bigint
+# end to end (an int partition column rejects keys from 2^31 on)
 LANDING_SCHEMA = "timezone string, humidity string, temperature string, ts timestamp, device_id string"
-INTERMEDIATE_SCHEMA = LANDING_SCHEMA + ", load_key int"
+INTERMEDIATE_SCHEMA = LANDING_SCHEMA + ", load_key bigint"
 
 
 def write_landing(df: DataFrame, warehouse_dir: str, device_id: str) -> str:

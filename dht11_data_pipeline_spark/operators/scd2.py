@@ -20,10 +20,10 @@ Differences, deliberate and documented:
   crash window.
 - The reference's surrogate allocator sorts every insert row into one
   partition (ORDER BY a constant). Downstream only relies on keys being
-  UNIQUE and > the previous high-water mark, so the scale path mints
-  keys from ``monotonically_increasing_id()`` offsets — fully parallel,
-  no global sort. A ``deterministic=True`` mode keeps the reference's
-  dense row_number behavior for differential testing.
+  UNIQUE and > the previous high-water mark; ``build`` mints them dense
+  and in natural-key order with ``dense_rank_distributed`` — a range
+  shuffle plus per-partition offsets, no single-partition sort — so the
+  same batch always gets the same keys.
 
 Scale design: the full outer join shuffles on the natural key — bucket
 staging and target by the natural key in real deployments and it becomes
@@ -35,6 +35,8 @@ reads the target once, left-joined with the U/PD keys (copy-on-write MERGE).
 from __future__ import annotations
 
 import contextlib
+import os
+import sys
 import warnings
 from dataclasses import dataclass, field
 
@@ -44,6 +46,7 @@ from pyspark.sql import functions as F
 from dht11_data_pipeline_spark.functions.hashing import delta_hash
 
 FAR_FUTURE = "3000-01-01 00:00:00"
+_PKG_DIR = os.path.dirname(os.path.dirname(__file__)) + os.sep
 
 
 @contextlib.contextmanager
@@ -119,7 +122,16 @@ def _warn_on_schema_drift(staging_dcols: list[str], target: DataFrame,
             f"(added={sorted(added)}, missing={sorted(gone)}): every "
             "existing row's hash changes — expect a full-table 'U' wave "
             "this run. Align schemas or extend exclude_from_delta.",
-            stacklevel=3)
+            stacklevel=_caller_stacklevel())
+
+
+def _caller_stacklevel() -> int:
+    """``warnings.warn`` stack level, from the function calling this
+    one, of the first frame outside this package."""
+    frame, level = sys._getframe(1), 1
+    while frame is not None and frame.f_code.co_filename.startswith(_PKG_DIR):
+        frame, level = frame.f_back, level + 1
+    return level
 
 
 def detect_delta(staging: DataFrame, target_current: DataFrame,
@@ -251,7 +263,6 @@ def classify(staging: DataFrame, target: DataFrame, cfg: SCD2Config,
 
 def build(staging: DataFrame, target: DataFrame, delta: DataFrame,
           cfg: SCD2Config, load_ts: str | None = None,
-          deterministic_keys: bool = False,
           high_water: tuple[int, int] | None = None) -> DataFrame:
     """The COMPLETE new target state from ``delta``, in ONE target scan:
 
@@ -299,26 +310,15 @@ def build(staging: DataFrame, target: DataFrame, delta: DataFrame,
                     if c.lower() not in {x.lower() for x in cfg.exclude_from_load}]
     inserts_src = staging.select(*payload_cols).join(
         delta.filter(F.col("upsert_cd").isin("I", "U")).select(*nk), nk, "left_semi")
-    # both surrogate columns from ONE numbering pass (the same rank /
-    # monotonic id offset by each high-water mark) — halves the minting
-    # work versus two independent allocations
-    if deterministic_keys:
-        ranked = dense_rank_distributed(inserts_src, nk, "_sk_rank")
-        inserts = (ranked
-                   .withColumn(cfg.key_col,
-                               (F.col("_sk_rank") + F.lit(hw_key)).cast("decimal(18,0)"))
-                   .withColumn(cfg.ak_col,
-                               (F.col("_sk_rank") + F.lit(hw_ak)).cast("decimal(18,0)"))
-                   .drop("_sk_rank"))
-    else:
-        inserts = (inserts_src.withColumn("_sk_mono", F.monotonically_increasing_id())
-                   .withColumn(cfg.key_col,
-                               (F.col("_sk_mono") + F.lit(hw_key) + 1).cast("decimal(18,0)"))
-                   .withColumn(cfg.ak_col,
-                               (F.col("_sk_mono") + F.lit(hw_ak) + 1).cast("decimal(18,0)"))
-                   .drop("_sk_mono"))
+    # both surrogate columns from ONE numbering pass (the same rank
+    # offset by each high-water mark) — halves the minting work versus
+    # two independent allocations
     inserts = (
-        inserts.withColumn(cfg.current_flag, F.lit("Y"))
+        dense_rank_distributed(inserts_src, nk, "_sk_rank")
+        .withColumn(cfg.key_col, (F.col("_sk_rank") + F.lit(hw_key)).cast("decimal(18,0)"))
+        .withColumn(cfg.ak_col, (F.col("_sk_rank") + F.lit(hw_ak)).cast("decimal(18,0)"))
+        .drop("_sk_rank")
+        .withColumn(cfg.current_flag, F.lit("Y"))
         .withColumn(cfg.deleted_flag, F.lit("N"))
         .withColumn(cfg.valid_from, ts)
         .withColumn(cfg.valid_to, F.lit(FAR_FUTURE).cast("timestamp"))
@@ -338,12 +338,9 @@ def build(staging: DataFrame, target: DataFrame, delta: DataFrame,
 
 def apply_scd2(staging: DataFrame, target: DataFrame, cfg: SCD2Config,
                load_ts: str | None = None,
-               deterministic_keys: bool = False,
                incremental: bool = False,
-               high_water: tuple[int, int] | None = None,
                cache: list[DataFrame] | None = None) -> DataFrame:
     """Full SCD2 apply, ``build(classify(...))``: returns the COMPLETE
     new target state (formula at ``build``; ``cache`` at ``classify``)."""
     delta = classify(staging, target, cfg, incremental=incremental, cache=cache)
-    return build(staging, target, delta, cfg, load_ts=load_ts,
-                 deterministic_keys=deterministic_keys, high_water=high_water)
+    return build(staging, target, delta, cfg, load_ts=load_ts)

@@ -21,6 +21,10 @@ Layout:
     <table>/_txlog/v<n>.json     manifest (fields below)
     <table>/_txlog/v<n>.json.tmp staged then os.link'd (atomic POSIX)
 
+Version 0 is the create (``init_table``): schema and bucket count, no
+data, as a Delta table's first log entry. Every batch after it, the
+first included, is an ordinary commit.
+
 Manifest fields:
     n_buckets   bucket count of the key hash (fixed at init)
     buckets     bucket id -> commit dir holding its current rows
@@ -50,9 +54,10 @@ gets max(1, ceil(est_b / advisory partition size)) hash slots, est_b =
 (its rows + the rows the commit inserts) x the table's mean bytes per
 row (tiny files over-estimate it), and rows hash-partition on (bucket,
 slot) over min(Σ slots, max(defaultParallelism, ceil(Σ est / advisory)))
-tasks; the first load rebalances on the bucket column. A manifest without
-``schema``/``stats`` still reads, with schema inference; its next commit
-computes stats from the footers (no ``bytes`` anywhere: one slot each).
+tasks; with no ``bytes`` yet (version 0), from the staging's parquet
+footers. A manifest without ``schema``/``stats`` still reads, with
+schema inference; its next commit computes stats from the footers (no
+``bytes`` anywhere, no parquet staging: one slot each).
 
 At 100 TB the manifest is O(buckets) — kilobytes — and commit cost is
 independent of table size. The same design scales to file-level
@@ -66,6 +71,7 @@ import math
 import os
 import re
 import time
+from urllib.parse import unquote, urlparse
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
@@ -193,29 +199,41 @@ def table_rows(table_dir: str, version: int | None = None) -> int:
     return sum(s["rows"] for s in _live_stats(table_dir, m, []).values())
 
 
+def _staging_bytes_per_row(staging: DataFrame) -> float:
+    """Mean bytes per row of ``staging``'s parquet input files, from
+    their footers on the driver (no Spark job); 0 without any. As the
+    width of a first load's table it errs low (audit columns, a footer
+    per bucket file): 5k-20k readings took 7.8-7.9 B/row as staging and
+    72-32 B/row as the 64-bucket history."""
+    rows = size = 0
+    for uri in staging.inputFiles():
+        if uri.startswith("file:") and uri.endswith(".parquet"):
+            path = unquote(urlparse(uri).path)
+            rows += pq.read_metadata(path).num_rows
+            size += os.path.getsize(path)
+    return size / max(1, rows)
+
+
 def _write_buckets(df: DataFrame, table_dir: str, commit_name: str,
                    cfg: SCD2Config, n_buckets: int,
-                   sizes: dict | None = None) -> tuple[dict, dict]:
+                   sizes: dict) -> tuple[dict, dict]:
     """Write ``df`` bucket-partitioned under a new commit dir; returns
     (bucket id -> rel dir, bucket id -> footer stats) for the buckets
     written. ``sizes`` (bucket id -> estimated bytes) sizes it:
-    see the module docstring. Without it AQE sizes a bucket rebalance."""
+    see the module docstring."""
     commit_dir = os.path.join(table_dir, "data", commit_name)
-    df = df.withColumn(BUCKET_COL, key_bucket(cfg, n_buckets))
-    if sizes is None:
-        df = df.hint("rebalance", BUCKET_COL)
-    else:
-        spark = df.sparkSession
-        num, unit = re.fullmatch(r"(\d+)([kmgtp]?)b?", spark.conf.get(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes").strip().lower()).groups()
-        adv = int(num) * 1024 ** " kmgtp".index(unit or " ")
-        slots = {b: max(1, math.ceil(n / adv)) for b, n in sizes.items()}
-        n_tasks = min(sum(slots.values()), max(spark.sparkContext.defaultParallelism,
-                                               math.ceil(sum(sizes.values()) / adv)))
-        # literal map of slot counts; murmur3 keeps slots independent of buckets
-        per_bucket = F.create_map(*[F.lit(x) for kv in slots.items() for x in kv])
-        slot = F.pmod(F.hash(*cfg.natural_keys), per_bucket[F.col(BUCKET_COL)])
-        df = df.repartition(n_tasks, BUCKET_COL, slot)
+    spark = df.sparkSession
+    num, unit = re.fullmatch(r"(\d+)([kmgtp]?)b?", spark.conf.get(
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes").strip().lower()).groups()
+    adv = int(num) * 1024 ** " kmgtp".index(unit or " ")
+    slots = {b: max(1, math.ceil(n / adv)) for b, n in sizes.items()}
+    n_tasks = min(sum(slots.values()), max(spark.sparkContext.defaultParallelism,
+                                           math.ceil(sum(sizes.values()) / adv)))
+    # literal map of slot counts; murmur3 keeps slots independent of buckets
+    per_bucket = F.create_map(*[F.lit(x) for kv in slots.items() for x in kv])
+    slot = F.pmod(F.hash(*cfg.natural_keys), per_bucket[F.col(BUCKET_COL)])
+    df = (df.withColumn(BUCKET_COL, key_bucket(cfg, n_buckets))
+          .repartition(n_tasks, BUCKET_COL, slot))
     df.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(commit_dir)
     cols = [cfg.ak_col, cfg.key_col]
     buckets, stats = {}, {}
@@ -227,16 +245,13 @@ def _write_buckets(df: DataFrame, table_dir: str, commit_name: str,
     return buckets, stats
 
 
-def init_table(df: DataFrame, table_dir: str, cfg: SCD2Config,
+def init_table(table_dir: str, schema: StructType,
                n_buckets: int = 64) -> int:
-    """Materialize ``df`` as version 1 of a logged, bucket-partitioned
-    table."""
-    buckets, stats = _write_buckets(df, table_dir, _commit_dir_name(1),
-                                    cfg, n_buckets)
-    return _commit(table_dir, {"n_buckets": n_buckets, "buckets": buckets,
-                               "schema": df.schema.jsonValue(),
-                               "stats": stats},
-                   base_version=0)
+    """Create a logged, bucket-partitioned table as version 0: the
+    schema and bucket count, no data file, no Spark job."""
+    return _commit(table_dir, {"n_buckets": n_buckets, "buckets": {},
+                               "schema": schema.jsonValue(), "stats": {}},
+                   base_version=-1)
 
 
 def read_table(spark: SparkSession, table_dir: str,
@@ -256,20 +271,21 @@ def _read_bucket_paths(spark: SparkSession, table_dir: str,
     commit-level dir isn't key=value, and the bucket id is always
     derivable from the natural keys via key_bucket, so the path-encoded
     value is never needed). ``schema`` (the manifest's) skips the
-    parquet schema-inference job."""
+    parquet schema-inference job and reads no path as an empty frame."""
+    struct = None if schema is None else StructType.fromJson(schema)
     if not rel_paths:
-        raise ValueError(f"empty table manifest in {table_dir}")
-    paths = [os.path.join(table_dir, p) for p in rel_paths]
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(StructType.fromJson(schema))
-    return reader.parquet(*paths)
+        if struct is None:
+            raise ValueError(f"empty table manifest in {table_dir}")
+        # limit(0): an empty LocalRelation, which the optimizer prunes
+        # joins against; createDataFrame alone is an opaque RDD scan
+        return spark.createDataFrame([], struct).limit(0)
+    reader = spark.read if struct is None else spark.read.schema(struct)
+    return reader.parquet(*[os.path.join(table_dir, p) for p in rel_paths])
 
 
 def apply_scd2_logged(spark: SparkSession, staging: DataFrame,
                       table_dir: str, cfg: SCD2Config,
                       load_ts: str | None = None,
-                      deterministic_keys: bool = False,
                       incremental: bool = True) -> int:
     """SCD2 apply as ONE atomic commit: classify the batch once, build
     the changed buckets' new state from that same delta, write it to an
@@ -299,7 +315,8 @@ def apply_scd2_logged(spark: SparkSession, staging: DataFrame,
 
         stats = _live_stats(table_dir, m, [cfg.ak_col, cfg.key_col])
         sized = [s for s in stats.values() if "bytes" in s]  # mean bytes per row
-        width = sum(s["bytes"] for s in sized) / max(1, sum(s["rows"] for s in sized))
+        width = (sum(s["bytes"] for s in sized) / max(1, sum(s["rows"] for s in sized))
+                 if sized else _staging_bytes_per_row(staging))
         high_water = tuple(
             max((s["max"][c] for s in stats.values()
                  if s["max"][c] is not None), default=0)
@@ -307,12 +324,10 @@ def apply_scd2_logged(spark: SparkSession, staging: DataFrame,
         # payload read touches ONLY the changed buckets' directories
         changed_rel = [m["buckets"][str(b)] for b in changed
                        if str(b) in m["buckets"]]
-        tgt_slice = (_read_bucket_paths(spark, table_dir, changed_rel, schema)
-                     if changed_rel else target.limit(0))
+        tgt_slice = _read_bucket_paths(spark, table_dir, changed_rel,
+                                       target.schema.jsonValue())
         new_slice = build(staging.filter(bucket.isin(changed)), tgt_slice,
-                          delta, cfg, load_ts=load_ts,
-                          deterministic_keys=deterministic_keys,
-                          high_water=high_water)
+                          delta, cfg, load_ts=load_ts, high_water=high_water)
         written, written_stats = _write_buckets(
             new_slice, table_dir, _commit_dir_name(int(m["version"]) + 1),
             cfg, n_buckets, {b: width * (stats.get(str(b), {}).get("rows", 0) + inserts[b])
@@ -355,20 +370,12 @@ def change_feed(spark: SparkSession, table_dir: str,
                      if m_to["buckets"].get(k) != m_from["buckets"][k]}
                     | {k for k in m_to["buckets"]
                        if k not in m_from["buckets"]})
-    if not changed_keys:
-        schema_src = read_table(spark, table_dir, from_version).limit(0)
-        return schema_src.withColumn("_change_type", F.lit("insert")).limit(0)
-    old_paths = sorted(m_from["buckets"][k] for k in changed_keys
-                       if k in m_from["buckets"])
-    new_paths = sorted(m_to["buckets"][k] for k in changed_keys
-                       if k in m_to["buckets"])
-    empty = read_table(spark, table_dir, from_version).limit(0)
-    old = (_read_bucket_paths(spark, table_dir, old_paths,
-                              m_from.get("schema"))
-           if old_paths else empty)
-    new = (_read_bucket_paths(spark, table_dir, new_paths,
-                              m_to.get("schema"))
-           if new_paths else empty)
+    # both sides read with the from-snapshot's schema; a side without a
+    # changed bucket is an empty frame
+    schema = read_table(spark, table_dir, from_version).schema.jsonValue()
+    old, new = (_read_bucket_paths(spark, table_dir, sorted(
+        m["buckets"][k] for k in changed_keys if k in m["buckets"]), schema)
+        for m in (m_from, m_to))
     deletes = old.exceptAll(new).withColumn("_change_type", F.lit("delete"))
     inserts = new.exceptAll(old).withColumn("_change_type", F.lit("insert"))
     return deletes.unionByName(inserts)
@@ -384,7 +391,7 @@ def vacuum(table_dir: str, retain_versions: int = 2) -> list[str]:
     latest = current_version(table_dir)
     if latest is None:
         return []
-    keep_versions = [v for v in range(max(1, latest - retain_versions + 1),
+    keep_versions = [v for v in range(max(0, latest - retain_versions + 1),
                                       latest + 1)
                      if os.path.exists(_manifest_path(table_dir, v))]
     live_dirs: set[str] = set()

@@ -8,9 +8,10 @@ Flow (reference stage → here):
   Firebase subtree fetch+flatten→ sources.firebase_tree (distributed)
   landing delete+reload         → layers.write_landing (atomic overwrite)
   landing→intermediate + stamp  → layers.load_to_intermediate
-  SCD2 historization            → historize: operators.txlog one-commit
-                                  apply (one classify, one slice scan,
-                                  atomic manifest publish)
+  SCD2 historization            → historize: one txlog commit per
+                                  batch onto an empty version 0 (one
+                                  classify, one slice scan, atomic
+                                  manifest publish)
   status updates                → ControlTable.update_run_status
   batch row count               → layers.intermediate_rows (footers)
   history row count             → history_rows: summed from the txlog
@@ -42,9 +43,7 @@ from dht11_data_pipeline_spark.operators.layers import (
     intermediate_rows, load_to_intermediate, read_intermediate,
     write_landing,
 )
-from dht11_data_pipeline_spark.operators.scd2 import (
-    SCD2Config, apply_scd2, delta_cache,
-)
+from dht11_data_pipeline_spark.operators.scd2 import SCD2Config
 from dht11_data_pipeline_spark.sources.firebase_tree import flatten_readings, read_tree
 
 HIST_CFG = SCD2Config(
@@ -98,21 +97,16 @@ def historize(spark: SparkSession, warehouse_dir: str, load_key: int,
     MERGE-equivalent write amplification AND full crash atomicity (a
     crash anywhere leaves the previous version intact; no torn buckets,
     no reader ever sees a mix), plus time travel per batch for free.
-    The first batch applies onto the empty target and lays the result
-    down as version 1.
+    A missing table is first created empty (version 0), so the first
+    batch is the same commit as every later one.
     """
     staging = read_intermediate(spark, warehouse_dir, load_key)
     final = _hist_path(warehouse_dir)
     if txlog.current_version(final) is None:
-        target = read_history(spark, warehouse_dir)
-        with delta_cache() as cache:
-            new_state = apply_scd2(staging, target, HIST_CFG,
-                                   load_ts=load_ts, deterministic_keys=True,
-                                   cache=cache)
-            return txlog.init_table(new_state, final, HIST_CFG, n_buckets=64)
-    return txlog.apply_scd2_logged(
-        spark, staging, final, HIST_CFG, load_ts=load_ts,
-        deterministic_keys=True, incremental=False)
+        txlog.init_table(final, read_history(spark, warehouse_dir).schema,
+                         n_buckets=64)
+    return txlog.apply_scd2_logged(spark, staging, final, HIST_CFG,
+                                   load_ts=load_ts, incremental=False)
 
 
 def run_batch(spark: SparkSession, warehouse_dir: str, tree_json_path: str,

@@ -1,4 +1,4 @@
-"""Streaming SCD2 sink: ``foreachBatch`` → ``apply_scd2`` per micro-batch.
+"""Streaming SCD2 sinks: ``foreachBatch`` → one SCD2 apply per micro-batch.
 
 This is the reference's whole daily pipeline (cron → landing →
 intermediate → historization trigger, Airflow-DAG.py:476-577) collapsed
@@ -9,7 +9,7 @@ a faster trigger.
 
 Exactly-once story (SURVEY §2.9 T4): Spark's checkpoint guarantees each
 source offset range maps to one ``batch_id``; a replayed batch (crash
-between sink write and checkpoint commit) re-runs ``apply_scd2`` whose
+between sink write and checkpoint commit) re-runs the apply, whose
 hash-compare classifies every row NC — the same content-hash idempotency
 the reference relies on (Delta_detection_query_gen.py:56). The control
 ledger row per batch (load_key = batch_id + base) preserves the
@@ -20,7 +20,8 @@ its row rather than appending a second one.
 The target swap is staged-write + atomic rename, replacing the
 reference's non-atomic MERGE-then-INSERT (SURVEY §4.2). On a real
 cluster the same function body becomes a Delta Lake ``MERGE`` — the
-foreachBatch seam is exactly where that swap happens.
+foreachBatch seam is exactly where that swap happens; the logged sink
+makes each micro-batch, the first included, one txlog commit.
 """
 
 from __future__ import annotations
@@ -108,7 +109,6 @@ def swap_target(new_state: DataFrame, target_path: str) -> None:
 
 def scd2_batch_writer(target_path: str, cfg: SCD2Config,
                       load_key_base: int = 0,
-                      deterministic_keys: bool = True,
                       control=None,
                       interface: tuple[str, str] | None = None):
     """Build the ``foreachBatch`` function: micro-batch = one reference
@@ -140,7 +140,6 @@ def scd2_batch_writer(target_path: str, cfg: SCD2Config,
         target = read_target(spark, target_path, staging, cfg)
         with delta_cache() as cache:
             new_state = apply_scd2(staging, target, cfg,
-                                   deterministic_keys=deterministic_keys,
                                    incremental=True, cache=cache)
             swap_target(new_state, target_path)
         if control is not None and interface is not None:
@@ -152,7 +151,6 @@ def scd2_batch_writer(target_path: str, cfg: SCD2Config,
 
 def scd2_logged_batch_writer(table_dir: str, cfg: SCD2Config,
                              load_key_base: int = 0,
-                             deterministic_keys: bool = True,
                              n_buckets: int = 64):
     """``foreachBatch`` SCD2 sink on the manifest transaction log
     (operators/txlog.py) instead of the whole-target swap: each
@@ -161,7 +159,8 @@ def scd2_logged_batch_writer(table_dir: str, cfg: SCD2Config,
     — no full-target rewrite per batch, readers keep consistent
     snapshots across commits, time travel per batch for free. Replays
     converge exactly as in the swap path (hash-compare classifies a
-    replayed batch NC → no changed buckets → no new version)."""
+    replayed batch NC → no changed buckets → no new version). A missing
+    table is first created empty, with the ``empty_target`` schema."""
     from dht11_data_pipeline_spark.operators import txlog
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
@@ -171,15 +170,9 @@ def scd2_logged_batch_writer(table_dir: str, cfg: SCD2Config,
         staging = batch_df.withColumn(
             "load_key", F.lit(load_key_base + batch_id).cast("bigint"))
         if txlog.current_version(table_dir) is None:
-            with delta_cache() as cache:
-                initial = apply_scd2(
-                    staging, empty_target(spark, staging, cfg), cfg,
-                    deterministic_keys=deterministic_keys, incremental=True,
-                    cache=cache)
-                txlog.init_table(initial, table_dir, cfg, n_buckets=n_buckets)
-            return
+            txlog.init_table(table_dir, empty_target(spark, staging, cfg).schema,
+                             n_buckets=n_buckets)
         txlog.apply_scd2_logged(spark, staging, table_dir, cfg,
-                                deterministic_keys=deterministic_keys,
                                 incremental=True)
 
     return _write

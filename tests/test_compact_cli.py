@@ -116,16 +116,14 @@ def test_cli_txlog_lifecycle(spark, tmp_path, capsys):
 
     from dht11_data_pipeline_spark.__main__ import main
     from dht11_data_pipeline_spark.operators import txlog
-    from dht11_data_pipeline_spark.operators.scd2 import apply_scd2
     from tests.test_scd2 import B1, B2, CFG, _df, _empty_target
 
     table = str(tmp_path / "logged")
-    t1 = apply_scd2(_df(spark, B1), _empty_target(spark), CFG,
-                    load_ts="2024-05-05 12:00:00", deterministic_keys=True)
-    txlog.init_table(t1, table, CFG, n_buckets=16)
+    txlog.init_table(table, _empty_target(spark).schema, n_buckets=16)
+    txlog.apply_scd2_logged(spark, _df(spark, B1), table, CFG,
+                            load_ts="2024-05-05 12:00:00")
     txlog.apply_scd2_logged(spark, _df(spark, [B2[3]]), table, CFG,
-                            load_ts="2024-05-06 12:00:00",
-                            deterministic_keys=True)
+                            load_ts="2024-05-06 12:00:00")
 
     assert main(["txlog", "history", "--table", table]) == 0
     out = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
@@ -134,6 +132,9 @@ def test_cli_txlog_lifecycle(spark, tmp_path, capsys):
     assert main(["txlog", "read", "--table", table, "--version", "1"]) == 0
     out = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out == {"version": 1, "rows": 4}
+    assert main(["txlog", "read", "--table", table, "--version", "0"]) == 0
+    out = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert out == {"version": 0, "rows": 0}
 
     assert main(["txlog", "cdf", "--table", table,
                  "--from-version", "1"]) == 0

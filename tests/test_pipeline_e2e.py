@@ -311,14 +311,16 @@ def test_read_intermediate_reads_only_its_partition(spark, tmp_path):
     with the layer's fixed schema: the same schema and rows as the
     whole-directory read, 0 Spark jobs to build, and an empty frame for
     a load key without a partition."""
-    from dht11_data_pipeline_spark.operators.layers import read_intermediate
+    from dht11_data_pipeline_spark.operators.layers import (
+        INTERMEDIATE_SCHEMA, read_intermediate)
 
     wh, results = _two_batches(spark, tmp_path)
     keys = [r["load_key"] for r in results] + [99]
     with _job_count(spark) as jobs:
         frames = {k: read_intermediate(spark, wh, k) for k in keys}
     assert jobs == [0]
-    whole = spark.read.parquet(os.path.join(wh, "dht11_data_int"))
+    whole = spark.read.schema(INTERMEDIATE_SCHEMA).parquet(
+        os.path.join(wh, "dht11_data_int"))
     for k, df in frames.items():
         assert df.schema == whole.schema
         assert (sorted(map(tuple, df.collect()))
@@ -346,18 +348,26 @@ def _reading_tree(n: int, bumped=(), new: int = 0) -> dict:
 # measured with one classify per commit, the fixed-schema partition read
 # of the batch and its row count from the footers (28 before them)
 SNAPSHOT_BATCH_JOB_BUDGET = 21
+# Spark jobs of the first run_batch (1000 readings) into a missing
+# history: the job-free version-0 create, then the same commit as every
+# later batch against an empty snapshot (22 when the first batch had its
+# own apply-then-write path)
+FIRST_BATCH_JOB_BUDGET = 17
 
 
 def test_snapshot_batch_job_budget(spark, tmp_path):
-    """One snapshot ``run_batch`` (1% of readings changed, 1% new) over a
-    prepared 64-bucket history stays within the measured job budget, so
-    a change that adds a Spark job to the write path fails here."""
+    """The first ``run_batch`` and one snapshot ``run_batch`` (1% of
+    readings changed, 1% new) over the 64-bucket history it made stay
+    within their measured job budgets, so a change that adds a Spark
+    job to the write path fails here."""
     wh = str(tmp_path / "wh")
     bootstrap(spark, wh)
     base = tmp_path / "base.json"
     base.write_text(json.dumps(_reading_tree(1000)))
-    run_batch(spark, wh, str(base), "DEV01", load_ts="2024-05-05 12:00:00",
-              since_ts="1970-01-01 00:00:00")
+    with _job_count(spark) as first:
+        run_batch(spark, wh, str(base), "DEV01", load_ts="2024-05-05 12:00:00",
+                  since_ts="1970-01-01 00:00:00")
+    assert first[0] <= FIRST_BATCH_JOB_BUDGET, first
     snap = tmp_path / "snap.json"
     snap.write_text(json.dumps(_reading_tree(1000, bumped=range(0, 1000, 100),
                                              new=10)))
@@ -367,3 +377,90 @@ def test_snapshot_batch_job_budget(spark, tmp_path):
                       since_ts="1970-01-01 00:00:00")
     assert r["rows"] == 1010 and r["hist_rows"] == 1020
     assert jobs[0] <= SNAPSHOT_BATCH_JOB_BUDGET, jobs
+
+
+# -- the first batch is an ordinary commit onto an empty version 0 --------------
+
+def test_failed_first_commit_replays_as_version_1(spark, tmp_path, monkeypatch):
+    """A first batch that fails between the create (version 0) and its
+    commit leaves an empty history at version 0; the next ``run_batch``
+    commits the readings as version 1 on top of it."""
+    wh = str(tmp_path / "wh")
+    bootstrap(spark, wh)
+    hist_path = os.path.join(wh, "hist_dht11_data")
+    t = tmp_path / "b1.json"; t.write_text(json.dumps(BATCH1))
+    real = txlog._write_buckets
+
+    def fail_once(*a, **kw):
+        monkeypatch.setattr(txlog, "_write_buckets", real)
+        raise OSError("write failed")
+
+    monkeypatch.setattr(txlog, "_write_buckets", fail_once)
+    with pytest.raises(OSError, match="write failed"):
+        run_batch(spark, wh, str(t), "DEV01",
+                  load_ts="2024-05-05 12:00:00", since_ts="1970-01-01 00:00:00")
+    assert txlog.current_version(hist_path) == 0
+    assert read_history(spark, wh).count() == 0
+
+    # a stuck run has no resume path yet: clearing the ledger gate
+    # stands in for the operator before the replay
+    ControlTable(spark, wh).update_run_status("STG_1020", 2, "Success",
+                                              complete=True)
+    r = run_batch(spark, wh, str(t), "DEV01",
+                  load_ts="2024-05-05 12:00:00", since_ts="1970-01-01 00:00:00")
+    assert r == {"load_key": 3, "rows": 2, "skipped": False, "hist_rows": 2}
+    assert txlog.current_version(hist_path) == 1
+    assert txlog.read_manifest(hist_path, 0)["buckets"] == {}
+    assert read_history(spark, wh).count() == 2
+
+
+def test_first_load_above_the_advisory_size_splits(spark, tmp_path):
+    """The first load sizes its write from the batch's parquet footers:
+    with an advisory size far below a bucket's bytes every bucket is
+    written as several files, and the history holds the batch's
+    readings, all current."""
+    from dht11_data_pipeline_spark.operators.layers import read_intermediate
+
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    wh = str(tmp_path / "wh")
+    bootstrap(spark, wh)
+    base = tmp_path / "base.json"
+    base.write_text(json.dumps(_reading_tree(1000)))
+    old = spark.conf.get(key)
+    spark.conf.set(key, "32b")
+    try:
+        r = run_batch(spark, wh, str(base), "DEV01", load_ts="2024-05-05 12:00:00",
+                      since_ts="1970-01-01 00:00:00")
+    finally:
+        spark.conf.set(key, old)
+    hist_path = os.path.join(wh, "hist_dht11_data")
+    buckets = txlog.read_manifest(hist_path)["buckets"]
+    assert len(buckets) == 64
+    assert all(len([f for f in os.listdir(os.path.join(hist_path, rel))
+                    if f.endswith(".parquet")]) >= 2
+               for rel in buckets.values())
+    cols = ["device_id", "ts", "timezone", "humidity", "temperature"]
+    hist = read_history(spark, wh)
+    assert hist.filter(F.col("da_current_flag") == "Y").count() == 1000
+    assert (sorted(map(tuple, hist.select(*cols).collect()))
+            == sorted(map(tuple, read_intermediate(spark, wh, r["load_key"])
+                          .select(*cols).collect())))
+
+
+def test_load_key_past_int_range_round_trips(spark, tmp_path):
+    """``load_key`` is a bigint end to end: the intermediate layer
+    stamps, partitions and reads back a key of 2^31."""
+    from dht11_data_pipeline_spark.operators.layers import (
+        intermediate_rows, load_to_intermediate, read_intermediate,
+        write_landing)
+    from dht11_data_pipeline_spark.sources.firebase_tree import (
+        flatten_readings, read_tree)
+
+    wh = str(tmp_path / "wh")
+    t = tmp_path / "b1.json"; t.write_text(json.dumps(BATCH1))
+    write_landing(flatten_readings(read_tree(spark, str(t)), device_id="DEV01"),
+                  wh, "DEV01")
+    load_to_intermediate(spark, wh, 2**31, "DEV01")
+    rows = read_intermediate(spark, wh, 2**31).collect()
+    assert [r["load_key"] for r in rows] == [2**31, 2**31]
+    assert intermediate_rows(wh, 2**31) == 2

@@ -72,14 +72,12 @@ def test_scd2_reapply_is_noop(spark, batch):
         " da_current_flag string, da_deleted_flag string,"
         " da_valid_from_date timestamp, da_valid_to_date timestamp,"
         " da_inserted_datetime timestamp, da_updated_datetime timestamp")
-    t1 = apply_scd2(df, empty, CFG, load_ts="2024-01-01 00:00:00",
-                    deterministic_keys=True)
+    t1 = apply_scd2(df, empty, CFG, load_ts="2024-01-01 00:00:00")
     # re-apply the identical batch: everything classifies NC...
     delta = detect_delta(df, t1.filter(F.col("da_current_flag") == "Y"), CFG)
     assert {r["upsert_cd"] for r in delta.collect()} == {"NC"}
     # ...and the applied state is bit-identical
-    t2 = apply_scd2(df, t1, CFG, load_ts="2024-02-02 00:00:00",
-                    deterministic_keys=True)
+    t2 = apply_scd2(df, t1, CFG, load_ts="2024-02-02 00:00:00")
     assert ({tuple(r) for r in t1.collect()} == {tuple(r) for r in t2.collect()})
 
 

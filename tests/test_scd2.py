@@ -64,7 +64,7 @@ def test_initial_load_all_inserts(spark):
     assert {r.upsert_cd for r in delta.collect()} == {"I"}
 
     new_state = apply_scd2(_df(spark, B1), tgt, CFG,
-                           load_ts="2024-05-05 12:00:00", deterministic_keys=True)
+                           load_ts="2024-05-05 12:00:00")
     rows = new_state.collect()
     assert len(rows) == 4
     assert all(r.da_current_flag == "Y" for r in rows)
@@ -75,7 +75,7 @@ def test_initial_load_all_inserts(spark):
 
 def test_second_batch_classification(spark):
     tgt = apply_scd2(_df(spark, B1), _empty_target(spark), CFG,
-                     load_ts="2024-05-05 12:00:00", deterministic_keys=True)
+                     load_ts="2024-05-05 12:00:00")
     delta = detect_delta(_df(spark, B2), tgt.filter(F.col("da_current_flag") == "Y"), CFG)
     by_key = {(r.device_id, str(r.ts)): r.upsert_cd for r in delta.collect()}
     assert by_key[("D1", "2024-05-05 11:30:35")] == "NC"
@@ -87,9 +87,9 @@ def test_second_batch_classification(spark):
 
 def test_second_batch_apply_versions(spark):
     t1 = apply_scd2(_df(spark, B1), _empty_target(spark), CFG,
-                    load_ts="2024-05-05 12:00:00", deterministic_keys=True)
+                    load_ts="2024-05-05 12:00:00")
     t2 = apply_scd2(_df(spark, B2), t1, CFG,
-                    load_ts="2024-05-06 12:00:00", deterministic_keys=True)
+                    load_ts="2024-05-06 12:00:00")
     rows = t2.collect()
     # 4 originals + 1 new version (U) + 1 brand new (I) = 6
     assert len(rows) == 6
@@ -116,9 +116,9 @@ def test_replay_idempotency(spark):
     """Re-running a batch yields NC for every surviving key — the
     reference's idempotency-by-content-hash design (SURVEY §2.9 T2)."""
     t1 = apply_scd2(_df(spark, B1), _empty_target(spark), CFG,
-                    load_ts="2024-05-05 12:00:00", deterministic_keys=True)
+                    load_ts="2024-05-05 12:00:00")
     t2 = apply_scd2(_df(spark, B2), t1, CFG,
-                    load_ts="2024-05-06 12:00:00", deterministic_keys=True)
+                    load_ts="2024-05-06 12:00:00")
     delta = detect_delta(_df(spark, B2), t2.filter(F.col("da_current_flag") == "Y"), CFG)
     assert {r.upsert_cd for r in delta.collect()} == {"NC"}
 
@@ -127,13 +127,12 @@ def test_incremental_mode_never_deletes(spark):
     """incremental=True (streaming micro-batch semantics): keys absent
     from staging are untouched — no PD, no closed rows."""
     t1 = apply_scd2(_df(spark, B1), _empty_target(spark), CFG,
-                    load_ts="2024-05-05 12:00:00", deterministic_keys=True)
+                    load_ts="2024-05-05 12:00:00")
     b2_partial = _df(spark, [B2[1], B2[3]])  # only the U and the I rows
     delta = detect_delta(b2_partial, t1.filter(F.col("da_current_flag") == "Y"),
                          CFG, incremental=True)
     assert {r.upsert_cd for r in delta.collect()} == {"U", "I"}
-    t2 = apply_scd2(b2_partial, t1, CFG, load_ts="2024-05-06 12:00:00",
-                    deterministic_keys=True, incremental=True)
+    t2 = apply_scd2(b2_partial, t1, CFG, load_ts="2024-05-06 12:00:00", incremental=True)
     cur = t2.filter(F.col("da_current_flag") == "Y")
     # all 4 original keys still current (one re-versioned) + 1 new
     assert cur.count() == 5
@@ -144,14 +143,12 @@ def test_empty_staging_snapshot_deletes_all(spark):
     """Snapshot mode with an empty batch = everything deleted (the
     full-outer diff semantics); incremental mode = no-op."""
     t1 = apply_scd2(_df(spark, B1), _empty_target(spark), CFG,
-                    load_ts="2024-05-05 12:00:00", deterministic_keys=True)
+                    load_ts="2024-05-05 12:00:00")
     empty = _df(spark, B1).limit(0)
-    snap = apply_scd2(empty, t1, CFG, load_ts="2024-05-06 12:00:00",
-                      deterministic_keys=True)
+    snap = apply_scd2(empty, t1, CFG, load_ts="2024-05-06 12:00:00")
     assert snap.filter(F.col("da_current_flag") == "Y").count() == 0
     assert snap.filter(F.col("da_deleted_flag") == "Y").count() == 4
-    inc = apply_scd2(empty, t1, CFG, load_ts="2024-05-06 12:00:00",
-                     deterministic_keys=True, incremental=True)
+    inc = apply_scd2(empty, t1, CFG, load_ts="2024-05-06 12:00:00", incremental=True)
     assert {tuple(r) for r in inc.collect()} == {tuple(r) for r in t1.collect()}
 
 
@@ -161,7 +158,7 @@ def test_schema_gate(spark):
     bad_staging = _df(spark, B1).drop("temperature")
     with pytest.raises(ValueError, match="missing target columns"):
         apply_scd2(bad_staging, _empty_target(spark), CFG,
-                   load_ts="2024-05-05 12:00:00", deterministic_keys=True)
+                   load_ts="2024-05-05 12:00:00")
 
 
 def test_schema_drift_warns_but_proceeds(spark):
@@ -266,3 +263,30 @@ def test_build_never_duplicates_a_row_for_repeated_keys(spark):
                          & (F.col("ts") == "2024-05-05 11:35:35")
                          & (F.col("da_current_flag") == "Y")).collect()
     assert sorted(r.humidity for r in current) == ["97", "98"]
+
+
+@pytest.mark.parametrize("via", ["detect_delta", "apply_scd2",
+                                 "apply_scd2_logged"])
+def test_drift_warning_names_the_callers_line(spark, tmp_path, via):
+    """The drift warning points at the caller's code, however deep in
+    the package the classify ran (direct, through ``classify``, through
+    a txlog commit)."""
+    import warnings as _w
+
+    from dht11_data_pipeline_spark.operators import txlog
+
+    stg = _df(spark, B1).withColumn("extra", F.lit("x"))
+    with _w.catch_warnings(record=True) as caught:
+        _w.simplefilter("always")
+        if via == "detect_delta":
+            detect_delta(stg, _empty_target(spark), CFG)
+        elif via == "apply_scd2":
+            apply_scd2(stg, _empty_target(spark), CFG,
+                       load_ts="2024-05-05 12:00:00")
+        else:
+            table = str(tmp_path / "t")
+            txlog.init_table(table, _empty_target(spark).schema, n_buckets=4)
+            txlog.apply_scd2_logged(spark, stg, table, CFG,
+                                    load_ts="2024-05-05 12:00:00")
+    drift = [w for w in caught if "drift" in str(w.message)]
+    assert drift and {w.filename for w in drift} == {__file__}

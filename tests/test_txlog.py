@@ -18,8 +18,10 @@ from tests.test_txlog_metadata import _batch, _parquet_files, table64  # noqa: F
 def logged(spark, tmp_path):
     table = str(tmp_path / "hist_logged")
     t1 = apply_scd2(_df(spark, B1), _empty_target(spark), CFG,
-                    load_ts="2024-05-05 12:00:00", deterministic_keys=True)
-    v = txlog.init_table(t1, table, CFG, n_buckets=16)
+                    load_ts="2024-05-05 12:00:00")
+    txlog.init_table(table, _empty_target(spark).schema, n_buckets=16)
+    v = txlog.apply_scd2_logged(spark, _df(spark, B1), table, CFG,
+                                load_ts="2024-05-05 12:00:00")
     assert v == 1
     return table, t1
 
@@ -28,12 +30,10 @@ def test_logged_apply_matches_plain(spark, logged):
     table, t1 = logged
     batch = _df(spark, [B2[1], B2[3]])  # one U + one I
     v = txlog.apply_scd2_logged(spark, batch, table, CFG,
-                                load_ts="2024-05-06 12:00:00",
-                                deterministic_keys=True)
+                                load_ts="2024-05-06 12:00:00")
     assert v == 2
     got = txlog.read_table(spark, table)
-    want = apply_scd2(batch, t1, CFG, load_ts="2024-05-06 12:00:00",
-                      deterministic_keys=True, incremental=True)
+    want = apply_scd2(batch, t1, CFG, load_ts="2024-05-06 12:00:00", incremental=True)
     cols = want.columns
     assert ({tuple(r) for r in got.select(*cols).collect()}
             == {tuple(r) for r in want.select(*cols).collect()})
@@ -44,8 +44,7 @@ def test_time_travel_and_snapshot_stability(spark, logged):
     old_snapshot = txlog.read_table(spark, table)  # resolved at v1
     batch = _df(spark, [B2[1], B2[3]])
     txlog.apply_scd2_logged(spark, batch, table, CFG,
-                            load_ts="2024-05-06 12:00:00",
-                            deterministic_keys=True)
+                            load_ts="2024-05-06 12:00:00")
     # v1 readable by version pin AND via the pre-commit DataFrame
     # (files are immutable — no swap_target FILE_NOT_EXIST hazard)
     assert txlog.read_table(spark, table, version=1).count() == 4
@@ -57,8 +56,7 @@ def test_nc_only_batch_commits_nothing(spark, logged):
     table, _ = logged
     nc = _df(spark, [B1[0]])
     v = txlog.apply_scd2_logged(spark, nc, table, CFG,
-                                load_ts="2024-05-07 12:00:00",
-                                deterministic_keys=True)
+                                load_ts="2024-05-07 12:00:00")
     assert v == 1 and txlog.current_version(table) == 1
 
 
@@ -74,8 +72,7 @@ def test_unchanged_buckets_keep_their_dirs(spark, logged):
                     for b, rel in before.items()}
     batch = _df(spark, [B2[3]])  # single new key
     txlog.apply_scd2_logged(spark, batch, table, CFG,
-                            load_ts="2024-05-06 12:00:00",
-                            deterministic_keys=True)
+                            load_ts="2024-05-06 12:00:00")
     after = txlog.read_manifest(table)["buckets"]
     changed = {b for b in after if after[b] != before.get(b)}
     assert len(changed) == 1
@@ -119,8 +116,7 @@ def test_crash_between_tmp_manifest_and_publish(spark, logged):
     assert txlog.read_table(spark, table).count() == 4
     # the next real committer claims v2 without conflict
     v = txlog.apply_scd2_logged(spark, _df(spark, [B2[1]]), table, CFG,
-                                load_ts="2024-05-06 12:00:00",
-                                deterministic_keys=True)
+                                load_ts="2024-05-06 12:00:00")
     assert v == 2
     assert txlog.read_table(spark, table).count() == 5
     # vacuum collects the orphan dir but keeps every live manifest file
@@ -133,11 +129,9 @@ def test_crash_between_tmp_manifest_and_publish(spark, logged):
 def test_vacuum_retains_recent_versions(spark, logged):
     table, _ = logged
     txlog.apply_scd2_logged(spark, _df(spark, [B2[1]]), table, CFG,
-                            load_ts="2024-05-06 12:00:00",
-                            deterministic_keys=True)
+                            load_ts="2024-05-06 12:00:00")
     txlog.apply_scd2_logged(spark, _df(spark, [B2[3]]), table, CFG,
-                            load_ts="2024-05-07 12:00:00",
-                            deterministic_keys=True)
+                            load_ts="2024-05-07 12:00:00")
     assert txlog.current_version(table) == 3
     removed = txlog.vacuum(table, retain_versions=2)
     # v1 manifest dropped; latest two versions still fully readable
@@ -167,8 +161,7 @@ def test_change_feed_between_versions(spark, logged):
     table, _ = logged
     batch = _df(spark, [B2[1], B2[3]])  # one U + one I
     txlog.apply_scd2_logged(spark, batch, table, CFG,
-                            load_ts="2024-05-06 12:00:00",
-                            deterministic_keys=True)
+                            load_ts="2024-05-06 12:00:00")
     feed = txlog.change_feed(spark, table, from_version=1).collect()
     by_type = {}
     for r in feed:
@@ -208,11 +201,9 @@ def test_multi_batch_fold_matches_plain_apply(spark, logged):
     versions = [1]
     for rows, load_ts in zip(batches, ts):
         b = _df(spark, rows)
-        txlog.apply_scd2_logged(spark, b, table, CFG, load_ts=load_ts,
-                                deterministic_keys=True)
+        txlog.apply_scd2_logged(spark, b, table, CFG, load_ts=load_ts)
         versions.append(txlog.current_version(table))
-        state = apply_scd2(b, state, CFG, load_ts=load_ts,
-                           deterministic_keys=True, incremental=True)
+        state = apply_scd2(b, state, CFG, load_ts=load_ts, incremental=True)
     # NC-only batch minted no version
     assert versions == [1, 2, 3, 3, 4]
     got = {tuple(r) for r in
@@ -253,8 +244,7 @@ def test_logged_commit_classifies_once(spark, logged, monkeypatch):
     monkeypatch.setattr(scd2, "detect_delta",
                         lambda *a, **kw: calls.append(1) or real(*a, **kw))
     v = txlog.apply_scd2_logged(spark, _df(spark, [B2[1], B2[3]]), table, CFG,
-                                load_ts="2024-05-06 12:00:00",
-                                deterministic_keys=True)
+                                load_ts="2024-05-06 12:00:00")
     assert v == 2 and calls == [1]
 
 
@@ -275,8 +265,7 @@ def _bump_every_fifth(spark):
 def test_commit_write_uses_several_tasks_one_file_per_bucket(spark, table64):
     m1 = txlog.read_manifest(table64)
     txlog.apply_scd2_logged(spark, _bump_every_fifth(spark), table64, CFG,
-                            load_ts="2024-05-06 12:00:00",
-                            deterministic_keys=True)
+                            load_ts="2024-05-06 12:00:00")
     m2 = txlog.read_manifest(table64)
     rels = [m2["buckets"][b] for b in _moved(m1, m2)]
     assert len(rels) >= 4
@@ -293,14 +282,13 @@ def test_bucket_above_the_advisory_size_splits(spark, table64):
     cols = txlog.read_table(spark, table64).columns
     want = {tuple(r) for r in apply_scd2(
         _bump_every_fifth(spark), txlog.read_table(spark, table64), CFG,
-        load_ts="2024-05-06 12:00:00", deterministic_keys=True,
+        load_ts="2024-05-06 12:00:00",
         incremental=True).select(*cols).collect()}
     old = spark.conf.get(key)
     spark.conf.set(key, "1k")
     try:
         txlog.apply_scd2_logged(spark, _bump_every_fifth(spark), table64, CFG,
-                                load_ts="2024-05-06 12:00:00",
-                                deterministic_keys=True)
+                                load_ts="2024-05-06 12:00:00")
     finally:
         spark.conf.set(key, old)
     m2 = txlog.read_manifest(table64)
@@ -323,21 +311,19 @@ def test_large_batch_into_a_small_table_splits(spark, tmp_path):
     table reads the same rows as the plain apply."""
     key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
     table = str(tmp_path / "hist4")
-    t1 = apply_scd2(_batch(spark, range(400)), _empty_target(spark), CFG,
-                    load_ts="2024-05-05 12:00:00", deterministic_keys=True)
-    txlog.init_table(t1, table, CFG, n_buckets=4)
+    txlog.init_table(table, _empty_target(spark).schema, n_buckets=4)
+    txlog.apply_scd2_logged(spark, _batch(spark, range(400)), table, CFG,
+                            load_ts="2024-05-05 12:00:00")
     m1 = txlog.read_manifest(table)
     big = _batch(spark, range(400, 1600), load_key=3)
-    cols = t1.columns
+    cols = _empty_target(spark).columns
     want = {tuple(r) for r in apply_scd2(
-        big, txlog.read_table(spark, table), CFG, load_ts="2024-05-06 12:00:00",
-        deterministic_keys=True, incremental=True).select(*cols).collect()}
+        big, txlog.read_table(spark, table), CFG, load_ts="2024-05-06 12:00:00", incremental=True).select(*cols).collect()}
     old = spark.conf.get(key)
     spark.conf.set(key, f"{max(s['bytes'] for s in m1['stats'].values()) + 1}b")
     try:
         txlog.apply_scd2_logged(spark, big, table, CFG,
-                                load_ts="2024-05-06 12:00:00",
-                                deterministic_keys=True)
+                                load_ts="2024-05-06 12:00:00")
     finally:
         spark.conf.set(key, old)
     m2 = txlog.read_manifest(table)
@@ -360,11 +346,43 @@ def test_stats_without_bytes_still_commit(spark, table64):
     m2 = txlog.read_manifest(table64)
     assert not any("bytes" in s for s in m2["stats"].values())
     v = txlog.apply_scd2_logged(spark, _bump_every_fifth(spark), table64, CFG,
-                                load_ts="2024-05-06 12:00:00",
-                                deterministic_keys=True)
+                                load_ts="2024-05-06 12:00:00")
     m3 = txlog.read_manifest(table64)
     moved = _moved(m2, m3)
     assert v == 3 and len(moved) >= 4
     assert all(len(_parquet_files(table64, m3["buckets"][b])) == 1
                and m3["stats"][b]["bytes"] > 0 for b in moved)
     assert txlog.read_table(spark, table64).count() == 720
+
+
+# -- version 0: the empty create ----------------------------------------------
+
+def test_version_0_is_an_empty_table(spark, tmp_path):
+    """``init_table`` publishes version 0 without a Spark job: the
+    schema, no bucket and no data file. It reads as an empty frame with
+    that schema, counts 0 rows, vacuums to nothing, and the first batch
+    is commit 1, which the change feed from version 0 returns as
+    inserts."""
+    from tests.test_ledger import _job_count
+
+    table = str(tmp_path / "hist_v0")
+    schema = _empty_target(spark).schema
+    with _job_count(spark) as jobs:
+        assert txlog.init_table(table, schema, n_buckets=16) == 0
+    assert jobs == [0]
+    m = txlog.read_manifest(table, 0)
+    assert (m["n_buckets"], m["buckets"], m["stats"]) == (16, {}, {})
+    assert not os.path.exists(os.path.join(table, "data"))
+    v0 = txlog.read_table(spark, table, version=0)
+    assert v0.schema == schema and v0.count() == 0
+    assert txlog.table_rows(table) == 0
+    assert txlog.vacuum(table) == []
+    assert txlog.current_version(table) == 0
+
+    assert txlog.apply_scd2_logged(spark, _df(spark, B1), table, CFG,
+                                   load_ts="2024-05-05 12:00:00") == 1
+    feed = txlog.change_feed(spark, table, from_version=0).collect()
+    assert len(feed) == 4
+    assert {r["_change_type"] for r in feed} == {"insert"}
+    assert txlog.vacuum(table, retain_versions=1) == ["_txlog/v00000000.json"]
+    assert txlog.read_table(spark, table).count() == 4

@@ -18,7 +18,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from dht11_data_pipeline_spark.operators import txlog
-from dht11_data_pipeline_spark.operators.scd2 import apply_scd2
 from dht11_data_pipeline_spark.operators.scd2_partitioned import key_bucket
 from tests.test_ledger import _job_count
 from tests.test_scd2 import CFG, _df, _empty_target
@@ -42,9 +41,9 @@ def _batch(spark, ids, bumped=(), load_key=2):
 @pytest.fixture()
 def table64(spark, tmp_path):
     table = str(tmp_path / "hist64")
-    t1 = apply_scd2(_batch(spark, range(600)), _empty_target(spark), CFG,
-                    load_ts="2024-05-05 12:00:00", deterministic_keys=True)
-    assert txlog.init_table(t1, table, CFG, n_buckets=N_BUCKETS) == 1
+    txlog.init_table(table, _empty_target(spark).schema, n_buckets=N_BUCKETS)
+    assert txlog.apply_scd2_logged(spark, _batch(spark, range(600)), table, CFG,
+                                   load_ts="2024-05-05 12:00:00") == 1
     return table
 
 
@@ -90,13 +89,11 @@ def test_manifest_stats_match_spark_after_fold_with_delete(spark, table64):
     txlog.apply_scd2_logged(
         spark, _batch(spark, [i for i in range(620) if i % 50],
                       bumped=range(0, 600, 7), load_key=3),
-        table64, CFG, load_ts="2024-05-06 12:00:00",
-        deterministic_keys=True, incremental=False)
+        table64, CFG, load_ts="2024-05-06 12:00:00", incremental=False)
     txlog.apply_scd2_logged(
         spark, _batch(spark, range(590, 640), bumped=range(590, 640, 3),
                       load_key=4),
-        table64, CFG, load_ts="2024-05-07 12:00:00",
-        deterministic_keys=True, incremental=True)
+        table64, CFG, load_ts="2024-05-07 12:00:00", incremental=True)
     assert txlog.current_version(table64) == 3
     hist = txlog.read_table(spark, table64)
     assert hist.filter(F.col("da_deleted_flag") == "Y").count() == 12
@@ -120,8 +117,7 @@ def test_one_file_per_rewritten_bucket(spark, table64):
     txlog.apply_scd2_logged(
         spark, _batch(spark, range(0, 600, 5), bumped=range(0, 600, 5),
                       load_key=3),
-        table64, CFG, load_ts="2024-05-06 12:00:00",
-        deterministic_keys=True)
+        table64, CFG, load_ts="2024-05-06 12:00:00")
     m2 = txlog.read_manifest(table64)
     moved = [b for b in m2["buckets"] if m2["buckets"][b] != m1["buckets"][b]]
     assert len(moved) > 30
@@ -146,8 +142,7 @@ def test_manifest_without_schema_or_stats_reads_and_gains_stats(spark,
 
     txlog.apply_scd2_logged(
         spark, _batch(spark, [3, 700], bumped=[3], load_key=3),
-        table64, CFG, load_ts="2024-05-06 12:00:00",
-        deterministic_keys=True)
+        table64, CFG, load_ts="2024-05-06 12:00:00")
     m3 = txlog.read_manifest(table64)
     assert m3["version"] == 3
     assert m3["schema"] == m["schema"]
