@@ -56,7 +56,8 @@ def read_intermediate(spark: SparkSession, warehouse_dir: str,
     base = os.path.join(warehouse_dir, "dht11_data_int")
     part = os.path.join(base, f"load_key={load_key}")
     if not os.path.isdir(part):
-        return spark.createDataFrame([], INTERMEDIATE_SCHEMA)
+        # limit(0): an empty LocalRelation the optimizer can prune against
+        return spark.createDataFrame([], INTERMEDIATE_SCHEMA).limit(0)
     return (spark.read.schema(INTERMEDIATE_SCHEMA).option("basePath", base)
             .parquet(part))
 

@@ -20,10 +20,13 @@ Differences, deliberate and documented:
   crash window.
 - The reference's surrogate allocator sorts every insert row into one
   partition (ORDER BY a constant). Downstream only relies on keys being
-  UNIQUE and > the previous high-water mark; ``build`` mints them dense
-  and in natural-key order with ``dense_rank_distributed`` — a range
-  shuffle plus per-partition offsets, no single-partition sort — so the
-  same batch always gets the same keys.
+  UNIQUE and > the previous high-water mark. ``classify`` numbers each
+  I/U row inside its persisted delta, within a fixed mint partition
+  (``key_bucket(cfg, MINT_PARTS)``) by (natural key, content hash);
+  ``build`` adds that partition's offset (prefix sums of per-partition
+  insert counts) and the high-water mark. Keys are dense, and the same
+  batch always gets the same keys, with no global sort, no checkpoint
+  and no Spark job of the mint's own.
 
 Scale design: the full outer join shuffles on the natural key — bucket
 staging and target by the natural key in real deployments and it becomes
@@ -35,17 +38,21 @@ reads the target once, left-joined with the U/PD keys (copy-on-write MERGE).
 from __future__ import annotations
 
 import contextlib
+import itertools
 import os
 import sys
 import warnings
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from dht11_data_pipeline_spark.functions.hashing import delta_hash
+from dht11_data_pipeline_spark.operators.scd2_partitioned import key_bucket
 
 FAR_FUTURE = "3000-01-01 00:00:00"
+# key-mint partitions: fixed, so a table's n_buckets never changes its keys
+MINT_PARTS = 64
 _PKG_DIR = os.path.dirname(os.path.dirname(__file__)) + os.sep
 
 
@@ -140,7 +147,8 @@ def detect_delta(staging: DataFrame, target_current: DataFrame,
     OUTER JOIN query at Delta_detection_query_gen.py:87-102).
 
     Returns one row per natural key seen on either side with
-    ``upsert_cd`` ∈ {I, U, NC, PD} plus the key columns.
+    ``upsert_cd`` ∈ {I, U, NC, PD}, the key columns, and the staging
+    row's other columns and content hash ``_stg_hash`` (null on PD).
 
     ``incremental=True`` switches to incremental-batch semantics: the
     staging set is a partial feed (only keys that arrived this batch),
@@ -152,8 +160,9 @@ def detect_delta(staging: DataFrame, target_current: DataFrame,
     """
     dcols = delta_columns(staging, cfg)
     _warn_on_schema_drift(dcols, target_current, cfg)
+    rest = [c for c in staging.columns if c not in cfg.natural_keys]
     stg = staging.select(
-        *cfg.natural_keys, delta_hash(dcols).alias("_stg_hash")
+        *cfg.natural_keys, *rest, delta_hash(dcols).alias("_stg_hash")
     ).alias("stg")
     # drift tolerance: a staging-only column hashes as null ('') on the
     # target side — the run proceeds (with the warning above) instead of
@@ -184,102 +193,68 @@ def detect_delta(staging: DataFrame, target_current: DataFrame,
         *[F.coalesce(F.col(f"stg.{k}"), F.col(f"tgt.{k}")).alias(k)
           for k in cfg.natural_keys],
         upsert.alias("upsert_cd"),
+        *[F.col(f"stg.{c}") for c in rest], "_stg_hash",
     )
 
 
-def dense_rank_distributed(df: DataFrame, order_cols: list[str],
-                           rank_col: str = "_rank") -> DataFrame:
-    """Global dense 1..N numbering by ``order_cols`` WITHOUT a
-    single-partition sort: range-repartition on the keys, sort within
-    each partition, number each row from ``monotonically_increasing_id``
-    (partition index in the upper 31 bits, row position in the lower
-    33) and add driver-computed partition offsets (the zipWithIndex
-    pattern, DataFrame-native). Each task sorts only its slice; the
-    driver folds the O(partitions) offsets into the plan as a literal
-    map, and no second shuffle regroups the rows by partition. Ties
-    across a range boundary get an arbitrary-but-valid order — same
-    contract as a global ROW_NUMBER over non-unique keys.
+def int_map(pairs: dict[int, int]) -> Column:
+    """``pairs`` as a literal map<int, bigint> column, built from one SQL
+    expression: one driver-to-JVM call, not three per entry."""
+    return F.expr(f"map({', '.join(f'{k}, {v}L' for k, v in pairs.items())})")
 
-    The sorted range partitions have two consumers (the offset count
-    and the final numbering); they are ``localCheckpoint``ed rather
-    than ``persist``ed so the materialized copy is RELEASED by the
-    context cleaner once unreferenced — a ``persist`` here would pin
-    one SQL cache entry per call forever, a real leak on the
-    per-micro-batch streaming SCD2 path. The numbering reads the
-    checkpoint directly, so each row's partition index is its range
-    partition's.
 
-    The INPUT is also checkpointed first: ``repartitionByRange`` runs a
-    sampling job to pick range bounds, which would otherwise evaluate
-    the upstream plan twice (sample + shuffle) — for an expensive
-    upstream (the SCD2 full-outer delta feeding the key mint) that
-    doubled the whole query. Both checkpoints hold only the narrow
-    numbered projection, not the upstream plan.
-    """
-    spark = df.sparkSession
-    narrow = df.localCheckpoint()
-    # size the range shuffle from the ACTUAL row count (free: narrow is
-    # already materialized): ~250k rows per range keeps task sort memory
-    # bounded at any scale, and a small insert set collapses to 2 tasks
-    # instead of paying shuffle_partitions-many task launches across the
-    # sampling/count/number jobs that follow.
-    n_rows = narrow.count()
-    cap = max(2, int(spark.conf.get("spark.sql.shuffle.partitions")))
-    n_parts = max(2, min(cap, -(-n_rows // 250_000)))
-    staged = (narrow.repartitionByRange(n_parts, *order_cols)
-              .sortWithinPartitions(*order_cols)
-              .localCheckpoint())
-    counts = {r["pid"]: r["cnt"] for r in
-              staged.groupBy(F.spark_partition_id().alias("pid"))
-              .agg(F.count(F.lit(1)).alias("cnt")).collect()}
-    # partition offsets as a literal map: O(partitions) entries folded
-    # into the plan, so no offset table, join, job or Python worker
-    off, pairs = 0, []
-    for pid in sorted(counts):
-        pairs += [F.lit(pid), F.lit(off).cast("long")]
-        off += counts[pid]
-    row_id = F.col("_dr_id")
-    offset = (F.create_map(*pairs)[F.shiftright(row_id, 33).cast("int")]
-              if pairs else F.lit(0).cast("long"))
-    return (staged.withColumn("_dr_id", F.monotonically_increasing_id())
-            .withColumn(rank_col,
-                        row_id.bitwiseAND(2**33 - 1) + 1 + offset)
-            .drop("_dr_id"))
+def mint_part(cfg: SCD2Config) -> Column:
+    """A row's key-mint partition: a hash of its natural key."""
+    return key_bucket(cfg, MINT_PARTS)
 
 
 def classify(staging: DataFrame, target: DataFrame, cfg: SCD2Config,
-             incremental: bool = False,
+             incremental: bool = False, scope: Column | None = None,
              cache: list[DataFrame] | None = None) -> DataFrame:
     """``detect_delta`` against ``target``'s current rows minus NC (nothing
     reads it), persisted (the reference's temp-table CTAS, :140-155) into
-    ``cache`` (from ``delta_cache``) if given; ``build`` and txlog share it."""
-    current = target.filter(F.col(cfg.current_flag) == "Y")
+    ``cache`` (from ``delta_cache``) if given; ``build`` and txlog share it.
+    A ``scope`` (a predicate over target columns) bounds what a snapshot
+    covers: current rows outside it are not compared, so none becomes
+    PD. Every staging row must lie inside it, or its match outside would
+    stay current beside a second current version.
+    Each row gains ``_rank``, its row number within its ``mint_part`` by
+    natural key, then content hash, counting I/U and PD rows apart (a
+    tie is two rows equal in every hashed column).
+    """
+    current = target.filter((F.col(cfg.current_flag) == "Y")
+                            & (F.lit(True) if scope is None else scope))
+    by_part = (Window.partitionBy(mint_part(cfg), F.col("upsert_cd") == "PD")
+               .orderBy(*cfg.natural_keys, "_stg_hash"))
     delta = (detect_delta(staging, current, cfg, incremental=incremental)
-             .filter(F.col("upsert_cd") != "NC").persist())
+             .filter(F.col("upsert_cd") != "NC")
+             .withColumn("_rank", F.row_number().over(by_part)).persist())
     if cache is not None:
         cache.append(delta)
     return delta
 
 
-def build(staging: DataFrame, target: DataFrame, delta: DataFrame,
-          cfg: SCD2Config, load_ts: str | None = None,
-          high_water: tuple[int, int] | None = None) -> DataFrame:
+def build(target: DataFrame, delta: DataFrame, cfg: SCD2Config,
+          load_ts: str | None = None,
+          high_water: tuple[int, int] | None = None,
+          part_counts: dict[int, int] | None = None) -> DataFrame:
     """The COMPLETE new target state from ``delta``, in ONE target scan:
 
     new_target = target LEFT JOIN U/PD keys (one row per key): matched
                  current rows closed out (flag 'N', valid_to/updated_at
                  = load_ts, deleted flag 'Y' for PD — reference CASE at
                  :198-201), every other row as-is
-               ∪ new versions for I/U keys (payload from staging,
-                 minted surrogate keys, far-future valid_to — reference
-                 insert select :250-304)
+               ∪ new versions for the I/U rows of ``delta`` (payload
+                 from staging, minted surrogate keys, far-future
+                 valid_to — reference insert select :250-304)
 
-    ``staging``/``target`` may be slices holding every changed key.
+    ``target`` may be a slice holding every changed key.
     ``load_ts`` is captured once per batch (reference SYSTIMESTAMP,
     frozen here for determinism — SURVEY §2.7 F8).
     """
     ts = F.lit(load_ts).cast("timestamp") if load_ts else F.current_timestamp()
     nk = cfg.natural_keys
+    is_insert = F.col("upsert_cd").isin("I", "U")
 
     # high-water marks (reference A2 cross-join clause :37-41).
     # ``high_water`` lets callers operating on a SLICE of the target
@@ -294,8 +269,20 @@ def build(staging: DataFrame, target: DataFrame, delta: DataFrame,
             F.coalesce(F.max(F.col(cfg.key_col)), F.lit(0)).alias("key"),
         ).first()
         hw_ak, hw_key = int(hw_row["ak"]), int(hw_row["key"])
+    # key = high-water + offset of the row's mint partition + its rank
+    # there; the offsets (prefix sums of I/U rows per partition, or
+    # ``part_counts`` from a caller that already counted them) go into
+    # the plan as a literal map
+    if part_counts is None:
+        part_counts = dict(delta.filter(is_insert).groupBy(mint_part(cfg))
+                           .count().collect())
+    parts = sorted(part_counts)
+    offsets = dict(zip(parts, itertools.accumulate(
+        [part_counts[p] for p in parts], initial=0)))
+    rank = F.col("_rank") + (int_map(offsets)[mint_part(cfg)] if parts
+                             else F.lit(0).cast("long"))
 
-    # one row per closed key, a semi join for inserts: a repeated key duplicates nothing
+    # one row per closed key: a repeated key duplicates nothing
     closing = (delta.filter(F.col("upsert_cd").isin("U", "PD"))
                .select(*nk, F.col("upsert_cd").alias("_cd")).dropDuplicates(nk))
     close = (F.col(cfg.current_flag) == "Y") & F.col("_cd").isNotNull()
@@ -306,34 +293,22 @@ def build(staging: DataFrame, target: DataFrame, delta: DataFrame,
         F.when(close, rewrite[c]).otherwise(F.col(c)).alias(c)
         if c in rewrite else F.col(c) for c in target.columns])
 
-    payload_cols = [c for c in staging.columns
-                    if c.lower() not in {x.lower() for x in cfg.exclude_from_load}]
-    inserts_src = staging.select(*payload_cols).join(
-        delta.filter(F.col("upsert_cd").isin("I", "U")).select(*nk), nk, "left_semi")
-    # both surrogate columns from ONE numbering pass (the same rank
-    # offset by each high-water mark) — halves the minting work versus
-    # two independent allocations
-    inserts = (
-        dense_rank_distributed(inserts_src, nk, "_sk_rank")
-        .withColumn(cfg.key_col, (F.col("_sk_rank") + F.lit(hw_key)).cast("decimal(18,0)"))
-        .withColumn(cfg.ak_col, (F.col("_sk_rank") + F.lit(hw_ak)).cast("decimal(18,0)"))
-        .drop("_sk_rank")
-        .withColumn(cfg.current_flag, F.lit("Y"))
-        .withColumn(cfg.deleted_flag, F.lit("N"))
-        .withColumn(cfg.valid_from, ts)
-        .withColumn(cfg.valid_to, F.lit(FAR_FUTURE).cast("timestamp"))
-        .withColumn(cfg.inserted_at, ts)
-        .withColumn(cfg.updated_at, ts)
-    )
-
-    target_cols = target.columns
+    audit = {c.lower(): v for c, v in {
+        cfg.key_col: (rank + F.lit(hw_key)).cast("decimal(18,0)"),
+        cfg.ak_col: (rank + F.lit(hw_ak)).cast("decimal(18,0)"),
+        cfg.current_flag: F.lit("Y"), cfg.deleted_flag: F.lit("N"),
+        cfg.valid_from: ts, cfg.valid_to: F.lit(FAR_FUTURE).cast("timestamp"),
+        cfg.inserted_at: ts, cfg.updated_at: ts}.items()}
     # schema-equality gate before the final union (reference
     # Delta_detection_query_gen.py:312-316)
-    missing = set(c.lower() for c in target_cols) - set(c.lower() for c in inserts.columns)
+    missing = ({c.lower() for c in target.columns} - set(audit)
+               - {c.lower() for c in delta.columns})
     if missing:
         raise ValueError(f"insert select is missing target columns: {sorted(missing)}")
-
-    return kept.unionByName(inserts.select(*target_cols))
+    inserts = delta.filter(is_insert).select(*[
+        audit[c.lower()].alias(c) if c.lower() in audit else F.col(c)
+        for c in target.columns])
+    return kept.unionByName(inserts)
 
 
 def apply_scd2(staging: DataFrame, target: DataFrame, cfg: SCD2Config,
@@ -343,4 +318,4 @@ def apply_scd2(staging: DataFrame, target: DataFrame, cfg: SCD2Config,
     """Full SCD2 apply, ``build(classify(...))``: returns the COMPLETE
     new target state (formula at ``build``; ``cache`` at ``classify``)."""
     delta = classify(staging, target, cfg, incremental=incremental, cache=cache)
-    return build(staging, target, delta, cfg, load_ts=load_ts)
+    return build(target, delta, cfg, load_ts=load_ts)

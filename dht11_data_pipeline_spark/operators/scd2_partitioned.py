@@ -11,9 +11,12 @@ Lake gets the same from file-level pruning).
 
 from __future__ import annotations
 
+from typing import TYPE_CHECKING
+
 from pyspark.sql import functions as F
 
-from dht11_data_pipeline_spark.operators.scd2 import SCD2Config
+if TYPE_CHECKING:  # scd2 imports key_bucket for its key mint
+    from dht11_data_pipeline_spark.operators.scd2 import SCD2Config
 
 BUCKET_COL = "da_key_bucket"
 

@@ -46,8 +46,10 @@ The manifest is the table's metadata, so resolving a snapshot and
 committing a batch run no Spark job that only reads metadata: reads
 pass the manifest schema (no parquet schema-inference job), the
 surrogate-key high-water marks are maxima over ``stats`` (no
-high-water max() scan over every bucket of the target), the row count
-is their sum (no count job), and the stats of a commit come
+high-water max() scan over every bucket of the target), the key-mint
+offsets come from the one collect that finds the changed buckets (no
+sort, checkpoint or count job of the mint's own), the row count is
+a sum over ``stats`` (no count job), and the stats of a commit come
 from the footers of the files it just wrote, read on the driver —
 O(files written). A commit's write is sized from ``bytes``: bucket b
 gets max(1, ceil(est_b / advisory partition size)) hash slots, est_b =
@@ -71,15 +73,16 @@ import math
 import os
 import re
 import time
+from collections import Counter
 from urllib.parse import unquote, urlparse
 
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from dht11_data_pipeline_spark.operators.scd2 import (
-    SCD2Config, build, classify, delta_cache,
+    SCD2Config, build, classify, delta_cache, int_map, mint_part,
 )
 from dht11_data_pipeline_spark.operators.scd2_partitioned import (
     BUCKET_COL, key_bucket,
@@ -230,8 +233,7 @@ def _write_buckets(df: DataFrame, table_dir: str, commit_name: str,
     n_tasks = min(sum(slots.values()), max(spark.sparkContext.defaultParallelism,
                                            math.ceil(sum(sizes.values()) / adv)))
     # literal map of slot counts; murmur3 keeps slots independent of buckets
-    per_bucket = F.create_map(*[F.lit(x) for kv in slots.items() for x in kv])
-    slot = F.pmod(F.hash(*cfg.natural_keys), per_bucket[F.col(BUCKET_COL)])
+    slot = F.pmod(F.hash(*cfg.natural_keys), int_map(slots)[F.col(BUCKET_COL)])
     df = (df.withColumn(BUCKET_COL, key_bucket(cfg, n_buckets))
           .repartition(n_tasks, BUCKET_COL, slot))
     df.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(commit_dir)
@@ -286,14 +288,17 @@ def _read_bucket_paths(spark: SparkSession, table_dir: str,
 def apply_scd2_logged(spark: SparkSession, staging: DataFrame,
                       table_dir: str, cfg: SCD2Config,
                       load_ts: str | None = None,
-                      incremental: bool = True) -> int:
+                      incremental: bool = True,
+                      scope: Column | None = None) -> int:
     """SCD2 apply as ONE atomic commit: classify the batch once, build
     the changed buckets' new state from that same delta, write it to an
     immutable commit dir, publish a manifest pointing those buckets at
     it (all other buckets carry their existing dirs and stats). Crash
     anywhere before the final publish leaves version N fully intact;
     readers of any version never see a mix. The surrogate-key high-water
-    marks come from the manifest's stats, not from a scan of the target.
+    marks come from the manifest's stats, not from a scan of the target,
+    and the key-mint offsets from the same collect that finds the
+    changed buckets. ``scope`` as at ``scd2.classify``.
 
     Returns the committed version (current version if no keys changed).
     """
@@ -305,10 +310,14 @@ def apply_scd2_logged(spark: SparkSession, staging: DataFrame,
     bucket = key_bucket(cfg, n_buckets)
     with delta_cache() as cache:
         delta = classify(staging, target, cfg, incremental=incremental,
-                         cache=cache)
-        # changed buckets and the rows each gains, in one collect
-        inserts = dict(delta.groupBy(bucket).agg(
-            F.count_if(F.col("upsert_cd").isin("I", "U"))).collect())
+                         scope=scope, cache=cache)
+        # changed buckets, the rows each gains and the rows each key-mint
+        # partition gains, in one collect
+        inserts, part_counts = Counter(), Counter()
+        for b, p, n in delta.groupBy(bucket, mint_part(cfg)).agg(
+                F.count_if(F.col("upsert_cd").isin("I", "U"))).collect():
+            inserts[b] += n
+            part_counts[p] += n
         changed = sorted(inserts)
         if not changed:
             return int(m["version"])
@@ -326,8 +335,8 @@ def apply_scd2_logged(spark: SparkSession, staging: DataFrame,
                        if str(b) in m["buckets"]]
         tgt_slice = _read_bucket_paths(spark, table_dir, changed_rel,
                                        target.schema.jsonValue())
-        new_slice = build(staging.filter(bucket.isin(changed)), tgt_slice,
-                          delta, cfg, load_ts=load_ts, high_water=high_water)
+        new_slice = build(tgt_slice, delta, cfg, load_ts=load_ts,
+                          high_water=high_water, part_counts=part_counts)
         written, written_stats = _write_buckets(
             new_slice, table_dir, _commit_dir_name(int(m["version"]) + 1),
             cfg, n_buckets, {b: width * (stats.get(str(b), {}).get("rows", 0) + inserts[b])

@@ -10,8 +10,9 @@ Flow (reference stage → here):
   landing→intermediate + stamp  → layers.load_to_intermediate
   SCD2 historization            → historize: one txlog commit per
                                   batch onto an empty version 0 (one
-                                  classify, one slice scan, atomic
-                                  manifest publish)
+                                  classify, deletes only inside the
+                                  batch's device and watermark, one
+                                  slice scan, atomic manifest publish)
   status updates                → ControlTable.update_run_status
   batch row count               → layers.intermediate_rows (footers)
   history row count             → history_rows: summed from the txlog
@@ -36,6 +37,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from dht11_data_pipeline_spark.operators import txlog
 from dht11_data_pipeline_spark.operators.control import ControlTable
@@ -45,6 +47,7 @@ from dht11_data_pipeline_spark.operators.layers import (
 )
 from dht11_data_pipeline_spark.operators.scd2 import SCD2Config
 from dht11_data_pipeline_spark.sources.firebase_tree import flatten_readings, read_tree
+from dht11_data_pipeline_spark.streaming.historize import empty_target
 
 HIST_CFG = SCD2Config(
     natural_keys=["device_id", "ts"],
@@ -70,12 +73,9 @@ def read_history(spark: SparkSession, warehouse_dir: str) -> DataFrame:
             f"{path} exists but is not a transaction-logged table (no "
             f"committed _txlog manifest); refusing to read or overwrite it")
     # empty target with the full SCD2 schema
-    landing_like = "device_id string, timezone string, humidity string, temperature string, ts timestamp"
-    audit = (f"{HIST_CFG.ak_col} decimal(18,0), {HIST_CFG.key_col} decimal(18,0), "
-             "da_current_flag string, da_deleted_flag string, "
-             "da_valid_from_date timestamp, da_valid_to_date timestamp, "
-             "da_inserted_datetime timestamp, da_updated_datetime timestamp")
-    return spark.createDataFrame([], f"{landing_like}, {audit}")
+    landing = spark.createDataFrame([], "device_id string, timezone string, "
+                                    "humidity string, temperature string, ts timestamp")
+    return empty_target(spark, landing, HIST_CFG)
 
 
 def history_rows(warehouse_dir: str) -> int:
@@ -85,7 +85,8 @@ def history_rows(warehouse_dir: str) -> int:
 
 
 def historize(spark: SparkSession, warehouse_dir: str, load_key: int,
-              load_ts: str | None = None) -> int:
+              load_ts: str | None = None, device_id: str | None = None,
+              since_ts: str | None = None) -> int:
     """SCD2 apply over the intermediate batch (reference Historization
     DAG, Delta_detection_query_gen.py:335-351). Returns the committed
     txlog version of the history table.
@@ -99,14 +100,22 @@ def historize(spark: SparkSession, warehouse_dir: str, load_key: int,
     no reader ever sees a mix), plus time travel per batch for free.
     A missing table is first created empty (version 0), so the first
     batch is the same commit as every later one.
+
+    The batch is a snapshot of ``device_id``'s readings from ``since_ts``
+    on (``flatten_readings``' filters, so every staging row lies inside
+    it): only current rows in that scope are compared, so only they can
+    be closed as deletes; ``None`` widens it to every device or time.
     """
+    scope = ((F.col("device_id") == device_id if device_id else F.lit(True))
+             & (F.col("ts") >= F.lit(since_ts) if since_ts else F.lit(True)))
     staging = read_intermediate(spark, warehouse_dir, load_key)
     final = _hist_path(warehouse_dir)
     if txlog.current_version(final) is None:
         txlog.init_table(final, read_history(spark, warehouse_dir).schema,
                          n_buckets=64)
     return txlog.apply_scd2_logged(spark, staging, final, HIST_CFG,
-                                   load_ts=load_ts, incremental=False)
+                                   load_ts=load_ts, incremental=False,
+                                   scope=scope)
 
 
 def run_batch(spark: SparkSession, warehouse_dir: str, tree_json_path: str,
@@ -144,7 +153,8 @@ def run_batch(spark: SparkSession, warehouse_dir: str, tree_json_path: str,
     load_to_intermediate(spark, warehouse_dir, load_key, device_id)
     ctl.update_run_status(interface_cd, load_key, "INTEGRATION LOAD COMPLETED")
 
-    historize(spark, warehouse_dir, load_key, load_ts=load_ts)
+    historize(spark, warehouse_dir, load_key, load_ts=load_ts,
+              device_id=device_id, since_ts=prev_ts)
     ctl.update_run_status(interface_cd, load_key, "Success", complete=True)
 
     return {"load_key": load_key, "rows": intermediate_rows(warehouse_dir, load_key),

@@ -268,20 +268,62 @@ def j2_scd2_delta_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def dense_rank_distributed(df: DataFrame, order_cols: list[str],
+                           rank_col: str = "_rank") -> DataFrame:
+    """Global dense 1..N numbering by ``order_cols`` without a
+    single-partition sort (the zipWithIndex pattern): range-repartition
+    on the keys, sort within each partition, and number each row from
+    ``monotonically_increasing_id`` (partition index in the upper 31
+    bits, position in the lower 33) plus its partition's offset, folded
+    into the plan as a literal map. Ties across a range boundary get an
+    arbitrary-but-valid order, as with a global ROW_NUMBER.
+
+    The input is ``localCheckpoint``ed so the range-sampling job does
+    not evaluate the upstream plan twice, and so are the sorted
+    partitions that the offset count and the numbering both read; a
+    checkpoint, unlike ``persist``, is released once unreferenced.
+    """
+    spark = df.sparkSession
+    narrow = df.localCheckpoint()
+    # size the range shuffle from the ACTUAL row count (free: narrow is
+    # already materialized): ~250k rows per range keeps task sort memory
+    # bounded at any scale, and a small insert set collapses to 2 tasks
+    # instead of paying shuffle_partitions-many task launches across the
+    # sampling/count/number jobs that follow.
+    n_rows = narrow.count()
+    cap = max(2, int(spark.conf.get("spark.sql.shuffle.partitions")))
+    n_parts = max(2, min(cap, -(-n_rows // 250_000)))
+    staged = (narrow.repartitionByRange(n_parts, *order_cols)
+              .sortWithinPartitions(*order_cols)
+              .localCheckpoint())
+    counts = {r["pid"]: r["cnt"] for r in
+              staged.groupBy(F.spark_partition_id().alias("pid"))
+              .agg(F.count(F.lit(1)).alias("cnt")).collect()}
+    # partition offsets as a literal map: O(partitions) entries folded
+    # into the plan, so no offset table, join, job or Python worker
+    off, pairs = 0, []
+    for pid in sorted(counts):
+        pairs += [F.lit(pid), F.lit(off).cast("long")]
+        off += counts[pid]
+    row_id = F.col("_dr_id")
+    offset = (F.create_map(*pairs)[F.shiftright(row_id, 33).cast("int")]
+              if pairs else F.lit(0).cast("long"))
+    return (staged.withColumn("_dr_id", F.monotonically_increasing_id())
+            .withColumn(rank_col,
+                        row_id.bitwiseAND(2**33 - 1) + 1 + offset)
+            .drop("_dr_id"))
+
+
 def w1_surrogate_key_mint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Surrogate-key allocation for the insert set (reference W1:
     ``max + ROW_NUMBER() OVER (ORDER BY 'JP')``,
-    Delta_detection_query_gen.py:250-285).
-
-    The reference's ORDER BY <constant> funnels every row through one
-    partition. Downstream only needs *unique keys above the high-water
-    mark* (SURVEY §7.4.1); dense_rank_distributed (operators/scd2.py)
-    delivers the same deterministic dense numbering with a RANGE
-    shuffle + per-partition row_number + driver offset table — no
-    single-partition sort anywhere in the plan.
+    Delta_detection_query_gen.py:250-285), whose ORDER BY <constant>
+    funnels every row through one partition. Downstream only needs
+    unique keys above the high-water mark (SURVEY §7.4.1);
+    ``dense_rank_distributed`` numbers them densely in natural-key order
+    with no single-partition sort. (The SCD2 write path mints without a
+    sort at all: ``operators/scd2.classify``.)
     """
-    from dht11_data_pipeline_spark.operators.scd2 import dense_rank_distributed
-
     delta = j2_scd2_delta_classify(spark, sf_dir).filter(F.col("upsert_cd") == "I")
     return (dense_rank_distributed(delta.select("natural_key"),
                                    ["natural_key"], "_rk")

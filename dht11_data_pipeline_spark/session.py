@@ -91,6 +91,12 @@ def get_spark(app_name: str = "dht11_data_pipeline_spark",
         # host, and an SCD2 batch makes three such reads.
         .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
                 "1024")
+        # no .crc sidecar per local file: the checksummed local
+        # filesystem writes one beside every data file (one more file
+        # per bucket per commit), duplicating the page checksums
+        # parquet already writes
+        .config("spark.hadoop.fs.file.impl",
+                "org.apache.hadoop.fs.RawLocalFileSystem")
         .config("spark.ui.enabled", "false")
     )
     spark = builder.getOrCreate()

@@ -57,7 +57,8 @@ def empty_target(spark: SparkSession, staging: DataFrame,
         T.StructField(cfg.inserted_at, T.TimestampType()),
         T.StructField(cfg.updated_at, T.TimestampType()),
     ]
-    return spark.createDataFrame([], T.StructType(fields))
+    # limit(0): an empty LocalRelation the optimizer can prune against
+    return spark.createDataFrame([], T.StructType(fields)).limit(0)
 
 
 def read_target(spark: SparkSession, target_path: str, staging: DataFrame,

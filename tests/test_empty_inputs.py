@@ -106,3 +106,20 @@ def test_analytics_queries_on_empty_events(spark, tmp_path):
         "view": 0, "click_after_view": 0, "purchase_after_click": 0}
     assert Q.a_mode_event_type(spark, src).count() == 0
     assert X.t_cohort_retention(spark, src).count() == 0
+
+
+def test_write_path_empty_frames_are_local_relations(spark, tmp_path):
+    """The empty history, the streaming sink's empty target and an absent
+    intermediate partition are empty ``LocalRelation``s the optimizer
+    can prune against, not opaque RDD scans."""
+    from dht11_data_pipeline_spark.operators.layers import read_intermediate
+    from dht11_data_pipeline_spark.pipeline import HIST_CFG, read_history
+
+    staging = read_intermediate(spark, str(tmp_path / "wh"), 7)
+    frames = {"read_history": read_history(spark, str(tmp_path / "wh")),
+              "empty_target": empty_target(spark, staging, HIST_CFG),
+              "read_intermediate": staging}
+    for name, df in frames.items():
+        plan = df._jdf.queryExecution().optimizedPlan()
+        assert plan.nodeName() == "LocalRelation", (name, plan.toString())
+        assert df.count() == 0

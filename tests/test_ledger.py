@@ -18,10 +18,9 @@ from pyspark.sql import functions as F
 
 from dht11_data_pipeline_spark.operators import control as C
 from dht11_data_pipeline_spark.operators.control import ControlTable
-from dht11_data_pipeline_spark.operators.scd2 import (
-    SCD2Config, dense_rank_distributed,
-)
+from dht11_data_pipeline_spark.operators.scd2 import SCD2Config
 from dht11_data_pipeline_spark.pipeline import bootstrap, run_batch
+from dht11_data_pipeline_spark.plans.queries import dense_rank_distributed
 
 IFACE = ("DHT11_SENSOR_DATA_LOAD", "STG_1020")
 

@@ -345,14 +345,17 @@ def _reading_tree(n: int, bumped=(), new: int = 0) -> dict:
 
 
 # Spark jobs of one snapshot run_batch on a 64-bucket history, as
-# measured with one classify per commit, the fixed-schema partition read
-# of the batch and its row count from the footers (28 before them)
-SNAPSHOT_BATCH_JOB_BUDGET = 21
+# measured with the key mint inside classify (21 when the mint sorted,
+# checkpointed and counted the insert set itself; 28 before one classify
+# per commit, the fixed-schema partition read of the batch and its row
+# count from the footers)
+SNAPSHOT_BATCH_JOB_BUDGET = 13
 # Spark jobs of the first run_batch (1000 readings) into a missing
 # history: the job-free version-0 create, then the same commit as every
-# later batch against an empty snapshot (22 when the first batch had its
-# own apply-then-write path)
-FIRST_BATCH_JOB_BUDGET = 17
+# later batch against an empty snapshot, measured with the key mint
+# inside classify (17 with the sorting mint, 22 when the first batch
+# had its own apply-then-write path)
+FIRST_BATCH_JOB_BUDGET = 9
 
 
 def test_snapshot_batch_job_budget(spark, tmp_path):
@@ -464,3 +467,55 @@ def test_load_key_past_int_range_round_trips(spark, tmp_path):
     rows = read_intermediate(spark, wh, 2**31).collect()
     assert [r["load_key"] for r in rows] == [2**31, 2**31]
     assert intermediate_rows(wh, 2**31) == 2
+
+
+# -- a snapshot batch closes deletes only inside its device and watermark -------
+
+def _history(spark, wh) -> list[tuple]:
+    return sorted((r.device_id, str(r.ts), r.humidity, r.da_current_flag,
+                   r.da_deleted_flag) for r in read_history(spark, wh).collect())
+
+
+def test_second_device_batch_closes_none_of_the_firsts_rows(spark, tmp_path):
+    """A batch is a snapshot of its own device: DEV02's first batch adds
+    DEV02's readings and leaves every DEV01 row current."""
+    wh = str(tmp_path / "wh")
+    bootstrap(spark, wh)
+    t = tmp_path / "t.json"
+    t.write_text(json.dumps(BATCH1))
+    run_batch(spark, wh, str(t), "DEV01", load_ts="2024-05-05 12:00:00",
+              since_ts="1970-01-01 00:00:00")
+    dev1 = _history(spark, wh)
+    t.write_text(json.dumps({"MCU_Data": {"DEV02": BATCH1["MCU_Data"]["DEV01"]}}))
+    r = run_batch(spark, wh, str(t), "DEV02", load_ts="2024-05-06 12:00:00",
+                  since_ts="1970-01-01 00:00:00")
+    assert r["rows"] == 2 and r["hist_rows"] == 4
+    hist = _history(spark, wh)
+    assert [h for h in hist if h[0] == "DEV01"] == dev1
+    assert all(h[3:] == ("Y", "N") for h in hist)
+
+
+def test_watermarked_batch_closes_only_changed_readings(spark, tmp_path):
+    """A second DEV01 batch from a watermark holds the readings from
+    that time on: a reading before it is not deleted, one exactly at it
+    is compared (unchanged here), a changed one is re-versioned and a
+    new one inserted."""
+    wh = str(tmp_path / "wh")
+    bootstrap(spark, wh)
+    t = tmp_path / "t.json"
+    t.write_text(json.dumps(_reading_tree(4)))
+    run_batch(spark, wh, str(t), "DEV01", load_ts="2024-05-05 12:00:00",
+              since_ts="1970-01-01 00:00:00")
+    # readings 0-3 at 00:00-00:03; the watermark is reading 1's time
+    t.write_text(json.dumps(_reading_tree(4, bumped={3}, new=1)))
+    r = run_batch(spark, wh, str(t), "DEV01", load_ts="2024-05-06 12:00:00",
+                  since_ts="2024-05-05 00:01:00")
+    assert r["rows"] == 4 and r["hist_rows"] == 6
+    assert _history(spark, wh) == [
+        ("DEV01", "2024-05-05 00:00:00", "40", "Y", "N"),
+        ("DEV01", "2024-05-05 00:01:00", "41", "Y", "N"),
+        ("DEV01", "2024-05-05 00:02:00", "42", "Y", "N"),
+        ("DEV01", "2024-05-05 00:03:00", "43", "N", "N"),
+        ("DEV01", "2024-05-05 00:03:00", "48", "Y", "N"),
+        ("DEV01", "2024-05-05 00:04:00", "44", "Y", "N"),
+    ]

@@ -3,6 +3,8 @@ pinned here so a refactor cannot silently drop them."""
 
 from __future__ import annotations
 
+import os
+
 
 def test_code_cache_sized_for_the_full_registry(spark):
     """Round-12 root cause of three rounds of 'unexplained' 2-5x bench
@@ -56,3 +58,19 @@ def test_engine_knobs_present(spark):
     assert spark.conf.get(
         "spark.sql.execution.arrow.pyspark.enabled") == "true"
     assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+
+
+def test_commit_writes_no_crc_sidecars(spark, tmp_path):
+    """Local writes go through the raw local filesystem: a txlog commit
+    directory holds parquet files and no ``.crc`` sidecar beside them
+    (parquet writes its own page checksums)."""
+    from dht11_data_pipeline_spark.operators import txlog
+    from tests.test_scd2 import B1, CFG, _df, _empty_target
+
+    table = str(tmp_path / "t")
+    txlog.init_table(table, _empty_target(spark).schema, n_buckets=4)
+    txlog.apply_scd2_logged(spark, _df(spark, B1), table, CFG,
+                            load_ts="2024-05-05 12:00:00")
+    files = [f for _, _, fs in os.walk(os.path.join(table, "data")) for f in fs]
+    assert any(f.endswith(".parquet") for f in files), files
+    assert not [f for f in files if f.endswith(".crc")], files
