@@ -3,7 +3,7 @@ as a module command:
 
     python -m dht11_data_pipeline_spark bootstrap --warehouse W
     python -m dht11_data_pipeline_spark run-batch --warehouse W --tree T --device D
-    python -m dht11_data_pipeline_spark historize --warehouse W --load-key N
+    python -m dht11_data_pipeline_spark historize --warehouse W --load-key N --device D --since-ts T
     python -m dht11_data_pipeline_spark compact --path P [--target-mb M] [--sort-by c1,c2 | --zorder-by c1,c2 [--quantile-bits q]]
 """
 
@@ -30,6 +30,9 @@ def main(argv: list[str] | None = None) -> int:
     h = sub.add_parser("historize", help="SCD2 apply for one load key")
     h.add_argument("--warehouse", required=True)
     h.add_argument("--load-key", type=int, required=True)
+    h.add_argument("--device", required=True)
+    h.add_argument("--since-ts", required=True,
+                   help="the batch's watermark: readings from it on")
 
     c = sub.add_parser("compact", help="compact a parquet directory")
     c.add_argument("--path", required=True)
@@ -80,7 +83,8 @@ def main(argv: list[str] | None = None) -> int:
         print(json.dumps(out))
     elif args.cmd == "historize":
         from dht11_data_pipeline_spark.pipeline import historize, history_rows
-        historize(spark, args.warehouse, args.load_key)
+        historize(spark, args.warehouse, args.load_key, args.device,
+                  args.since_ts)
         print(json.dumps({"hist_rows": history_rows(args.warehouse)}))
     elif args.cmd == "compact":
         from dht11_data_pipeline_spark.operators.compact import compact

@@ -51,7 +51,10 @@ from dht11_data_pipeline_spark.functions.hashing import delta_hash
 from dht11_data_pipeline_spark.operators.scd2_partitioned import key_bucket
 
 FAR_FUTURE = "3000-01-01 00:00:00"
-# key-mint partitions: fixed, so a table's n_buckets never changes its keys
+# key-mint partitions: fixed, so a table's n_buckets never changes its
+# keys. classify's rank window is keyed on (mint partition, PD flag), so
+# its exchange has at most 2 * MINT_PARTS non-empty tasks whatever the
+# batch or cluster size; raising it changes every key minted after.
 MINT_PARTS = 64
 _PKG_DIR = os.path.dirname(os.path.dirname(__file__)) + os.sep
 

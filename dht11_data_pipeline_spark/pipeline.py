@@ -85,8 +85,8 @@ def history_rows(warehouse_dir: str) -> int:
 
 
 def historize(spark: SparkSession, warehouse_dir: str, load_key: int,
-              load_ts: str | None = None, device_id: str | None = None,
-              since_ts: str | None = None) -> int:
+              device_id: str, since_ts: str,
+              load_ts: str | None = None) -> int:
     """SCD2 apply over the intermediate batch (reference Historization
     DAG, Delta_detection_query_gen.py:335-351). Returns the committed
     txlog version of the history table.
@@ -104,10 +104,9 @@ def historize(spark: SparkSession, warehouse_dir: str, load_key: int,
     The batch is a snapshot of ``device_id``'s readings from ``since_ts``
     on (``flatten_readings``' filters, so every staging row lies inside
     it): only current rows in that scope are compared, so only they can
-    be closed as deletes; ``None`` widens it to every device or time.
+    be closed as deletes.
     """
-    scope = ((F.col("device_id") == device_id if device_id else F.lit(True))
-             & (F.col("ts") >= F.lit(since_ts) if since_ts else F.lit(True)))
+    scope = (F.col("device_id") == device_id) & (F.col("ts") >= F.lit(since_ts))
     staging = read_intermediate(spark, warehouse_dir, load_key)
     final = _hist_path(warehouse_dir)
     if txlog.current_version(final) is None:
@@ -153,8 +152,8 @@ def run_batch(spark: SparkSession, warehouse_dir: str, tree_json_path: str,
     load_to_intermediate(spark, warehouse_dir, load_key, device_id)
     ctl.update_run_status(interface_cd, load_key, "INTEGRATION LOAD COMPLETED")
 
-    historize(spark, warehouse_dir, load_key, load_ts=load_ts,
-              device_id=device_id, since_ts=prev_ts)
+    historize(spark, warehouse_dir, load_key, device_id, prev_ts,
+              load_ts=load_ts)
     ctl.update_run_status(interface_cd, load_key, "Success", complete=True)
 
     return {"load_key": load_key, "rows": intermediate_rows(warehouse_dir, load_key),

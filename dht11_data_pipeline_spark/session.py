@@ -93,10 +93,15 @@ def get_spark(app_name: str = "dht11_data_pipeline_spark",
                 "1024")
         # no .crc sidecar per local file: the checksummed local
         # filesystem writes one beside every data file (one more file
-        # per bucket per commit), duplicating the page checksums
-        # parquet already writes
+        # per bucket per commit). Parquet writes a CRC per page by
+        # default but checks it on read only when told to, so the read
+        # check is switched on here; a corrupted data page then fails
+        # the read instead of returning wrong values. Parquet footers
+        # and any non-parquet file Spark writes locally have no
+        # checksum at all under the raw filesystem.
         .config("spark.hadoop.fs.file.impl",
                 "org.apache.hadoop.fs.RawLocalFileSystem")
+        .config("spark.hadoop.parquet.page.verify-checksum.enabled", "true")
         .config("spark.ui.enabled", "false")
     )
     spark = builder.getOrCreate()

@@ -476,9 +476,13 @@ def _history(spark, wh) -> list[tuple]:
                    r.da_deleted_flag) for r in read_history(spark, wh).collect())
 
 
-def test_second_device_batch_closes_none_of_the_firsts_rows(spark, tmp_path):
+def test_second_device_batch_closes_none_of_the_firsts_rows(spark, tmp_path,
+                                                           capsys):
     """A batch is a snapshot of its own device: DEV02's first batch adds
-    DEV02's readings and leaves every DEV01 row current."""
+    DEV02's readings and leaves every DEV01 row current, and so does the
+    ``historize`` CLI replaying that batch for its device and watermark."""
+    from dht11_data_pipeline_spark.__main__ import main
+
     wh = str(tmp_path / "wh")
     bootstrap(spark, wh)
     t = tmp_path / "t.json"
@@ -493,6 +497,11 @@ def test_second_device_batch_closes_none_of_the_firsts_rows(spark, tmp_path):
     hist = _history(spark, wh)
     assert [h for h in hist if h[0] == "DEV01"] == dev1
     assert all(h[3:] == ("Y", "N") for h in hist)
+    assert main(["historize", "--warehouse", wh, "--load-key",
+                 str(r["load_key"]), "--device", "DEV02",
+                 "--since-ts", "1970-01-01 00:00:00"]) == 0
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert out == {"hist_rows": 4} and _history(spark, wh) == hist
 
 
 def test_watermarked_batch_closes_only_changed_readings(spark, tmp_path):

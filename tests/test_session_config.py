@@ -60,10 +60,8 @@ def test_engine_knobs_present(spark):
     assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
 
 
-def test_commit_writes_no_crc_sidecars(spark, tmp_path):
-    """Local writes go through the raw local filesystem: a txlog commit
-    directory holds parquet files and no ``.crc`` sidecar beside them
-    (parquet writes its own page checksums)."""
+def _commit(spark, tmp_path) -> str:
+    """A one-commit txlog table; returns its directory."""
     from dht11_data_pipeline_spark.operators import txlog
     from tests.test_scd2 import B1, CFG, _df, _empty_target
 
@@ -71,6 +69,42 @@ def test_commit_writes_no_crc_sidecars(spark, tmp_path):
     txlog.init_table(table, _empty_target(spark).schema, n_buckets=4)
     txlog.apply_scd2_logged(spark, _df(spark, B1), table, CFG,
                             load_ts="2024-05-05 12:00:00")
-    files = [f for _, _, fs in os.walk(os.path.join(table, "data")) for f in fs]
+    return table
+
+
+def _data_files(table: str) -> list[str]:
+    return [os.path.join(d, f) for d, _, fs in os.walk(os.path.join(table, "data"))
+            for f in fs]
+
+
+def test_commit_writes_no_crc_sidecars(spark, tmp_path):
+    """Local writes go through the raw local filesystem: a txlog commit
+    directory holds parquet files and no ``.crc`` sidecar beside them."""
+    files = _data_files(_commit(spark, tmp_path))
     assert any(f.endswith(".parquet") for f in files), files
     assert not [f for f in files if f.endswith(".crc")], files
+
+
+def test_corrupted_commit_page_fails_the_read(spark, tmp_path):
+    """With no ``.crc`` sidecar, parquet's own page CRCs are what catch a
+    corrupted file: one flipped byte in a committed data page fails the
+    read instead of returning a wrong value."""
+    import pyarrow.parquet as pq
+    import pytest
+
+    from dht11_data_pipeline_spark.operators import txlog
+
+    table = _commit(spark, tmp_path)
+    path = next(f for f in _data_files(table) if f.endswith(".parquet"))
+    col = pq.ParquetFile(path).metadata.row_group(0).column(0)
+    # the chunk's last byte is page data, after the last page's header
+    start = (col.dictionary_page_offset if col.has_dictionary_page
+             else col.data_page_offset)
+    last = start + col.total_compressed_size - 1
+    with open(path, "r+b") as fh:
+        fh.seek(last)
+        byte = fh.read(1)[0]
+        fh.seek(last)
+        fh.write(bytes([byte ^ 0x01]))
+    with pytest.raises(Exception, match="CRC checksum verification failed"):
+        txlog.read_table(spark, table).collect()

@@ -174,6 +174,7 @@ def test_history_rows_come_from_the_manifest(spark, tmp_path, capsys):
     assert r["hist_rows"] == 4
     # the CLI replays the last load key: all NC, no commit, same rows
     assert main(["historize", "--warehouse", wh,
-                 "--load-key", str(r["load_key"])]) == 0
+                 "--load-key", str(r["load_key"]), "--device", "DEV01",
+                 "--since-ts", "1970-01-01 00:00:00"]) == 0
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out == {"hist_rows": 4}
