@@ -37,47 +37,30 @@ def entry(spark: SparkSession) -> DataFrame:
 # this list limited to keys whose code or oracle actually changed in
 # the round's diff (round-5 verdict item 3).
 CHANGED_THIS_ROUND: list[str] = [
-    # --- r14 optimization-touched keys (results pinned identical) ---
-    "cur_contamination_pos_spans",  # shared flagged-docs frame (keep_docs)
-    "cur_contamination_cut",     # fdocs reuse + NOT-IN pass-through
-    "sim_kmeans_clusters",       # partial-sum centroid recompute
-    "sim_pq_ann",                # fused encode+ADC single Arrow pass
-    "sim_ivfpq_ann",             # fused cell-assign+encode+ADC pass
-    "dedup_minhash_lsh",         # shuffle-free HOF minhash signatures
-    "dedup_clusters",            # (minhash signature chain)
-    "dedup_incremental",         # (minhash signature chain + sigstore)
-    "dedup_cascade",             # (minhash signature chain)
-    "cur_end_to_end",            # (minhash signature chain)
-    "cur_survivorship",          # (minhash signature chain)
-    "mm_cross_modal_audit",      # (minhash signature chain)
-    "text_bpe_vocab",            # k·n_words driver gate + Java-dot padding
-    "text_bpe_encode",           # (bpe_vocab gate)
-    "text_bpe_fertility",        # (bpe_vocab gate)
-    "cur_bpe_pack",              # (bpe_vocab gate)
-    "cur_epoch_plan_fertility",  # (bpe_vocab gate)
-    "graph_adamic_adar",         # numpy wedge kernel (driver tier)
-    "graph_link_prediction",     # numpy wedge kernel (driver tier)
-    "text_rake_keywords",        # one doc_id shuffle up front (8→3 exch)
-    "cur_contamination_pairs",   # (contamination_index gram build)
-    "cur_contamination_spans",   # (contamination_index gram build)
-    # --- write-path keys: key mint without the per-partition shuffle ---
-    "w1_surrogate_key_mint",     # dense_rank_distributed sort + mono id
-    # --- r13-touched keys the r13 driver window never re-checked
-    #     (round-13 verdict item 3: stale CHANGED_THIS_ROUND) ---
-    "sim_label_knn_audit",
-    "cur_semantic_decontaminate",
-    "sim_ivf_ann",
-    "sim_ivf_ann_nprobe",
-    "graph_triangle_count",
-    "graph_pagerank",
-    "sim_hard_negatives",
-    "sim_prototype_prune",
-    "sim_lsh_ann",
-    "sim_embedding_near_dup",
-    "sim_embedding_near_dup_lsh",
+    # --- per-row Python loops moved onto map_rows (mapInArrow) ---
+    "mm_binary_features",
+    "mm_resize",
+    "mm_image_decode",
+    "mm_png_decode",
+    "mm_jpeg_decode",
+    "mm_gif_decode",
+    "mm_qoi_decode",
+    "mm_image_phash",
+    "mm_phash_near_dup",
+    "mm_frame_sample",
+    "mm_audio_decode",
+    "mm_audio_resample",
     "mm_audio_ann",
-    "sim_cosine_topk",
-    "text_bigram_rarity",
+    "mm_audio_fingerprint",
+    "mm_audio_near_dup",
+    "mm_cross_modal_audit",
+    "dedup_cdc_chunks",
+    "cur_contamination_matrix",
+    "cur_contamination_pairs",
+    "cur_contamination_spans",
+    "cur_contamination_pos_spans",
+    "cur_contamination_cut",
+    "cur_contamination_gate",
 ]
 
 

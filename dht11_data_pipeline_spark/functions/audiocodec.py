@@ -6,7 +6,7 @@ a fixed-layout header plus raw little-endian samples — simple enough
 to implement directly, which turns the audio tier of the multimodal
 path from a stub into a real end-to-end pipeline (synthesize ->
 decode -> resample -> re-encode), every step verifiable byte-for-byte.
-At scale these run inside Arrow ``mapInPandas`` batches
+At scale these run inside Arrow ``mapInArrow`` batches
 (operators/multimodal.py); they are pure byte transforms with no I/O.
 
 Format (canonical 44-byte header, PCM):

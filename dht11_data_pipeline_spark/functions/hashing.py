@@ -42,9 +42,3 @@ def stable_hex_hash(col: Column, width: int = 16) -> Column:
     identically in Spark and any ANSI-SQL oracle (fixed-width hex sorts
     like the number it encodes). Used by minhash / fingerprinting."""
     return F.substring(F.sha2(col, 256), 1, width)
-
-
-def seeded_hex_hash(col: Column, seed: int, width: int = 16) -> Column:
-    """Family of independent hash functions h_seed(x) = sha256(seed||x),
-    the standard trick for minhash permutations."""
-    return F.substring(F.sha2(F.concat_ws(SEP, F.lit(str(seed)), col), 256), 1, width)

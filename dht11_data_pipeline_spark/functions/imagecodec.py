@@ -7,7 +7,7 @@ deflate layer, and PPM and BMP are trivial enough to implement, which
 turns the multimodal decode path from a stub into a real end-to-end
 pipeline (encode -> decode -> resize -> re-encode), with every step
 verifiable byte-for-byte. At scale these functions run inside Arrow
-``mapInPandas`` batches (operators/multimodal.py); they are pure
+``mapInArrow`` batches (operators/multimodal.py); they are pure
 byte-level transforms with no I/O and no driver involvement.
 
 Format notes:

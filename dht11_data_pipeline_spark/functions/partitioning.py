@@ -1,4 +1,5 @@
-"""Partition right-sizing for CPU-heavy narrow operators.
+"""Partition right-sizing for CPU-heavy narrow operators, and the one
+per-row Python map they share.
 
 A small parquet table arrives as ONE input split, so per-row-expensive
 work (shingling, hashing, vector math) runs on one core no matter how
@@ -9,7 +10,11 @@ one cheap shuffle of the raw rows.
 
 from __future__ import annotations
 
+from collections.abc import Callable, Iterable
+from functools import partial
+
 from pyspark.sql import DataFrame
+from pyspark.sql.types import DataType
 
 
 def right_size(df: DataFrame, factor: int = 1) -> DataFrame:
@@ -21,3 +26,33 @@ def right_size(df: DataFrame, factor: int = 1) -> DataFrame:
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
+
+
+def map_rows(df: DataFrame, fn: Callable[..., Iterable[tuple]],
+             schema: str) -> DataFrame:
+    """Per-row Python transform over Arrow batches (``mapInArrow``).
+
+    ``fn`` is called once per input row with that row's values, in
+    ``df``'s column order, as plain Python values (``None`` for null,
+    ``bytes`` for binary), and yields zero or more output tuples in the
+    column order of the DDL ``schema`` — so 1:1, 1:N and dropped rows
+    share one contract. Every output batch, an empty one included, is
+    built with the Arrow types of ``schema``, so ``fn`` need not type
+    its values (a numpy ``float32`` array fills an ``array<float>``).
+    Payloads stream through the executors; nothing reaches the driver.
+    """
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    out = to_arrow_schema(DataType.fromDDL(schema))
+    return df.mapInArrow(partial(_map_batches, fn, out), schema)
+
+
+def _map_batches(fn, out, batches):
+    import pyarrow as pa
+
+    for batch in batches:
+        cols = [c.to_pylist() for c in batch.columns]
+        rows = [r for row in zip(*cols) for r in fn(*row)]
+        vals = list(zip(*rows)) or [()] * len(out)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(v, type=f.type) for v, f in zip(vals, out)], schema=out)

@@ -28,7 +28,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from dht11_data_pipeline_spark.functions.partitioning import right_size
+from dht11_data_pipeline_spark.functions.partitioning import map_rows, right_size
 from dht11_data_pipeline_spark.functions.text import distinct_shingles, tokens
 
 # Stop-shingle document-frequency cap for inverted-index self-joins
@@ -730,7 +730,7 @@ def cdc_chunks(docs: DataFrame, text_col: str = "text",
     output row — same contract as the oracle, whose ``range(1, n+1)``
     is empty for ``n = 0``.
 
-    The boundary scan is ONE Arrow pass per document (mapInPandas),
+    The boundary scan is ONE Arrow pass per document (map_rows),
     vectorized: codepoints come from a utf-32 reinterpret, the rolling
     hash at every position is one numpy convolution with the
     ``[1, 2, 4, ...]`` kernel, and the boundary test is a masked
@@ -743,59 +743,38 @@ def cdc_chunks(docs: DataFrame, text_col: str = "text",
     distinct, exactly the dedup_exact shape. Chunk hashes stay sha256
     (one per ~divisor chars, not per char).
     """
-    import pandas as pd  # noqa: PLC0415 — executor-side import
+    import numpy as np  # noqa: PLC0415
 
     wmask, bmask = _cdc_masks(window, divisor)
     id_type = docs.schema[id_col].dataType.simpleString()
-    id_dtype = "int64" if id_type in ("bigint", "int", "smallint",
-                                      "tinyint") else "object"
+    gear = np.asarray(CDC_GEAR, dtype=np.int64)
+    kernel = np.left_shift(np.int64(1), np.arange(window, dtype=np.int64))
 
-    def scan(batches):
-        import hashlib
-
-        import numpy as np
-
-        gear = np.asarray(CDC_GEAR, dtype=np.int64)
-        kernel = np.left_shift(np.int64(1), np.arange(window,
-                                                      dtype=np.int64))
-        for pdf in batches:
-            doc_ids, ns, lens, hashes = [], [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                if not text:  # empty or NULL: no chunks, no output row
-                    continue
-                n = len(text)
-                cps = (np.frombuffer(text.encode("utf-32-le"),
-                                     dtype="<u4").astype(np.int64)) & 255
-                # conv[i] = Σ_j gear[cp_{i-j}] << j  — the rolling hash
-                # at 1-based position i+1 (exact: ≤ window·2^16·2^15,
-                # far under int64; & wmask is the mod 2**window)
-                h = np.convolve(gear[cps], kernel)[:n] & wmask
-                idx = np.nonzero((h & bmask) == 0)[0]
-                cuts = (idx[idx >= window - 1] + 1).tolist()
-                if not cuts or cuts[-1] != n:
-                    cuts.append(n)
-                s = 0
-                for e in cuts:
-                    doc_ids.append(doc_id)
-                    ns.append(n)
-                    lens.append(e - s)
-                    hashes.append(hashlib.sha256(
-                        text[s:e].encode("utf-8")).hexdigest())
-                    s = e
-            yield pd.DataFrame({
-                "doc_id": pd.Series(doc_ids, dtype=id_dtype),
-                "n_chars": pd.Series(ns, dtype="int64"),
-                "chunk_len": pd.Series(lens, dtype="int64"),
-                "chunk_hash": pd.Series(hashes, dtype="object"),
-            })
+    def scan(doc_id, text):
+        if not text:  # empty or NULL: no chunks, no output row
+            return
+        n = len(text)
+        cps = (np.frombuffer(text.encode("utf-32-le"),
+                             dtype="<u4").astype(np.int64)) & 255
+        # conv[i] = Σ_j gear[cp_{i-j}] << j  — the rolling hash at
+        # 1-based position i+1 (exact: ≤ window·2^16·2^15, far under
+        # int64; & wmask is the mod 2**window)
+        h = np.convolve(gear[cps], kernel)[:n] & wmask
+        idx = np.nonzero((h & bmask) == 0)[0]
+        cuts = (idx[idx >= window - 1] + 1).tolist()
+        if not cuts or cuts[-1] != n:
+            cuts.append(n)
+        s = 0
+        for e in cuts:
+            yield (doc_id, n, e - s,
+                   _hashlib.sha256(text[s:e].encode("utf-8")).hexdigest())
+            s = e
 
     d = right_size(docs.select(
         F.col(id_col).alias("doc_id"),
         F.col(text_col).alias("text")))
-    return d.mapInPandas(
-        scan,
-        schema=(f"doc_id {id_type}, n_chars bigint, chunk_len bigint, "
-                "chunk_hash string"))
+    return map_rows(d, scan, f"doc_id {id_type}, n_chars bigint, "
+                             "chunk_len bigint, chunk_hash string")
 
 
 def cdc_chunk_stats(docs: DataFrame, text_col: str = "text",

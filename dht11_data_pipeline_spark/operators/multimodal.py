@@ -1,5 +1,6 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata,
-processed with Arrow-batched Pandas UDFs (``mapInPandas``).
+processed per row over Arrow batches (functions/partitioning.map_rows,
+built on ``mapInArrow``).
 
 Two decode tiers:
   * REAL: PPM/BMP, PNG (zlib inflate + filter reconstruction), WAV
@@ -7,14 +8,14 @@ Two decode tiers:
     jpegcodec.py: Huffman + DCT) via vendored pure-Python codecs —
     actual container parsing and pixel/sample reconstruction, no fake
     branch.
-  * STUB: formats whose decode genuinely needs a native library this
-    container lacks (e.g. video codecs) — ``decode_image_stub`` raises
-    NotImplementedError unless ``fake=True`` (deterministic fake
-    features). Swapping the stub for PIL is a one-function change; the
-    Spark-side plumbing (binary schema, Arrow batch transfer, UDF
-    signature, partitioning) is identical for both tiers.
+  * STUB: formats whose decode genuinely needs a native library the
+    package does not vendor (e.g. video codecs) — ``decode_image_stub``
+    returns deterministic fake features. Swapping the stub for PIL is a
+    one-function change; the Spark-side plumbing (binary schema, Arrow
+    batch transfer, row function, partitioning) is identical for both
+    tiers.
 
-Scale: mapInPandas streams Arrow record batches through Python —
+Scale: mapInArrow streams Arrow record batches through Python —
 payload bytes never materialize on the driver; batch size is bounded
 by ``spark.sql.execution.arrow.maxRecordsPerBatch``. Partition count
 should track input splits (binary blobs are big: keep
@@ -24,11 +25,13 @@ memory).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import hashlib
 
-import pandas as pd
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from dht11_data_pipeline_spark.functions.partitioning import map_rows, right_size
 
 FEATURE_SCHEMA = (
     "doc_id bigint, n_bytes int, fake_width int, fake_height int, checksum string"
@@ -50,12 +53,9 @@ def attach_binary_payload(df: DataFrame, text_col: str = "text",
     )
 
 
-def decode_image_stub(payload: bytes, fake: bool = True) -> tuple[int, int]:
-    """Placeholder for a compressed-format decoder (PIL.Image.open)."""
-    if not fake:
-        raise NotImplementedError(
-            "compressed-image decode requires PIL — not in this container; "
-            "PPM/BMP decode is REAL via decode_image")
+def decode_image_stub(payload: bytes) -> tuple[int, int]:
+    """Placeholder for a compressed-format decoder (PIL.Image.open);
+    PPM/BMP decode is REAL via decode_image."""
     n = len(payload)
     return n % 256, (n // 256) % 256  # deterministic fake (width, height)
 
@@ -75,16 +75,11 @@ def attach_image_payload(df: DataFrame, text_col: str = "text",
     end-to-end without external libraries."""
     from dht11_data_pipeline_spark.functions.imagecodec import text_to_ppm
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame({
-                id_col: pdf[id_col],
-                "payload": [text_to_ppm(t.encode("utf-8"), width)
-                            for t in pdf[text_col]],
-            })
+    def _row(doc_id, text):
+        yield doc_id, text_to_ppm(text.encode("utf-8"), width)
 
-    return df.select(F.col(id_col), F.col(text_col)).mapInPandas(
-        _batches, schema=f"{id_col} bigint, payload binary")
+    return map_rows(df.select(F.col(id_col), F.col(text_col)), _row,
+                    f"{id_col} bigint, payload binary")
 
 
 DECODE_RESIZE_SCHEMA = ("doc_id bigint, width int, height int, "
@@ -99,31 +94,18 @@ def decode_resize_payloads(binary_df: DataFrame, out_w: int = 16,
     ``out_w`` x ``out_h``, and re-encodes — every byte produced by the
     vendored codec, no fake path. Arrow-batched; partitions stay
     independent (the 100 TB image-preprocessing shape)."""
+    from dht11_data_pipeline_spark.functions.imagecodec import (
+        decode_ppm, resize_nn_ppm)
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    def _row(doc_id, payload):
+        w, h, _ = decode_ppm(payload)
+        out = resize_nn_ppm(payload, out_w, out_h)
+        ow, oh, _ = decode_ppm(out)
+        yield (doc_id, w, h, ow, oh, len(out),
+               hashlib.sha256(out).hexdigest())
 
-        from dht11_data_pipeline_spark.functions.imagecodec import (
-            decode_ppm, resize_nn_ppm)
-        for pdf in it:
-            rows = {"doc_id": [], "width": [], "height": [],
-                    "out_width": [], "out_height": [], "out_n_bytes": [],
-                    "out_checksum": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                p = bytes(payload)
-                w, h, _ = decode_ppm(p)
-                out = resize_nn_ppm(p, out_w, out_h)
-                ow, oh, _ = decode_ppm(out)
-                rows["doc_id"].append(doc_id)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["out_width"].append(ow)
-                rows["out_height"].append(oh)
-                rows["out_n_bytes"].append(len(out))
-                rows["out_checksum"].append(hashlib.sha256(out).hexdigest())
-            yield pd.DataFrame(rows)
-
-    return binary_df.mapInPandas(_batches, schema=DECODE_RESIZE_SCHEMA)
+    return map_rows(binary_df.select("doc_id", "payload"), _row,
+                    DECODE_RESIZE_SCHEMA)
 
 
 PNG_ROUNDTRIP_SCHEMA = ("doc_id bigint, width int, height int, "
@@ -142,24 +124,13 @@ def png_roundtrip(df: DataFrame, text_col: str = "text",
     from dht11_data_pipeline_spark.functions.imagecodec import (
         decode_png, text_to_png)
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {id_col: [], "width": [], "height": [],
-                    "n_pixel_bytes": [], "roundtrip_ok": []}
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                raw = text.encode("utf-8")
-                png = text_to_png(raw, width)
-                w, h, rgb = decode_png(png)
-                expect = raw.ljust(w * h * 3, b"\x00")
-                rows[id_col].append(doc_id)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["n_pixel_bytes"].append(len(rgb))
-                rows["roundtrip_ok"].append(rgb == expect)
-            yield pd.DataFrame(rows)
+    def _row(doc_id, text):
+        raw = text.encode("utf-8")
+        w, h, rgb = decode_png(text_to_png(raw, width))
+        yield doc_id, w, h, len(rgb), rgb == raw.ljust(w * h * 3, b"\x00")
 
-    return df.select(F.col(id_col), F.col(text_col)).mapInPandas(
-        _batches, schema=PNG_ROUNDTRIP_SCHEMA)
+    return map_rows(df.select(F.col(id_col), F.col(text_col)), _row,
+                    PNG_ROUNDTRIP_SCHEMA)
 
 
 JPEG_ROUNDTRIP_SCHEMA = ("doc_id bigint, width int, height int, "
@@ -180,55 +151,34 @@ def jpeg_roundtrip(df: DataFrame, text_col: str = "text",
     oracle's value hash.  One Arrow pass; the JPEG never leaves the
     batch (the 100 TB shape: decode cost rides the executor, output is
     fixed-width metadata)."""
-    import numpy as np
-
     from dht11_data_pipeline_spark.functions.jpegcodec import (
         decode_jpeg_gray, text_to_jpeg)
-    from dht11_data_pipeline_spark.functions.partitioning import right_size
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {id_col: [], "width": [], "height": [], "n_blocks": [],
-                    "pixel_sum": [], "max_abs_err": []}
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                raw = text.encode("utf-8")
-                w, h, gray = decode_jpeg_gray(
-                    text_to_jpeg(raw, blocks_per_row))
-                img = np.frombuffer(gray, np.uint8)
-                # decoded DC value of block i = pixel at block corner
-                grid = img.reshape(h // 8, 8, w // 8, 8)[:, 0, :, 0]
-                rec = grid.reshape(-1)[:max(1, len(raw))].astype(np.int64)
-                orig = np.zeros(rec.shape[0], np.int64)
-                orig[:len(raw)] = np.frombuffer(raw, np.uint8)
-                rows[id_col].append(doc_id)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["n_blocks"].append((w // 8) * (h // 8))
-                rows["pixel_sum"].append(int(img.sum(dtype=np.int64)))
-                rows["max_abs_err"].append(int(np.abs(rec - orig).max()))
-            yield pd.DataFrame(rows)
+    def _row(doc_id, text):
+        raw = text.encode("utf-8")
+        w, h, gray = decode_jpeg_gray(text_to_jpeg(raw, blocks_per_row))
+        img = np.frombuffer(gray, np.uint8)
+        # decoded DC value of block i = pixel at block corner
+        grid = img.reshape(h // 8, 8, w // 8, 8)[:, 0, :, 0]
+        rec = grid.reshape(-1)[:max(1, len(raw))].astype(np.int64)
+        orig = np.zeros(rec.shape[0], np.int64)
+        orig[:len(raw)] = np.frombuffer(raw, np.uint8)
+        yield (doc_id, w, h, (w // 8) * (h // 8),
+               int(img.sum(dtype=np.int64)), int(np.abs(rec - orig).max()))
 
-    return right_size(df.select(F.col(id_col), F.col(text_col))).mapInPandas(
-        _batches, schema=JPEG_ROUNDTRIP_SCHEMA)
+    return map_rows(right_size(df.select(F.col(id_col), F.col(text_col))),
+                    _row, JPEG_ROUNDTRIP_SCHEMA)
 
 
 def extract_features(binary_df: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over the binary column."""
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-        for pdf in it:
-            payloads = pdf["payload"]
-            dims = [decode_image_stub(p, fake=True) for p in payloads]
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "n_bytes": [len(p) for p in payloads],
-                "fake_width": [d[0] for d in dims],
-                "fake_height": [d[1] for d in dims],
-                "checksum": [hashlib.sha256(p).hexdigest() for p in payloads],
-            })
+    def _row(doc_id, payload):
+        yield (doc_id, len(payload), *decode_image_stub(payload),
+               hashlib.sha256(payload).hexdigest())
 
-    return binary_df.mapInPandas(_batches, schema=FEATURE_SCHEMA)
+    return map_rows(binary_df.select("doc_id", "payload"), _row,
+                    FEATURE_SCHEMA)
 
 
 RESIZE_SCHEMA = (
@@ -236,13 +186,11 @@ RESIZE_SCHEMA = (
 )
 
 
-def resize_stub(payload: bytes, target: int = 64, fake: bool = True) -> bytes:
+def resize_stub(payload: bytes, target: int = 64) -> bytes:
     """Placeholder for a real resample/resize (PIL.Image.resize,
     librosa.resample). The deterministic fake keeps every ``target``-th
     byte — shape-preserving decimation, so tests can verify the
     plumbing end-to-end."""
-    if not fake:
-        raise NotImplementedError("resize requires an image/audio lib — not in this container")
     stride = max(1, len(payload) // target)
     return payload[::stride][:target]
 
@@ -252,18 +200,12 @@ def resize_payloads(binary_df: DataFrame, target: int = 64) -> DataFrame:
     resample / transcode shape). Output carries sizes + checksum rather
     than raw bytes so downstream joins stay narrow."""
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-        for pdf in it:
-            outs = [resize_stub(p, target) for p in pdf["payload"]]
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "n_bytes_in": [len(p) for p in pdf["payload"]],
-                "n_bytes_out": [len(o) for o in outs],
-                "out_checksum": [hashlib.sha256(o).hexdigest() for o in outs],
-            })
+    def _row(doc_id, payload):
+        out = resize_stub(payload, target)
+        yield doc_id, len(payload), len(out), hashlib.sha256(out).hexdigest()
 
-    return binary_df.mapInPandas(_batches, schema=RESIZE_SCHEMA)
+    return map_rows(binary_df.select("doc_id", "payload"), _row,
+                    RESIZE_SCHEMA)
 
 
 FRAME_SCHEMA = (
@@ -275,27 +217,19 @@ def sample_frames(binary_df: DataFrame, frame_size: int = 256,
                   every: int = 4) -> DataFrame:
     """1:N frame sampling (the video/audio keyframe shape): treat the
     payload as consecutive ``frame_size``-byte frames, emit every
-    ``every``-th one. mapInPandas fans out rows inside the Arrow batch —
+    ``every``-th one. map_rows fans out rows inside the Arrow batch —
     no explode shuffle, no driver involvement; at 100 TB the fan-out
     factor is payload_bytes/(frame_size*every) per row and partitions
     stay independent."""
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-        for pdf in it:
-            ids, idxs, lens, sums = [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                n_frames = (len(payload) + frame_size - 1) // frame_size
-                for fi in range(0, n_frames, every):
-                    frame = payload[fi * frame_size:(fi + 1) * frame_size]
-                    ids.append(doc_id)
-                    idxs.append(fi)
-                    lens.append(len(frame))
-                    sums.append(hashlib.sha256(frame).hexdigest())
-            yield pd.DataFrame({"doc_id": ids, "frame_idx": idxs,
-                                "frame_len": lens, "frame_checksum": sums})
+    def _row(doc_id, payload):
+        n_frames = (len(payload) + frame_size - 1) // frame_size
+        for fi in range(0, n_frames, every):
+            frame = payload[fi * frame_size:(fi + 1) * frame_size]
+            yield doc_id, fi, len(frame), hashlib.sha256(frame).hexdigest()
 
-    return binary_df.mapInPandas(_batches, schema=FRAME_SCHEMA)
+    return map_rows(binary_df.select("doc_id", "payload"), _row,
+                    FRAME_SCHEMA)
 
 
 EMBED_SCHEMA = "doc_id long, embedding array<float>"
@@ -305,24 +239,20 @@ def embed_payloads(binary_df: DataFrame, dim: int = 16) -> DataFrame:
     """Arrow-batched embedding extraction: binary payload → unit-norm
     float vector. The embedding model is STUBBED (a normalized byte
     histogram — deterministic, container has no torch/CLIP); the Spark
-    plumbing is the real thing: mapInPandas batch shape, array<float>
+    plumbing is the real thing: Arrow batch shape, array<float>
     schema, and the output feeds the similarity operators unchanged
     (attach → embed → cosine_topk/near-dup is the multimodal dedup
     pipeline at 100 TB).
     """
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-        for pdf in it:
-            vecs = []
-            for p in pdf["payload"]:
-                arr = np.frombuffer(bytes(p), dtype=np.uint8)
-                hist = np.bincount(arr % dim, minlength=dim).astype("float64")
-                norm = float(np.linalg.norm(hist))
-                vecs.append((hist / norm if norm else hist).astype("float32"))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "embedding": vecs})
+    def _row(doc_id, payload):
+        arr = np.frombuffer(payload, dtype=np.uint8)
+        hist = np.bincount(arr % dim, minlength=dim).astype("float64")
+        norm = float(np.linalg.norm(hist))
+        yield doc_id, (hist / norm if norm else hist).astype("float32")
 
-    return binary_df.mapInPandas(_batches, schema=EMBED_SCHEMA)
+    return map_rows(binary_df.select("doc_id", "payload"), _row,
+                    EMBED_SCHEMA)
 
 
 def attach_audio_payload(df: DataFrame, text_col: str = "text",
@@ -334,16 +264,11 @@ def attach_audio_payload(df: DataFrame, text_col: str = "text",
     attach_image_payload)."""
     from dht11_data_pipeline_spark.functions.audiocodec import text_to_wav
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame({
-                id_col: pdf[id_col],
-                "payload": [text_to_wav(t.encode("utf-8"), rate)
-                            for t in pdf[text_col]],
-            })
+    def _row(doc_id, text):
+        yield doc_id, text_to_wav(text.encode("utf-8"), rate)
 
-    return df.select(F.col(id_col), F.col(text_col)).mapInPandas(
-        _batches, schema=f"{id_col} bigint, payload binary")
+    return map_rows(df.select(F.col(id_col), F.col(text_col)), _row,
+                    f"{id_col} bigint, payload binary")
 
 
 AUDIO_FEATURE_SCHEMA = ("doc_id bigint, n_channels int, sample_rate int, "
@@ -359,24 +284,16 @@ def audio_features(binary_df: DataFrame) -> DataFrame:
     Arrow-batched, partitions independent — the 100 TB audio-profiling
     shape."""
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from dht11_data_pipeline_spark.functions.audiocodec import decode_wav
-        for pdf in it:
-            rows = {k: [] for k in ("doc_id", "n_channels", "sample_rate",
-                                    "n_samples", "duration_ms", "peak",
-                                    "energy")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                ch, rate, samples = decode_wav(bytes(payload))
-                rows["doc_id"].append(doc_id)
-                rows["n_channels"].append(ch)
-                rows["sample_rate"].append(rate)
-                rows["n_samples"].append(len(samples))
-                rows["duration_ms"].append(len(samples) * 1000 // rate)
-                rows["peak"].append(max((abs(s) for s in samples), default=0))
-                rows["energy"].append(sum(s * s for s in samples))
-            yield pd.DataFrame(rows)
+    from dht11_data_pipeline_spark.functions.audiocodec import decode_wav
 
-    return binary_df.mapInPandas(_batches, schema=AUDIO_FEATURE_SCHEMA)
+    def _row(doc_id, payload):
+        ch, rate, samples = decode_wav(payload)
+        yield (doc_id, ch, rate, len(samples), len(samples) * 1000 // rate,
+               max((abs(s) for s in samples), default=0),
+               sum(s * s for s in samples))
+
+    return map_rows(binary_df.select("doc_id", "payload"), _row,
+                    AUDIO_FEATURE_SCHEMA)
 
 
 RESAMPLE_AUDIO_SCHEMA = ("doc_id bigint, rate_in int, rate_out int, "
@@ -389,28 +306,18 @@ def resample_audio(binary_df: DataFrame, out_rate: int = 4000) -> DataFrame:
     counts verify against n_out = n_in * out_rate / in_rate; the
     checksum pins the exact re-encoded bytes for regression tests."""
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    from dht11_data_pipeline_spark.functions.audiocodec import (
+        decode_wav, resample_nn_wav)
 
-        from dht11_data_pipeline_spark.functions.audiocodec import (
-            decode_wav, resample_nn_wav)
-        for pdf in it:
-            rows = {k: [] for k in ("doc_id", "rate_in", "rate_out",
-                                    "n_in", "n_out", "out_checksum")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                p = bytes(payload)
-                _, rate, samples = decode_wav(p)
-                out = resample_nn_wav(p, out_rate)
-                _, orate, osamples = decode_wav(out)
-                rows["doc_id"].append(doc_id)
-                rows["rate_in"].append(rate)
-                rows["rate_out"].append(orate)
-                rows["n_in"].append(len(samples))
-                rows["n_out"].append(len(osamples))
-                rows["out_checksum"].append(hashlib.sha256(out).hexdigest())
-            yield pd.DataFrame(rows)
+    def _row(doc_id, payload):
+        _, rate, samples = decode_wav(payload)
+        out = resample_nn_wav(payload, out_rate)
+        _, orate, osamples = decode_wav(out)
+        yield (doc_id, rate, orate, len(samples), len(osamples),
+               hashlib.sha256(out).hexdigest())
 
-    return binary_df.mapInPandas(_batches, schema=RESAMPLE_AUDIO_SCHEMA)
+    return map_rows(binary_df.select("doc_id", "payload"), _row,
+                    RESAMPLE_AUDIO_SCHEMA)
 
 
 AUDIO_EMBED_SCHEMA = "doc_id long, embedding array<float>"
@@ -431,19 +338,15 @@ def audio_embed(binary_df: DataFrame, dim: int = 16) -> DataFrame:
     both engines then score identical values and the rounded ranking
     can never diverge on a normalization ulp."""
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    from dht11_data_pipeline_spark.functions.audiocodec import decode_wav
 
-        from dht11_data_pipeline_spark.functions.audiocodec import decode_wav
-        for pdf in it:
-            vecs = []
-            for p in pdf["payload"]:
-                _, _, samples = decode_wav(bytes(p))
-                arr = np.abs(np.asarray(samples, dtype=np.int64)) // 256 % dim
-                vecs.append(np.bincount(arr, minlength=dim).astype("float32"))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "embedding": vecs})
+    def _row(doc_id, payload):
+        _, _, samples = decode_wav(payload)
+        arr = np.abs(np.asarray(samples, dtype=np.int64)) // 256 % dim
+        yield doc_id, np.bincount(arr, minlength=dim).astype("float32")
 
-    return binary_df.mapInPandas(_batches, schema=AUDIO_EMBED_SCHEMA)
+    return map_rows(binary_df.select("doc_id", "payload"), _row,
+                    AUDIO_EMBED_SCHEMA)
 
 
 PHASH_SCHEMA = ("doc_id bigint, width int, height int, "
@@ -478,30 +381,22 @@ def phash_payloads(binary_df: DataFrame, hash_w: int = 8,
     # phash_lo — derived from n_cells, not hardcoded to an 8x8 grid.
     split = min(32, n_cells)
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from dht11_data_pipeline_spark.functions.imagecodec import (
-            decode_ppm, resize_nn_ppm)
-        for pdf in it:
-            rows = {"doc_id": [], "width": [], "height": [],
-                    "phash_hi": [], "phash_lo": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                p = bytes(payload)
-                w, h, _ = decode_ppm(p)
-                _, _, rgb = decode_ppm(resize_nn_ppm(p, hash_w, hash_h))
-                gs = [(rgb[3 * i] + rgb[3 * i + 1] + rgb[3 * i + 2]) // 3
-                      for i in range(n_cells)]
-                mean = sum(gs) // n_cells
-                hi = sum(1 << k for k in range(split) if gs[k] >= mean)
-                lo = sum(1 << (k - split) for k in range(split, n_cells)
-                         if gs[k] >= mean)
-                rows["doc_id"].append(doc_id)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["phash_hi"].append(hi)
-                rows["phash_lo"].append(lo)
-            yield pd.DataFrame(rows)
+    from dht11_data_pipeline_spark.functions.imagecodec import (
+        decode_ppm, resize_nn_ppm)
 
-    return binary_df.mapInPandas(_batches, schema=PHASH_SCHEMA)
+    def _row(doc_id, payload):
+        w, h, _ = decode_ppm(payload)
+        _, _, rgb = decode_ppm(resize_nn_ppm(payload, hash_w, hash_h))
+        gs = [(rgb[3 * i] + rgb[3 * i + 1] + rgb[3 * i + 2]) // 3
+              for i in range(n_cells)]
+        mean = sum(gs) // n_cells
+        hi = sum(1 << k for k in range(split) if gs[k] >= mean)
+        lo = sum(1 << (k - split) for k in range(split, n_cells)
+                 if gs[k] >= mean)
+        yield doc_id, w, h, hi, lo
+
+    return map_rows(binary_df.select("doc_id", "payload"), _row,
+                    PHASH_SCHEMA)
 
 
 AUDIO_FP_SCHEMA = "doc_id bigint, n_frames int, fp_hi bigint, fp_lo bigint"
@@ -529,27 +424,19 @@ def audio_fingerprint(binary_df: DataFrame, frame_len: int = 8,
         raise ValueError(f"n_bits must be in 1..64; got {n_bits}")
     split = min(32, n_cells)
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from dht11_data_pipeline_spark.functions.audiocodec import decode_wav
-        for pdf in it:
-            rows = {"doc_id": [], "n_frames": [], "fp_hi": [], "fp_lo": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                _, _, samples = decode_wav(bytes(payload))
-                nf = len(samples) // frame_len
-                e = [
-                    sum(s * s for s in samples[f * frame_len:(f + 1) * frame_len])
-                    for f in range(nf)
-                ]
-                ks = [k for k in range(min(n_cells, nf - 1))
-                      if e[k + 1] > e[k]]
-                rows["doc_id"].append(doc_id)
-                rows["n_frames"].append(nf)
-                rows["fp_hi"].append(sum(1 << k for k in ks if k < split))
-                rows["fp_lo"].append(sum(1 << (k - split) for k in ks
-                                         if k >= split))
-            yield pd.DataFrame(rows)
+    from dht11_data_pipeline_spark.functions.audiocodec import decode_wav
 
-    return binary_df.mapInPandas(_batches, schema=AUDIO_FP_SCHEMA)
+    def _row(doc_id, payload):
+        _, _, samples = decode_wav(payload)
+        nf = len(samples) // frame_len
+        e = [sum(s * s for s in samples[f * frame_len:(f + 1) * frame_len])
+             for f in range(nf)]
+        ks = [k for k in range(min(n_cells, nf - 1)) if e[k + 1] > e[k]]
+        yield (doc_id, nf, sum(1 << k for k in ks if k < split),
+               sum(1 << (k - split) for k in ks if k >= split))
+
+    return map_rows(binary_df.select("doc_id", "payload"), _row,
+                    AUDIO_FP_SCHEMA)
 
 
 GIF_ROUNDTRIP_SCHEMA = ("doc_id bigint, width int, height int, "
@@ -570,26 +457,16 @@ def gif_roundtrip(df: DataFrame, text_col: str = "text",
     GIF bytes never leave the executor batch."""
     from dht11_data_pipeline_spark.functions.gifcodec import (
         decode_gif_gray, text_to_gif)
-    from dht11_data_pipeline_spark.functions.partitioning import right_size
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {id_col: [], "width": [], "height": [],
-                    "pixel_sum": [], "n_mismatch": []}
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                raw = text.encode("utf-8")
-                w, h, gray = decode_gif_gray(text_to_gif(raw, width))
-                rows[id_col].append(doc_id)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["pixel_sum"].append(sum(gray))
-                rows["n_mismatch"].append(
-                    sum(1 for a, b in zip(gray, raw) if a != b)
-                    + sum(1 for b in gray[len(raw):] if b != 0))
-            yield pd.DataFrame(rows)
+    def _row(doc_id, text):
+        raw = text.encode("utf-8")
+        w, h, gray = decode_gif_gray(text_to_gif(raw, width))
+        yield (doc_id, w, h, sum(gray),
+               sum(1 for a, b in zip(gray, raw) if a != b)
+               + sum(1 for b in gray[len(raw):] if b != 0))
 
-    return right_size(df.select(F.col(id_col), F.col(text_col))).mapInPandas(
-        _batches, schema=GIF_ROUNDTRIP_SCHEMA)
+    return map_rows(right_size(df.select(F.col(id_col), F.col(text_col))),
+                    _row, GIF_ROUNDTRIP_SCHEMA)
 
 
 QOI_ROUNDTRIP_SCHEMA = ("doc_id bigint, width int, height int, "
@@ -608,25 +485,15 @@ def qoi_roundtrip(df: DataFrame, text_col: str = "text",
     desynchronizes the index table and scrambles every later INDEX
     op, so the value hash certifies the whole state machine.  One
     Arrow pass; the QOI bytes never leave the executor batch."""
-    from dht11_data_pipeline_spark.functions.partitioning import right_size
     from dht11_data_pipeline_spark.functions.qoicodec import (
         decode_qoi_gray, text_to_qoi)
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {id_col: [], "width": [], "height": [],
-                    "pixel_sum": [], "n_mismatch": []}
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                raw = text.encode("utf-8")
-                w, h, gray = decode_qoi_gray(text_to_qoi(raw, width))
-                rows[id_col].append(doc_id)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["pixel_sum"].append(3 * sum(gray))
-                rows["n_mismatch"].append(
-                    sum(1 for a, b in zip(gray, raw) if a != b)
-                    + sum(1 for b in gray[len(raw):] if b != 0))
-            yield pd.DataFrame(rows)
+    def _row(doc_id, text):
+        raw = text.encode("utf-8")
+        w, h, gray = decode_qoi_gray(text_to_qoi(raw, width))
+        yield (doc_id, w, h, 3 * sum(gray),
+               sum(1 for a, b in zip(gray, raw) if a != b)
+               + sum(1 for b in gray[len(raw):] if b != 0))
 
-    return right_size(df.select(F.col(id_col), F.col(text_col))).mapInPandas(
-        _batches, schema=QOI_ROUNDTRIP_SCHEMA)
+    return map_rows(right_size(df.select(F.col(id_col), F.col(text_col))),
+                    _row, QOI_ROUNDTRIP_SCHEMA)

@@ -9,7 +9,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dht11_data_pipeline_spark.functions.hashing import stable_hex_hash
-from dht11_data_pipeline_spark.functions.partitioning import right_size
+from dht11_data_pipeline_spark.functions.partitioning import map_rows, right_size
 from dht11_data_pipeline_spark.functions.text import (
     LANG_MARKERS, distinct_shingles, marker_score, punct_count,
     stopword_count, token_count, tokens,
@@ -1322,34 +1322,21 @@ def contamination_index(df: DataFrame, n: int = 7,
                   f"doc {df.schema[id_col].dataType.simpleString()}, "
                   f"gram string")
 
-    def _sdg_pass(batches):
-        import pandas as pd
-        for pdf in batches:
-            srcs: list = []
-            docs: list = []
-            grams: list = []
-            for s_, d_, t_ in zip(pdf["src"], pdf["doc"], pdf["_t"]):
-                if t_ is None:
-                    continue
-                toks = t_.split(" ")
-                if len(toks) < n:
-                    continue
-                seen = set()
-                for i in range(len(toks) - n + 1):
-                    g = " ".join(toks[i:i + n])
-                    if g not in seen:
-                        seen.add(g)
-                        srcs.append(s_)
-                        docs.append(d_)
-                        grams.append(g)
-            yield pd.DataFrame({"src": srcs, "doc": docs, "gram": grams})
+    def _sdg_row(src, doc, text):
+        if text is None:
+            return
+        toks = text.split(" ")
+        seen = set()
+        for i in range(len(toks) - n + 1):
+            g = " ".join(toks[i:i + n])
+            if g not in seen:
+                seen.add(g)
+                yield src, doc, g
 
-    sdg = (right_size(df)
-           .select(F.col(group_col).alias("src"),
-                   F.col(id_col).alias("doc"),
-                   F.col(text_col).alias("_t"))
-           .mapInPandas(_sdg_pass, schema=sdg_schema)
-           .distinct())
+    sdg = map_rows(right_size(df).select(F.col(group_col).alias("src"),
+                                         F.col(id_col).alias("doc"),
+                                         F.col(text_col).alias("_t")),
+                   _sdg_row, sdg_schema).distinct()
     stats = (sdg.groupBy("gram")
              .agg(F.count_distinct("src").alias("_n_src"),
                   F.count(F.lit(1)).alias("n_docs_gram")))

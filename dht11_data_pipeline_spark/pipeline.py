@@ -127,6 +127,9 @@ def run_batch(spark: SparkSession, warehouse_dir: str, tree_json_path: str,
     ``since_ts`` overrides the watermark (normally the previous
     successful run's start time — reference main.py:7-23); the
     reference exposes the same override through the DAG conf payload.
+    A step that raises sets the run's status to ``'FAILED'`` (reference
+    main.py:58) and the exception propagates; the next run's
+    previous-success gate then refuses to start.
     """
     ctl = ControlTable(spark, warehouse_dir)
 
@@ -139,21 +142,28 @@ def run_batch(spark: SparkSession, warehouse_dir: str, tree_json_path: str,
 
     ctl.add_run_entry(interface_nm, interface_cd, load_key, "APP SPECIFIC LOADING")
 
-    tree = read_tree(spark, tree_json_path)
-    readings = flatten_readings(tree, device_id=device_id, since_ts=prev_ts)
+    try:
+        tree = read_tree(spark, tree_json_path)
+        readings = flatten_readings(tree, device_id=device_id, since_ts=prev_ts)
 
-    if readings.isEmpty():  # empty-batch short-circuit (reference T3)
-        ctl.update_run_status(interface_cd, load_key, "Success", complete=True)
-        return {"load_key": load_key, "rows": 0, "skipped": True}
+        if readings.isEmpty():  # empty-batch short-circuit (reference T3)
+            ctl.update_run_status(interface_cd, load_key, "Success",
+                                  complete=True)
+            return {"load_key": load_key, "rows": 0, "skipped": True}
 
-    write_landing(readings, warehouse_dir, device_id)
-    ctl.update_run_status(interface_cd, load_key, "APP SPECIFIC LOADING COMPLETED")
+        write_landing(readings, warehouse_dir, device_id)
+        ctl.update_run_status(interface_cd, load_key,
+                              "APP SPECIFIC LOADING COMPLETED")
 
-    load_to_intermediate(spark, warehouse_dir, load_key, device_id)
-    ctl.update_run_status(interface_cd, load_key, "INTEGRATION LOAD COMPLETED")
+        load_to_intermediate(spark, warehouse_dir, load_key, device_id)
+        ctl.update_run_status(interface_cd, load_key,
+                              "INTEGRATION LOAD COMPLETED")
 
-    historize(spark, warehouse_dir, load_key, device_id, prev_ts,
-              load_ts=load_ts)
+        historize(spark, warehouse_dir, load_key, device_id, prev_ts,
+                  load_ts=load_ts)
+    except Exception:
+        ctl.update_run_status(interface_cd, load_key, "FAILED")
+        raise
     ctl.update_run_status(interface_cd, load_key, "Success", complete=True)
 
     return {"load_key": load_key, "rows": intermediate_rows(warehouse_dir, load_key),

@@ -209,7 +209,7 @@ def sim_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def mm_binary_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal plumbing: binary payload column → Arrow-batched
-    mapInPandas feature extraction (stubbed decoder)."""
+    mapInArrow feature extraction (stubbed decoder)."""
     docs = load_table(spark, sf_dir, "documents")
     return multimodal.extract_features(multimodal.attach_binary_payload(docs))
 

@@ -222,9 +222,6 @@ def _orders_target(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DELTA_COLS = ["o_orderstatus", "o_totalprice_s", "o_orderdate_s", "o_orderpriority"]
-
-
 def _with_delta_hash(df: DataFrame) -> DataFrame:
     """Reference F3/F4 hash: sha256 over normalized column strings.
     Money→DECIMAL(18,2)→string and date→string so the text fed to the

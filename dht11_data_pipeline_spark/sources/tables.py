@@ -36,17 +36,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view so SQL-path queries work
-    (``spark.sql`` parity with the reference's generated-SQL surface)."""
-    for t in TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
-
-
 def columns(spark: SparkSession, sf_dir: str, name: str) -> list[str]:
     """Runtime column discovery — replaces the reference's all_tab_cols
     catalog scans (SURVEY §2.1 S4)."""

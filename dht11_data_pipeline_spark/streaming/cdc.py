@@ -36,6 +36,7 @@ from pyspark.sql.utils import AnalysisException
 
 from dht11_data_pipeline_spark.operators.dedup import (
     CDC_DIVISOR, CDC_WINDOW, cdc_chunks)
+from dht11_data_pipeline_spark.streaming.ingest import start_file_stream
 
 DOC_SCHEMA = T.StructType([
     T.StructField("doc_id", T.LongType()),
@@ -94,15 +95,8 @@ def start_cdc_dedup_stream(spark: SparkSession, source_path: str,
         chunks.write.mode("overwrite").parquet(
             f"{state_dir}/chunks/batch={batch_id}")
 
-    reader = spark.readStream.schema(DOC_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    writer = (reader.json(source_path)
-              .writeStream.foreachBatch(_process)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_file_stream(spark, DOC_SCHEMA, source_path, checkpoint_dir,
+                             _process, max_files_per_trigger, available_now)
 
 
 def current_cdc_stats(spark: SparkSession, state_dir: str) -> DataFrame:

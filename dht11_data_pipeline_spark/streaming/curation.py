@@ -34,6 +34,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from dht11_data_pipeline_spark.operators.curation import (
     _hash_bucket, weighted_gate_projection)
+from dht11_data_pipeline_spark.streaming.ingest import start_file_stream
 
 WEIGHTED_DOC_SCHEMA = T.StructType([
     T.StructField("doc_id", T.LongType()),
@@ -335,15 +336,8 @@ def start_source_divergence_stream(spark: SparkSession, source_path: str,
          .option("partitionOverwriteMode", "dynamic")
          .parquet(out_dir))
 
-    reader = spark.readStream.schema(TEXT_DOC_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    writer = (reader.json(source_path)
-              .writeStream.foreachBatch(_process)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_file_stream(spark, TEXT_DOC_SCHEMA, source_path, checkpoint_dir,
+                             _process, max_files_per_trigger, available_now)
 
 
 def contamination_gate_stream(df: DataFrame, flagged_grams: list[str],

@@ -28,6 +28,7 @@ from pyspark.sql.utils import AnalysisException
 
 from dht11_data_pipeline_spark.operators.dedup import (
     minhash_incremental_pairs, minhash_signature)
+from dht11_data_pipeline_spark.streaming.ingest import start_file_stream
 
 DOC_SCHEMA = T.StructType([
     T.StructField("doc_id", T.LongType()),
@@ -80,15 +81,8 @@ def start_minhash_dedup_stream(spark: SparkSession, source_path: str,
             f"{state_dir}/docs/batch={batch_id}")
         batch_df.unpersist()
 
-    reader = spark.readStream.schema(DOC_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    writer = (reader.json(source_path)
-              .writeStream.foreachBatch(_process)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_file_stream(spark, DOC_SCHEMA, source_path, checkpoint_dir,
+                             _process, max_files_per_trigger, available_now)
 
 
 def start_cluster_stream(spark: SparkSession, source_path: str,
@@ -161,15 +155,8 @@ def start_cluster_stream(spark: SparkSession, source_path: str,
         pairs.unpersist()
         batch_df.unpersist()
 
-    reader = spark.readStream.schema(DOC_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    writer = (reader.json(source_path)
-              .writeStream.foreachBatch(_process)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_file_stream(spark, DOC_SCHEMA, source_path, checkpoint_dir,
+                             _process, max_files_per_trigger, available_now)
 
 
 def start_bloom_dedup_stream(spark: SparkSession, source_path: str,
@@ -274,15 +261,8 @@ def start_bloom_dedup_stream(spark: SparkSession, source_path: str,
             f"{state_dir}/hashes/batch={batch_id}")
         batch_df.unpersist()
 
-    reader = spark.readStream.schema(DOC_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    writer = (reader.json(source_path)
-              .writeStream.foreachBatch(_process)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_file_stream(spark, DOC_SCHEMA, source_path, checkpoint_dir,
+                             _process, max_files_per_trigger, available_now)
 
 
 def current_labels(spark: SparkSession, labels_dir: str) -> DataFrame:
@@ -356,12 +336,5 @@ def start_phash_dedup_stream(spark: SparkSession, source_path: str,
             f"{verdicts_dir}/batch={batch_id}")
         ph.write.mode("overwrite").parquet(f"{state_dir}/hashes/batch={batch_id}")
 
-    reader = spark.readStream.schema(DOC_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    writer = (reader.json(source_path)
-              .writeStream.foreachBatch(_process)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_file_stream(spark, DOC_SCHEMA, source_path, checkpoint_dir,
+                             _process, max_files_per_trigger, available_now)

@@ -40,6 +40,7 @@ from dht11_data_pipeline_spark.operators.graph import (
     triangle_counts,
     update_triangle_counts,
 )
+from dht11_data_pipeline_spark.streaming.ingest import start_file_stream
 
 EDGE_SCHEMA = "id_a bigint, id_b bigint"
 
@@ -111,15 +112,8 @@ def start_triangle_stream(spark: SparkSession, source_path: str,
         d.write.mode("overwrite").parquet(f"{state_dir}/edges/b{batch_id}")
         d.unpersist()
 
-    reader = spark.readStream.schema(EDGE_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    writer = (reader.json(source_path)
-              .writeStream.foreachBatch(_process)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_file_stream(spark, EDGE_SCHEMA, source_path, checkpoint_dir,
+                             _process, max_files_per_trigger, available_now)
 
 
 def current_triangle_counts(spark: SparkSession,
@@ -165,15 +159,8 @@ def start_components_stream(spark: SparkSession, source_path: str,
         new_labels.write.mode("overwrite").parquet(
             f"{state_dir}/labels/b{batch_id}")
 
-    reader = spark.readStream.schema(EDGE_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    writer = (reader.json(source_path)
-              .writeStream.foreachBatch(_process)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_file_stream(spark, EDGE_SCHEMA, source_path, checkpoint_dir,
+                             _process, max_files_per_trigger, available_now)
 
 
 def current_components(spark: SparkSession, state_dir: str) -> DataFrame:

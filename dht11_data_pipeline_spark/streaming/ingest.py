@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import StreamingQuery
 
 from dht11_data_pipeline_spark.sources.firebase_tree import EPOCH_SENTINEL
 
@@ -36,15 +37,39 @@ READING_SCHEMA = T.StructType([
 ])
 
 
+def _read_json_stream(spark: SparkSession, schema: T.StructType | str,
+                      path: str, max_files_per_trigger: int | None) -> DataFrame:
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.json(path)
+
+
 def read_reading_stream(spark: SparkSession, path: str,
                         max_files_per_trigger: int | None = None) -> DataFrame:
     """File-source stream of JSON-line readings (micro-batch per file
     group). ``maxFilesPerTrigger`` bounds batch size — the streaming
     analogue of the reference's one-day batch window."""
-    reader = spark.readStream.schema(READING_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.json(path)
+    return _read_json_stream(spark, READING_SCHEMA, path, max_files_per_trigger)
+
+
+def start_file_stream(spark: SparkSession, schema: T.StructType | str,
+                      source_path: str, checkpoint_dir: str, process,
+                      max_files_per_trigger: int | None,
+                      available_now: bool) -> StreamingQuery:
+    """The micro-batch sink every JSON-lines file stream shares: read
+    ``source_path`` with a fixed ``schema`` (no inference pass), hand
+    each micro-batch to ``process(batch_df, batch_id)`` through
+    ``foreachBatch``, and keep the source offsets in ``checkpoint_dir``.
+    ``available_now`` drains what is there and stops; otherwise the
+    query runs until stopped."""
+    writer = (_read_json_stream(spark, schema, source_path,
+                                max_files_per_trigger)
+              .writeStream.foreachBatch(process)
+              .option("checkpointLocation", checkpoint_dir))
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def typed_readings(raw: DataFrame, watermark: str | None = "1 hour") -> DataFrame:

@@ -42,21 +42,8 @@ from dht11_data_pipeline_spark.operators.sketches import (
     cm_estimate,
     kmv_signatures,
 )
+from dht11_data_pipeline_spark.streaming.ingest import start_file_stream
 from dht11_data_pipeline_spark.streaming.rollup import EVENT_SCHEMA
-
-
-def _start(spark: SparkSession, source_path: str, checkpoint_dir: str,
-           process, max_files_per_trigger: int | None,
-           available_now: bool) -> StreamingQuery:
-    reader = spark.readStream.schema(EVENT_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    writer = (reader.json(source_path)
-              .writeStream.foreachBatch(process)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_countmin_stream(spark: SparkSession, source_path: str,
@@ -80,8 +67,8 @@ def start_countmin_stream(spark: SparkSession, source_path: str,
          .write.mode("overwrite").parquet(
              f"{state_dir}/cm_truth/b{batch_id}"))
 
-    return _start(spark, source_path, checkpoint_dir, _process,
-                  max_files_per_trigger, available_now)
+    return start_file_stream(spark, EVENT_SCHEMA, source_path, checkpoint_dir,
+                             _process, max_files_per_trigger, available_now)
 
 
 def current_countmin(spark: SparkSession, state_dir: str,
@@ -115,8 +102,8 @@ def start_kmv_stream(spark: SparkSession, source_path: str,
             .write.mode("overwrite").parquet(
                 f"{state_dir}/kmv_sig/b{batch_id}")
 
-    return _start(spark, source_path, checkpoint_dir, _process,
-                  max_files_per_trigger, available_now)
+    return start_file_stream(spark, EVENT_SCHEMA, source_path, checkpoint_dir,
+                             _process, max_files_per_trigger, available_now)
 
 
 def current_kmv_signatures(spark: SparkSession, state_dir: str,

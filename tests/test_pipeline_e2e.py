@@ -417,6 +417,29 @@ def test_failed_first_commit_replays_as_version_1(spark, tmp_path, monkeypatch):
     assert read_history(spark, wh).count() == 2
 
 
+def test_failed_batch_marks_its_run_failed(spark, tmp_path, monkeypatch):
+    """A step that raises leaves the batch's ledger row at 'FAILED' and
+    the step's own exception reaches the caller; the next batch's
+    previous-success gate refuses to start."""
+    wh = str(tmp_path / "wh")
+    bootstrap(spark, wh)
+    t = tmp_path / "b1.json"; t.write_text(json.dumps(BATCH1))
+
+    def fail(*a, **kw):
+        raise OSError("write failed")
+
+    monkeypatch.setattr(txlog, "_write_buckets", fail)
+    with pytest.raises(OSError, match="write failed"):
+        run_batch(spark, wh, str(t), "DEV01",
+                  load_ts="2024-05-05 12:00:00", since_ts="1970-01-01 00:00:00")
+    prev = ControlTable(spark, wh).previous_run("STG_1020")
+    assert (prev["load_key"], prev["load_status"]) == (2, "FAILED")
+    assert prev["load_complete_dt_tm"] is None
+    with pytest.raises(RuntimeError, match="'FAILED' != 'Success'"):
+        run_batch(spark, wh, str(t), "DEV01",
+                  load_ts="2024-05-05 12:00:00", since_ts="1970-01-01 00:00:00")
+
+
 def test_first_load_above_the_advisory_size_splits(spark, tmp_path):
     """The first load sizes its write from the batch's parquet footers:
     with an advisory size far below a bucket's bytes every bucket is

@@ -1,10 +1,12 @@
-"""Dead-code guard for the SCD2 write path (no Spark).
+"""Dead-code guard for the package (no Spark).
 
-Every public module-level function of the write-path modules must be
-referenced from some other file of the package, the tests, the
-benchmark or the driver entry point. A function whose only mention is
-its own definition is dead code: delete it rather than keep a second,
-untested implementation of a behaviour next to the one that runs.
+Every public module-level function of the package must be referenced
+from some file of the package, the tests, the benchmark or the driver
+entry point; a use inside its own module counts. A function whose only
+mention is its own definition is dead code: delete it rather than keep
+a second, untested implementation of a behaviour next to the one that
+runs. The write-path modules are held to more: a caller outside the
+module itself.
 """
 
 from __future__ import annotations
@@ -72,3 +74,13 @@ def test_public_write_path_functions_have_callers(module, references):
     assert not dead, (
         f"{module.relative_to(ROOT)}: public functions with no caller "
         f"outside their own module: {dead}")
+
+
+@pytest.mark.parametrize("module", sorted(PKG.rglob("*.py")),
+                         ids=lambda p: p.relative_to(PKG).as_posix())
+def test_public_package_functions_have_callers(module, references):
+    dead = [f for f in _public_functions(module)
+            if not any(f in names for names in references.values())]
+    assert not dead, (
+        f"{module.relative_to(ROOT)}: public functions that nothing "
+        f"calls: {dead}")
