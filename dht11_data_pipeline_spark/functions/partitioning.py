@@ -10,6 +10,7 @@ one cheap shuffle of the raw rows.
 
 from __future__ import annotations
 
+import re
 from collections.abc import Callable, Iterable
 from functools import partial
 
@@ -18,11 +19,14 @@ from pyspark.sql.types import DataType
 
 
 def right_size(df: DataFrame, factor: int = 1) -> DataFrame:
-    """Repartition up to ``factor × defaultParallelism`` iff the input
-    has fewer partitions than cores — never shrinks, never shuffles an
-    already-parallel input."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism * factor
+    """Repartition a bare scan up to ``factor × defaultParallelism`` iff
+    it has fewer partitions than cores; runs no Spark job. An input whose
+    plan holds an exchange keeps its partitioning: counting it would
+    execute the query stages below it."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    if re.search(r"^\W*(AdaptiveSparkPlan|\w*Exchange) ", plan, re.M):
+        return df
+    target = df.sparkSession.sparkContext.defaultParallelism * factor
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

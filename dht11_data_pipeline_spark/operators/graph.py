@@ -626,7 +626,8 @@ def update_clustering_coefficient(counts: DataFrame, old_pairs: DataFrame,
 
 def _pair_similarity_driver(edge_rows: list[tuple],
                             cap: int | None,
-                            aa_weights: bool) -> list[tuple] | None:
+                            aa_weights: bool,
+                            node_type) -> list[tuple] | None:
     """Driver-side wedge enumeration shared by ``neighbor_jaccard``
     (aa_weights=False) and ``adamic_adar`` (True) — the identical
     capped center loop as the distributed self-join, returned as a
@@ -635,20 +636,17 @@ def _pair_similarity_driver(edge_rows: list[tuple],
     exceeds ``DRIVER_WEDGE_LIMIT`` (the caller falls back to
     distributed).
 
-    r14 (guide §4.2): integer node ids take a VECTORIZED numpy kernel
-    (segment-pairs wedge enumeration + bincount aggregation — all
-    exact int64/float64-integer arithmetic, bit-identical multisets to
-    the dict loop, pinned in tests/test_r14_optimizations.py); any
-    other id type keeps the dict loop below."""
-    if edge_rows:
-        x0, y0 = edge_rows[0]
+    r14 (guide §4.2): integer node ids (``node_type``, the edge
+    columns' Spark type) take a VECTORIZED numpy kernel (segment-pairs
+    wedge enumeration + bincount aggregation — all exact
+    int64/float64-integer arithmetic, bit-identical multisets to the
+    dict loop, pinned in tests/test_r14_optimizations.py); any other
+    id type keeps the dict loop below."""
+    from pyspark.sql.types import IntegralType
+    if edge_rows and isinstance(node_type, IntegralType):
         import numpy as np
-        if (isinstance(x0, (int, np.integer))
-                and not isinstance(x0, bool)
-                and isinstance(y0, (int, np.integer))
-                and not isinstance(y0, bool)):
-            return _pair_similarity_numpy(
-                np.asarray(edge_rows, dtype=np.int64), cap, aa_weights)
+        return _pair_similarity_numpy(
+            np.asarray(edge_rows, dtype=np.int64), cap, aa_weights)
     return _pair_similarity_dicts(edge_rows, cap, aa_weights)
 
 
@@ -658,9 +656,10 @@ def _pair_similarity_numpy(e, cap: int | None, aa_weights: bool):
     by kernel:
 
     - degrees: bincount over the symmetrized endpoint list == len of
-      each adjacency set (edges are x<y DISTINCT by the
-      ``_canonical_edges`` contract — the same distinctness the
-      distributed groupBy-count path already relies on);
+      each adjacency set. The rows are deduplicated first, as the
+      dict loop's sets do: ``assume_canonical=True`` skips the
+      ``distinct`` of ``_canonical_edges``, so a repeated edge can
+      arrive here;
     - eligible centers (deg <= cap) and the identical wedge-volume
       budget check against ``DRIVER_WEDGE_LIMIT``;
     - all i<j neighbor pairs per center via the segment-pairs
@@ -679,6 +678,7 @@ def _pair_similarity_numpy(e, cap: int | None, aa_weights: bool):
     """
     import numpy as np
     import pandas as pd
+    e = np.unique(e, axis=0)
     xs, ys = e[:, 0], e[:, 1]
     nodes, u_idx = np.unique(np.concatenate([xs, ys]), return_inverse=True)
     n = int(len(nodes))
@@ -806,7 +806,7 @@ def neighbor_jaccard(pairs: DataFrame, a_col: str = "id_a",
     if collected is not None:
         node_type, spark = rest
         pdf = _pair_similarity_driver(collected, max_center_degree,
-                                      aa_weights=False)
+                                      False, node_type)
         if pdf is not None:
             from pyspark.sql import types as T
             schema = T.StructType([
@@ -876,7 +876,7 @@ def adamic_adar(pairs: DataFrame, a_col: str = "id_a", b_col: str = "id_b",
     if collected is not None:
         node_type, spark = rest
         pdf = _pair_similarity_driver(collected, max_center_degree,
-                                      aa_weights=True)
+                                      True, node_type)
         if pdf is not None:
             from pyspark.sql import types as T
             schema = T.StructType([

@@ -873,51 +873,55 @@ def bpe_vocab(df: DataFrame, k: int = 6,
 
     Hybrid tiers (r13): the merge rounds are vocabulary-bounded work,
     so under the driver gate the k rounds run DRIVER-SIDE over one
-    Arrow collect of the (word, freq) table (``_bpe_merges_driver`` —
+    collect of the (word, freq) table (``_bpe_merges_driver`` —
     bit-identical semantics, pinned against the distributed tier in
     tests), replacing 2 driver-round-trip jobs per round (pair-count
     collect + eager checkpoint) with one collect. The gate (ADVICE
     r13) is two-sided: ``driver_vocab_limit`` bounds the collect size
     AND ``BPE_DRIVER_KN_LIMIT`` bounds the single-threaded merge work
     k·n_words — a 1M-word vocabulary is driver-eligible at k=6 but
-    not at k=64. Gating costs one persist + count() job on every call
-    (also on runs that end up distributed); that is the price of not
-    collecting an unbounded frame blind. Above the gate the
+    not at k=64. The gate is the collect itself: at most cap + 1 rows
+    come back (cap = the tighter of the two bounds), and cap + 1 rows
+    mean the vocabulary is over the gate. Above the gate the
     distributed loop below runs unchanged — the 100 TB path when the
-    vocabulary itself outgrows the driver. Pass
+    vocabulary itself outgrows the driver; its first checkpoint
+    computes the word table again, since nothing is persisted for a
+    gate that the driver tier usually passes. Pass
     ``driver_vocab_limit=None`` to force the distributed tier.
 
     Returns one row per merge: (merge_rank, pair, merged, pair_count).
     """
+    return df.sparkSession.createDataFrame(
+        _bpe_merges(df, k, text_col, driver_vocab_limit),
+        "merge_rank int, pair string, merged string, pair_count bigint")
+
+
+def _bpe_merges(df: DataFrame, k: int, text_col: str,
+                driver_vocab_limit: int | None,
+                ) -> list[tuple[int, str, str, int]]:
+    """The k (merge_rank, pair, merged, pair_count) rules of
+    ``bpe_vocab``, in rank order, as a driver-side list."""
     from dht11_data_pipeline_spark.functions.text import shingles
 
     if not 1 <= int(k) <= 64:
         raise ValueError(f"bpe_vocab: k must be in [1, 64], got {k} — "
                          f"each round is a corpus-wide aggregate; cap "
                          f"the vocabulary, don't loop unbounded")
-    spark = df.sparkSession
     words = (df.select(F.explode(tokens(text_col)).alias("word"))
              .filter(F.col("word") != "")
              .groupBy("word")
              .agg(F.count(F.lit(1)).cast("bigint").alias("freq")))
-    out_schema = "merge_rank int, pair string, merged string, pair_count bigint"
     if driver_vocab_limit is not None:
-        words = words.persist()
-        n_words = words.count()
-        if (n_words <= driver_vocab_limit
-                and int(k) * n_words <= BPE_DRIVER_KN_LIMIT):
-            pdf = words.toPandas()  # Arrow: two narrow columns
-            words.unpersist()
-            merges = _bpe_merges_driver(
+        cap = min(driver_vocab_limit, BPE_DRIVER_KN_LIMIT // int(k))
+        pdf = words.limit(cap + 1).toPandas()  # Arrow: two narrow columns
+        if len(pdf) <= cap:
+            return _bpe_merges_driver(
                 list(zip(pdf["word"].tolist(), pdf["freq"].tolist())),
                 int(k))
-            return spark.createDataFrame(merges, out_schema)
     cur = words.select(
         F.concat(F.lit(" "), F.regexp_replace("word", "(.)", "$1 "))
         .alias("syms"),
         "freq").localCheckpoint(eager=True)
-    if driver_vocab_limit is not None:
-        words.unpersist()  # the checkpoint above was its last consumer
 
     merges: list[tuple[int, str, str, int]] = []
     for rank in range(1, int(k) + 1):
@@ -937,43 +941,46 @@ def bpe_vocab(df: DataFrame, k: int = 6,
             F.replace(F.col("syms"), F.lit(f" {pair} "),
                       F.lit(f" {merged} ")).alias("syms"),
             "freq").localCheckpoint(eager=True)
+    return merges
 
-    return spark.createDataFrame(merges, out_schema)
+
+def _bpe_word_table(df: DataFrame, k: int, text_col: str) -> DataFrame:
+    """(word, n_chars_w, n_syms_w) over the corpus's distinct words, the
+    k merges of ``_bpe_merges`` chained as literal string replaces
+    (codegen'd; the non-overlapping semantics ``bpe_vocab`` documents)."""
+    merges = _bpe_merges(df, k, text_col, BPE_DRIVER_VOCAB_LIMIT)
+    vocab = (df.select(F.explode(tokens(text_col)).alias("word"))
+             .filter(F.col("word") != "").distinct())
+    syms = F.concat(F.lit(" "), F.regexp_replace("word", "(.)", "$1 "))
+    for _, pair, merged, _ in merges:
+        syms = F.replace(syms, F.lit(f" {pair} "), F.lit(f" {merged} "))
+    return vocab.select(
+        "word",
+        F.length("word").cast("bigint").alias("n_chars_w"),
+        F.size(F.split(F.trim(syms), " ")).cast("bigint").alias("n_syms_w"))
 
 
 def bpe_encode(df: DataFrame, k: int = 6,
                text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """The encode half of the tokenizer pair: learn ``k`` BPE merges
-    (``bpe_vocab``) and apply them to the corpus, reporting per-doc
-    symbol statistics — the pass a training pipeline runs to budget
-    sequence lengths under a learned vocabulary.
+    (``bpe_vocab``'s driver-side merge list — no round trip through a
+    DataFrame) and apply them to the corpus, reporting per-doc symbol
+    statistics — the pass a training pipeline runs to budget sequence
+    lengths under a learned vocabulary.
 
     Merge application happens ONCE PER DISTINCT WORD, never per token
-    occurrence: the k learned rules chain as literal string replaces
-    (codegen'd; the same non-overlapping scan semantics ``bpe_vocab``
-    documents) over the vocabulary frame, which then broadcast-joins
-    onto the exploded token stream. Scale: the merge chain is
-    vocabulary-sized work; the corpus is touched by one explode +
-    per-doc aggregate (one shuffle). A vocabulary too large to
-    broadcast (~>100M words) would swap the broadcast for a shuffle
+    occurrence (``_bpe_word_table``): the vocabulary frame then
+    broadcast-joins onto the exploded token stream. Scale: the merge
+    chain is vocabulary-sized work; the corpus is touched by one
+    explode + per-doc aggregate (one shuffle). A vocabulary too large
+    to broadcast (~>100M words) would swap the broadcast for a shuffle
     join on ``word`` — semantics identical.
 
     Returns (id, n_tokens, n_chars, n_symbols, compression_ppm) with
     compression_ppm = n_symbols·1e6 DIV n_chars (integer; 1e6 when the
     doc has no characters).
     """
-    rules = [(r["pair"], r["merged"])
-             for r in bpe_vocab(df, k, text_col, id_col)
-             .orderBy("merge_rank").collect()]
-    vocab = (df.select(F.explode(tokens(text_col)).alias("word"))
-             .filter(F.col("word") != "").distinct())
-    syms = F.concat(F.lit(" "), F.regexp_replace("word", "(.)", "$1 "))
-    for pair, merged in rules:
-        syms = F.replace(syms, F.lit(f" {pair} "), F.lit(f" {merged} "))
-    wtab = vocab.select(
-        "word",
-        F.length("word").cast("bigint").alias("n_chars_w"),
-        F.size(F.split(F.trim(syms), " ")).cast("bigint").alias("n_syms_w"))
+    wtab = _bpe_word_table(df, k, text_col)
     tok = (df.select(F.col(id_col), F.explode(tokens(text_col)).alias("word"))
            .filter(F.col("word") != ""))
     return (tok.join(F.broadcast(wtab), "word")
@@ -1003,7 +1010,7 @@ def bpe_fertility(df: DataFrame, k: int = 6,
     source drifted; this quantifies what the drift costs at the
     tokenizer.
 
-    Same shape as ``bpe_encode`` (whose per-word merge chain it
+    Same shape as ``bpe_encode`` (whose per-word merge table it
     reuses): merge application is vocabulary-sized work broadcast onto
     one exploded corpus pass, then ONE (source)-keyed aggregate —
     fertility_ppm = Σsymbols·1e6 DIV Σtokens, compression_ppm =
@@ -1011,18 +1018,7 @@ def bpe_fertility(df: DataFrame, k: int = 6,
     bit-for-bit. Returns (group, n_docs, n_tokens, n_symbols,
     fertility_ppm, compression_ppm).
     """
-    rules = [(r["pair"], r["merged"])
-             for r in bpe_vocab(df, k, text_col, id_col)
-             .orderBy("merge_rank").collect()]
-    vocab = (df.select(F.explode(tokens(text_col)).alias("word"))
-             .filter(F.col("word") != "").distinct())
-    syms = F.concat(F.lit(" "), F.regexp_replace("word", "(.)", "$1 "))
-    for pair, merged in rules:
-        syms = F.replace(syms, F.lit(f" {pair} "), F.lit(f" {merged} "))
-    wtab = vocab.select(
-        "word",
-        F.length("word").cast("bigint").alias("n_chars_w"),
-        F.size(F.split(F.trim(syms), " ")).cast("bigint").alias("n_syms_w"))
+    wtab = _bpe_word_table(df, k, text_col)
     tok = (df.select(F.col(group_col), F.col(id_col),
                      F.explode(tokens(text_col)).alias("word"))
            .filter(F.col("word") != ""))

@@ -7,7 +7,11 @@ is the parquet directory plus ``df.schema`` — schema-on-read, no DDL.
 
 from __future__ import annotations
 
+import functools
+import os
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
@@ -19,6 +23,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one synthetic table. Column pruning + predicate pushdown are
     Catalyst's job — callers express filters/projections declaratively.
 
+    Schema inference is a Spark job (a footer read), so its result is
+    memoized per file identity (``_read``): only the first load of a
+    table file pays it, and a rewritten file is inferred again.
+
     ``events.ts`` is nanosecond-precision parquet, which Spark's reader
     rejects; we read nanos as long and rebuild a microsecond timestamp
     with integer division (``div`` keeps full int64 precision — a double
@@ -28,12 +36,43 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        df = _read(spark, f"{sf_dir}/{name}.parquet")
         from pyspark.sql import functions as F
         if dict(df.dtypes).get("ts") == "bigint":
             df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
         return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return _read(spark, f"{sf_dir}/{name}.parquet")
+
+
+def _read(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the inferred schema memoized on
+    the identity of the path's files and on nanosAsLong, which turns a
+    nanosecond timestamp into a bigint. A path the driver cannot stat
+    is inferred on every read."""
+    try:
+        files = _file_identity(path)
+    except OSError:
+        return spark.read.parquet(path)
+    nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
+    return spark.read.schema(_inferred(spark, path, files, nanos)).parquet(path)
+
+
+def _file_identity(path: str) -> tuple:
+    """(path, size, mtime_ns, inode) of a file, or of every file under a
+    table directory."""
+    paths = (sorted(os.path.join(root, n)
+                    for root, _, names in os.walk(path) for n in names)
+             if os.path.isdir(path) else [path])
+    return tuple((p, st.st_size, st.st_mtime_ns, st.st_ino)
+                 for p, st in ((p, os.stat(p)) for p in paths))
+
+
+@functools.lru_cache(maxsize=256)
+def _inferred(spark: SparkSession, path: str, files: tuple,
+              nanos: str | None) -> StructType:
+    """The schema Spark infers for ``path``; ``files`` and ``nanos``
+    are memo key only."""
+    return spark.read.parquet(path).schema
 
 
 def columns(spark: SparkSession, sf_dir: str, name: str) -> list[str]:

@@ -255,10 +255,33 @@ def test_wedge_numpy_kernel_matches_dict_loop():
 
 def test_wedge_driver_falls_back_to_dicts_for_string_ids():
     from dht11_data_pipeline_spark.operators import graph
+    from pyspark.sql.types import StringType
     edge_rows = [("a", "b"), ("a", "c"), ("b", "c"), ("b", "d")]
-    got = graph._pair_similarity_driver(edge_rows, None, False)
+    got = graph._pair_similarity_driver(edge_rows, None, False, StringType())
     ref = graph._pair_similarity_dicts(edge_rows, None, False)
     _wedge_frames_equal(got, ref)
+
+
+def test_wedge_kernels_agree_on_a_duplicated_edge(spark):
+    """Under ``assume_canonical=True`` nothing deduplicates the edge
+    list, so a repeated edge reaches the driver kernel. An int-id graph
+    (numpy kernel) and the same graph with string ids (dict loop) give
+    the same pairs, and both equal the graph without the repeat."""
+    from dht11_data_pipeline_spark.operators import graph
+    edges = [(1, 2), (1, 3), (2, 3), (3, 4), (2, 4), (4, 5)]
+    name = {i: chr(ord("a") + i) for i in range(1, 6)}
+
+    def run(op, rows, typ):
+        df = spark.createDataFrame(rows, f"id_a {typ}, id_b {typ}")
+        return sorted(tuple(r) for r in
+                      op(df, assume_canonical=True).collect())
+
+    for op in (graph.neighbor_jaccard, graph.adamic_adar):
+        dup = edges + [(1, 2), (3, 4)]
+        ints = run(op, dup, "bigint")
+        strs = run(op, [(name[a], name[b]) for a, b in dup], "string")
+        assert [(name[r[0]], name[r[1]]) + r[2:] for r in ints] == strs
+        assert ints == run(op, edges, "bigint")
 
 
 def test_wedge_numpy_respects_wedge_limit(monkeypatch):
