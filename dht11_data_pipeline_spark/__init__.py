@@ -9,7 +9,7 @@ Layout:
     functions/  hashing (delta hash, hex-min), text metrics, vector math
     operators/  control ledger, layer moves, SCD2, dedup, similarity, text
     plans/      named reference-parity queries + DuckDB oracle SQL
-    streaming/  Structured Streaming ingest, windows, foreachBatch SCD2
+    streaming/  Structured Streaming ingest, foreachBatch SCD2, rollups
 """
 
 from dht11_data_pipeline_spark.session import get_spark  # noqa: F401

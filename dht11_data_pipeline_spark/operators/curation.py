@@ -131,18 +131,8 @@ def weighted_keep(df: DataFrame, weight: Column, rate_ppm: int = 500_000,
                       w_checked.alias("weight"),
                       bucket.cast("bigint").alias("bucket"),
                       "_w_max"))
-    return weighted_gate_projection(staged, id_col, rate_ppm)
-
-
-def weighted_gate_projection(staged: DataFrame, id_col: str,
-                             rate_ppm: int) -> DataFrame:
-    """The weighted_keep decision itself, over a staged frame with
-    columns (id, weight, bucket, _w_max) — shared by the batch
-    operator (which computes ``_w_max`` as the corpus max) and the
-    streaming twin (which takes it as the scorer's declared ceiling),
-    so the two forms cannot drift. Integer DIV (not /): Spark DIV ==
-    DuckDB ``//`` on non-negative operands, keeping the emitted ppm
-    engine-exact."""
+    # Integer DIV (not /): Spark DIV == DuckDB ``//`` on non-negative
+    # operands, keeping the emitted ppm engine-exact.
     return staged.select(
         id_col, "weight",
         F.col("bucket").cast("int").alias("bucket"),

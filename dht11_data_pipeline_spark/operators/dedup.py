@@ -678,10 +678,10 @@ CDC_DIVISOR = 32  # expected chunk length ~= CDC_DIVISOR chars
 
 # Gear table for the rolling boundary hash: 256 pseudo-random 16-bit
 # constants, one per byte value, derived deterministically from public
-# arithmetic (first 2 bytes of sha256 of the byte) so the Spark scan,
-# the streaming twin and the DuckDB oracle all share the identical
-# table without shipping state. 16 bits suffice because the boundary
-# test only ever reads the low CDC_WINDOW bits of the hash.
+# arithmetic (first 2 bytes of sha256 of the byte) so the Spark scan
+# and the DuckDB oracle share the identical table without shipping
+# state. 16 bits suffice because the boundary test only ever reads the
+# low CDC_WINDOW bits of the hash.
 import hashlib as _hashlib  # noqa: E402 — table built at import, once
 
 CDC_GEAR = tuple(
@@ -709,10 +709,8 @@ def cdc_chunks(docs: DataFrame, text_col: str = "text",
                window: int = CDC_WINDOW,
                divisor: int = CDC_DIVISOR) -> DataFrame:
     """Content-defined chunk extraction: one (doc_id, n_chars,
-    chunk_len, chunk_hash) row per chunk. The shared front half of
-    ``cdc_chunk_stats`` and the streaming CDC dedup twin
-    (streaming/cdc.py) — both must cut identically or stream/batch
-    parity breaks.
+    chunk_len, chunk_hash) row per chunk: the front half of
+    ``cdc_chunk_stats``.
 
     Boundary rule (gear rolling hash, mirrored in the DuckDB oracle):
     let ``h_i = ((h_{i-1} << 1) + GEAR[cp_i & 255]) mod 2**window``

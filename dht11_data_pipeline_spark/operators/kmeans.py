@@ -237,9 +237,11 @@ def _assign_recompute(corpus: DataFrame,
     Lloyd round costs ONE sequential job instead of two (this operator
     is the registry's most driver-latency-sensitive; round-11 verdict).
 
-    Arithmetic parity: the corpus vector column is array<float>, which
-    ``assign_clusters`` echoes unchanged, so the fused pass sees the
-    bit-same values the two-pass chain fed ``_recompute``; per-row
+    Arithmetic parity: ``assign_clusters`` echoes the vector column as
+    array<float>, so the fused pass casts it to array<float> too (a
+    no-op on a float corpus; an array<double> corpus is rounded the
+    same way) and sees the bit-same values the two-pass chain fed
+    ``_recompute``; per-row
     assignment is bit-identical, partitioning identical (mapInPandas
     preserves partitions). The only freedom left is Arrow batch
     boundaries (the two-pass chain re-batches between its two Python
@@ -286,7 +288,8 @@ def _assign_recompute(corpus: DataFrame,
             "s": [acc_s[c].tolist() for c in cids],
         })
 
-    partials = right_size(corpus).select(id_col, vec_col).mapInPandas(
+    vecs = F.col(vec_col).cast("array<float>").alias(vec_col)
+    partials = right_size(corpus).select(id_col, vecs).mapInPandas(
         _pass, schema="pid int, cluster_id long, n long, s array<double>")
     return _merge_partials(partials.collect())
 

@@ -174,9 +174,7 @@ def fixed_point_ewma(df: DataFrame, user_col: str = "user_id",
     the sequential recurrence closed-formed into one integer prefix
     sum, bit-for-bit reproducible by any engine. One shuffle on the
     key; the per-key sort is shared by the row-number and prefix-sum
-    windows. ``max_steps`` ≤ 40 keeps 2^(t-1)·cents far inside int64.
-    The streaming twin (streaming/ewma.py) carries (Y, t) as state and
-    emits identical rows batch-by-batch."""
+    windows. ``max_steps`` ≤ 40 keeps 2^(t-1)·cents far inside int64."""
     from pyspark.sql.window import Window as W
 
     w = W.partitionBy(user_col).orderBy(ts_col, id_col)

@@ -35,8 +35,7 @@ Semantics:
   manifest no longer references it).
 - Pair-completeness invariant (tested in tests/test_sigstore.py):
   starting from an EMPTY store, the union of all batches' pairs equals
-  ``dedup.minhash_near_duplicates`` over the full corpus — same
-  invariant the streaming twin (streaming/dedup.py) pins, now with a
+  ``dedup.minhash_near_duplicates`` over the full corpus, kept in a
   durable, atomically-committed store.
 - The manifest records the sketch parameters (n, num_hashes,
   hash-family version); an update with different parameters REFUSES —

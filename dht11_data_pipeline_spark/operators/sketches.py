@@ -75,40 +75,15 @@ def _cm_check_grid(d: int, w: int) -> None:
             f"w must equal CM_WIDTH={CM_WIDTH} (oracle-fixed grid); got {w}")
 
 
-def _cm_buckets(keyed: DataFrame, d: int, w: int,
-                *extra_cols: str) -> DataFrame:
-    """Explode each key row into its d (j, bucket) sketch coordinates."""
-    return keyed.select(
-        "key", *extra_cols,
+def _cm_buckets(truth: DataFrame, d: int, w: int) -> DataFrame:
+    """Explode each (key, true_n) row into its d (j, bucket) sketch
+    coordinates."""
+    return truth.select(
+        "key", "true_n",
         F.posexplode(F.array(*[
             (_mmhash("key", CM_A[j], CM_B[j]) % w).cast("int")
             for j in range(d)
         ])).alias("j", "bucket"),
-    )
-
-
-def cm_cells(keyed: DataFrame, d: int = CM_ROWS,
-             w: int = CM_WIDTH) -> DataFrame:
-    """The count-min sketch itself: (j, bucket, cell_n) over a frame
-    with a bigint ``key`` column. Cells are a SUM MONOID — sketches of
-    disjoint batches merge by adding cell counts (the streaming twin
-    in streaming/sketches.py relies on exactly this)."""
-    return (_cm_buckets(keyed, d, w)
-            .groupBy("j", "bucket").agg(F.count(F.lit(1)).alias("cell_n")))
-
-
-def cm_estimate(cells: DataFrame, truth: DataFrame, d: int = CM_ROWS,
-                w: int = CM_WIDTH) -> DataFrame:
-    """Point estimates from a (j, bucket, cell_n) sketch next to a
-    (key, true_n) truth table: est(u) = min_j sketch[j][h_j(u) mod w]."""
-    probes = _cm_buckets(truth, d, w, "true_n")
-    return (
-        probes.join(F.broadcast(cells), ["j", "bucket"])
-        .groupBy("key", "true_n")
-        .agg(F.min("cell_n").alias("cm_est"))
-        .select(
-            "key", "true_n", "cm_est",
-            (F.col("cm_est") - F.col("true_n")).alias("overcount"))
     )
 
 
@@ -132,10 +107,17 @@ def countmin_frequencies(df: DataFrame, key_col: str,
     _cm_check_grid(d, w)
     keyed = df.select(F.col(key_col).cast("bigint").alias("key"))
     truth = keyed.groupBy("key").agg(F.count(F.lit(1)).alias("true_n"))
-    cells = (_cm_buckets(truth, d, w, "true_n")
-             .groupBy("j", "bucket")
+    probes = _cm_buckets(truth, d, w)
+    cells = (probes.groupBy("j", "bucket")
              .agg(F.sum("true_n").alias("cell_n")))
-    return cm_estimate(cells, truth, d, w)
+    return (
+        probes.join(F.broadcast(cells), ["j", "bucket"])
+        .groupBy("key", "true_n")
+        .agg(F.min("cell_n").alias("cm_est"))
+        .select(
+            "key", "true_n", "cm_est",
+            (F.col("cm_est") - F.col("true_n")).alias("overcount"))
+    )
 
 
 def kmv_signatures(df: DataFrame, set_col: str, member_col: str,

@@ -231,46 +231,6 @@ def span_coverage(df: DataFrame, text_col: str = "text",
     )
 
 
-def _dsir_grams(df: DataFrame, text_col: str, id_col: str,
-                target_col: str, target_value: str, buckets: int,
-                salt: str) -> DataFrame:
-    from dht11_data_pipeline_spark.functions.text import shingles
-    from dht11_data_pipeline_spark.operators.curation import _hash_bucket
-
-    return right_size(df).filter(F.size(tokens(text_col)) >= 2).select(
-        F.col(id_col),
-        (F.col(target_col) == target_value).alias("is_target"),
-        F.explode(shingles(tokens(text_col), 2)).alias("gram"),
-    ).withColumn("bucket", _hash_bucket(F.col("gram"), salt, buckets))
-
-
-def _dsir_stats(grams: DataFrame) -> DataFrame:
-    return (
-        grams.groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("raw_n"),
-             F.sum(F.when(F.col("is_target"), 1).otherwise(0)).alias("tgt_n"))
-        .select("bucket",
-                F.expr("tgt_n * 1000000 DIV raw_n").alias("ratio_ppm"))
-    )
-
-
-def dsir_bucket_stats(df: DataFrame, text_col: str = "text",
-                      id_col: str = "doc_id", target_col: str = "lang",
-                      target_value: str = "en", buckets: int = 128,
-                      salt: str = "dsir1") -> DataFrame:
-    """The DSIR importance MODEL alone: per-feature-bucket
-    target-vs-raw frequency ratios in integer ppm — the table a
-    deployment trains in a periodic batch pass and feeds to the
-    streaming gate (streaming/curation.dsir_keep_stream) as its
-    declared ratios. Same arithmetic ``dsir_weights`` uses internally
-    (shared helpers, so the two cannot drift); buckets never seen in
-    the reference corpus are absent, which the stream treats as an
-    error on lookup — densify with ratio 0 if unseen-gram traffic is
-    expected."""
-    return _dsir_stats(_dsir_grams(df, text_col, id_col, target_col,
-                                   target_value, buckets, salt))
-
-
 def dsir_weights(df: DataFrame, text_col: str = "text",
                  id_col: str = "doc_id", target_col: str = "lang",
                  target_value: str = "en", buckets: int = 128,
@@ -287,10 +247,22 @@ def dsir_weights(df: DataFrame, text_col: str = "text",
     partial counts; ``buckets`` rows out), which broadcasts back onto
     the per-doc gram stream; the per-doc reduce is the second shuffle.
     Integer ppm ratios end-to-end — no float enters the output."""
+    from dht11_data_pipeline_spark.functions.text import shingles
+    from dht11_data_pipeline_spark.operators.curation import _hash_bucket
+
     base = df.select(F.col(id_col))
-    grams = _dsir_grams(df, text_col, id_col, target_col, target_value,
-                        buckets, salt)
-    stats = _dsir_stats(grams)
+    grams = right_size(df).filter(F.size(tokens(text_col)) >= 2).select(
+        F.col(id_col),
+        (F.col(target_col) == target_value).alias("is_target"),
+        F.explode(shingles(tokens(text_col), 2)).alias("gram"),
+    ).withColumn("bucket", _hash_bucket(F.col("gram"), salt, buckets))
+    stats = (
+        grams.groupBy("bucket")
+        .agg(F.count(F.lit(1)).alias("raw_n"),
+             F.sum(F.when(F.col("is_target"), 1).otherwise(0)).alias("tgt_n"))
+        .select("bucket",
+                F.expr("tgt_n * 1000000 DIV raw_n").alias("ratio_ppm"))
+    )
     per_doc = (
         grams.join(F.broadcast(stats), "bucket")
         .groupBy(id_col)
@@ -668,11 +640,10 @@ def rake_keywords(df: DataFrame, text_col: str = "text",
 # threshold gates it. Sits beside DSIR (importance relative to a TARGET
 # distribution) as quality-ABSOLUTE scoring — the model's weights are a
 # DECLARED parameter (trained elsewhere, shipped with the pipeline), so
-# scoring is a pure per-row projection: no shuffle, no state, and the
-# streaming twin (streaming/curation.quality_gate_stream) is literally
-# the same expression. Reference need: the same classify-then-filter
-# role as the reference's metadata quality gates
-# (CheckInterface_Metadata.py:31-38), applied to document text.
+# scoring is a pure per-row projection: no shuffle, no state. Reference
+# need: the same classify-then-filter role as the reference's metadata
+# quality gates (CheckInterface_Metadata.py:31-38), applied to document
+# text.
 
 def declared_weight_buckets(word_weights: dict[str, int],
                             buckets: int = 128,
@@ -719,9 +690,8 @@ def quality_classifier_score(df: DataFrame, weights: dict[int, int],
 
     All-integer and deterministic: the verdict for a row depends only
     on (text, declared weights), never on partitioning, corpus
-    composition, or a seed — so batch replays, stream restarts and
-    backfills keep the identical subset, and the streaming twin is
-    this same projection. Scale: one codegen'd-scan map stage plus an
+    composition, or a seed — so replays and backfills keep the
+    identical subset. Scale: one codegen'd-scan map stage plus an
     interpreted fold over the token array per row (higher-order
     functions don't codegen); zero shuffles, zero Python, linear at
     any corpus size.
@@ -1130,13 +1100,11 @@ def source_divergence_declared(df: DataFrame, ref_ppm: dict[str, int],
     profile a prior batch audit published, or any target mix), so the
     whole computation is one (source, word) shuffle plus a literal
     map lookup — no global scalar, no second pass, and therefore
-    runnable per micro-batch by the streaming twin
-    (streaming/curation.start_source_divergence_stream) between full
-    audits. The same declared-parameter discipline as
-    ``weighted_keep_stream``'s w_max / ``source_temperature_stream``'s
-    rates / ``quality_gate_stream``'s weights: profile refreshes enter
-    through a redeploy, never through in-flight corpus statistics, so
-    a replayed batch and a restarted stream flag identical sources.
+    runnable on each new batch between full audits. The same
+    declared-parameter discipline as the quality gate's weights:
+    profile refreshes enter through a redeploy, never through
+    in-flight corpus statistics, so a replayed batch flags identical
+    sources.
 
     TV·2e6 = Σ_{w∈source} |p_w − q_w| + (Q_tot − Σ_{w∈source∩ref} q_w)
     with p_w the source's integer-ppm unigram mass, q_w the declared
@@ -1758,8 +1726,7 @@ def contamination_gate(df: DataFrame, n: int = 7, min_hits: int = 1,
 
     Between audits, arriving docs are gated against the PUBLISHED
     flagged-gram artifact instead — ``contamination_gate_declared``
-    (a pure projection, stream-safe) and its streaming twin
-    ``streaming/curation.contamination_gate_stream``.
+    (a pure projection).
 
     Returns (id, group, flagged_hits, gate_flag).
     """
@@ -1794,12 +1761,11 @@ def contamination_gate_declared(df: DataFrame, flagged_grams: list[str],
     ``source_divergence_declared``'s profile and the quality gate's
     weights: artifact refreshes enter through a redeploy, never
     through corpus statistics computed in-flight, so a replayed batch
-    and a restarted stream quarantine identical docs.
+    quarantines identical docs.
 
     Pure per-row projection — ``array_intersect`` of the doc's
     distinct shingles with the literal artifact array: no shuffle, no
-    state, no join, which is what makes the streaming twin a plain
-    append-mode stream (and at 100 TB a map-only pass). The artifact
+    state, no join (at 100 TB a map-only pass). The artifact
     is validated at build time: non-empty, every gram exactly ``n``
     space-separated tokens (a wrong-width gram can never match — a
     silent dead artifact is a deploy bug, so it raises loudly).

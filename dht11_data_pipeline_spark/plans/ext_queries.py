@@ -2178,8 +2178,7 @@ def text_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashed-unigram feature buckets score each document against the
     shipped v1 weight table, and the mean-token-weight threshold
     (25 milli) gates it. Pure per-row projection — zero shuffles at
-    any corpus size; the streaming twin
-    (streaming/curation.quality_gate_stream) is the same expression."""
+    any corpus size."""
     docs = load_table(spark, sf_dir, "documents")
     w = textops.declared_weight_buckets(textops.QUALITY_WORD_WEIGHTS_V1)
     return textops.quality_classifier_score(docs, w, threshold_milli=25)
@@ -2362,9 +2361,7 @@ def text_source_divergence_declared(spark: SparkSession,
     """Per-source TV drift against the DECLARED v1 reference profile —
     the between-audits monitor form of text_source_divergence: one
     (source, word) shuffle plus a literal map lookup, no corpus-wide
-    second aggregate, so the streaming twin
-    (streaming/curation.start_source_divergence_stream) runs the
-    identical expression per micro-batch."""
+    second aggregate."""
     docs = load_table(spark, sf_dir, "documents")
     return textops.source_divergence_declared(
         docs, textops.REFERENCE_UNIGRAM_PPM_V1)

@@ -664,10 +664,10 @@ def j_asof_latest_event_before_order(spark: SparkSession, sf_dir: str) -> DataFr
 
 
 def t5_tumbling_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling-window aggregation over events (SURVEY §2.9 T5) — the
-    batch twin of the streaming windowed agg: 6-hour buckets per
-    event_type. Bucketing via epoch arithmetic (identical in any SQL
-    engine) rather than Spark's window() struct so the oracle matches.
+    """Tumbling-window aggregation over events (SURVEY §2.9 T5):
+    6-hour buckets per event_type. Bucketing via epoch arithmetic
+    (identical in any SQL engine) rather than Spark's window() struct
+    so the oracle matches.
 
     Scale: partial agg per (bucket,type) then one small shuffle.
     """

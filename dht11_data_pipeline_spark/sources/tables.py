@@ -32,29 +32,27 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     with integer division (``div`` keeps full int64 precision — a double
     divide would lose up to ~256ns on 2024 epochs and break the DuckDB
     differential compare, whose oracle casts TIMESTAMP_NS → TIMESTAMP
-    with the same truncation).
+    with the same truncation). The nanos-as-long conf is set before
+    every read, not only the events one, so every memoized schema is
+    inferred under the same setting.
     """
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = _read(spark, f"{sf_dir}/{name}.parquet")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = _read(spark, f"{sf_dir}/{name}.parquet")
+    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         from pyspark.sql import functions as F
-        if dict(df.dtypes).get("ts") == "bigint":
-            df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-        return df
-    return _read(spark, f"{sf_dir}/{name}.parquet")
+        df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+    return df
 
 
 def _read(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet(path)`` with the inferred schema memoized on
-    the identity of the path's files and on nanosAsLong, which turns a
-    nanosecond timestamp into a bigint. A path the driver cannot stat
-    is inferred on every read."""
+    the identity of the path's files. A path the driver cannot stat is
+    inferred on every read."""
     try:
         files = _file_identity(path)
     except OSError:
         return spark.read.parquet(path)
-    nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
-    return spark.read.schema(_inferred(spark, path, files, nanos)).parquet(path)
+    return spark.read.schema(_inferred(spark, path, files)).parquet(path)
 
 
 def _file_identity(path: str) -> tuple:
@@ -68,10 +66,9 @@ def _file_identity(path: str) -> tuple:
 
 
 @functools.lru_cache(maxsize=256)
-def _inferred(spark: SparkSession, path: str, files: tuple,
-              nanos: str | None) -> StructType:
-    """The schema Spark infers for ``path``; ``files`` and ``nanos``
-    are memo key only."""
+def _inferred(spark: SparkSession, path: str, files: tuple) -> StructType:
+    """The schema Spark infers for ``path``; ``files`` is memo key
+    only."""
     return spark.read.parquet(path).schema
 
 

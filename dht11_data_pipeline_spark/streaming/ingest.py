@@ -22,7 +22,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
 
 from dht11_data_pipeline_spark.sources.firebase_tree import EPOCH_SENTINEL
 
@@ -51,25 +50,6 @@ def read_reading_stream(spark: SparkSession, path: str,
     group). ``maxFilesPerTrigger`` bounds batch size — the streaming
     analogue of the reference's one-day batch window."""
     return _read_json_stream(spark, READING_SCHEMA, path, max_files_per_trigger)
-
-
-def start_file_stream(spark: SparkSession, schema: T.StructType | str,
-                      source_path: str, checkpoint_dir: str, process,
-                      max_files_per_trigger: int | None,
-                      available_now: bool) -> StreamingQuery:
-    """The micro-batch sink every JSON-lines file stream shares: read
-    ``source_path`` with a fixed ``schema`` (no inference pass), hand
-    each micro-batch to ``process(batch_df, batch_id)`` through
-    ``foreachBatch``, and keep the source offsets in ``checkpoint_dir``.
-    ``available_now`` drains what is there and stops; otherwise the
-    query runs until stopped."""
-    writer = (_read_json_stream(spark, schema, source_path,
-                                max_files_per_trigger)
-              .writeStream.foreachBatch(process)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def typed_readings(raw: DataFrame, watermark: str | None = "1 hour") -> DataFrame:

@@ -36,7 +36,7 @@ from pyspark.sql.utils import AnalysisException
 
 from dht11_data_pipeline_spark.operators.rollup import merge_rollups, read_rollup, rollup_batch
 from dht11_data_pipeline_spark.streaming.historize import _recover_target, swap_target
-from dht11_data_pipeline_spark.streaming.ingest import start_file_stream
+from dht11_data_pipeline_spark.streaming.ingest import _read_json_stream
 
 EVENT_SCHEMA = T.StructType([
     T.StructField("event_id", T.LongType()),
@@ -70,8 +70,13 @@ def start_rollup_stream(spark: SparkSession, source_path: str,
         rollup_batch(_with_grain(batch_df), keys).write.mode("overwrite").parquet(
             f"{state_dir}/partials/b{batch_id}")
 
-    return start_file_stream(spark, EVENT_SCHEMA, source_path, checkpoint_dir,
-                             _process, max_files_per_trigger, available_now)
+    writer = (_read_json_stream(spark, EVENT_SCHEMA, source_path,
+                                max_files_per_trigger)
+              .writeStream.foreachBatch(_process)
+              .option("checkpointLocation", checkpoint_dir))
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def read_partials(spark: SparkSession, state_dir: str) -> DataFrame:

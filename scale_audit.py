@@ -73,7 +73,7 @@ shuffle-partition size.
   (≤ thousands here) never approaches partition counts where that breaks.
 - **Dim joins (q3/q5/q18/j1)**: region/nation/customer-filtered sides stay
   ≤ GBs at 100 TB -> broadcast; the fact table is shuffled at most once
-  (or zero times with bucketed tables — operators/bucketing.py). AQE's
+  (or zero times with tables bucketed on the join key). AQE's
   runtime size check demotes broadcast to SMJ automatically if a "dim"
   grows past the threshold.
 - **SCD2 delta (j2)**: one full-outer SMJ on the natural key = 2 shuffles

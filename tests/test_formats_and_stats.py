@@ -82,24 +82,3 @@ def test_merge_schema_read_across_generations(spark, sf_dir, tmp_path):
     v1 = back.filter(F.col("gen") == 1)
     assert v1.filter(F.col("o_orderpriority").isNull()).count() == v1.count()
     assert back.filter(F.col("o_channel") == "web").count() == o.filter(F.col("o_orderkey") % 2 == 1).count()
-
-
-def test_partition_retention_is_metadata_only(spark, sf_dir, tmp_path):
-    """TTL expiry drops whole partition directories by value — survivors
-    are untouched (operators/retention.py)."""
-    from dht11_data_pipeline_spark.operators.retention import expire_before, list_partitions
-
-    ev = load_table(spark, sf_dir, "events").withColumn(
-        "day", F.date_trunc("day", "ts").cast("date").cast("string"))
-    path = str(tmp_path / "events_by_day")
-    ev.write.partitionBy("day").parquet(path)
-    days = sorted(v for v, _ in list_partitions(path, "day"))
-    cutoff = days[len(days) // 2]
-    expired = expire_before(path, "day", cutoff)
-    assert expired == [d for d in days if d < cutoff]
-    back = spark.read.parquet(path)
-    assert back.filter(F.col("day") < cutoff).count() == 0
-    keep = ev.filter(F.col("day") >= cutoff).count()
-    assert back.count() == keep
-    # idempotent: second run finds nothing to do
-    assert expire_before(path, "day", cutoff) == []

@@ -106,6 +106,23 @@ def test_fused_assign_recompute_matches_two_pass(spark, sf_dir):
         np.testing.assert_allclose(gv, rv, rtol=1e-12, atol=0)
 
 
+def test_fused_assign_recompute_matches_two_pass_on_double_vectors(spark):
+    """An array<double> corpus: assign_clusters hands _recompute the
+    vectors as array<float>, so the fused pass must round them the same
+    way; on one Arrow batch per partition the centroids are then
+    exactly equal."""
+    from dht11_data_pipeline_spark.operators.kmeans import (
+        _assign_recompute, _recompute, assign_clusters)
+    rng = np.random.default_rng(7)
+    rows = [(i, [float(x) for x in rng.normal(size=4) / 3.0])
+            for i in range(200)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    cents = [(0, rows[0][1]), (1, rows[1][1]), (2, rows[2][1])]
+    ref = _recompute(assign_clusters(emb, cents), "embedding")
+    got = _assign_recompute(emb, cents, "vec_id", "embedding")
+    assert got == ref
+
+
 def test_lloyd_rejects_assigned_without_centroids(spark, sf_dir):
     import pytest
     from dht11_data_pipeline_spark.operators.kmeans import (

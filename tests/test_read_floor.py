@@ -149,18 +149,31 @@ def test_read_pass_job_budget(spark, sf_dir):
     """One warm pass over the ``query_pass`` keys, each built and
     written to a ``noop`` sink, stays within its measured job budget,
     so a change that adds a Spark job to the read side fails here."""
-    registry = entry.queries()
-
-    def one_pass():
-        for k in READ_PASS_KEYS:
-            (registry[k](spark, sf_dir)
-             .write.format("noop").mode("overwrite").save())
-
-    # the first events load sets nanosAsLong, a key of the schema memo;
-    # set it up front so the cold pass leaves every table memoized
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    one_pass()  # cold: schema inference, codegen
+    _read_pass(spark, sf_dir)  # cold: schema inference, codegen
     with _job_count(spark) as jobs:
-        one_pass()
+        _read_pass(spark, sf_dir)
     assert jobs[0] <= READ_PASS_JOB_BUDGET, jobs
 
+
+def test_second_read_pass_runs_no_more_jobs_than_the_third(
+        spark, sf_dir, tmp_path):
+    """From a session that has read none of the tables and has the
+    parquet nanos-as-long conf at its default, the cold pass leaves
+    every table memoized: no table is inferred again in a later pass
+    because an events load changed a conf between two reads."""
+    tables = str(tmp_path / "tables")
+    shutil.copytree(sf_dir, tables)
+    spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    passes = []
+    for _ in range(3):
+        with _job_count(spark) as jobs:
+            _read_pass(spark, tables)
+        passes.append(jobs[0])
+    assert passes[1] <= passes[2], passes
+
+
+def _read_pass(spark, sf_dir):
+    registry = entry.queries()
+    for k in READ_PASS_KEYS:
+        (registry[k](spark, sf_dir)
+         .write.format("noop").mode("overwrite").save())

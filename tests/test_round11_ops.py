@@ -77,8 +77,8 @@ def test_quality_classifier_validates_inputs(spark):
 
 def test_quality_classifier_shuffle_free(spark, sf_dir):
     """The scoring plan must stay a pure projection — no Exchange, no
-    aggregation: that is the property that makes the streaming twin
-    the same expression and the 100 TB cost one linear scan."""
+    aggregation: that is the property that makes the 100 TB cost one
+    linear scan."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     w = textops.declared_weight_buckets(textops.QUALITY_WORD_WEIGHTS_V1)
     plan = textops.quality_classifier_score(docs, w)._jdf \

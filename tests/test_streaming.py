@@ -1,5 +1,5 @@
-"""Structured Streaming surface: ingest typing, watermarked windows,
-in-stream dedup, and the foreachBatch SCD2 sink (SURVEY §2.9 T1-T5).
+"""Structured Streaming surface: ingest typing, in-stream dedup,
+the stream-static join and the foreachBatch SCD2 sink (SURVEY §2.9 T1-T5).
 
 Strategy: file-source streams over tmpdir JSON lines, drained with
 ``trigger(availableNow=True)`` into memory/parquet sinks; results are
@@ -12,16 +12,12 @@ from __future__ import annotations
 import json
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 from dht11_data_pipeline_spark.operators.scd2 import SCD2Config
 from dht11_data_pipeline_spark.streaming.historize import start_scd2_stream
 from dht11_data_pipeline_spark.streaming.ingest import (
     READING_SCHEMA, deduplicated_readings, read_reading_stream, typed_readings,
-)
-from dht11_data_pipeline_spark.streaming.windows import (
-    session_stats, sliding_stats, tumbling_stats,
 )
 
 R1 = [
@@ -81,23 +77,6 @@ def test_typed_reading_stream_matches_batch(spark, tmp_path):
     assert ("D2", "1970-01-01 00:00:00") in by_dev
 
 
-@pytest.mark.parametrize("mk_window,qname", [
-    (lambda df: tumbling_stats(df, "10 minutes"), "tumbling"),
-    (lambda df: sliding_stats(df, "10 minutes", "5 minutes"), "sliding"),
-    (lambda df: session_stats(df, "30 minutes"), "session"),
-])
-def test_windowed_aggs_match_batch(spark, tmp_path, mk_window, qname):
-    src = str(tmp_path / "feed")
-    _write_jsonl(src, "r1.json", R1)
-    _write_jsonl(src, "r2.json", R2)
-    stream = mk_window(typed_readings(read_reading_stream(spark, src)))
-    _drain_to_memory(stream, spark, f"win_{qname}")
-    got = {tuple(r) for r in spark.table(f"win_{qname}").collect()}
-    want = {tuple(r) for r in mk_window(_batch_readings(spark, src)).collect()}
-    assert got == want
-    assert got, "window agg produced no rows"
-
-
 def test_stream_dedup_drops_natural_key_duplicates(spark, tmp_path):
     src = str(tmp_path / "feed")
     _write_jsonl(src, "r1.json", R1)
@@ -116,50 +95,6 @@ def test_stream_dedup_drops_natural_key_duplicates(spark, tmp_path):
     assert out.count() == 5
     assert out.select("device_id", "ts").distinct().count() == 5
     assert out.filter(F.col("ts") == "1970-01-01 00:00:00").count() == 0
-
-
-def test_stream_stream_interval_join(spark, tmp_path):
-    """Two watermarked streams joined on key + time range; result equals
-    the same join run in batch over the same data."""
-    from pyspark.sql import types as T
-    from dht11_data_pipeline_spark.streaming.windows import enrich_with_alerts
-
-    r_src = str(tmp_path / "readings")
-    a_src = str(tmp_path / "alerts")
-    _write_jsonl(r_src, "r.json", R1)
-    alert_schema = T.StructType([
-        T.StructField("device_id", T.StringType()),
-        T.StructField("ts", T.StringType()),
-        T.StructField("alert_kind", T.StringType()),
-    ])
-    alerts_rows = [
-        # matches D1 readings at 11:30:35 and 11:35:35 (within 10 min)
-        {"device_id": "D1", "ts": "2024-05-05 11:28:00", "alert_kind": "hot"},
-        # matches nothing (no D2 reading within 10 min after it)
-        {"device_id": "D2", "ts": "2024-05-05 09:00:00", "alert_kind": "cold"},
-    ]
-    _write_jsonl(a_src, "a.json", alerts_rows)
-
-    def typed_alerts(df):
-        return df.select("device_id", F.to_timestamp("ts").alias("ts"),
-                         "alert_kind")
-
-    r_stream = typed_readings(read_reading_stream(spark, r_src))
-    a_stream = typed_alerts(
-        spark.readStream.schema(alert_schema).json(a_src)
-    ).withWatermark("ts", "1 hour")
-    joined = enrich_with_alerts(r_stream, a_stream, "10 minutes")
-    q = (joined.writeStream.format("memory").queryName("enriched")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = {tuple(r) for r in spark.table("enriched").collect()}
-
-    r_batch = _batch_readings(spark, r_src)
-    a_batch = typed_alerts(spark.read.schema(alert_schema).json(a_src))
-    want = {tuple(r) for r in enrich_with_alerts(r_batch, a_batch, "10 minutes").collect()}
-    assert got == want
-    assert len(got) == 2
-    assert all(r[4] == "hot" for r in got)
 
 
 def test_scd2_stream_two_batches(spark, tmp_path):
