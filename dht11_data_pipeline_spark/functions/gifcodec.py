@@ -18,7 +18,7 @@ evidence: a single wrong LZW code, width bump, or sub-block boundary
 scrambles every later pixel.
 
 Reference repo has no multimodal surface at all; this extends the
-image family (imagecodec.py PPM/BMP/PNG, jpegcodec.py baseline JPEG)
+image family (imagecodec.py PPM/PNG, jpegcodec.py baseline JPEG)
 per SURVEY §2 extensions.
 """
 

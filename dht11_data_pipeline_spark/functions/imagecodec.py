@@ -1,9 +1,9 @@
 """Pure-Python image codec for the multimodal operators: binary PPM
-(P6) encode/decode, BMP header decode, nearest-neighbor resize, and a
-real zlib-backed PNG (8-bit RGB) encoder/decoder.
+(P6) encode/decode, nearest-neighbor resize, and a real zlib-backed
+PNG (8-bit RGB) encoder/decoder.
 
 The container has no PIL/libjpeg, but stdlib ``zlib`` covers PNG's
-deflate layer, and PPM and BMP are trivial enough to implement, which
+deflate layer, and PPM is trivial enough to implement, which
 turns the multimodal decode path from a stub into a real end-to-end
 pipeline (encode -> decode -> resize -> re-encode), with every step
 verifiable byte-for-byte. At scale these functions run inside Arrow
@@ -14,8 +14,6 @@ Format notes:
   PPM P6 (netpbm): header ``P6\\n<w> <h>\\n<maxval>\\n`` then w*h*3
     RGB bytes. Whitespace/comment handling per the netpbm spec
     (any whitespace separates tokens; ``#`` starts a comment).
-  BMP: 14-byte file header ('BM', little-endian sizes) + BITMAPINFO
-    header; width/height/bpp at fixed offsets 18/22/28.
 """
 
 from __future__ import annotations
@@ -71,43 +69,6 @@ def decode_ppm(payload: bytes) -> tuple[int, int, bytes]:
     if len(rgb) != need:
         raise ValueError(f"truncated PPM: {len(rgb)} of {need} pixel bytes")
     return width, height, rgb
-
-
-def decode_bmp_header(payload: bytes) -> tuple[int, int, int]:
-    """(width, height, bits-per-pixel) from a BMP file header. Height
-    is returned as magnitude (negative height = top-down rows)."""
-    if payload[:2] != b"BM" or len(payload) < 30:
-        raise ValueError("not a BMP")
-    width = int.from_bytes(payload[18:22], "little", signed=True)
-    height = int.from_bytes(payload[22:26], "little", signed=True)
-    bpp = int.from_bytes(payload[28:30], "little")
-    return width, abs(height), bpp
-
-
-def sniff(payload: bytes) -> str | None:
-    """'ppm' | 'bmp' | 'png' | None."""
-    if payload[:2] == b"P6":
-        return "ppm"
-    if payload[:2] == b"BM":
-        return "bmp"
-    if payload[:8] == b"\x89PNG\r\n\x1a\n":
-        return "png"
-    return None
-
-
-def decode_dims(payload: bytes) -> tuple[int, int]:
-    """(width, height) of any supported format."""
-    kind = sniff(payload)
-    if kind == "ppm":
-        w, h, _ = decode_ppm(payload)
-        return w, h
-    if kind == "bmp":
-        w, h, _ = decode_bmp_header(payload)
-        return w, h
-    if kind == "png":
-        w, h, _ = decode_png(payload)
-        return w, h
-    raise ValueError("unsupported image format")
 
 
 def resize_nn_ppm(payload: bytes, out_w: int, out_h: int) -> bytes:

@@ -23,7 +23,7 @@ code — pinned by a non-constant-block roundtrip test against an
 independent numpy DCT reference.
 
 Reference repo has no multimodal surface at all; this extends the
-image family (imagecodec.py: PPM/BMP/PNG) per SURVEY §2 extensions.
+image family (imagecodec.py: PPM/PNG) per SURVEY §2 extensions.
 """
 
 from __future__ import annotations

@@ -59,28 +59,3 @@ def make_planes(n_planes: int, dim: int,
             row.append(1 if (state >> 33) & 1 else -1)
         planes.append(row)
     return planes
-
-
-def cosine_pandas_udf():
-    """Vectorized (Arrow/numpy) cosine as a scalar pandas_udf — the
-    alternative implementation the engine offers where the interpreted
-    higher-order ``cosine`` becomes the bottleneck (very wide vectors,
-    huge pair counts). numpy's fused C loops trade JVM-side execution
-    for BLAS-grade throughput; results match ``cosine`` to double
-    round-off (both sum in order for 64-dim this is ulp-identical in
-    practice — verified by test_vectors_pandas)."""
-    global pd  # annotations resolve against module globals
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def _cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        am = np.stack(a.to_numpy())
-        bm = np.stack(b.to_numpy())
-        num = np.einsum("ij,ij->i", am, bm, dtype=np.float64)
-        den = (np.sqrt(np.einsum("ij,ij->i", am, am, dtype=np.float64))
-               * np.sqrt(np.einsum("ij,ij->i", bm, bm, dtype=np.float64)))
-        return pd.Series(num / den)
-
-    return _cos

@@ -34,20 +34,20 @@ def parquet_file_count(path: str) -> int:
     return n
 
 
-def compact(spark: SparkSession, path: str, target_mb: int = 128,
+def compact(spark: SparkSession, path: str, target_mb: float = 128,
             sort_by: list[str] | None = None,
             zorder_by: list[str] | None = None,
             quantile_bits: int = 0) -> int:
-    """Rewrite ``path`` into ceil(bytes/target_mb) files; returns the
-    new file count. ``sort_by`` orders rows within (and across) the new
-    files so min/max stats prune reads on those columns; ``zorder_by``
+    """Rewrite ``path`` into ceil(bytes/target_mb) files (``target_mb``
+    may be fractional); returns the new file count. ``sort_by`` orders
+    rows within (and across) the new files so min/max stats prune
+    reads on those columns; ``zorder_by``
     clusters on the Morton curve instead so min/max stats prune on
     EVERY listed column (operators/layout) — compaction time is when a
     100 TB deployment applies layout, so the two compose here."""
     if sort_by and zorder_by:
         raise ValueError("choose one of sort_by / zorder_by")
-    n_files = max(1, (dir_bytes(path) + target_mb * 1024 * 1024 - 1)
-                  // (target_mb * 1024 * 1024))
+    n_files = max(1, int(-(-dir_bytes(path) // (target_mb * 1024 * 1024))))
     df = spark.read.parquet(path)
     if zorder_by:
         from dht11_data_pipeline_spark.operators.layout import zorder_key

@@ -173,10 +173,6 @@ class ControlTable:
         return Row(**{k: v.replace(tzinfo=None) if isinstance(v, dt.datetime)
                       else v for k, v in latest.items()})
 
-    def next_load_key(self, interface_cd: str) -> int:
-        prev = self.previous_run(interface_cd)
-        return (int(prev["load_key"]) if prev else 0) + 1
-
     # -- writes --------------------------------------------------------
 
     def register_interface(self, interface_cd: str, interface_nm: str) -> None:

@@ -31,29 +31,14 @@ def item_affinity(df: DataFrame, user_col: str = "user_id",
                   item_col: str = "event_type",
                   max_items_per_user: int | None = 1000) -> DataFrame:
     """Unordered item pairs (item_a < item_b) with: n_users sharing
-    both, dot product of count vectors, and cosine affinity."""
-    counts = df.groupBy(user_col, item_col).agg(F.count(F.lit(1)).alias("n"))
-    return item_affinity_from_counts(counts, user_col, item_col, "n",
-                                     max_items_per_user)
+    both, dot product of count vectors, and cosine affinity.
 
-
-def item_affinity_from_counts(counts: DataFrame, user_col: str = "user_id",
-                              item_col: str = "event_type",
-                              n_col: str = "n",
-                              max_items_per_user: int | None = 1000) -> DataFrame:
-    """Affinity over a precomputed (user, item) -> count matrix — the
-    entry point an INCREMENTAL pipeline uses: the count matrix is a sum
-    monoid, so a streaming rollup (streaming/rollup.py) maintains it
-    per-batch and this view re-derives affinities from merged partials
-    without ever rescanning history.
-
-    The matrix feeds four consumers (both join sides + both norm
-    lookups) and pre-AQE Spark does NOT reuse that exchange, so it
-    persists for the computation; the returned frame is an eager
-    localCheckpoint of the |items|^2-row result, letting the cache
-    release before return (no lingering executor memory)."""
-    m = counts.select(F.col(user_col), F.col(item_col),
-                      F.col(n_col).cast("bigint").alias("n"))
+    The (user, item) -> count matrix feeds four consumers (both join
+    sides + both norm lookups) and pre-AQE Spark does NOT reuse that
+    exchange, so it persists for the computation; the returned frame is
+    an eager localCheckpoint of the |items|^2-row result, letting the
+    cache release before return (no lingering executor memory)."""
+    m = df.groupBy(user_col, item_col).agg(F.count(F.lit(1)).alias("n"))
     if max_items_per_user is not None:
         # deterministic hash-rank truncation: every engine/run keeps the
         # SAME items for a power user (xxhash64 order, item tiebreak) —

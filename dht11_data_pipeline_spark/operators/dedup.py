@@ -285,10 +285,10 @@ def minhash_incremental_pairs(corpus: DataFrame, sig_store: DataFrame,
     touching a new doc.
     """
     # localCheckpoint (not persist): the new batch's signatures feed
-    # BOTH join sides, but this function runs once per micro-batch in
-    # the dedup streams — a persist would pin one SQL cache entry per
-    # batch forever, while a checkpointed copy is released by the
-    # context cleaner once the batch's DataFrames go out of scope
+    # BOTH join sides, and a caller runs this once per ingestion batch
+    # — a persist would pin one SQL cache entry per batch forever,
+    # while a checkpointed copy is released by the context cleaner
+    # once the batch's DataFrames go out of scope
     new_sigs = minhash_signature(
         new_docs, text_col, id_col, n, num_hashes).localCheckpoint()
     all_sigs = sig_store.unionByName(new_sigs)

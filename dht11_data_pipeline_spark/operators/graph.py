@@ -200,32 +200,6 @@ def cluster_documents(docs: DataFrame, pairs: DataFrame,
     )
 
 
-def update_components(labels: DataFrame, new_pairs: DataFrame,
-                      a_col: str = "doc_a", b_col: str = "doc_b") -> DataFrame:
-    """Incremental component maintenance: fold a NEW batch of edges
-    into an existing (node, cluster_id) label table without re-reading
-    the original edge set.
-
-    Standard contraction argument: an existing label (node -> root) is
-    itself an edge of a star-shaped graph with identical connectivity,
-    so components over (labels-as-edges ∪ new edges) equal components
-    over (all old edges ∪ new edges). Cost is O(|labels| + |batch|)
-    — independent of how many ORIGINAL edges produced the labels —
-    and the star input converges in very few rounds. This is the
-    label-store twin of dedup.minhash_incremental_pairs: keep the
-    label table per corpus, fold each ingestion batch's near-dup pairs
-    in as they arrive."""
-    label_edges = (labels.filter(F.col("node") != F.col("cluster_id"))
-                   .select(F.col("node").alias(a_col),
-                           F.col("cluster_id").alias(b_col)))
-    merged = label_edges.unionByName(new_pairs.select(a_col, b_col))
-    updated = connected_components(merged, a_col, b_col)
-    # carry forward singleton labels for nodes untouched by any edge
-    carried = (labels.join(updated.select(F.col("node").alias("_n")),
-                           labels.node == F.col("_n"), "left_anti"))
-    return updated.unionByName(carried.select("node", "cluster_id"))
-
-
 def _collect_canonical(pairs: DataFrame, a_col: str, b_col: str,
                        assume_canonical: bool,
                        small_edge_limit: int):
@@ -538,90 +512,6 @@ def _triangles_per_node(und: DataFrame, deg: DataFrame) -> DataFrame:
            .localCheckpoint(eager=True))
     oriented.unpersist()
     return out
-
-
-def update_triangle_counts(counts: DataFrame, old_pairs: DataFrame,
-                           new_pairs: DataFrame, a_col: str = "id_a",
-                           b_col: str = "id_b",
-                           assume_canonical: bool = False) -> DataFrame:
-    """Incremental triangle maintenance: fold a NEW batch of edges into
-    an existing per-node (node, n_triangles) table — the wedge-count
-    twin of ``update_components``.
-
-    A triangle is NEW iff it contains at least one batch edge, so delta
-    enumeration anchors on the batch: for each truly-new edge (x, y),
-    candidate closers are N(x) in the merged graph, kept when the
-    (z, y) closing edge exists. Each new triangle can be reached from
-    up to three new edges, so candidates are canonicalized to the
-    sorted (t1 < t2 < t3) triple and deduped BEFORE counting — exact
-    counts whether one, two, or all three of a triangle's edges arrived
-    in the batch. Re-delivered edges (already in the old set) are
-    anti-joined away first, so replaying a batch is idempotent.
-
-    Cost: Σ_{(x,y)∈batch} deg(x) candidate rows + one semi-join against
-    the merged edge set — independent of the FULL graph's Σ deg² wedge
-    volume that ``triangle_counts`` pays, which is the entire point of
-    keeping the count table between ingestion batches. Incremental ==
-    recompute is pinned in tests/test_round6_ops.py."""
-    old = _canonical_edges(old_pairs, a_col, b_col, assume_canonical)
-    batch = _canonical_edges(new_pairs, a_col, b_col, False)
-    d = batch.join(old, ["x", "y"], "left_anti").persist()
-    merged = old.unionByName(d).persist()
-    sym = (merged.select(F.col("x").alias("u"), F.col("y").alias("n"))
-           .unionAll(merged.select(F.col("y").alias("u"),
-                                   F.col("x").alias("n"))))
-    # z in N(x), z != y, with the (z, y) closing edge present
-    cand = (d.join(sym, d["x"] == sym["u"])
-            .select("x", "y", F.col("n").alias("z"))
-            .filter(F.col("z") != F.col("y"))
-            .join(merged.select(F.col("x").alias("_cx"),
-                                F.col("y").alias("_cy")),
-                  (F.least("z", "y") == F.col("_cx"))
-                  & (F.greatest("z", "y") == F.col("_cy")),
-                  "left_semi"))
-    tris = (cand.select(F.sort_array(F.array("x", "y", "z")).alias("t"))
-            .distinct()
-            .select(F.col("t")[0].alias("t1"), F.col("t")[1].alias("t2"),
-                    F.col("t")[2].alias("t3")))
-    delta = (tris.select(F.explode(F.array("t1", "t2", "t3")).alias("node"))
-             .groupBy("node").agg(F.count(F.lit(1)).alias("d_tri")))
-    out = (
-        counts.select("node", "n_triangles")
-        .join(delta, "node", "full_outer")
-        .select(
-            "node",
-            (F.coalesce(F.col("n_triangles"), F.lit(0))
-             + F.coalesce(F.col("d_tri"), F.lit(0))).alias("n_triangles"))
-        .localCheckpoint(eager=True))
-    d.unpersist()
-    merged.unpersist()
-    return out
-
-
-def update_clustering_coefficient(counts: DataFrame, old_pairs: DataFrame,
-                                  new_pairs: DataFrame, a_col: str = "id_a",
-                                  b_col: str = "id_b",
-                                  assume_canonical: bool = False) -> DataFrame:
-    """Incremental clustering coefficient: triangle counts maintained
-    via ``update_triangle_counts`` (the quadratic-fan-out part);
-    degrees re-derived in ONE linear scan of the merged edge set (no
-    wedge enumeration — degree is a plain groupBy-count, cheap at any
-    scale). Output schema matches ``clustering_coefficient``."""
-    tri = update_triangle_counts(counts, old_pairs, new_pairs,
-                                 a_col, b_col, assume_canonical)
-    old = _canonical_edges(old_pairs, a_col, b_col, assume_canonical)
-    batch = _canonical_edges(new_pairs, a_col, b_col, False)
-    merged = old.unionByName(batch).distinct()
-    deg = _degrees(merged)
-    return (
-        deg.filter(F.col("deg") >= 2)
-        .join(tri, "node", "left")
-        .select(
-            "node", "deg",
-            F.coalesce(F.col("n_triangles"), F.lit(0)).alias("n_triangles"))
-        .withColumn(
-            "cc_ppm",
-            F.expr("2 * n_triangles * 1000000 DIV (deg * (deg - 1))")))
 
 
 def _pair_similarity_driver(edge_rows: list[tuple],

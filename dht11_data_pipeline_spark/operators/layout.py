@@ -10,17 +10,18 @@ reference's landing layer rewrites wholesale each load —
 STG_Firebase2Oracle.py:99-119 — which is exactly when you'd apply it).
 
 All Spark-side: bounds come from one metadata-scale aggregate, the
-curve key is a pure column expression (codegen), and the write is
+curve key is a pure column expression (codegen), and the write
+(``compact(zorder_by=...)``, operators/compact.py) is
 ``repartitionByRange`` on the key — a single range shuffle, the same
-cost as any sorted write. Linear min-max bucketization is used for
-cell assignment (cheap, stateless); heavily skewed dimensions would
-use quantile bounds instead (same plan shape, driver-side quantile
-probe) — documented, not silently applied.
+cost as any sorted write. Linear min-max bucketization is the default
+cell assignment (cheap, stateless); heavily skewed dimensions opt into
+quantile bounds with ``quantile_bits`` (same plan shape, one
+driver-side quantile probe) — never applied silently.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -113,40 +114,3 @@ def zorder_key(df: DataFrame, cols: list[str], bits: int = 16,
         for i, n in enumerate(nums)
     ]
     return _interleave(cells, bits)
-
-
-def write_zordered(df: DataFrame, path: str, cols: list[str],
-                   n_files: int = 16, bits: int = 16,
-                   quantile_bits: int = 0) -> None:
-    """Cluster ``df`` on the Z-order curve of ``cols`` and write
-    parquet: range-partition on the key (one shuffle; contiguous curve
-    ranges per file) and sort within partitions so row groups inside a
-    file are dense too."""
-    key = zorder_key(df, cols, bits, quantile_bits)
-    (
-        df.withColumn("_zkey", key)
-        .repartitionByRange(n_files, "_zkey")
-        .sortWithinPartitions("_zkey")
-        .drop("_zkey")
-        .write.mode("overwrite").parquet(path)
-    )
-
-
-def file_minmax(spark: SparkSession, path: str, cols: list[str]) -> DataFrame:
-    """Per-file min/max of ``cols`` — the same stats parquet footers
-    carry, surfaced as a DataFrame for skipping audits/tests."""
-    df = spark.read.parquet(path).withColumn("_f", F.input_file_name())
-    aggs = []
-    for c in cols:
-        aggs += [F.min(c).alias(f"min_{c}"), F.max(c).alias(f"max_{c}")]
-    return df.groupBy("_f").agg(*aggs)
-
-
-def overlap_fraction(stats: DataFrame, col: str, lo, hi) -> float:
-    """Fraction of files whose [min,max] for ``col`` intersects
-    [lo, hi] — an upper bound on the files a reader must open."""
-    total = stats.count()
-    hit = stats.filter(
-        (F.col(f"min_{col}") <= F.lit(hi)) & (F.col(f"max_{col}") >= F.lit(lo))
-    ).count()
-    return hit / max(total, 1)

@@ -95,36 +95,3 @@ def blocked_fuzzy_pairs(df: DataFrame, block_cols: list[str],
             .alias("match_grade"),
         )
     )
-
-
-def blocked_fuzzy_join(left: DataFrame, right: DataFrame,
-                       block_cols: list[str], left_text: str,
-                       right_text: str, left_id: str, right_id: str,
-                       max_dist: int = 2) -> DataFrame:
-    """Two-table variant: link every left row to the right rows in its
-    block within ``max_dist`` edits (deduplication's sibling: linkage
-    across sources)."""
-    # same dedupe-then-link shape as blocked_fuzzy_pairs: DP over the
-    # two vocabularies, id expansion through equi-joins; each side
-    # feeds two consumers (vocabulary + expansion) so each projection
-    # materializes once (same localCheckpoint rationale as the
-    # self-pair variant)
-    a = left.select(*block_cols, F.col(left_id).alias("left_id"),
-                    F.col(left_text).alias("left_text")).localCheckpoint()
-    b = right.select(*block_cols, F.col(right_id).alias("right_id"),
-                     F.col(right_text).alias("right_text")).localCheckpoint()
-    na = a.select(*block_cols, "left_text").distinct()
-    nb = b.select(*block_cols, "right_text").distinct()
-    cand = (
-        na.join(nb, block_cols)
-        .filter(F.abs(F.length("left_text") - F.length("right_text"))
-                <= max_dist)
-        .withColumn("dist", F.levenshtein("left_text", "right_text"))
-        .filter(F.col("dist") <= max_dist)
-    )
-    return (
-        cand.join(a, [*block_cols, "left_text"])
-        .join(b, [*block_cols, "right_text"])
-        .select(*block_cols, "left_id", "right_id", "left_text",
-                "right_text", F.col("dist").cast("int").alias("dist"))
-    )

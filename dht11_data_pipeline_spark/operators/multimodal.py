@@ -3,7 +3,7 @@ processed per row over Arrow batches (functions/partitioning.map_rows,
 built on ``mapInArrow``).
 
 Two decode tiers:
-  * REAL: PPM/BMP, PNG (zlib inflate + filter reconstruction), WAV
+  * REAL: PPM, PNG (zlib inflate + filter reconstruction), WAV
     (functions/audiocodec.py), and baseline JPEG (functions/
     jpegcodec.py: Huffman + DCT) via vendored pure-Python codecs —
     actual container parsing and pixel/sample reconstruction, no fake
@@ -55,16 +55,9 @@ def attach_binary_payload(df: DataFrame, text_col: str = "text",
 
 def decode_image_stub(payload: bytes) -> tuple[int, int]:
     """Placeholder for a compressed-format decoder (PIL.Image.open);
-    PPM/BMP decode is REAL via decode_image."""
+    PPM decode is REAL via functions/imagecodec.decode_ppm."""
     n = len(payload)
     return n % 256, (n // 256) % 256  # deterministic fake (width, height)
-
-
-def decode_image(payload: bytes) -> tuple[int, int]:
-    """REAL (width, height) decode for the supported uncompressed
-    formats (P6 PPM, BMP) — no fake branch."""
-    from dht11_data_pipeline_spark.functions.imagecodec import decode_dims
-    return decode_dims(bytes(payload))
 
 
 def attach_image_payload(df: DataFrame, text_col: str = "text",
@@ -230,29 +223,6 @@ def sample_frames(binary_df: DataFrame, frame_size: int = 256,
 
     return map_rows(binary_df.select("doc_id", "payload"), _row,
                     FRAME_SCHEMA)
-
-
-EMBED_SCHEMA = "doc_id long, embedding array<float>"
-
-
-def embed_payloads(binary_df: DataFrame, dim: int = 16) -> DataFrame:
-    """Arrow-batched embedding extraction: binary payload → unit-norm
-    float vector. The embedding model is STUBBED (a normalized byte
-    histogram — deterministic, container has no torch/CLIP); the Spark
-    plumbing is the real thing: Arrow batch shape, array<float>
-    schema, and the output feeds the similarity operators unchanged
-    (attach → embed → cosine_topk/near-dup is the multimodal dedup
-    pipeline at 100 TB).
-    """
-
-    def _row(doc_id, payload):
-        arr = np.frombuffer(payload, dtype=np.uint8)
-        hist = np.bincount(arr % dim, minlength=dim).astype("float64")
-        norm = float(np.linalg.norm(hist))
-        yield doc_id, (hist / norm if norm else hist).astype("float32")
-
-    return map_rows(binary_df.select("doc_id", "payload"), _row,
-                    EMBED_SCHEMA)
 
 
 def attach_audio_payload(df: DataFrame, text_col: str = "text",

@@ -13,7 +13,7 @@ Routing rules (``route``):
 - requested group keys must be a subset of the rollup keys;
 - every requested measure must be one of the derivable ops below;
 - otherwise return None — the caller falls back to the fact scan
-  (``route_or_fact`` packages that fallback).
+  (the ``rollup query`` CLI reports the grain as not servable).
 
 Derivable measures and their re-reductions:
   count_rows  -> SUM(n_events)        sum_value -> SUM(total_value)
@@ -51,29 +51,3 @@ def route(rollup_partials: DataFrame, rollup_keys: list[str],
         return None
     aggs = [_DERIVABLE[op]().alias(out) for out, op in measures.items()]
     return rollup_partials.groupBy(*group_keys).agg(*aggs)
-
-
-def route_or_fact(rollup_partials: DataFrame, rollup_keys: list[str],
-                  fact: DataFrame, group_keys: list[str],
-                  measures: dict[str, str]) -> DataFrame:
-    """Serve from the rollup when possible, else aggregate the fact.
-
-    The fact fallback computes the same measure semantics directly
-    (value cast decimal(18,2) like rollup_batch, so routed and fallback
-    answers are bit-identical where both paths are possible).
-    """
-    routed = route(rollup_partials, rollup_keys, group_keys, measures)
-    if routed is not None:
-        return routed
-    dec = F.col("value").cast("decimal(18,2)")
-    fact_aggs = {
-        "count_rows": lambda: F.count(F.lit(1)).cast("long"),
-        "sum_value": lambda: F.sum(dec).cast("double"),
-        "min_value": lambda: F.min(dec).cast("double"),
-        "max_value": lambda: F.max(dec).cast("double"),
-        "avg_value": lambda: F.sum(dec).cast("double") / F.count(F.lit(1)),
-        "approx_users": lambda: F.hll_sketch_estimate(F.hll_sketch_agg("user_id")),
-        "exact_users": lambda: F.countDistinct("user_id").cast("long"),
-    }
-    aggs = [fact_aggs[op]().alias(out) for out, op in measures.items()]
-    return fact.groupBy(*group_keys).agg(*aggs)

@@ -1,12 +1,11 @@
 """Skew mitigation: salting for hot keys.
 
-AQE's skew-join splitting (on in session.py) handles most skew at
-runtime, but two cases still need explicit salting at 100 TB: (a) a
-groupBy where one key holds a double-digit percent of all rows — AQE
-can't split a single hash-aggregate key; (b) a shuffle join against a
-side too big to broadcast where hot keys would pin single tasks.
+AQE's skew-join splitting (on in session.py) handles skewed joins at
+runtime, but a groupBy where one key holds a double-digit percent of
+all rows still needs explicit salting at 100 TB — AQE can't split a
+single hash-aggregate key.
 
-Both helpers are deterministic given the salt count and preserve exact
+The helper is deterministic given the salt count and preserves exact
 results (salting only re-routes rows; the final combine undoes it).
 """
 
@@ -43,25 +42,3 @@ def salted_aggregate(df: DataFrame, keys: list[str], aggs: dict[str, str],
     return partial.groupBy(*keys).agg(
         *[recombine[how](f"_p_{c}_{how}").alias(f"{c}_{how}")
           for c, how in aggs.items()])
-
-
-def salted_join(big: DataFrame, small: DataFrame, on: list[str],
-                n_salts: int = 8, how: str = "inner") -> DataFrame:
-    """Skew-safe equi-join: salt the big side, replicate the small side
-    once per salt value, join on (keys + salt).
-
-    A hot key's rows spread over ``n_salts`` tasks instead of one; the
-    small side grows n_salts-fold (only viable when it's modest — for a
-    huge-huge skewed join, isolate the hot keys and union a broadcast
-    join for just those). Results are exactly the plain join's.
-
-    Only inner/left joins: the replicated small side would emit one
-    unmatched copy per salt under right/full semantics.
-    """
-    if how not in ("inner", "left", "left_outer", "leftouter"):
-        raise ValueError(f"salted_join supports inner/left joins, got {how!r}")
-    salted_big = big.withColumn("_salt", _salt(n_salts))
-    replicated = small.withColumn(
-        "_salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)])))
-    out = salted_big.join(replicated, [*on, "_salt"], how)
-    return out.drop("_salt")

@@ -1724,10 +1724,6 @@ def contamination_gate(df: DataFrame, n: int = 7, min_hits: int = 1,
     beyond the index build: one pruned corpus scan + one doc-keyed
     aggregate of the index.
 
-    Between audits, arriving docs are gated against the PUBLISHED
-    flagged-gram artifact instead — ``contamination_gate_declared``
-    (a pure projection).
-
     Returns (id, group, flagged_hits, gate_flag).
     """
     if min_hits < 1:
@@ -1746,52 +1742,3 @@ def contamination_gate(df: DataFrame, n: int = 7, min_hits: int = 1,
                     F.when(F.coalesce(F.col("_hits"), F.lit(0))
                            >= min_hits, "QUARANTINE")
                     .otherwise("PASS").alias("gate_flag")))
-
-
-def contamination_gate_declared(df: DataFrame, flagged_grams: list[str],
-                                n: int = 7, min_hits: int = 1,
-                                group_col: str = "source",
-                                text_col: str = "text",
-                                id_col: str = "doc_id",
-                                ) -> DataFrame:
-    """Between-audits contamination gate: arriving documents checked
-    against a DECLARED flagged-gram artifact (the set a periodic
-    ``contamination_gate``/``contamination_index`` audit published) —
-    the same declared-parameter discipline as
-    ``source_divergence_declared``'s profile and the quality gate's
-    weights: artifact refreshes enter through a redeploy, never
-    through corpus statistics computed in-flight, so a replayed batch
-    quarantines identical docs.
-
-    Pure per-row projection — ``array_intersect`` of the doc's
-    distinct shingles with the literal artifact array: no shuffle, no
-    state, no join (at 100 TB a map-only pass). The artifact
-    is validated at build time: non-empty, every gram exactly ``n``
-    space-separated tokens (a wrong-width gram can never match — a
-    silent dead artifact is a deploy bug, so it raises loudly).
-
-    Returns (id, group, flagged_hits, gate_flag) — the audit gate's
-    schema, so downstream consumers cannot tell which form ran.
-    """
-    if min_hits < 1:
-        raise ValueError("contamination_gate_declared: min_hits must "
-                         "be >= 1")
-    if not flagged_grams:
-        raise ValueError("contamination_gate_declared: need a "
-                         "non-empty flagged-gram artifact")
-    bad = [g for g in flagged_grams
-           if not isinstance(g, str) or len(g.split(" ")) != n]
-    if bad:
-        raise ValueError(
-            f"contamination_gate_declared: artifact grams must be "
-            f"exactly {n} space-separated tokens; got {bad[:3]}")
-    from dht11_data_pipeline_spark.functions.text import shingles
-
-    arr = F.array(*[F.lit(g) for g in sorted(set(flagged_grams))])
-    hits = F.size(F.array_intersect(
-        F.array_distinct(shingles(tokens(text_col), n)), arr)) \
-        .cast("bigint")
-    return df.select(
-        id_col, group_col, hits.alias("flagged_hits"),
-        F.when(hits >= min_hits, "QUARANTINE")
-        .otherwise("PASS").alias("gate_flag"))

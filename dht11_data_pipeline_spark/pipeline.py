@@ -4,7 +4,7 @@ rebuilt as one Spark driver program.
 Flow (reference stage → here):
   interface existence gate      → ControlTable.interface_exists
   previous-run 'Success' gate   → ControlTable.assert_previous_success
-  mint load_key, run-row upsert → ControlTable.next_load_key/add_run_entry
+  mint load_key, run-row upsert → ControlTable.add_run_entry
   Firebase subtree fetch+flatten→ sources.firebase_tree (distributed)
   landing delete+reload         → layers.write_landing (atomic overwrite)
   landing→intermediate + stamp  → layers.load_to_intermediate
@@ -168,64 +168,6 @@ def run_batch(spark: SparkSession, warehouse_dir: str, tree_json_path: str,
 
     return {"load_key": load_key, "rows": intermediate_rows(warehouse_dir, load_key),
             "skipped": False, "hist_rows": history_rows(warehouse_dir)}
-
-
-def run_dedup_batch(spark: SparkSession, warehouse_dir: str,
-                    corpus: DataFrame, new_docs: DataFrame,
-                    batch_key: str,
-                    interface_nm: str = "DOC_DEDUP_SIGNATURE_LOAD",
-                    interface_cd: str = "STG_1030",
-                    threshold: float = 0.5) -> dict:
-    """One ingestion batch of the DEPLOYED incremental-dedup path: the
-    durable signature store (operators/sigstore) driven under the same
-    control-ledger discipline as the sensor pipeline — interface
-    registration, previous-run Success gate, monotonic load keys,
-    status progression (reference CheckInterface_Metadata.py:68-121 +
-    STG_to_INT.py:16-29, applied to a dedup signature table instead of
-    a landing table).
-
-    Cost contract (the reason the store exists): the batch is sketched
-    ONCE, the store is only PROBED (its committed signatures scanned,
-    never its documents re-shingled), so batch N+1 does the same
-    sketch work however many batches preceded it —
-    tests/test_pipeline_e2e asserts this on the physical plan (sketch
-    stages don't grow with store size). Replay of the same
-    ``batch_key`` is idempotent at both layers: the ledger appends a
-    new run row, the store re-points the key at a fresh commit and
-    emits identical pairs.
-
-    Returns {"load_key", "store_version", "pairs", "pairs_df"} —
-    the frame stays valid after the commit (it reads only immutable
-    store files) and carries the probe's physical plan for the
-    cost-contract assertion.
-    """
-    from dht11_data_pipeline_spark.operators import sigstore
-
-    ctl = ControlTable(spark, warehouse_dir)
-    if not ctl.interface_exists(interface_nm, interface_cd):
-        ctl.register_interface(interface_cd, interface_nm)
-    prev = ctl.previous_run(interface_cd)
-    if prev is not None and prev["load_status"] != "Success":
-        raise RuntimeError(
-            f"previous dedup run (load_key={prev['load_key']}) status "
-            f"{prev['load_status']!r} != 'Success' — aborting")
-    load_key = ctl.next_load_key(interface_cd)
-    ctl.add_run_entry(interface_nm, interface_cd, load_key,
-                      "DEDUP PROBE")
-
-    store = os.path.join(warehouse_dir, "dedup_sig_store")
-    if txlog.current_version(store) is None:
-        sigstore.init_signature_store(spark, store)
-    version, pairs = sigstore.update_signature_store(
-        spark, store, corpus=corpus, new_docs=new_docs,
-        batch_key=batch_key, threshold=threshold)
-    ctl.update_run_status(interface_cd, load_key,
-                          "SIGNATURES COMMITTED")
-    n_pairs = pairs.count()
-    ctl.update_run_status(interface_cd, load_key, "Success",
-                          complete=True)
-    return {"load_key": load_key, "store_version": version,
-            "pairs": n_pairs, "pairs_df": pairs}
 
 
 def bootstrap(spark: SparkSession, warehouse_dir: str,

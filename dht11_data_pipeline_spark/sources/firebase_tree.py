@@ -61,27 +61,6 @@ def read_tree(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def corrupt_tree_records(spark: SparkSession, path: str) -> DataFrame:
-    """Payloads ``read_tree`` silently drops: non-empty inputs whose
-    JSON fails to parse into the tree schema (from_json → null root).
-    The reference would crash on these (dict iteration over None); the
-    engine routes them to a quarantine surface instead so a corrupt
-    feed is visible to the quality monitor, not silent data loss.
-    Returns (source_file, payload_prefix)."""
-    raw = spark.read.option("wholetext", True).text(path).select(
-        F.input_file_name().alias("source_file"), "value")
-    parsed = raw.select(
-        "source_file", "value",
-        F.from_json(F.col("value"),
-                    T.StructType([T.StructField("MCU_Data", TREE)]))
-        .alias("root"))
-    return (parsed
-            .filter(F.col("root").isNull() | F.col("root.MCU_Data").isNull())
-            .filter(F.length(F.trim("value")) > 0)
-            .select("source_file",
-                    F.substring("value", 1, 200).alias("payload_prefix")))
-
-
 def flatten_readings(tree: DataFrame, device_id: str | None = None,
                      since_ts: str | None = None) -> DataFrame:
     """Leaf records → typed landing rows with reference defaulting:

@@ -36,20 +36,15 @@ READING_SCHEMA = T.StructType([
 ])
 
 
-def _read_json_stream(spark: SparkSession, schema: T.StructType | str,
-                      path: str, max_files_per_trigger: int | None) -> DataFrame:
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.json(path)
-
-
 def read_reading_stream(spark: SparkSession, path: str,
                         max_files_per_trigger: int | None = None) -> DataFrame:
     """File-source stream of JSON-line readings (micro-batch per file
     group). ``maxFilesPerTrigger`` bounds batch size — the streaming
     analogue of the reference's one-day batch window."""
-    return _read_json_stream(spark, READING_SCHEMA, path, max_files_per_trigger)
+    reader = spark.readStream.schema(READING_SCHEMA)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.json(path)
 
 
 def typed_readings(raw: DataFrame, watermark: str | None = "1 hour") -> DataFrame:
@@ -70,44 +65,3 @@ def typed_readings(raw: DataFrame, watermark: str | None = "1 hour") -> DataFram
     if watermark is not None:
         out = out.withWatermark("ts", watermark)
     return out
-
-
-def deduplicated_readings(readings: DataFrame) -> DataFrame:
-    """In-stream duplicate drop on the natural key (device_id, ts).
-
-    The reference tolerates re-reads by delete+reload of landing plus
-    the SCD2 hash no-op (SURVEY §2.9 T2 'overlap-and-overwrite');
-    streaming-native, ``dropDuplicates`` within the watermark makes the
-    transport exactly-once *before* the sink, and state is bounded by
-    the watermark horizon (old keys age out — no unbounded state)."""
-    return readings.dropDuplicates(["device_id", "ts"])
-
-
-def observed_readings(readings: DataFrame, name: str = "ingest_metrics"):
-    """Attach zero-cost inline metrics to the reading flow via the
-    Observation API: rows, epoch-sentinel count (missing Timestamp —
-    the reference's '1970-01-01' default, STG_Firebase2Oracle.py:57),
-    and non-numeric sensor values. The metrics ride the existing job
-    (observe() adds an accumulator, NOT a second pass/scan — unlike a
-    separate audit aggregation) and surface per-batch through
-    ``StreamingQueryListener``/``lastProgress`` in streams, or through
-    the returned Observation in batch mode.
-
-    Returns (observed_df, observation_or_None): on a streaming
-    DataFrame, observe() takes just the name (read metrics from query
-    progress); on a batch frame it takes an Observation handle.
-    """
-    from pyspark.sql import Observation
-
-    metrics = [
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.when(F.col("ts") == F.lit(EPOCH_SENTINEL).cast("timestamp"),
-                     1).otherwise(0)).alias("n_epoch_sentinel"),
-        F.sum(F.when(F.col("humidity").try_cast("double").isNull()
-                     & (F.col("humidity") != "N/A"), 1).otherwise(0)
-              ).alias("n_bad_humidity"),
-    ]
-    if readings.isStreaming:
-        return readings.observe(name, *metrics), None
-    obs = Observation(name)
-    return readings.observe(obs, *metrics), obs

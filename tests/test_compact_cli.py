@@ -66,7 +66,8 @@ def test_compact_zorder_clusters_both_dims(spark, tmp_path):
     """compact(zorder_by=...) must leave file-level min/max stats
     selective on every listed column (layout applied at compaction
     time — the operational seam where a deployment runs it)."""
-    from dht11_data_pipeline_spark.operators import layout
+    from layout_stats import file_minmax, overlap_fraction
+
     from dht11_data_pipeline_spark.operators.compact import compact, parquet_file_count
     from dht11_data_pipeline_spark.sources.tables import load_table
 
@@ -77,11 +78,11 @@ def test_compact_zorder_clusters_both_dims(spark, tmp_path):
                 zorder_by=["o_custkey", "o_totalprice"])
     assert n == parquet_file_count(path)
     assert n < 40
-    stats = layout.file_minmax(spark, path, ["o_custkey", "o_totalprice"])
+    stats = file_minmax(spark, path, ["o_custkey", "o_totalprice"])
     if n >= 4:  # pruning only measurable with enough files
         med = spark.read.parquet(path).approxQuantile(
             "o_custkey", [0.2, 0.3], 0.001)
-        frac = layout.overlap_fraction(stats, "o_custkey", med[0], med[1])
+        frac = overlap_fraction(stats, "o_custkey", med[0], med[1])
         assert frac < 1.0
 
 

@@ -42,6 +42,51 @@ def test_incremental_equals_full_restricted(spark, sf_dir):
     assert full.exceptAll(inc).count() == 0
 
 
+def test_batchwise_incremental_pairs_equal_oneshot(spark, sf_dir, tmp_path,
+                                                    monkeypatch):
+    """Four batches, each probing the stored signatures of the batches
+    before it, emit together exactly the one-shot run's pairs. The
+    probe never re-sketches the store: with the checkpoints off, so the
+    whole lazy plan shows, a store of one batch and a store of three
+    give plans with the same sketch (sha2), exchange and scan counts."""
+    from dht11_data_pipeline_spark.plans.audit import (
+        normalize_plan, physical_plan)
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+
+    def stored_sigs(b):
+        path = str(tmp_path / f"sigs{b}")
+        dedup.minhash_signature(docs.filter(F.col("doc_id") % 4 < b)) \
+            .write.parquet(path)
+        return spark.read.parquet(path)
+
+    got = set()
+    for b in range(4):
+        pairs = dedup.minhash_incremental_pairs(
+            docs.filter(F.col("doc_id") % 4 <= b), stored_sigs(b),
+            docs.filter(F.col("doc_id") % 4 == b), threshold=0.5)
+        got |= {(r["doc_a"], r["doc_b"]) for r in pairs.collect()}
+    want = {(r["doc_a"], r["doc_b"]) for r in
+            dedup.minhash_near_duplicates(docs, threshold=0.5).collect()}
+    assert got == want and want
+
+    # patch the CONCRETE DataFrame class (Spark 4: pyspark.sql.classic
+    # subclasses the pyspark.sql.DataFrame ABC and overrides the method)
+    monkeypatch.setattr(type(docs), "localCheckpoint",
+                        lambda self, eager=True: self)
+
+    def probe_plan(b):
+        return normalize_plan(physical_plan(dedup.minhash_incremental_pairs(
+            docs, spark.read.parquet(str(tmp_path / f"sigs{b}")),
+            docs.filter(F.col("doc_id") % 4 == b))))
+
+    p_small, p_large = probe_plan(1), probe_plan(3)
+    assert p_small.count("sha2") == p_large.count("sha2") > 0
+    for metric in ("Exchange hash", "Scan parquet", "MapInPandas"):
+        assert p_small.count(metric) == p_large.count(metric), metric
+    assert p_small.count("MapInPandas") == 0
+
+
 def test_distributed_path_matches_union_find(spark):
     """Force the iterative propagation path (small_edge_limit=0) and
     pin that it matches the driver-side union-find on the same graph:
@@ -82,26 +127,6 @@ def test_star_components_random_graph_matches_union_find(spark):
     uf = {r["node"]: r["cluster_id"]
           for r in connected_components(pairs).collect()}
     assert dist == uf
-
-
-def test_update_components_matches_full_recompute(spark):
-    """Folding a new edge batch into an existing label table equals
-    recomputing components over the union of all edges — including a
-    batch that MERGES two previously separate clusters."""
-    from dht11_data_pipeline_spark.operators.graph import update_components
-
-    old = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11), (20, 21)], "doc_a long, doc_b long")
-    labels = connected_components(old)
-    # new batch: extends cluster-1, merges {10,11} with {20,21}, adds {30,31}
-    new = spark.createDataFrame(
-        [(3, 4), (11, 20), (30, 31)], "doc_a long, doc_b long")
-    got = {r["node"]: r["cluster_id"]
-           for r in update_components(labels, new).collect()}
-    want = {r["node"]: r["cluster_id"]
-            for r in connected_components(old.unionByName(new)).collect()}
-    assert got == want
-    assert got[21] == 10 and got[4] == 1 and got[31] == 30
 
 
 def test_pagerank_integer_laws(spark):

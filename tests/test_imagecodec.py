@@ -1,4 +1,4 @@
-"""Vendored PPM/BMP codec: byte-level roundtrip, real nearest-neighbor
+"""Vendored PPM/PNG codec: byte-level roundtrip, real nearest-neighbor
 resize, and the end-to-end Spark decode path with NO fake branch."""
 
 from __future__ import annotations
@@ -8,8 +8,7 @@ import hashlib
 import pytest
 
 from dht11_data_pipeline_spark.functions.imagecodec import (
-    decode_bmp_header, decode_dims, decode_ppm, encode_ppm, resize_nn_ppm,
-    sniff, text_to_ppm,
+    decode_ppm, encode_ppm, resize_nn_ppm, text_to_ppm,
 )
 
 
@@ -40,18 +39,6 @@ def test_ppm_errors():
         encode_ppm(b"\x00" * 5, 2, 2)
 
 
-def test_bmp_header():
-    # minimal BITMAPINFOHEADER: 'BM' + sizes; width=7 height=-4 bpp=24
-    hdr = bytearray(54)
-    hdr[0:2] = b"BM"
-    hdr[18:22] = (7).to_bytes(4, "little", signed=True)
-    hdr[22:26] = (-4).to_bytes(4, "little", signed=True)
-    hdr[28:30] = (24).to_bytes(2, "little")
-    assert decode_bmp_header(bytes(hdr)) == (7, 4, 24)
-    assert sniff(bytes(hdr)) == "bmp"
-    assert decode_dims(bytes(hdr)) == (7, 4)
-
-
 def test_resize_nn_exact_pixels():
     # 4x2 -> 2x1: output pixel (x,0) samples input (x*4//2, 0*2//1)=(2x,0)
     rgb = _gradient(4, 2)
@@ -80,7 +67,7 @@ def test_text_to_ppm_padding():
 def test_spark_decode_resize_no_fake(spark):
     """End-to-end through Arrow batches with the REAL codec only."""
     from dht11_data_pipeline_spark.operators.multimodal import (
-        attach_image_payload, decode_image, decode_resize_payloads)
+        attach_image_payload, decode_resize_payloads)
 
     docs = spark.createDataFrame(
         [(1, "x" * 100), (2, "y" * 7), (3, "")],
@@ -88,7 +75,7 @@ def test_spark_decode_resize_no_fake(spark):
     imgs = attach_image_payload(docs, width=32)
     # payloads are genuine PPMs the standalone decoder accepts
     for r in imgs.collect():
-        w, h = decode_image(r["payload"])
+        w, h, _ = decode_ppm(r["payload"])
         assert w == 32 and h >= 1
     out = {r["doc_id"]: r for r in
            decode_resize_payloads(imgs, out_w=16, out_h=16).collect()}
@@ -141,8 +128,6 @@ def test_png_roundtrip_and_sniff():
     rgb = _gradient(7, 4)
     p = encode_png(rgb, 7, 4)
     assert p.startswith(b"\x89PNG\r\n\x1a\n")
-    assert sniff(p) == "png"
-    assert decode_dims(p) == (7, 4)
     assert decode_png(p) == (7, 4, rgb)
     # text_to_png mirrors text_to_ppm's raster (32-wide, zero-padded)
     w, h, got = decode_png(text_to_png(b"hello png", width=32))

@@ -10,19 +10,30 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 import pytest
+from layout_stats import file_minmax, overlap_fraction
 
 from dht11_data_pipeline_spark.operators import layout
+from dht11_data_pipeline_spark.operators.compact import compact, dir_bytes
 from dht11_data_pipeline_spark.sources.tables import load_table
 
 SF = "/root/testdata/sf0.01"
 N_FILES = 16
 
 
+def _write_zordered(spark, df, path, cols, n_files, quantile_bits=0):
+    """Write ``df``, then cluster it in place the way a deployment
+    does, ``compact(zorder_by=...)``, sized to ``n_files`` files."""
+    df.write.mode("overwrite").parquet(path)
+    target_mb = dir_bytes(path) / (n_files - 0.5) / (1024 * 1024)
+    assert compact(spark, path, target_mb=target_mb, zorder_by=cols,
+                   quantile_bits=quantile_bits) == n_files
+
+
 @pytest.fixture(scope="module")
 def zordered(spark, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("zo") / "orders_zo")
     o = load_table(spark, SF, "orders")
-    layout.write_zordered(o, path, ["o_custkey", "o_totalprice"], n_files=N_FILES)
+    _write_zordered(spark, o, path, ["o_custkey", "o_totalprice"], N_FILES)
     return path
 
 
@@ -43,13 +54,13 @@ def _mean_overlap(stats, col, path, spark):
     qs = sorted({q for c in centers for q in (c - 0.025, c + 0.025)})
     vals = spark.read.parquet(path).approxQuantile(col, qs, 0.001)
     byq = dict(zip(qs, vals))
-    fr = [layout.overlap_fraction(stats, col, byq[c - 0.025], byq[c + 0.025])
+    fr = [overlap_fraction(stats, col, byq[c - 0.025], byq[c + 0.025])
           for c in centers]
     return sum(fr) / len(fr)
 
 
 def test_both_dimensions_prune(spark, zordered):
-    stats = layout.file_minmax(
+    stats = file_minmax(
         spark, zordered, ["o_custkey", "o_totalprice"]).cache()
     assert stats.count() == N_FILES
     f_cust = _mean_overlap(stats, "o_custkey", zordered, spark)
@@ -66,10 +77,10 @@ def test_single_sort_does_not_prune_other_dim(spark, tmp_path):
     (o.repartitionByRange(N_FILES, "o_custkey")
       .sortWithinPartitions("o_custkey")
       .write.mode("overwrite").parquet(path))
-    stats = layout.file_minmax(spark, path, ["o_custkey", "o_totalprice"])
+    stats = file_minmax(spark, path, ["o_custkey", "o_totalprice"])
     vals = spark.read.parquet(path).approxQuantile(
         "o_totalprice", [0.475, 0.525], 0.001)
-    f_price = layout.overlap_fraction(stats, "o_totalprice", vals[0], vals[1])
+    f_price = overlap_fraction(stats, "o_totalprice", vals[0], vals[1])
     assert f_price >= 0.9, f_price  # the baseline z-order beats
 
 
@@ -77,7 +88,7 @@ def test_constant_column_is_safe(spark, tmp_path):
     path = str(tmp_path / "const_zo")
     df = spark.range(1000).select(
         F.col("id"), F.lit(7.0).alias("c"))
-    layout.write_zordered(df, path, ["id", "c"], n_files=4)
+    _write_zordered(spark, df, path, ["id", "c"], 4)
     assert spark.read.parquet(path).count() == 1000
 
 
@@ -98,10 +109,10 @@ def test_quantile_cells_fix_skew(spark, tmp_path):
         "CAST(pow(CAST(id % 1000 AS DOUBLE) / 1000.0, 8.0) * 1e9 AS DOUBLE) AS v")
     lin = str(tmp_path / "lin")
     qtl = str(tmp_path / "qtl")
-    layout.write_zordered(df, lin, ["k", "v"], n_files=16)
-    layout.write_zordered(df, qtl, ["k", "v"], n_files=16, quantile_bits=4)
-    s_lin = layout.file_minmax(spark, lin, ["v"])
-    s_qtl = layout.file_minmax(spark, qtl, ["v"])
+    _write_zordered(spark, df, lin, ["k", "v"], 16)
+    _write_zordered(spark, df, qtl, ["k", "v"], 16, quantile_bits=4)
+    s_lin = file_minmax(spark, lin, ["v"])
+    s_qtl = file_minmax(spark, qtl, ["v"])
     f_lin = _mean_overlap(s_lin, "v", lin, spark)
     f_qtl = _mean_overlap(s_qtl, "v", qtl, spark)
     # dense-region probes must touch fewer files under quantile cells

@@ -45,19 +45,6 @@ def test_length_prefilter_is_pure_optimization(spark, sf_dir):
     assert unfiltered.exceptAll(fast).count() == 0
 
 
-def test_blocked_fuzzy_join_two_tables(spark):
-    left = spark.createDataFrame(
-        [(1, "B1", "hot gear"), (2, "B1", "cold gear")],
-        "lid long, brand string, name string")
-    right = spark.createDataFrame(
-        [(10, "B1", "hot gears"), (11, "B1", "xxxxxxxx"), (12, "B2", "hot gear")],
-        "rid long, brand string, name string")
-    out = linkage.blocked_fuzzy_join(
-        left, right, ["brand"], "name", "name", "lid", "rid", max_dist=2)
-    pairs = {(r["left_id"], r["right_id"]): r["dist"] for r in out.collect()}
-    assert pairs == {(1, 10): 1}  # 12 blocked out (B2), 11 too far
-
-
 def test_item_affinity_exact_small_case(spark):
     # u1: A x2, B x1; u2: A x1, B x1; u3: B x1, C x1
     df = spark.createDataFrame(

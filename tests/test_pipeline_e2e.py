@@ -202,81 +202,6 @@ def test_historize_logged_prunes_nc_buckets(spark, tmp_path):
     assert hist.count() == 4
 
 
-def test_dedup_batch_pipeline_e2e(spark, tmp_path, sf_dir, monkeypatch):
-    """The deployed incremental-dedup path (pipeline.run_dedup_batch):
-    ledger discipline + durable store + the cost contract — batch N+1
-    sketches only its own batch, so the probe plan's sketch stages do
-    NOT grow with store size (store-size-independence asserted on the
-    physical plan, per the round-10 verdict)."""
-    import os
-
-    from dht11_data_pipeline_spark.operators import dedup, sigstore
-    from dht11_data_pipeline_spark.pipeline import run_dedup_batch
-    from dht11_data_pipeline_spark.plans.audit import (
-        normalize_plan, physical_plan)
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    wh = str(tmp_path / "wh")
-
-    got_pairs = set()
-    seen = docs.limit(0)
-    for b in range(4):
-        batch = docs.filter(F.col("doc_id") % 4 == b)
-        seen = seen.unionByName(batch)
-        res = run_dedup_batch(spark, wh, corpus=seen, new_docs=batch,
-                              batch_key=f"b{b}")
-        assert res["load_key"] == b + 1
-        assert res["store_version"] == b + 2  # init committed v1
-        got_pairs |= {(r["doc_a"], r["doc_b"])
-                      for r in res["pairs_df"].collect()}
-
-    # pair-completeness: union over batches == the one-shot run
-    want = {(r["doc_a"], r["doc_b"]) for r in
-            dedup.minhash_near_duplicates(docs, threshold=0.5).collect()}
-    assert got_pairs == want and want
-
-    # ledger: every run ended Success with monotonic load keys
-    ctl = ControlTable(spark, wh)
-    runs = (ctl.control().filter(F.col("interface_cd") == "STG_1030")
-            .orderBy("load_key").collect())
-    assert [r["load_key"] for r in runs] == [1, 2, 3, 4]
-    assert all(r["load_status"] == "Success" for r in runs)
-
-    # cost contract BY PLAN: probe the store's time-travel snapshots
-    # (v2 = one committed batch, v4 = three) with the checkpoints
-    # disabled so the FULL lazy plan — including the sha2 sketch
-    # stages the eager localCheckpoints normally hide — is visible.
-    # Sketch work (sha2) must not grow with store size: it appears
-    # only over the new batch and the candidate point-lookups, never
-    # as a full-store re-sketch.
-    # patch the CONCRETE DataFrame class (Spark 4: pyspark.sql.classic
-    # subclasses the pyspark.sql.DataFrame ABC and overrides the method)
-    monkeypatch.setattr(type(docs), "localCheckpoint",
-                        lambda self, eager=True: self)
-    store_dir = os.path.join(wh, "dedup_sig_store")
-
-    def probe_plan(version: int, b: int) -> str:
-        store_sigs = sigstore.read_signature_store(spark, store_dir,
-                                                   version=version)
-        batch = docs.filter(F.col("doc_id") % 4 == b)
-        return normalize_plan(physical_plan(
-            dedup.minhash_incremental_pairs(docs, store_sigs, batch)))
-
-    p_small, p_large = probe_plan(2, 1), probe_plan(4, 3)
-    assert p_small.count("sha2") == p_large.count("sha2") > 0
-    for metric in ("Exchange hash", "Scan parquet", "MapInPandas"):
-        assert p_small.count(metric) == p_large.count(metric), metric
-    assert p_small.count("MapInPandas") == 0
-    monkeypatch.undo()
-
-    # gate: a non-Success previous run aborts the next batch
-    ctl.update_run_status("STG_1030", 4, "DEDUP PROBE")
-    with pytest.raises(RuntimeError, match="aborting"):
-        run_dedup_batch(spark, wh, corpus=seen,
-                        new_docs=docs.filter(F.col("doc_id") % 4 == 0),
-                        batch_key="b9")
-
-
 # -- the batch's staging read and row count -----------------------------------
 
 def _two_batches(spark, tmp_path) -> tuple[str, list[dict]]:

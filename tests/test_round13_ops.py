@@ -287,36 +287,3 @@ def test_contamination_cut_fully_cut_doc_yields_empty_text(spark):
             textops.contamination_cut(df).collect()}
     assert rows[2].clean_text == "" and rows[2].n_removed == 7
     assert rows[1].n_removed == 0
-
-
-def test_contamination_gate_declared_matches_audit_form(spark, sf_dir):
-    """Fed the audit's own flagged-gram set as the declared artifact,
-    the projection gate reproduces the audit gate row for row — the
-    publish→gate deployment loop is closed (the bpe_encode_stream
-    contract, round-12 verdict item 5)."""
-    from dht11_data_pipeline_spark.operators import textops
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    index = textops.contamination_index(docs)
-    flagged = sorted({r["gram"] for r in
-                      index.select("gram").distinct().collect()})
-    audit = {tuple(r) for r in
-             textops.contamination_gate(docs, index=index).collect()}
-    declared = {tuple(r) for r in textops.contamination_gate_declared(
-        docs, flagged).collect()}
-    assert declared == audit
-
-
-def test_contamination_gate_declared_validates_artifact(spark):
-    """A bad flagged-gram artifact raises when the gate is built, not
-    inside a task: an empty artifact, a gram of the wrong width and a
-    min_hits below 1."""
-    docs = spark.createDataFrame([(1, "A", "a b c d e f g")],
-                                 "doc_id long, source string, text string")
-    with pytest.raises(ValueError, match="non-empty"):
-        textops.contamination_gate_declared(docs, [])
-    with pytest.raises(ValueError, match="space-separated"):
-        textops.contamination_gate_declared(docs, ["too short"])
-    with pytest.raises(ValueError, match="min_hits"):
-        textops.contamination_gate_declared(docs, ["a b c d e f g"],
-                                            min_hits=0)

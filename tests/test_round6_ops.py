@@ -1,70 +1,13 @@
-"""Round-6 operators: incremental triangle / clustering-coefficient
-maintenance must equal a full recompute over the merged edge set, and
-replaying a batch must be idempotent."""
+"""Round-6 operators: k-core peeling, Adamic-Adar, and the Matryoshka
+rerank."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from dht11_data_pipeline_spark.operators.graph import (
-    clustering_coefficient,
-    triangle_counts,
-    update_clustering_coefficient,
-    update_triangle_counts,
-)
-
 
 def _edges(spark, pairs):
     return spark.createDataFrame(pairs, "id_a long, id_b long")
-
-
-# old graph: a 4-clique (1,2,3,4) + a path 5-6-7 + isolated edge 8-9
-OLD = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4),
-       (5, 6), (6, 7), (8, 9)]
-# batch: closes the 5-6-7 path (1 new edge completes a triangle with
-# 2 old edges), adds a fully-new triangle 10-11-12 (3 new edges), a
-# 2-new-edge triangle on (8, 9), a redelivered old edge, and a
-# reversed duplicate within the batch
-NEW = [(5, 7),
-       (10, 11), (11, 12), (10, 12),
-       (8, 10), (9, 10),
-       (1, 2),          # redelivery of an old edge
-       (11, 10)]        # reversed dup of (10, 11)
-
-
-def test_update_triangle_counts_equals_recompute(spark):
-    old = _edges(spark, OLD)
-    new = _edges(spark, NEW)
-    base = triangle_counts(old)
-    inc = update_triangle_counts(base, old, new)
-    full = triangle_counts(old.unionByName(new))
-    inc_nz = inc.filter(F.col("n_triangles") > 0)
-    assert sorted(map(tuple, inc_nz.collect())) == \
-        sorted(map(tuple, full.collect()))
-    got = {r["node"]: r["n_triangles"] for r in inc.collect()}
-    # 4-clique nodes keep their 3 triangles; 5/6/7 gain one;
-    # 10 is in two new triangles (10-11-12 and 8-9-10)
-    assert got[1] == 3 and got[5] == 1 and got[10] == 2
-
-
-def test_update_triangle_counts_idempotent_replay(spark):
-    old = _edges(spark, OLD)
-    new = _edges(spark, NEW)
-    once = update_triangle_counts(triangle_counts(old), old, new)
-    merged = old.unionByName(new)
-    twice = update_triangle_counts(once, merged, new)
-    assert sorted(map(tuple, once.collect())) == \
-        sorted(map(tuple, twice.collect()))
-
-
-def test_update_clustering_coefficient_equals_recompute(spark):
-    old = _edges(spark, OLD)
-    new = _edges(spark, NEW)
-    base = triangle_counts(old)
-    inc = update_clustering_coefficient(base, old, new)
-    full = clustering_coefficient(old.unionByName(new))
-    assert sorted(map(tuple, inc.collect())) == \
-        sorted(map(tuple, full.collect()))
 
 
 def test_kcore_peel_clique_plus_chain(spark):

@@ -8,7 +8,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from dht11_data_pipeline_spark.operators.skew import salted_aggregate, salted_join
+from dht11_data_pipeline_spark.operators.skew import salted_aggregate
 from dht11_data_pipeline_spark.sources.user_docs import (
     USER_FIELDS, normalized_users, read_user_docs,
 )
@@ -28,27 +28,6 @@ def test_salted_aggregate_matches_plain(spark, sf_dir):
     p = {(t, round(v, 6), c) for t, v, c in
          ((r["event_type"], r["value_sum"], r["event_id_count"]) for r in plain.collect())}
     assert s == p
-
-
-def test_salted_join_matches_plain(spark, sf_dir):
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
-        "c_custkey", "c_nationkey")
-    big = o.withColumnRenamed("o_custkey", "custkey")
-    small = c.withColumnRenamed("c_custkey", "custkey")
-    salted = salted_join(big, small, ["custkey"], n_salts=8)
-    plain = big.join(small, ["custkey"])
-    assert salted.count() == plain.count()
-    sk = salted.groupBy("c_nationkey").count().collect()
-    pl = plain.groupBy("c_nationkey").count().collect()
-    assert {tuple(r) for r in sk} == {tuple(r) for r in pl}
-
-
-def test_salted_join_rejects_full_outer(spark, sf_dir):
-    import pytest
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    with pytest.raises(ValueError, match="inner/left"):
-        salted_join(o, o, ["o_orderkey"], how="full_outer")
 
 
 USERS = [

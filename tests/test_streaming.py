@@ -1,4 +1,4 @@
-"""Structured Streaming surface: ingest typing, in-stream dedup,
+"""Structured Streaming surface: ingest typing,
 the stream-static join and the foreachBatch SCD2 sink (SURVEY §2.9 T1-T5).
 
 Strategy: file-source streams over tmpdir JSON lines, drained with
@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from dht11_data_pipeline_spark.operators.scd2 import SCD2Config
 from dht11_data_pipeline_spark.streaming.historize import start_scd2_stream
 from dht11_data_pipeline_spark.streaming.ingest import (
-    READING_SCHEMA, deduplicated_readings, read_reading_stream, typed_readings,
+    READING_SCHEMA, read_reading_stream, typed_readings,
 )
 
 R1 = [
@@ -75,26 +75,6 @@ def test_typed_reading_stream_matches_batch(spark, tmp_path):
     by_dev = {(r["device_id"], str(r["ts"])): r for r in spark.table("typed_feed").collect()}
     assert by_dev[("D1", "2024-05-05 11:44:00")]["timezone"] == "N/A"
     assert ("D2", "1970-01-01 00:00:00") in by_dev
-
-
-def test_stream_dedup_drops_natural_key_duplicates(spark, tmp_path):
-    src = str(tmp_path / "feed")
-    _write_jsonl(src, "r1.json", R1)
-    _write_jsonl(src, "r2.json", R2)  # R2[0] duplicates R1[0]'s (device, ts)
-    # R1[1] and R2[1] share (D1, 11:35:35) too -> 8 rows, 6 unique keys
-    stream = deduplicated_readings(
-        typed_readings(read_reading_stream(spark, src)))
-    q = (stream.writeStream.format("memory").queryName("deduped")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    out = spark.table("deduped")
-    # 6 unique natural keys arrive, but the epoch-sentinel row (missing
-    # Timestamp -> 1970-01-01, reference STG_Firebase2Oracle.py:57) is
-    # maximally-late by definition and the watermark drops it — the
-    # streaming-native answer to the reference's sentinel convention
-    assert out.count() == 5
-    assert out.select("device_id", "ts").distinct().count() == 5
-    assert out.filter(F.col("ts") == "1970-01-01 00:00:00").count() == 0
 
 
 def test_scd2_stream_two_batches(spark, tmp_path):

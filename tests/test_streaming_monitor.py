@@ -115,48 +115,3 @@ def test_audit_batch_empty_input(spark):
     rows = audit_batch(df, 0, default_reading_checks()).collect()
     assert len(rows) == len(default_reading_checks())
     assert all(r["violations"] == 0 and r["rows_scanned"] == 0 for r in rows)
-
-
-def test_observed_readings_batch(spark, tmp_path):
-    """Observation metrics ride the job without a second scan: batch
-    mode returns the handle; values match a direct aggregation."""
-    from dht11_data_pipeline_spark.streaming.ingest import (
-        READING_SCHEMA, observed_readings, typed_readings)
-
-    src = str(tmp_path / "feed")
-    _write_jsonl(src, "r1.json", GOOD + BAD)
-    raw = spark.read.schema(READING_SCHEMA).json(src)
-    typed = typed_readings(raw, watermark=None)
-    observed, obs = observed_readings(typed)
-    assert observed.count() == 4  # action materializes the metrics
-    got = obs.get
-    assert got["n_rows"] == 4
-    assert got["n_epoch_sentinel"] == 1   # BAD[1] has no Timestamp
-    assert got["n_bad_humidity"] == 1     # "oops"
-
-
-def test_observed_readings_streaming(spark, tmp_path):
-    """On a stream, metrics surface through query progress."""
-    import json as _json
-
-    from dht11_data_pipeline_spark.streaming.ingest import (
-        observed_readings, read_reading_stream, typed_readings)
-
-    src = str(tmp_path / "feed")
-    _write_jsonl(src, "r1.json", GOOD + BAD)
-    stream = typed_readings(read_reading_stream(spark, src), watermark=None)
-    observed, _ = observed_readings(stream)
-    q = (observed.writeStream.format("noop")
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    progresses = [p for p in q.recentProgress if p]
-    metrics = None
-    for p in progresses:
-        om = (p.get("observedMetrics") if isinstance(p, dict)
-              else _json.loads(p.json).get("observedMetrics")) or {}
-        if "ingest_metrics" in om:
-            metrics = om["ingest_metrics"]
-    assert metrics is not None, "observed metrics missing from progress"
-    assert metrics["n_rows"] == 4
-    assert metrics["n_epoch_sentinel"] == 1

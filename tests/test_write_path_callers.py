@@ -7,13 +7,16 @@ import is a second implementation of a behaviour the product runs
 another way, or of one it does not run at all: delete it, or name it
 in ``TEST_ONLY_MODULES`` with the reason it stays.
 
-Every public module-level function of the package must be referenced
-from some file of the package, the tests, the benchmark or the driver
-entry point; a use inside its own module counts. A function whose only
-mention is its own definition is dead code: delete it rather than keep
-a second, untested implementation of a behaviour next to the one that
-runs. The write-path modules are held to more: a caller outside the
-module itself.
+Every top-level function and class of the package must be reached the
+same way, at function grain: from the code of the non-package entry
+points and the module-level statements of the package, through the
+bodies of what they reach. A function that only tests call is dead
+code: delete it, or name it in ``TEST_ONLY_FUNCTIONS`` with the reason
+it stays. The match is by name: a dead function that shares its name
+with a live one passes.
+
+The write-path modules are held to one more rule: every public
+function has a caller outside the module itself.
 """
 
 from __future__ import annotations
@@ -46,6 +49,22 @@ TEST_ONLY_MODULES = {
         "the reference's Firestore users source (SURVEY S2)",
     "dht11_data_pipeline_spark.streaming.monitor":
         "the per-micro-batch stream audit table of the observability goal",
+}
+
+TEST_ONLY_FUNCTIONS = {
+    "dht11_data_pipeline_spark.operators.pq:encode_pq":
+        "the two-pass reference the fused encode+ADC pass is pinned "
+        "against",
+    "dht11_data_pipeline_spark.operators.similarity:"
+    "embedding_near_duplicates":
+        "exhaustive ground truth for the ANN recall tests",
+    "dht11_data_pipeline_spark.functions.vectors:cosine":
+        "the per-pair reference for the side-projected norms",
+    "dht11_data_pipeline_spark.operators.sequence:_hw_fold_py":
+        "the arbitrary-precision twin of the numpy fold",
+    "dht11_data_pipeline_spark.streaming.historize:scd2_logged_batch_writer":
+        "becomes the only SCD2 sink once the benchmark reads a txlog "
+        "stream target (ROADMAP 1(c))",
 }
 
 WRITE_PATH_MODULES = [
@@ -117,27 +136,97 @@ def test_every_package_module_is_reached_from_an_entry_point():
     assert not gone, f"TEST_ONLY_MODULES names missing modules: {gone}"
 
 
+def _names(*nodes: ast.AST) -> set[str]:
+    """Identifiers the code under ``nodes`` uses: names, attribute
+    names, imported names and whole string constants (registries that
+    patch or look up a function by its name)."""
+    names = set()
+    for top in nodes:
+        for node in ast.walk(top):
+            if isinstance(node, ast.Name):
+                names.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                names.add(node.attr)
+            elif isinstance(node, ast.alias):
+                names.add(node.name.rsplit(".", 1)[-1])
+            elif (isinstance(node, ast.Constant)
+                  and isinstance(node.value, str)):
+                names.add(node.value)
+    return names
+
+
+def _referenced_names(path: Path) -> set[str]:
+    return _names(ast.parse(path.read_text(), str(path)))
+
+
+_DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+
+
+def _package_defs() -> dict[str, ast.AST]:
+    """``module:name`` -> node of every top-level function and class."""
+    return {f"{_module_name(p)}:{n.name}": n
+            for p in sorted(PKG.rglob("*.py"))
+            for n in ast.parse(p.read_text(), str(p)).body
+            if isinstance(n, _DEFS)}
+
+
+def _reached_functions(defs: dict[str, ast.AST]) -> set[str]:
+    """Fixed point of the name walk. The roots are the non-package
+    entry points, the module-level statements of every package module
+    and the bodies of ``TEST_ONLY_FUNCTIONS``. A definition is reached
+    when its name is live, and its body's names then become live.
+
+    A function of a ``TEST_ONLY_MODULES`` module is reached only
+    through the names the tests use, its module's own statements and
+    the bodies of the test-only-module functions reached so far, so an
+    unreferenced function there still fails."""
+    live = set().union(*(_referenced_names(p) for p in ENTRY_POINTS
+                         if not p.is_relative_to(PKG)))
+    test_live = set().union(*(_referenced_names(p)
+                              for p in (ROOT / "tests").rglob("*.py")))
+    for path in PKG.rglob("*.py"):
+        top = _names(*(n for n in ast.parse(path.read_text(), str(path)).body
+                       if not isinstance(n, _DEFS)))
+        live |= top
+        if _module_name(path) in TEST_ONLY_MODULES:
+            test_live |= top
+    live |= _names(*(defs[k] for k in TEST_ONLY_FUNCTIONS if k in defs))
+    reached = set()
+    grew = True
+    while grew:
+        grew = False
+        for key, node in defs.items():
+            test_only = key.partition(":")[0] in TEST_ONLY_MODULES
+            if key in reached or node.name not in (
+                    test_live if test_only else live):
+                continue
+            reached.add(key)
+            body = _names(node)
+            live |= body
+            if test_only:
+                test_live |= body
+            grew = True
+    return reached
+
+
+def test_every_package_function_is_reached_from_an_entry_point():
+    defs = _package_defs()
+    reached = _reached_functions(defs)
+    unreached = sorted(set(defs) - reached - set(TEST_ONLY_FUNCTIONS))
+    assert not unreached, (
+        f"package functions and classes that no entry point reaches: "
+        f"{unreached}; delete them, or name each in TEST_ONLY_FUNCTIONS "
+        f"with a reason")
+    stale = sorted(set(TEST_ONLY_FUNCTIONS) & reached)
+    assert not stale, f"TEST_ONLY_FUNCTIONS names reached functions: {stale}"
+    gone = sorted(set(TEST_ONLY_FUNCTIONS) - set(defs))
+    assert not gone, f"TEST_ONLY_FUNCTIONS names missing functions: {gone}"
+
+
 def _caller_files() -> list[Path]:
     files = [p for d in (PKG, ROOT / "tests", ROOT / "perfbench")
              for p in d.rglob("*.py")]
     return files + [ROOT / "__spark_entry__.py"]
-
-
-def _referenced_names(path: Path) -> set[str]:
-    """Identifiers a file uses: names, attribute names, imported names
-    and whole string constants (registries that patch or look up a
-    function by its name)."""
-    names = set()
-    for node in ast.walk(ast.parse(path.read_text(), str(path))):
-        if isinstance(node, ast.Name):
-            names.add(node.id)
-        elif isinstance(node, ast.Attribute):
-            names.add(node.attr)
-        elif isinstance(node, ast.alias):
-            names.add(node.name.rsplit(".", 1)[-1])
-        elif isinstance(node, ast.Constant) and isinstance(node.value, str):
-            names.add(node.value)
-    return names
 
 
 def _public_functions(path: Path) -> list[str]:
@@ -163,13 +252,3 @@ def test_public_write_path_functions_have_callers(module, references):
     assert not dead, (
         f"{module.relative_to(ROOT)}: public functions with no caller "
         f"outside their own module: {dead}")
-
-
-@pytest.mark.parametrize("module", sorted(PKG.rglob("*.py")),
-                         ids=lambda p: p.relative_to(PKG).as_posix())
-def test_public_package_functions_have_callers(module, references):
-    dead = [f for f in _public_functions(module)
-            if not any(f in names for names in references.values())]
-    assert not dead, (
-        f"{module.relative_to(ROOT)}: public functions that nothing "
-        f"calls: {dead}")
