@@ -13,7 +13,8 @@ points and the module-level statements of the package, through the
 bodies of what they reach. A function that only tests call is dead
 code: delete it, or name it in ``TEST_ONLY_FUNCTIONS`` with the reason
 it stays. The match is by name: a dead function that shares its name
-with a live one passes.
+with a live one passes. The same walk also answers per module, and
+there a ``TEST_ONLY_FUNCTIONS`` entry must still have a test caller.
 
 The write-path modules are held to one more rule: every public
 function has a caller outside the module itself.
@@ -159,6 +160,11 @@ def _referenced_names(path: Path) -> set[str]:
     return _names(ast.parse(path.read_text(), str(path)))
 
 
+def _test_names() -> set[str]:
+    return set().union(*(_referenced_names(p)
+                         for p in (ROOT / "tests").rglob("*.py")))
+
+
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 
 
@@ -182,8 +188,7 @@ def _reached_functions(defs: dict[str, ast.AST]) -> set[str]:
     unreferenced function there still fails."""
     live = set().union(*(_referenced_names(p) for p in ENTRY_POINTS
                          if not p.is_relative_to(PKG)))
-    test_live = set().union(*(_referenced_names(p)
-                              for p in (ROOT / "tests").rglob("*.py")))
+    test_live = _test_names()
     for path in PKG.rglob("*.py"):
         top = _names(*(n for n in ast.parse(path.read_text(), str(path)).body
                        if not isinstance(n, _DEFS)))
@@ -209,9 +214,19 @@ def _reached_functions(defs: dict[str, ast.AST]) -> set[str]:
     return reached
 
 
-def test_every_package_function_is_reached_from_an_entry_point():
+@pytest.fixture(scope="module")
+def walk() -> tuple[dict[str, ast.AST], set[str]]:
     defs = _package_defs()
-    reached = _reached_functions(defs)
+    return defs, _reached_functions(defs)
+
+
+@pytest.fixture(scope="module")
+def tested() -> set[str]:
+    return _test_names()
+
+
+def test_every_package_function_is_reached_from_an_entry_point(walk):
+    defs, reached = walk
     unreached = sorted(set(defs) - reached - set(TEST_ONLY_FUNCTIONS))
     assert not unreached, (
         f"package functions and classes that no entry point reaches: "
@@ -221,6 +236,26 @@ def test_every_package_function_is_reached_from_an_entry_point():
     assert not stale, f"TEST_ONLY_FUNCTIONS names reached functions: {stale}"
     gone = sorted(set(TEST_ONLY_FUNCTIONS) - set(defs))
     assert not gone, f"TEST_ONLY_FUNCTIONS names missing functions: {gone}"
+
+@pytest.mark.parametrize("module", sorted(PKG.rglob("*.py")),
+                         ids=lambda p: p.relative_to(PKG).as_posix())
+def test_public_package_functions_have_callers(module, walk, tested):
+    """The walk's answer for one module: every top-level function and
+    class is reached from an entry point, and every one it names in
+    ``TEST_ONLY_FUNCTIONS`` is still called from a test."""
+    defs, reached = walk
+    here = _module_name(module)
+    keys = [k for k in defs if k.partition(":")[0] == here]
+    dead = [k for k in keys
+            if k not in reached and k not in TEST_ONLY_FUNCTIONS]
+    assert not dead, (
+        f"{module.relative_to(ROOT)}: functions and classes that no "
+        f"entry point reaches: {dead}")
+    untested = [k for k in keys if k in TEST_ONLY_FUNCTIONS
+                and defs[k].name not in tested]
+    assert not untested, (
+        f"{module.relative_to(ROOT)}: TEST_ONLY_FUNCTIONS entries that "
+        f"no test calls: {untested}")
 
 
 def _caller_files() -> list[Path]:
@@ -252,3 +287,4 @@ def test_public_write_path_functions_have_callers(module, references):
     assert not dead, (
         f"{module.relative_to(ROOT)}: public functions with no caller "
         f"outside their own module: {dead}")
+
